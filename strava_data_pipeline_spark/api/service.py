@@ -47,7 +47,7 @@ from pyspark.sql.types import (
 )
 
 from strava_data_pipeline_spark.operators.pagination import page_keyset, page_offset
-from strava_data_pipeline_spark.sources.catalog import load_table
+from strava_data_pipeline_spark.sources.catalog import load_table, max_micros
 
 KEY_SCHEMA = StructType(
     [
@@ -128,12 +128,20 @@ class PipelineService:
 
     # -- sync (api.go:315) -------------------------------------------------
     def sync_window(self, days: int = 1) -> DataFrame:
+        """Activities within ``days`` days of the newest one.
+
+        One filter, ``ts >= max(ts) - INTERVAL days``, with the table's
+        max(ts) read from its handle (computed once per table version,
+        see catalog.max_micros) and inlined as a literal, so the bound
+        folds to a constant the scan can push down. An empty table
+        returns no rows."""
         events = load_table(self.spark, self.sf_dir, "events")
-        hwm = events.agg(F.max("ts").alias("_max_ts"))
-        return (
-            events.crossJoin(F.broadcast(hwm))
-            .where(F.col("ts") >= F.col("_max_ts") - F.expr(f"INTERVAL {days} DAY"))
-            .drop("_max_ts")
+        hwm = max_micros(events, "ts")
+        if hwm is None:
+            return events.where(F.lit(False))
+        return events.where(
+            F.col("ts")
+            >= F.timestamp_micros(F.lit(hwm)) - F.expr(f"INTERVAL {days} DAY")
         )
 
     # -- api keys (user_api_keys.go) --------------------------------------

@@ -888,10 +888,6 @@ def _attr_face_impl(
         # watermark is their min
         from datetime import datetime, timezone
 
-        from strava_data_pipeline_spark.functions.local_frames import (
-            one_slice_frame,
-        )
-
         t = datetime.fromtimestamp(hi + n * 864_000, tz=timezone.utc).replace(
             tzinfo=None
         )

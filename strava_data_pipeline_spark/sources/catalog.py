@@ -24,11 +24,30 @@ files (which surface as TIMESTAMP_NTZ, rejecting every epoch-arithmetic
 expression) are cast back under the UTC-pinned session. Query code MUST
 reach timestamps through this loader, never a raw ``spark.read`` —
 tests/test_sources.py::TestCatalogTimestampContract pins the guarantee.
+
+HANDLE CONTRACT: ``load_table`` resolves a table (file listing, footer
+and schema read, timestamp repair) once per version and hands every
+later caller the same DataFrame. The version is a change token read on
+the driver: ``os.stat`` of the table path plus one ``os.scandir`` level
+of its entries (name, inode, ``st_mtime_ns``, size). A day-partitioned
+root is covered by that one level: a file added to or removed from a
+``p_day=`` dir changes the dir's mtime, and a dynamic partition
+overwrite (the sync sink) renames a new dir into place. Tables are
+replaced by new files, never rewritten in place, so a changed table
+always changes its token. A path the driver cannot stat (a remote
+filesystem, a missing path) has no token and is resolved on every call.
+Handles are kept per session; a stopped session's handles are dropped
+and a new session never receives them. ``max_micros`` computes a
+handle's column maximum once per version.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
+import weakref
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,28 +78,105 @@ _TIMESTAMP_COLS: dict[str, tuple[str, ...]] = {
 }
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one table. Parquet keeps scans pruned and push-down friendly."""
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+@dataclass
+class _Handle:
+    token: tuple
+    df: DataFrame
+    maxima: dict[str, int | None] = field(default_factory=dict)
+
+
+# session -> {table path -> handle}. Weakly keyed, so an entry never
+# outlives its session object; a handle references its session, so
+# entries of stopped sessions are also dropped on the next lookup.
+_HANDLES: weakref.WeakKeyDictionary[SparkSession, dict[str, _Handle]] = (
+    weakref.WeakKeyDictionary()
+)
+_LOCK = threading.Lock()
+
+
+def _stat_key(st: os.stat_result) -> tuple:
+    return (st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+def _version_token(path: str) -> tuple | None:
+    """Change token of a table path, None when the driver cannot stat it."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return _stat_key(st)
+        with os.scandir(path) as it:
+            entries = sorted((e.name, _stat_key(e.stat())) for e in it)
+    except OSError:
+        return None
+    return (_stat_key(st), tuple(entries))
+
+
+def _session_handles(spark: SparkSession) -> dict[str, _Handle]:
+    with _LOCK:
+        for stopped in [s for s in _HANDLES if s._sc._jsc is None]:
+            del _HANDLES[stopped]
+        return _HANDLES.setdefault(spark, {})
+
+
+def _resolve(spark: SparkSession, path: str, name: str) -> DataFrame:
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass  # immutable in this runtime; plain read below may still work
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = spark.read.parquet(path)
     for col in _TIMESTAMP_COLS.get(name, ()):
-        field = df.schema[col]
-        if field.dataType.typeName() in ("long", "bigint"):
+        field_type = df.schema[col].dataType.typeName()
+        if field_type in ("long", "bigint"):
             # integer `div`, NOT `/`: float division loses precision at
             # nanosecond magnitudes (~1.7e18 exceeds double's 53-bit mantissa)
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-        elif field.dataType.typeName() == "timestamp_ntz":
+        elif field_type == "timestamp_ntz":
             # Parquet timestamp[us] with isAdjustedToUTC=false surfaces as
             # TIMESTAMP_NTZ, which rejects epoch arithmetic (cast to long,
             # unix_micros). Session TZ is pinned UTC (session.py), so
             # NTZ→TIMESTAMP is value-preserving and matches DuckDB semantics.
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one table. Parquet keeps scans pruned and push-down friendly.
+
+    Returns the session's handle for the table's current version (see
+    the module docstring); only a new version is resolved again."""
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    # the token is read before the resolve: a table that changes in
+    # between gets a newer handle than its token, so the next call
+    # resolves again rather than keeping a stale one
+    token = _version_token(path)
+    if token is None:
+        return _resolve(spark, path, name)
+    handles = _session_handles(spark)
+    hit = handles.get(path)
+    if hit is not None and hit.token == token:
+        return hit.df
+    with _LOCK:
+        hit = handles.get(path)
+        if hit is None or hit.token != token:
+            hit = handles[path] = _Handle(token, _resolve(spark, path, name))
+        return hit.df
+
+
+def max_micros(df: DataFrame, col: str) -> int | None:
+    """Maximum of timestamp column ``col`` as epoch microseconds (None
+    on an empty table). For a ``load_table`` handle it is computed once
+    per table version; any other DataFrame runs one job per call."""
+    handle = next(
+        (h for h in _session_handles(df.sparkSession).values() if h.df is df), None
+    )
+    if handle is not None and col in handle.maxima:
+        return handle.maxima[col]
+    value = df.agg(F.max(F.unix_micros(F.col(col)))).first()[0]
+    if handle is not None:
+        handle.maxima[col] = value
+    return value
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

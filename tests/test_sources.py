@@ -4,6 +4,7 @@ incremental filter)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -75,18 +76,173 @@ class TestCatalogTimestampContract:
         "table,col",
         [("events", "ts"), ("orders", "o_orderdate"), ("lineitem", "l_shipdate")],
     )
-    def test_timestamp_cols_normalized(self, spark, table, col):
+    def test_timestamp_cols_normalized(self, spark, sf_dir, table, col, tmp_path, monkeypatch):
+        import shutil
+
         from pyspark.sql.types import TimestampType
 
         from strava_data_pipeline_spark.sources.catalog import load_table
 
-        df = load_table(spark, "/root/testdata/sf0.001", table)
-        assert df.schema[col].dataType == TimestampType(), (
-            f"{table}.{col} loaded as {df.schema[col].dataType}; "
-            "epoch arithmetic (cast-to-long / unix_micros) requires TIMESTAMP"
+        # a fresh copy, so the first load is a miss (resolve) and the
+        # second a hit (the kept handle); both must hold the contract
+        shutil.copy(os.path.join(sf_dir, f"{table}.parquet"), tmp_path)
+        conf_writes = []
+        real_set = spark.conf.set
+        monkeypatch.setattr(
+            spark.conf, "set", lambda k, v: (conf_writes.append(k), real_set(k, v))
         )
-        # and the normalized column must actually support epoch arithmetic
-        df.select(F.unix_micros(F.col(col))).limit(1).collect()
+        miss = load_table(spark, str(tmp_path), table)
+        n_miss_writes = len(conf_writes)
+        hit = load_table(spark, str(tmp_path), table)
+        assert hit is miss
+        assert len(conf_writes) == n_miss_writes, "a cache hit must write no conf"
+        for df in (miss, hit):
+            assert df.schema[col].dataType == TimestampType(), (
+                f"{table}.{col} loaded as {df.schema[col].dataType}; "
+                "epoch arithmetic (cast-to-long / unix_micros) requires TIMESTAMP"
+            )
+            # and the normalized column must actually support epoch arithmetic
+            df.select(F.unix_micros(F.col(col))).limit(1).collect()
+
+
+class TestCatalogHandles:
+    """load_table keeps one handle per table version (sources/catalog.py
+    module docstring): the same object while the path is unchanged, a
+    fresh one that sees the new rows once the table is replaced."""
+
+    @staticmethod
+    def _events(spark, ids, day):
+        from datetime import datetime
+
+        from strava_data_pipeline_spark.functions.local_frames import one_slice_frame
+        from strava_data_pipeline_spark.streaming.sync import EVENT_SCHEMA
+
+        rows = [(i, datetime(2024, 1, day, 10), 7, "run", float(i)) for i in ids]
+        return one_slice_frame(spark, rows, EVENT_SCHEMA)
+
+    def test_unchanged_path_returns_same_handle(self, spark, sf_dir):
+        from strava_data_pipeline_spark.sources.catalog import load_table
+
+        assert load_table(spark, sf_dir, "events") is load_table(spark, sf_dir, "events")
+
+    def test_replaced_single_file_gives_fresh_handle(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from strava_data_pipeline_spark.sources.catalog import load_table
+
+        path = tmp_path / "events.parquet"
+
+        def write(ids):
+            staged = tmp_path / "staged.parquet"
+            ts = pa.array([1_704_103_200_000_000] * len(ids), pa.timestamp("us"))
+            pq.write_table(
+                pa.table({"event_id": pa.array(ids, pa.int64()), "ts": ts}), staged
+            )
+            os.replace(staged, path)
+
+        write([1, 2])
+        first = load_table(spark, str(tmp_path), "events")
+        assert sorted(r["event_id"] for r in first.collect()) == [1, 2]
+        write([1, 2, 3])
+        second = load_table(spark, str(tmp_path), "events")
+        assert second is not first
+        assert sorted(r["event_id"] for r in second.collect()) == [1, 2, 3]
+
+    def test_dynamic_overwrite_of_one_day_gives_fresh_handle(self, spark, tmp_path):
+        from strava_data_pipeline_spark.sources.catalog import load_table
+
+        target = str(tmp_path / "events.parquet")
+
+        def write(df, mode):
+            df.withColumn("p_day", F.to_date("ts")).write.mode(mode).option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("p_day").parquet(target)
+
+        write(self._events(spark, [1, 2], 1).unionByName(self._events(spark, [3], 2)), "error")
+        first = load_table(spark, str(tmp_path), "events")
+        assert sorted(r["event_id"] for r in first.collect()) == [1, 2, 3]
+        assert load_table(spark, str(tmp_path), "events") is first
+        # the sync sink's commit: only the Jan 2 day dir is replaced
+        write(self._events(spark, [3, 4], 2), "overwrite")
+        second = load_table(spark, str(tmp_path), "events")
+        assert second is not first
+        assert sorted(r["event_id"] for r in second.collect()) == [1, 2, 3, 4]
+
+    def test_concurrent_first_loads_resolve_once(self, spark, sf_dir, tmp_path, monkeypatch):
+        import shutil
+        import sys
+        import threading
+
+        from strava_data_pipeline_spark.sources import catalog
+
+        shutil.copy(os.path.join(sf_dir, "events.parquet"), tmp_path)
+        resolves = []
+        real_resolve = catalog._resolve
+        monkeypatch.setattr(
+            catalog, "_resolve", lambda *a: resolves.append(a) or real_resolve(*a)
+        )
+        n = 8
+        start = threading.Barrier(n)
+        got = []
+
+        def load():
+            start.wait(timeout=60)
+            got.append(catalog.load_table(spark, str(tmp_path), "events"))
+
+        threads = [threading.Thread(target=load) for _ in range(n)]
+        old_interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(old_interval)
+        assert not any(t.is_alive() for t in threads)
+        assert len(got) == n and all(df is got[0] for df in got)
+        assert len(resolves) == 1
+
+    def test_new_session_never_gets_a_stopped_sessions_handle(self, sf_dir):
+        # stopping a session stops its SparkContext, so this runs in a
+        # child process rather than stopping the suite's shared session
+        import subprocess
+        import sys
+        import textwrap
+
+        script = textwrap.dedent(
+            """
+            import sys
+
+            from strava_data_pipeline_spark.session import get_spark
+            from strava_data_pipeline_spark.sources import catalog
+
+            sf_dir = sys.argv[1]
+
+            old = get_spark("handles-old")
+            stale = catalog.load_table(old, sf_dir, "events")
+            n_rows = stale.count()
+            old.stop()
+            new = get_spark("handles-new")
+            assert new is not old
+            fresh = catalog.load_table(new, sf_dir, "events")
+            assert fresh is not stale and fresh.sparkSession is new
+            assert old not in catalog._HANDLES
+            assert fresh.count() == n_rows
+            new.stop()
+            """
+        )
+        env = dict(os.environ, SPARK_GRAFT_CPUS="1")
+        done = subprocess.run(
+            [sys.executable, "-c", script, sf_dir],
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=300,
+        )
+        assert done.returncode == 0, done.stderr[-2000:]
 
 
 class TestCorpusIO:

@@ -107,3 +107,134 @@ def test_keyset_pagination_survives_duplicate_timestamps(spark, sf_dir):
     got = [(r["ts"], r["event_id"]) for r in page2]
     want = [(r["ts"], r["event_id"]) for r in all_rows[20:40]]
     assert got == want, "page 2 must start exactly after the boundary row"
+
+
+# -- PipelineService endpoints against DuckDB ------------------------------
+
+EVENT_COLS = ["event_id", "ts", "user_id", "event_type", "value"]
+
+
+def _duck(sql, params=()):
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        return con.execute(sql, params).fetchall()
+    finally:
+        con.close()
+
+
+def _event_rows(df):
+    return sorted(tuple(r[c] for c in EVENT_COLS) for r in df.collect())
+
+
+def _window_sql(src: str, days: int) -> str:
+    cols = ", ".join(EVENT_COLS)
+    return (
+        f"SELECT {cols} FROM {src} WHERE ts >= "
+        f"(SELECT max(ts) FROM {src}) - INTERVAL {days} DAY"
+    )
+
+
+@pytest.fixture(scope="module")
+def svc(spark):
+    from strava_data_pipeline_spark.api.service import PipelineService
+
+    return PipelineService(spark, SF_DIR)
+
+
+def test_get_activity_matches_duckdb(svc):
+    src = f"'{SF_DIR}/events.parquet'"
+    ids = [r[0] for r in _duck(f"SELECT event_id FROM {src} ORDER BY event_id LIMIT 3")]
+    for i in ids + [-1]:
+        want = _duck(f"SELECT {', '.join(EVENT_COLS)} FROM {src} WHERE event_id = ?", [i])
+        assert _event_rows(svc.get_activity(i)) == sorted(want)
+
+
+@pytest.mark.parametrize("offset_share", [0.0, 0.5], ids=["shallow", "deep"])
+def test_list_activities_matches_duckdb(svc, offset_share):
+    src = f"'{SF_DIR}/events.parquet'"
+    (n,) = _duck(f"SELECT count(*) FROM {src}")[0]
+    offset = int(n * offset_share)
+    want = _duck(
+        f"SELECT {', '.join(EVENT_COLS)} FROM {src} "
+        "ORDER BY ts DESC, event_id DESC LIMIT 20 OFFSET ?",
+        [offset],
+    )
+    # a page's membership is its ordering contract (rows come back in
+    # no particular order)
+    assert _event_rows(svc.list_activities(20, offset)) == sorted(want)
+
+
+@pytest.mark.parametrize("days", [1, 3])
+def test_sync_window_matches_duckdb(svc, days):
+    want = _duck(_window_sql(f"'{SF_DIR}/events.parquet'", days))
+    assert want, "the window must hold rows for the check to mean anything"
+    assert _event_rows(svc.sync_window(days)) == sorted(want)
+
+
+def test_get_user_by_athlete_id_matches_duckdb(svc):
+    src = f"'{SF_DIR}/customer.parquet'"
+    (cust,) = _duck(f"SELECT min(c_custkey) FROM {src}")[0]
+    want = _duck(
+        f"SELECT c_custkey, c_name, c_custkey + 10000000 FROM {src} WHERE c_custkey = ?",
+        [cust],
+    )
+    got = [
+        (r["user_id"], r["username"], r["athlete_id"])
+        for r in svc.get_user_by_athlete_id(cust + 10**7).collect()
+    ]
+    assert got == want
+
+
+def test_service_follows_incremental_sync(spark, tmp_path):
+    """A service over the sync target sees each sync commit: the window
+    follows the new newest activity and a new id is readable."""
+    from datetime import timedelta
+
+    from strava_data_pipeline_spark.api.service import PipelineService
+    from strava_data_pipeline_spark.functions.local_frames import one_slice_frame
+    from strava_data_pipeline_spark.sources.catalog import load_table
+    from strava_data_pipeline_spark.streaming.sync import (
+        EVENT_SCHEMA,
+        read_event_stream,
+        start_incremental_sync,
+    )
+
+    root, landing, ckpt = tmp_path / "root", str(tmp_path / "landing"), str(tmp_path / "ckpt")
+    target = str(root / "events.parquet")
+    target_glob = f"read_parquet('{target}/*/*.parquet')"
+
+    def sync():
+        start_incremental_sync(
+            read_event_stream(spark, landing), target, ckpt
+        ).awaitTermination(120)
+
+    load_table(spark, SF_DIR, "events").select(*EVENT_COLS).coalesce(1).write.mode(
+        "append"
+    ).parquet(landing)
+    sync()
+    svc = PipelineService(spark, str(root))
+    assert _event_rows(svc.sync_window(1)) == sorted(_duck(_window_sql(target_glob, 1)))
+
+    (old_max, max_id) = _duck(f"SELECT max(ts), max(event_id) FROM {target_glob}")[0]
+    later = [
+        (max_id + k, old_max + timedelta(days=2, hours=k), 7, "run", float(k))
+        for k in (1, 2, 3)
+    ]
+    one_slice_frame(spark, later, EVENT_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(landing)
+    sync()
+    window = _event_rows(svc.sync_window(1))
+    assert window == sorted(later)
+    assert window == sorted(_duck(_window_sql(target_glob, 1)))
+    assert _event_rows(svc.get_activity(max_id + 2)) == [later[1]]
+
+
+def test_sync_window_on_empty_table(spark, tmp_path):
+    from strava_data_pipeline_spark.api.service import PipelineService
+    from strava_data_pipeline_spark.streaming.sync import EVENT_SCHEMA
+
+    spark.createDataFrame([], EVENT_SCHEMA).write.parquet(str(tmp_path / "events.parquet"))
+    assert PipelineService(spark, str(tmp_path)).sync_window(1).collect() == []
