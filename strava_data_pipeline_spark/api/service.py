@@ -47,7 +47,7 @@ from pyspark.sql.types import (
 )
 
 from strava_data_pipeline_spark.operators.pagination import page_keyset, page_offset
-from strava_data_pipeline_spark.sources.catalog import load_table, max_micros
+from strava_data_pipeline_spark.sources.catalog import load_table, max_micros, note_read
 
 KEY_SCHEMA = StructType(
     [
@@ -85,14 +85,23 @@ class PipelineService:
         self._key_rows: list[tuple] = []
         self._user_rows: list[tuple] = []
         self._deleted_user_ids: set[int] = set()
+        # bumped by every user mutation; the users dim is built once per
+        # (customer version, generation), see _users
+        self._user_gen = 0
+        self._users_built: tuple[DataFrame, int, DataFrame] | None = None
 
     @property
     def _keys(self) -> DataFrame:
         return self.spark.createDataFrame(self._key_rows, KEY_SCHEMA)
 
+    def _table(self, name: str) -> DataFrame:
+        """A served read of a table: its handle, cached from its second
+        read on (catalog.note_read)."""
+        return note_read(load_table(self.spark, self.sf_dir, name))
+
     # -- activities (api.go:206, api.go:239) ------------------------------
     def list_activities(self, limit: int = 20, offset: int = 0) -> DataFrame:
-        events = load_table(self.spark, self.sf_dir, "events")
+        events = self._table("events")
         return page_offset(
             events, [("ts", True), ("event_id", True)], limit=limit, offset=offset
         ).drop("rn")
@@ -107,7 +116,7 @@ class PipelineService:
         the page boundary's timestamp. Callers pass the last row's
         (ts, event_id) pair; a bare timestamp (cursor_id=None) keeps
         the old semantics for callers that guarantee unique ts."""
-        events = load_table(self.spark, self.sf_dir, "events")
+        events = self._table("events")
         cursor = F.col("ts") < F.lit(cursor_ts)
         if cursor_id is not None:
             cursor = cursor | (
@@ -122,9 +131,7 @@ class PipelineService:
         )
 
     def get_activity(self, activity_id: int) -> DataFrame:
-        return load_table(self.spark, self.sf_dir, "events").where(
-            F.col("event_id") == activity_id
-        )
+        return self._table("events").where(F.col("event_id") == activity_id)
 
     # -- sync (api.go:315) -------------------------------------------------
     def sync_window(self, days: int = 1) -> DataFrame:
@@ -135,7 +142,7 @@ class PipelineService:
         see catalog.max_micros) and inlined as a literal, so the bound
         folds to a constant the scan can push down. An empty table
         returns no rows."""
-        events = load_table(self.spark, self.sf_dir, "events")
+        events = self._table("events")
         hwm = max_micros(events, "ts")
         if hwm is None:
             return events.where(F.lit(False))
@@ -311,7 +318,13 @@ class PipelineService:
     _USER_OVERLAY_BASE_ID = 10**9
 
     def _users(self) -> DataFrame:
-        base = load_table(self.spark, self.sf_dir, "customer").select(
+        """The users dim, built once per (customer version, overlay
+        generation): a lookup after no change reuses the last build."""
+        customer = self._table("customer")
+        built = self._users_built
+        if built is not None and built[0] is customer and built[1] == self._user_gen:
+            return built[2]
+        base = customer.select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_name").alias("username"),
             (F.col("c_custkey") + F.lit(10**7)).alias("athlete_id"),
@@ -327,12 +340,14 @@ class PipelineService:
             gone = [(i,) for i in sorted(self._deleted_user_ids)]
             tomb = self.spark.createDataFrame(gone, "user_id long")
             base = base.join(tomb, "user_id", "left_anti")
+        self._users_built = (customer, self._user_gen, base)
         return base
 
     def create_user(self, username: str, athlete_id: int) -> int:
         """CreateUser parity; returns the new user id."""
         uid = self._USER_OVERLAY_BASE_ID + len(self._user_rows)
         self._user_rows.append((uid, username, athlete_id))
+        self._user_gen += 1
         return uid
 
     def get_user_by_id(self, user_id: int) -> DataFrame:
@@ -360,6 +375,7 @@ class PipelineService:
                 athlete_id if athlete_id is not None else row["athlete_id"],
             )
         )
+        self._user_gen += 1
         return True
 
     def delete_user(self, user_id: int) -> bool:
@@ -367,4 +383,5 @@ class PipelineService:
         if not self.get_user_by_id(user_id).take(1):
             return False
         self._deleted_user_ids.add(user_id)
+        self._user_gen += 1
         return True

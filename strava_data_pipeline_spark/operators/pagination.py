@@ -4,8 +4,9 @@ The reference pages with LIMIT/OFFSET (/root/reference/internal/api/api.go:206).
 OFFSET is fine for shallow pages but at 100 TB a deep offset forces the
 engine to materialize and discard every preceding row, so we expose both:
 
-- ``page_offset``  — row_number window over a total order (parity with the
-  reference API; documented small-result-only).
+- ``page_offset``  — native ``OFFSET`` over a total order (parity with the
+  reference API; each partition still keeps a heap of offset+limit
+  rows, so it is for shallow pages).
 - ``page_keyset``  — cursor predicate (``ts < last_seen``) that pushes
   straight into the parquet scan; O(page) at any depth. This is the scale
   path.
@@ -28,27 +29,25 @@ def page_offset(
 ) -> DataFrame:
     """OFFSET-style page (reference parity), planned scale-safely.
 
-    The naive shape — row_number over a global Window — funnels the
-    ENTIRE table through one partition. Instead the global order is
-    truncated first to its top ``offset+limit`` rows with
-    ``orderBy().limit()``, which plans as TakeOrderedAndProject
-    (per-partition heaps of size offset+limit, no global sort, no
-    single-partition shuffle of the table); the row_number window then
-    ranks only that offset+limit-row frame. Requires ``order_by`` to be
-    a TOTAL order (include a unique tiebreak column) so the truncation
-    is deterministic. Deep pagination should still use ``page_keyset``
-    — per-partition heap size grows with offset here.
+    ``orderBy().offset().limit()`` plans as one
+    ``TakeOrderedAndProject(limit=offset+limit, offset=offset)``:
+    per-partition heaps of offset+limit rows, no global sort and no
+    single-partition shuffle of the table, and the offset is applied
+    when the heaps are merged. The heap still grows with ``offset``, so
+    deep pagination should use ``page_keyset``. Requires ``order_by``
+    to be a TOTAL order (include a unique tiebreak column) so the page
+    is deterministic.
 
     OUTPUT CONTRACT: the global row number is returned as column
-    ``rn`` (the activities_page oracle hashes it) — callers that don't
-    want it drop it; an input column named ``rn`` is clobbered, so
-    rename it first.
+    ``rn`` (the activities_page oracle hashes it), ranked over the
+    page's own rows only and shifted by ``offset``. Callers that don't
+    want it drop it, and Spark then prunes the window; an input column
+    named ``rn`` is clobbered, so rename it first.
     """
-    top = df.orderBy(*_order(order_by)).limit(offset + limit)
-    w = Window.orderBy(*_order(order_by))
-    return (
-        top.withColumn("rn", F.row_number().over(w))
-        .where((F.col("rn") > offset) & (F.col("rn") <= offset + limit))
+    order = _order(order_by)
+    page = df.orderBy(*order).offset(offset).limit(limit)
+    return page.withColumn(
+        "rn", F.lit(offset) + F.row_number().over(Window.orderBy(*order))
     )
 
 

@@ -16,7 +16,7 @@ from strava_data_pipeline_spark.operators.pagination import page_offset
 from strava_data_pipeline_spark.operators.sessionize import sessionize
 from strava_data_pipeline_spark.operators.upsert import merge_cdc, merge_latest_wins
 from strava_data_pipeline_spark.plans.registry import register
-from strava_data_pipeline_spark.sources.catalog import load_table
+from strava_data_pipeline_spark.sources.catalog import load_table, max_micros
 
 EVENT_COLS = ["event_id", "ts", "user_id", "event_type", "value"]
 
@@ -128,13 +128,17 @@ WHERE ts >= (SELECT max(ts) - INTERVAL 7 DAY FROM events)
 @register("sync_window", oracle=_SYNC_WINDOW_ORACLE, tags=("pipeline",))
 def sync_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental sync window: activities in the trailing 7 days of the
-    table's high-water mark. The scalar max is broadcast, not collected."""
-    events = load_table(spark, sf_dir, "events").select(*EVENT_COLS)
-    hwm = events.agg(F.max("ts").alias("_max_ts"))
-    return (
-        events.crossJoin(F.broadcast(hwm))
-        .where(F.col("ts") >= F.col("_max_ts") - F.expr("INTERVAL 7 DAY"))
-        .drop("_max_ts")
+    table's high-water mark. The same single filter as
+    PipelineService.sync_window: max(ts) comes from the handle
+    (catalog.max_micros, one eager job per table version) and folds to a
+    literal bound the scan pushes down."""
+    handle = load_table(spark, sf_dir, "events")
+    events = handle.select(*EVENT_COLS)
+    hwm = max_micros(handle, "ts")
+    if hwm is None:
+        return events.where(F.lit(False))
+    return events.where(
+        F.col("ts") >= F.timestamp_micros(F.lit(hwm)) - F.expr("INTERVAL 7 DAY")
     )
 
 

@@ -39,6 +39,23 @@ filesystem, a missing path) has no token and is resolved on every call.
 Handles are kept per session; a stopped session's handles are dropped
 and a new session never receives them. ``max_micros`` computes a
 handle's column maximum once per version.
+
+SERVING CACHE: ``note_read`` counts the reads a server makes of a
+handle, and a version's SECOND read persists it at
+``StorageLevel.DISK_ONLY``: Spark's columnar cache, compressed 10k-row
+batches with per-batch min/max statistics, so later reads decode no
+parquet, skip the timestamp repair and skip the batches a filter on a
+sorted column rules out. A version read once (a sync read-back reads
+each new version once) is never cached. ``DISK_ONLY`` keeps the blocks
+out of the JVM heap; they are read back through the OS page cache.
+When ``load_table`` replaces a handle with a newer version it
+unpersists the old one — it must: Spark matches cached plans by
+result, and a re-read of the same path matches the old version's
+entry. The count, the persist and the unpersist run under one lock.
+Spark's cache is shared by the whole SparkContext, so once a version
+is cached EVERY reader of it in the session reads the cache, registry
+builders included, until ``spark.catalog.clearCache()``; a version
+whose cache was cleared is not cached again.
 """
 
 from __future__ import annotations
@@ -49,6 +66,7 @@ import threading
 import weakref
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -83,6 +101,7 @@ class _Handle:
     token: tuple
     df: DataFrame
     maxima: dict[str, int | None] = field(default_factory=dict)
+    reads: int = 0
 
 
 # session -> {table path -> handle}. Weakly keyed, so an entry never
@@ -111,11 +130,22 @@ def _version_token(path: str) -> tuple | None:
     return (_stat_key(st), tuple(entries))
 
 
+def _session_handles_locked(spark: SparkSession) -> dict[str, _Handle]:
+    for stopped in [s for s in _HANDLES if s._sc._jsc is None]:
+        del _HANDLES[stopped]
+    return _HANDLES.setdefault(spark, {})
+
+
 def _session_handles(spark: SparkSession) -> dict[str, _Handle]:
     with _LOCK:
-        for stopped in [s for s in _HANDLES if s._sc._jsc is None]:
-            del _HANDLES[stopped]
-        return _HANDLES.setdefault(spark, {})
+        return _session_handles_locked(spark)
+
+
+def _handle_locked(df: DataFrame) -> _Handle | None:
+    """The current handle whose DataFrame is ``df``; a replaced one is
+    no longer found."""
+    handles = _session_handles_locked(df.sparkSession).values()
+    return next((h for h in handles if h.df is df), None)
 
 
 def _resolve(spark: SparkSession, path: str, name: str) -> DataFrame:
@@ -160,6 +190,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     with _LOCK:
         hit = handles.get(path)
         if hit is None or hit.token != token:
+            if hit is not None:
+                hit.df.unpersist()
             hit = handles[path] = _Handle(token, _resolve(spark, path, name))
         return hit.df
 
@@ -168,15 +200,29 @@ def max_micros(df: DataFrame, col: str) -> int | None:
     """Maximum of timestamp column ``col`` as epoch microseconds (None
     on an empty table). For a ``load_table`` handle it is computed once
     per table version; any other DataFrame runs one job per call."""
-    handle = next(
-        (h for h in _session_handles(df.sparkSession).values() if h.df is df), None
-    )
+    with _LOCK:
+        handle = _handle_locked(df)
     if handle is not None and col in handle.maxima:
         return handle.maxima[col]
     value = df.agg(F.max(F.unix_micros(F.col(col)))).first()[0]
     if handle is not None:
         handle.maxima[col] = value
     return value
+
+
+def note_read(df: DataFrame) -> DataFrame:
+    """Count one serving read of ``df`` and return it. The second read
+    of a ``load_table`` handle persists it at ``DISK_ONLY`` (see SERVING
+    CACHE in the module docstring); ``persist`` returns the same object,
+    so ``max_micros`` still finds the handle. Any other DataFrame is
+    returned untouched."""
+    with _LOCK:
+        handle = _handle_locked(df)
+        if handle is not None:
+            handle.reads += 1
+            if handle.reads == 2:
+                df.persist(StorageLevel.DISK_ONLY)
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -28,7 +28,6 @@ _BNLJ_OK = {
     "events_in_windows",
     "ann_topk",
     "ann_ivf",
-    "sync_window",
     "q22_dormant_customers",  # 1-row avg-acctbal threshold broadcast
     "tfidf_top_terms",  # 1-row corpus-count broadcast
     "unigram_logprob",  # 1-row token-total broadcast

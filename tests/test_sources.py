@@ -8,6 +8,7 @@ import os
 
 import pytest
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from strava_data_pipeline_spark.sources.strava_api import (
@@ -108,7 +109,9 @@ class TestCatalogTimestampContract:
 class TestCatalogHandles:
     """load_table keeps one handle per table version (sources/catalog.py
     module docstring): the same object while the path is unchanged, a
-    fresh one that sees the new rows once the table is replaced."""
+    fresh one that sees the new rows once the table is replaced. A
+    version's second served read (note_read) caches it; a replace
+    uncaches the old version."""
 
     @staticmethod
     def _events(spark, ids, day):
@@ -120,16 +123,53 @@ class TestCatalogHandles:
         rows = [(i, datetime(2024, 1, day, 10), 7, "run", float(i)) for i in ids]
         return one_slice_frame(spark, rows, EVENT_SCHEMA)
 
+    @staticmethod
+    def _at_once(n, fn):
+        """Run ``fn`` on ``n`` threads released together, with a tiny
+        switch interval so they interleave."""
+        import sys
+        import threading
+
+        start = threading.Barrier(n)
+
+        def run():
+            start.wait(timeout=60)
+            fn()
+
+        threads = [threading.Thread(target=run) for _ in range(n)]
+        old_interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(old_interval)
+        assert not any(t.is_alive() for t in threads)
+
     def test_unchanged_path_returns_same_handle(self, spark, sf_dir):
         from strava_data_pipeline_spark.sources.catalog import load_table
 
         assert load_table(spark, sf_dir, "events") is load_table(spark, sf_dir, "events")
 
+    def test_second_read_caches_version(self, spark, sf_dir, tmp_path):
+        import shutil
+
+        from strava_data_pipeline_spark.sources.catalog import load_table, note_read
+
+        shutil.copy(os.path.join(sf_dir, "events.parquet"), tmp_path)
+        handle = load_table(spark, str(tmp_path), "events")
+        assert note_read(handle) is handle
+        assert handle.storageLevel == StorageLevel.NONE
+        assert note_read(load_table(spark, str(tmp_path), "events")) is handle
+        assert handle.storageLevel == StorageLevel.DISK_ONLY
+
     def test_replaced_single_file_gives_fresh_handle(self, spark, tmp_path):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from strava_data_pipeline_spark.sources.catalog import load_table
+        from strava_data_pipeline_spark.sources.catalog import load_table, note_read
 
         path = tmp_path / "events.parquet"
 
@@ -142,15 +182,17 @@ class TestCatalogHandles:
             os.replace(staged, path)
 
         write([1, 2])
-        first = load_table(spark, str(tmp_path), "events")
+        first = note_read(note_read(load_table(spark, str(tmp_path), "events")))
+        assert first.storageLevel == StorageLevel.DISK_ONLY
         assert sorted(r["event_id"] for r in first.collect()) == [1, 2]
         write([1, 2, 3])
         second = load_table(spark, str(tmp_path), "events")
         assert second is not first
+        assert first.storageLevel == StorageLevel.NONE
         assert sorted(r["event_id"] for r in second.collect()) == [1, 2, 3]
 
     def test_dynamic_overwrite_of_one_day_gives_fresh_handle(self, spark, tmp_path):
-        from strava_data_pipeline_spark.sources.catalog import load_table
+        from strava_data_pipeline_spark.sources.catalog import load_table, note_read
 
         target = str(tmp_path / "events.parquet")
 
@@ -160,19 +202,20 @@ class TestCatalogHandles:
             ).partitionBy("p_day").parquet(target)
 
         write(self._events(spark, [1, 2], 1).unionByName(self._events(spark, [3], 2)), "error")
-        first = load_table(spark, str(tmp_path), "events")
+        first = note_read(load_table(spark, str(tmp_path), "events"))
         assert sorted(r["event_id"] for r in first.collect()) == [1, 2, 3]
-        assert load_table(spark, str(tmp_path), "events") is first
+        assert note_read(load_table(spark, str(tmp_path), "events")) is first
+        assert first.storageLevel == StorageLevel.DISK_ONLY
+        assert sorted(r["event_id"] for r in first.collect()) == [1, 2, 3]
         # the sync sink's commit: only the Jan 2 day dir is replaced
         write(self._events(spark, [3, 4], 2), "overwrite")
         second = load_table(spark, str(tmp_path), "events")
         assert second is not first
+        assert first.storageLevel == StorageLevel.NONE
         assert sorted(r["event_id"] for r in second.collect()) == [1, 2, 3, 4]
 
     def test_concurrent_first_loads_resolve_once(self, spark, sf_dir, tmp_path, monkeypatch):
         import shutil
-        import sys
-        import threading
 
         from strava_data_pipeline_spark.sources import catalog
 
@@ -183,26 +226,33 @@ class TestCatalogHandles:
             catalog, "_resolve", lambda *a: resolves.append(a) or real_resolve(*a)
         )
         n = 8
-        start = threading.Barrier(n)
         got = []
-
-        def load():
-            start.wait(timeout=60)
-            got.append(catalog.load_table(spark, str(tmp_path), "events"))
-
-        threads = [threading.Thread(target=load) for _ in range(n)]
-        old_interval = sys.getswitchinterval()
-        sys.setswitchinterval(1e-6)
-        try:
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join(timeout=120)
-        finally:
-            sys.setswitchinterval(old_interval)
-        assert not any(t.is_alive() for t in threads)
+        self._at_once(
+            n, lambda: got.append(catalog.load_table(spark, str(tmp_path), "events"))
+        )
         assert len(got) == n and all(df is got[0] for df in got)
         assert len(resolves) == 1
+
+    def test_concurrent_second_reads_persist_once(self, spark, sf_dir, tmp_path, monkeypatch):
+        import shutil
+
+        from strava_data_pipeline_spark.sources import catalog
+
+        shutil.copy(os.path.join(sf_dir, "events.parquet"), tmp_path)
+        handle = catalog.note_read(catalog.load_table(spark, str(tmp_path), "events"))
+        persists = []
+        real_persist = type(handle).persist
+        monkeypatch.setattr(
+            type(handle),
+            "persist",
+            lambda df, *a: persists.append(df) or real_persist(df, *a),
+        )
+        self._at_once(
+            8,
+            lambda: catalog.note_read(catalog.load_table(spark, str(tmp_path), "events")),
+        )
+        assert len(persists) == 1 and persists[0] is handle
+        assert handle.storageLevel == StorageLevel.DISK_ONLY
 
     def test_new_session_never_gets_a_stopped_sessions_handle(self, sf_dir):
         # stopping a session stops its SparkContext, so this runs in a

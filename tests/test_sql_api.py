@@ -140,7 +140,10 @@ def _window_sql(src: str, days: int) -> str:
 def svc(spark):
     from strava_data_pipeline_spark.api.service import PipelineService
 
-    return PipelineService(spark, SF_DIR)
+    yield PipelineService(spark, SF_DIR)
+    # serving a table version twice caches it for the whole session
+    # (catalog.note_read); later modules plan against the files
+    spark.catalog.clearCache()
 
 
 def test_get_activity_matches_duckdb(svc):

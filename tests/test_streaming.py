@@ -31,22 +31,30 @@ def _drain_and_stop(q, timeout=120):
     """Run an availableNow query until its DATA is fully processed,
     then stop it. A query whose state uses ProcessingTimeTimeout never
     self-terminates under availableNow: after the data batches it sits
-    in a 'No new data but cleaning up state' trigger waiting for
-    wall-clock timers that are minutes out — awaitTermination(120)
-    burned its full timeout (2x ~125s in this file, measured r12).
-    Draining = every input batch committed and no new data available;
-    the assertions these tests make (columns exist / no rows emitted /
+    in state-cleanup triggers waiting for wall-clock timers that are
+    minutes out — awaitTermination(120) burned its full timeout (2x
+    ~125s in this file, measured r12). Draining = every input batch
+    committed and no new data available: the trigger is idle, or three
+    consecutive new progress reports read no input rows. Spark's
+    'No new data but cleaning up state' status message is a faster
+    sign of the same; it is private wording, so it is only a shortcut.
+    The assertions these tests make (columns exist / no rows emitted /
     state didn't crash) are about the committed data batches."""
     import time
 
     deadline = time.time() + timeout
+    seen, idle_reports = None, 0
     while time.time() < deadline and q.isActive:
-        s = q.status
+        s, p = q.status, q.lastProgress
+        if p is not None and (p["batchId"], p["timestamp"]) != seen:
+            seen = (p["batchId"], p["timestamp"])
+            idle_reports = idle_reports + 1 if p["numInputRows"] == 0 else 0
         if (
-            q.lastProgress is not None
+            p is not None
             and not s["isDataAvailable"]
             and (
                 not s["isTriggerActive"]
+                or idle_reports >= 3
                 or s["message"] == "No new data but cleaning up state"
             )
         ):

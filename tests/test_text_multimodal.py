@@ -225,10 +225,20 @@ class TestApiKeys:
 
 
 class TestUserCrud:
-    """User-dim CRUD parity: user.go:34,56,74,92,110,125."""
+    """User-dim CRUD parity: user.go:34,56,74,92,110,125. The dim is
+    built once per mutation, so each test looks up before and after a
+    mutation."""
+
+    @pytest.fixture(autouse=True)
+    def _release_cache(self, spark):
+        # serving customer twice caches it for the whole session
+        # (catalog.note_read); later modules plan against the files
+        yield
+        spark.catalog.clearCache()
 
     def test_create_and_lookups(self, spark, sf_dir):
         svc = PipelineService(spark, sf_dir)
+        assert svc.get_user_by_username("new_athlete").count() == 0
         uid = svc.create_user("new_athlete", athlete_id=555)
         assert svc.get_user_by_id(uid).take(1)[0]["username"] == "new_athlete"
         assert svc.get_user_by_username("new_athlete").take(1)[0]["user_id"] == uid
@@ -248,11 +258,17 @@ class TestUserCrud:
         assert got["athlete_id"] == 1 + 10**7
         # no duplicate row for the overlaid id
         assert svc.get_user_by_id(1).count() == 1
+        assert svc.update_user(1, athlete_id=77)
+        got = svc.get_user_by_id(1).take(1)[0]
+        assert (got["username"], got["athlete_id"]) == ("renamed", 77)
 
     def test_delete_tombstones(self, spark, sf_dir):
         svc = PipelineService(spark, sf_dir)
+        assert svc.get_user_by_id(3).count() == 1
         assert svc.delete_user(2)
         assert svc.get_user_by_id(2).count() == 0
+        assert svc.delete_user(3)
+        assert svc.get_user_by_id(3).count() == 0
         assert not svc.update_user(2, username="zombie")
         assert not svc.delete_user(2)
 
