@@ -237,10 +237,7 @@ def main() -> None:
     # a startup cost charged to whichever query happens to cross the
     # Python boundary first, not that query's own work. One tiny
     # identity mapInPandas over one partition per core forks and warms
-    # them all. Measurement methodology is otherwise unchanged; the
-    # old numbers (BENCH_r10, BASELINE_BENCH floors) stay comparable
-    # because floors are fresh-JVM minimums of queries that mostly ran
-    # warm anyway.
+    # them all.
     def _warm(it):
         import numpy  # noqa: F401  — the decode stages' import cost
 
@@ -278,150 +275,7 @@ def main() -> None:
         "queries": dict(sorted(timings.items(), key=lambda kv: kv[1])),
     }
 
-    # Second tier (opt-in: SPARK_GRAFT_BENCH_ALL=1): EVERY registry
-    # query at sf0.01 — catches a regression in any operator the
-    # headline set doesn't cover. Same single-JSON-line contract.
-    if os.environ.get("SPARK_GRAFT_BENCH_ALL"):
-        tier2_dir = os.environ.get(
-            "SPARK_GRAFT_TIER2_DIR", "/root/testdata/sf0.01"
-        )
-        tier2: dict[str, float] = {}
-        for name in sorted(queries):
-            t0 = time.time()
-            queries[name](spark, tier2_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            tier2[name] = round(time.time() - t0, 3)
-            spark.catalog.clearCache()
-        # tier2 inserts BEFORE the headline `queries` key so the
-        # stdout tail still ends with the headline numbers
-        hl = out.pop("queries")
-        out["tier2_sf"] = 0.01
-        out["tier2_total"] = round(sum(tier2.values()), 3)
-        out["tier2_queries"] = dict(sorted(tier2.items(), key=lambda kv: kv[1]))
-        out["queries"] = hl
-
     emit(out)
-
-    # Opt-in per-round regression gate (SPARK_GRAFT_REGRESSION_GATE=1):
-    # compare this UNCONTENDED run against the recorded floor and fail
-    # loudly if any query regressed past 1.5x. Off by default — the
-    # driver's contended run shares the box with other work, and a
-    # uniform ~1.6x contention tax (VERDICT r3) is not a regression.
-    if os.environ.get("SPARK_GRAFT_REGRESSION_GATE"):
-        raise SystemExit(gate(out["queries"], tier2=out.get("tier2_queries")))
-
-
-def _subsecond_aggregate_regressions(
-    floor: dict,
-    cur: dict,
-    band: list | None,
-    label: str,
-    ratio: float = 1.5,
-    cutoff: float = 1.0,
-    band_margin: float = 1.25,
-    members: list | None = None,
-) -> set:
-    """One gated quantity for the queries the per-query cutoff skips:
-    SUM of current times over queries whose FLOOR is sub-cutoff,
-    compared against the sum of those floors (ratio) and the recorded
-    sum band (same margin discipline as per-query bands). Only queries
-    present in BOTH maps count, so a trimmed run stays comparable.
-
-    ``members`` is the membership list FROZEN at band-merge time
-    (bench_bands.py writes it next to the band): the recorded sum band
-    was measured over that set, so gating a sum recomputed from
-    CURRENT floors against it compares incomparable quantities
-    whenever a later merge moved a floor across the cutoff (ADVICE
-    r7). Without a frozen list (pre-r8 baseline), fall back to
-    deriving membership from the floors, as before."""
-    if members is not None:
-        names = [n for n in members if n in floor and n in cur]
-    else:
-        names = [n for n, f in floor.items() if f < cutoff and n in cur]
-    if not names:
-        return set()
-    base_sum = sum(floor[n] for n in names)
-    cur_sum = sum(cur[n] for n in names)
-    # the absolute-delta floor mirrors the per-query cutoff: a sum
-    # that grew by less than one cutoff's worth is the same scheduler
-    # jitter the cutoff exists to ignore (a lone 0.1s query doubling
-    # must not trip the aggregate)
-    if cur_sum <= ratio * base_sum or cur_sum - base_sum < cutoff:
-        return set()
-    if band is not None and cur_sum <= band[1] * band_margin:
-        return set()
-    return {f"{label}({len(names)}q:{cur_sum:.2f}s/floor{base_sum:.2f}s)"}
-
-
-def gate(timings: dict, floor_path: str | None = None, tier2: dict | None = None) -> int:
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
-    from bench_compare import compare
-
-    floor_path = floor_path or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BASELINE_BENCH.json"
-    )
-    if not os.path.exists(floor_path):
-        print(f"regression gate: no floor at {floor_path}, skipping", file=sys.stderr)
-        return 0
-    with open(floor_path) as f:
-        floor_doc = json.load(f)
-    # 1.0s absolute cutoff: sub-second queries jitter multiplicatively
-    # (an r6 quiet-box run flagged user_activity_join at 0.741s — 3.5
-    # MILLISECONDS past its margined band on a host cycling between
-    # load 0 and 13) and their regressions are invisible in the
-    # aggregate the gate protects; the expensive plans are the ones
-    # that can go quadratic. The recorded variance bands MUST reach
-    # the compare (a query at or below its margined band high is
-    # observed machine variance, not a plan regression) — the first
-    # r6 gate run flagged decontaminate at 1.46s, inside its recorded
-    # [1.33, 1.62] band, because the bands weren't passed here.
-    regressed = set(
-        compare(
-            floor_doc["queries"],
-            timings,
-            ratio=1.5,
-            min_abs_sec=1.0,
-            bands=floor_doc.get("bands"),
-        )
-    )
-    # The 1.0s cutoff leaves ~60 sub-second queries individually
-    # unguarded; their SUM is gated as one quantity so a broad
-    # small-query regression (a session-config slip, a new per-query
-    # fixed cost) cannot hide under the cutoff. The set is defined by
-    # the FLOOR (floor < cutoff), so membership is stable across runs.
-    regressed |= _subsecond_aggregate_regressions(
-        floor_doc["queries"],
-        timings,
-        band=floor_doc.get("sub_cutoff_band"),
-        label="subsecond_sum",
-        members=floor_doc.get("sub_cutoff_members"),
-    )
-    # tier2 (all-registry sf0.01) compares when BOTH sides carry it —
-    # the non-headline queries' only perf guard
-    if tier2 and floor_doc.get("tier2_queries"):
-        regressed |= {
-            f"tier2:{n}"
-            for n in compare(
-                floor_doc["tier2_queries"],
-                tier2,
-                ratio=1.5,
-                min_abs_sec=1.0,
-                bands=floor_doc.get("tier2_bands"),
-            )
-        }
-        regressed |= _subsecond_aggregate_regressions(
-            floor_doc["tier2_queries"],
-            tier2,
-            band=floor_doc.get("tier2_sub_cutoff_band"),
-            label="tier2:subsecond_sum",
-            members=floor_doc.get("tier2_sub_cutoff_members"),
-        )
-    if regressed:
-        print(f"regression gate FAILED: {sorted(regressed)}", file=sys.stderr)
-        return 1
-    print("regression gate: clean", file=sys.stderr)
-    return 0
 
 
 def emit(out: dict) -> None:

@@ -41,126 +41,17 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-# Enumeration-order priority: the driver's correctness harness samples a
-# rotating subset of ``queries()`` per round, and dict order is the only
-# lever the engine has over which queries get officially recorded.  The
-# r12 ordering puts CHANGED-CODE rows first (r11 VERDICT task 2b: an
-# optimization round must officially re-green what it touched — 16 of
-# the 17 r11-touched rows fell outside the r11 window), then resumes
-# the oldest-official-green-first cycle: the r11 window re-proved the
-# r6 block and r7 through q12_returnflag_priority, so the remaining r7
-# rows and the r8 block follow; everything r9+ stays at registration
-# order in the tail.
-_ENUMERATE_FIRST: tuple[str, ...] = (
-    # --- r12 head: every row whose CODE changed in the r11/r12
-    #     optimization rounds leads the window, so the driver's
-    #     rotating ~50-query oracle sample officially re-greens the
-    #     touched faces first (r11 VERDICT task 2b: 16 of the 17
-    #     r11-touched rows fell outside the r11 window) ---
-    'dedup_index_audit',
-    'dedup_incremental',
-    'bloom_semi_join',
-    'quarantine_audit',
-    'versioned_sink_audit',
-    'attribution_audit',
-    'attribution_inner_audit',
-    'attribution_unmatched_audit',
-    'export_pipeline_e2e',
-    'curation_pipeline_e2e',
-    'sync_audit',
-    'windowed_counts_audit',
-    'dedup_stream_audit',
-    'session_window_audit',
-    'enrich_audit',
-    'ewma_audit',
-    'stateful_session_audit',
-    'cms_merge_audit',
-    'rollup_audit',
-    # --- oldest-official-green-first continues the r10/r11 cycle:
-    #     the r11 window re-proved r6 + r7 through q12; the
-    #     remaining r7 rows, then the r8 block, fill the window ---
-    'q13_order_distribution',
-    'q14_promo_revenue',
-    'q15_top_supplier',
-    'q16_supplier_count',
-    'q17_small_qty_revenue',
-    'q18_large_orders',
-    'q19_disjunctive_revenue',
-    'q1_pricing_summary',
-    'q20_dominant_suppliers',
-    'q21_waiting_suppliers',
-    'q22_dormant_customers',
-    'q2_min_cost_supplier',
-    'q3_shipping_priority',
-    'q5_local_supplier',
-    'q6_forecast_revenue',
-    'q7_nation_trade',
-    'q8_market_share',
-    'q9_product_profit',
-    'retrieval_rank_agreement',
-    'scd2_intervals',
-    'sessions_overlap_windows',
-    'source_caps_sampled',
-    'token_coverage_curve',
-    'top_customers_by_revenue',
-    'user_churn_setops',
-    'weekly_type_trend',
-    'attribution_last_touch_bucketed',
-    'cms_heavy_hitters',
-    'cusum_changepoint_bucketed',
-    'dedup_clusters',
-    'dedup_containment',
-    'dedup_simhash64',
-    'dedup_substring',
-    'embedding_centroids',
-    'events_asof_profile',
-    'events_funnel',
-    'events_in_windows',
-    'events_pivot',
-    'events_rolling_7d_bucketed',
-    'events_rollup',
-    'jwt_validate',
-    'key_lifecycle',
-    'key_lookup',
-    'kmeans_lloyd',
-    'lang_confusion',
-    'multimodal_decode_bmp',
-    'multimodal_decode_gif',
-    'multimodal_features',
-    'multimodal_resize',
-    'percentile_stats',
-    'perplexity_buckets',
-    'pii_redact',
-    'quality_calibration',
-    'quality_filter',
-    'repetition_metrics',
-    'retention_cohorts',
-    'scd2_intervals_bucketed',
-    'semdedup',
-    'session_stats',
-    'sessions_overlap_bucketed',
-    'source_caps',
-    'stratified_sample',
-)
-
-
-def _ordered_names() -> list[str]:
-    head = [n for n in _ENUMERATE_FIRST if n in REGISTRY]
-    head_set = set(head)
-    return head + [n for n in REGISTRY if n not in head_set]
-
-
 def all_queries() -> dict[str, QueryFn]:
     _load()
-    return {name: REGISTRY[name].fn for name in _ordered_names()}
+    return {name: entry.fn for name, entry in REGISTRY.items()}
 
 
 def all_oracles() -> dict[str, str]:
     _load()
     return {
-        name: REGISTRY[name].oracle
-        for name in _ordered_names()
-        if REGISTRY[name].oracle is not None
+        name: entry.oracle
+        for name, entry in REGISTRY.items()
+        if entry.oracle is not None
     }
 
 

@@ -12,12 +12,11 @@ applied to corpus export:
   operators/bucketed_prefix.bucketed_cumsum (constant key, 64 contiguous
   hash-range buckets — the sequential dependency rides one summary row
   per bucket, never the corpus);
-- the write goes through sources/versioned.commit_snapshot_bulk_partitioned
-  — ONE Spark job lays down every shard dir via dynamic partitionBy
-  (the incremental per-partition commit loop would cost one job per
-  shard: thousands for a real export), manifest + marker publish — a
-  crash at any point leaves the previous export fully readable and the
-  half-written shards invisible;
+- the write goes through sources/versioned.commit_snapshot_partitioned
+  with ``replace=True`` — ONE Spark job lays down every shard dir via
+  dynamic partitionBy, and the manifest holds exactly those shards;
+  manifest + marker publish — a crash at any point leaves the previous
+  export fully readable and the half-written shards invisible;
 - replay is CONTENT-idempotent: a fingerprint of the kept set (exact
   BIGINT triple, order-insensitive) rides a sidecar next to the version
   marker, and re-exporting identical content returns the existing
@@ -42,7 +41,7 @@ from strava_data_pipeline_spark.operators.bucketed_prefix import (
 )
 from strava_data_pipeline_spark.sources.versioned import (
     _fs,
-    commit_snapshot_bulk_partitioned,
+    commit_snapshot_partitioned,
     current_version,
 )
 
@@ -174,11 +173,10 @@ def export_corpus_shards(
                 "refusing to publish an empty corpus export "
                 "(kept set has zero documents)"
             )
-        # bulk single-pass publish: an export lays down THOUSANDS of
-        # shard dirs (one per ~target tokens); the incremental
-        # per-partition loop would cost one Spark job each
+        # full publish: every shard dir in one Spark job, and the new
+        # manifest drops the previous export's shards
         sharded = assign_shards(kept, target_tokens)
-        ver = commit_snapshot_bulk_partitioned(sharded, root, "shard_id")
+        ver = commit_snapshot_partitioned(sharded, root, "shard_id", replace=True)
         _write_sidecar(
             spark,
             root,

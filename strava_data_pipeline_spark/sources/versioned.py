@@ -13,6 +13,16 @@ highest committed version, so a writer crash at ANY point leaves the
 previous snapshot fully readable and the half-written directory
 invisible.
 
+Two commits share that protocol. :func:`commit_snapshot` writes a full
+``v=N`` dir. :func:`commit_snapshot_partitioned` writes the partitions
+it is given under ``seg/v<N>/`` in one Spark job and publishes a
+manifest ``_v_N.manifest`` (``{partition token: dir}``) that reuses the
+previous version's untouched entries, or, with ``replace=True``, holds
+only what was written. Its tokens are read back from the dir names the
+write produced, so every value :func:`_part_token` accepts (NULL,
+``''``, ``a/b``, ``x=y``, ``50%``) round-trips; values whose dirs cannot be
+mapped back, and empty manifests, are refused before publishing.
+
 Retained snapshots are time travel for free; ``vacuum`` bounds them.
 All filesystem access goes through the Hadoop FileSystem API so the
 store works on HDFS/S3A/local alike.
@@ -23,13 +33,17 @@ from __future__ import annotations
 import hashlib
 import json
 import re
+import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, IntegralType, StringType
 
 _MARKER = re.compile(r"_v_(\d+)\.committed$")
 
 _NULL_TOKEN = "__null__"
+
+_HIVE_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _part_token(val) -> str:
@@ -165,157 +179,88 @@ def _write_manifest(
         out.close()
 
 
+def _dir_token(name: str) -> str:
+    """Manifest token of one ``__part=v<value>`` dir a ``partitionBy``
+    write produced. Spark writes NULL as Hive's default-partition dir and
+    percent-escapes ``/``, ``=``, ``%`` and a few other characters in
+    the value, so the raw value is recovered before it is tokenized. The
+    ``v`` prefix keeps ``''`` and the literal string
+    ``__HIVE_DEFAULT_PARTITION__`` out of the NULL dir, where Spark
+    would otherwise file both."""
+    raw = name[len("__part=") :]
+    if raw == _HIVE_NULL_DIR:
+        return _part_token(None)
+    return _part_token(urllib.parse.unquote(raw)[1:])
+
+
 def commit_snapshot_partitioned(
     changed: DataFrame,
     root: str,
     part_col: str,
     part_values: list | None = None,
-    migrate_legacy: bool = False,
-    drop_part_values: list | None = None,
+    replace: bool = False,
 ) -> int:
-    """Publish the next version rewriting ONLY the touched partitions.
+    """Publish the next version, writing every partition of ``changed``
+    in ONE Spark job.
 
-    ``changed`` must hold the complete post-merge contents of the
-    partitions it covers (and nothing else). Each touched partition is
-    written to a fresh immutable dir ``seg/v<N>/<token>``; the new
-    manifest maps every partition to its data dir, reusing the previous
-    version's entries for untouched partitions — their files are never
-    rewritten, so a trigger costs O(touched partitions), not O(table).
-    The marker creation stays the single atomic publish step; a crash
-    at any point leaves only invisible dirs and the previous manifest
-    readable. ``part_values`` skips the distinct-scan when the caller
-    already knows the touched set (O(#partitions) metadata, cheap).
+    One dynamic ``partitionBy`` write lays down ``seg/v<N>/__part=v<x>``
+    for each partition value ``x`` in ``changed`` (the data files keep
+    ``part_col``; a ``__part`` copy, cast to string, drives the layout).
+    ``seg/v<N>`` is written as a static overwrite, so a crashed earlier
+    attempt at N is wholly replaced. The manifest is built from the dirs
+    the write produced (see :func:`_dir_token`), then written, and the
+    marker creation publishes. ``changed`` is evaluated once.
 
-    Committing on top of a legacy full-directory version raises unless
-    ``migrate_legacy=True``: the legacy snapshot has no partition dirs
-    to reuse, so a partial commit would silently drop every untouched
-    row. With ``migrate_legacy=True`` the caller asserts ``changed``
-    holds the COMPLETE table, materializing it into per-partition dirs
-    as the one-time migration step.
+    Splice mode (default): ``changed`` holds the complete post-merge
+    contents of the partitions it covers. The previous manifest's other
+    entries are reused verbatim, so a commit costs O(touched partitions),
+    not O(table). ``part_values`` declares the touched set: a declared
+    partition that ends up empty produces no dir and leaves the manifest,
+    and a produced dir outside the declared set raises before anything
+    is published (a stray value, or a type whose Spark rendering differs
+    from Python's ``str()``). Without ``part_values`` the touched set is
+    what the write produced. Dirs that leave the manifest stay on disk
+    for time travel until :func:`vacuum`. Committing on top of a
+    legacy full-directory version raises: it has no partition dirs to
+    reuse, so every untouched row would be lost.
 
-    ``drop_part_values`` removes whole partitions from the new version's
-    manifest without writing anything for them — the partition-drop
-    primitive behind retention and erasure (a fully-erased partition
-    must disappear from the manifest, not become an empty dir that
-    breaks schema inference). Dropped dirs stay on disk for time travel
-    until :func:`vacuum` reclaims them."""
+    ``replace=True``: ``changed`` is the COMPLETE table and the manifest
+    holds only what was produced (a full publish, or the one-time
+    migration of a legacy version).
+
+    Refused before publishing: a ``part_col`` type other than integral,
+    date or string when no ``part_values`` are declared (its dir names
+    could not be checked), and an empty manifest (a marker over nothing
+    readable)."""
     spark = changed.sparkSession
     prev = current_version(spark, root)
     manifest: dict[str, str] = {}
-    if prev:
-        prev_manifest = read_manifest(spark, root, prev)
-        if prev_manifest is None and not migrate_legacy:
-            # a legacy full-directory snapshot has no per-partition dirs
-            # to reuse: starting an empty manifest here would publish a
-            # version that silently LOSES every untouched row
-            raise ValueError(
-                f"snapshot v={prev} under {root} is a legacy full-directory "
-                "version with no partition manifest; a partitioned commit "
-                "on top of it would drop all untouched partitions. Pass "
-                "migrate_legacy=True with the COMPLETE table contents to "
-                "materialize it into per-partition dirs once, or keep "
-                "using commit_snapshot."
-            )
-        manifest = dict(prev_manifest or {})
-    ver = (prev or 0) + 1
-    changed = changed.persist()
-    try:
-        if part_values is None:
-            part_values = [r[0] for r in changed.select(part_col).distinct().collect()]
-        for val in sorted(part_values, key=str):
-            token = _part_token(val)
-            rel = f"seg/v{ver}/{token}"
-            # overwrite, not error: the dir is invisible until the marker
-            # exists, and a replayed batch that crashed mid-write must be
-            # able to redo its own half-written dir. eqNullSafe: a null
-            # partition value (to_date of a null ts) must land in its
-            # reserved dir, not silently match nothing and vanish.
-            changed.where(F.col(part_col).eqNullSafe(F.lit(val))).write.mode(
-                "overwrite"
-            ).parquet(f"{root}/{rel}")
-            manifest[token] = rel
-    finally:
-        changed.unpersist()
-    for val in drop_part_values or []:
-        manifest.pop(_part_token(val), None)
-    _write_manifest(spark, root, ver, manifest)
-    fs, jvm = _fs(spark, root)
-    fs.create(jvm.org.apache.hadoop.fs.Path(f"{root}/_v_{ver}.committed"), False).close()
-    return ver
-
-
-def onepass_tokens_ok(part_values: list) -> bool:
-    """True iff every touched value round-trips the manifest token
-    scheme verbatim AND none is null — the precondition for
-    :func:`commit_snapshot_partitioned_onepass`, whose manifest tokens
-    are taken from Spark's own partition-dir names. A null value would
-    land under Hive's ``__HIVE_DEFAULT_PARTITION__`` dir (not the
-    store's reserved null token), and a sanitized value would not
-    round-trip; both keep the per-partition loop path. ``=`` is token-
-    clean but Hive-escaped in directory names, so it is excluded too."""
-    return all(
-        v is not None and _part_token(v) == str(v) and "=" not in str(v)
-        for v in part_values
-    )
-
-
-def commit_snapshot_partitioned_onepass(
-    changed: DataFrame,
-    root: str,
-    part_col: str,
-    part_values: list,
-    drop_part_values: list | None = None,
-) -> int:
-    """One-Spark-job sibling of :func:`commit_snapshot_partitioned` for
-    batches that touch MANY partitions: identical manifest-splice
-    contract (untouched entries reused verbatim, touched partitions
-    rewritten under ``seg/v<N>``), but the touched dirs are laid down
-    by a single dynamic ``partitionBy`` write instead of one
-    filter-and-write Spark job per partition. The loop path is the
-    right trade for a trigger touching a handful of days; a batch
-    touching every day of a month is 30 sequential jobs there (and a
-    100 TB churn batch thousands) against exactly one here — job-count
-    O(1) vs O(touched partitions), same committed bytes.
-
-    Two contract refinements over the loop, both strictly safer:
-    - a touched partition whose post-merge contents are EMPTY simply
-      produces no dir and drops out of the manifest (the loop path
-      needs the caller to pre-compute that set or it publishes an
-      empty dir that breaks schema inference);
-    - ``changed`` is evaluated exactly once (the loop persists it and
-      re-filters per partition).
-
-    Requires :func:`onepass_tokens_ok` — every touched value must be
-    non-null and render its own manifest token (dates/ints/safe
-    strings; the streaming sink's ``p_day`` always does). The data
-    files keep ``part_col`` (a duplicate ``__part`` column drives the
-    layout), so readers see the loop path's schema."""
-    spark = changed.sparkSession
-    prev = current_version(spark, root)
-    manifest: dict[str, str] = {}
-    if prev:
+    if prev and not replace:
         prev_manifest = read_manifest(spark, root, prev)
         if prev_manifest is None:
             raise ValueError(
                 f"snapshot v={prev} under {root} is a legacy full-directory "
-                "version with no partition manifest; use "
-                "commit_snapshot_partitioned(migrate_legacy=True) for the "
-                "one-time migration."
+                "version with no partition manifest; a partitioned commit "
+                "on top of it would drop all untouched partitions. Commit "
+                "the COMPLETE table once with replace=True, or keep using "
+                "commit_snapshot."
             )
         manifest = dict(prev_manifest)
-    if not onepass_tokens_ok(part_values):
-        raise ValueError(
-            "onepass partitioned commit requires non-null, token-clean "
-            "partition values; use commit_snapshot_partitioned for values "
-            "that need sanitizing"
-        )
+    if part_values is None:
+        dtype = changed.schema[part_col].dataType
+        if not isinstance(dtype, (IntegralType, DateType, StringType)):
+            raise ValueError(
+                f"partition column {part_col!r} of type {dtype.simpleString()} "
+                "needs declared part_values: only integral, date and string "
+                "dir names map back to manifest tokens unchecked"
+            )
     ver = (prev or 0) + 1
     seg_rel = f"seg/v{ver}"
-    # static overwrite of the whole unpublished seg dir: a crashed
-    # earlier attempt at this version number is wholly replaced
+    part = F.concat(F.lit("v"), F.col(part_col).cast("string"))
     (
-        changed.withColumn("__part", F.col(part_col))
+        changed.withColumn("__part", part)
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
         .partitionBy("__part")
         .parquet(f"{root}/{seg_rel}")
     )
@@ -323,36 +268,23 @@ def commit_snapshot_partitioned_onepass(
     produced: dict[str, str] = {}
     for status in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{root}/{seg_rel}")):
         name = status.getPath().getName()
-        if not status.isDirectory() or not name.startswith("__part="):
-            continue
-        raw = name[len("__part=") :]
-        if _part_token(raw) != raw:
+        if status.isDirectory() and name.startswith("__part="):
+            produced[_dir_token(name)] = f"{seg_rel}/{name}"
+    if part_values is not None:
+        declared = {_part_token(v) for v in part_values}
+        unexpected = set(produced) - declared
+        if unexpected:
             raise ValueError(
-                f"onepass partition value {raw!r} does not round-trip the "
-                "manifest token scheme; use commit_snapshot_partitioned"
+                "partitioned commit produced partition dirs outside the "
+                f"declared part_values: {sorted(unexpected)!r}"
             )
-        produced[raw] = f"{seg_rel}/{name}"
-    # every produced dir must correspond to a DECLARED touched value:
-    # a changed-row value outside part_values, a NULL (Hive's
-    # __HIVE_DEFAULT_PARTITION__ dir, which round-trips the token check
-    # above), or a float whose JVM rendering differs from Python's
-    # str() would otherwise silently publish under a wrong token or
-    # overwrite an untouched partition's manifest entry
-    unexpected = set(produced) - {_part_token(v) for v in part_values}
-    if unexpected:
-        raise ValueError(
-            "onepass partitioned commit produced partition dirs outside "
-            f"the declared part_values: {sorted(unexpected)!r}"
-        )
-    # touched-but-now-empty partitions produced no dir: they leave the
-    # manifest here, which is exactly the loop path's `drop` semantics
-    for val in list(part_values) + list(drop_part_values or []):
-        manifest.pop(_part_token(val), None)
+        for token in declared:
+            manifest.pop(token, None)
     manifest.update(produced)
     if not manifest:
         raise ValueError(
-            f"onepass partitioned commit under {root} would publish an "
-            "empty manifest (no partitions written or reused); refusing"
+            f"partitioned commit under {root} would publish an empty "
+            "manifest (no partitions written or reused); refusing"
         )
     orphan = _manifest_path(jvm, root, ver)
     if fs.exists(orphan):
@@ -361,84 +293,6 @@ def commit_snapshot_partitioned_onepass(
         fs.delete(orphan, False)
     _write_manifest(spark, root, ver, manifest)
     fs.create(jvm.org.apache.hadoop.fs.Path(f"{root}/_v_{ver}.committed"), False).close()
-    return ver
-
-
-def commit_snapshot_bulk_partitioned(
-    changed: DataFrame, root: str, part_col: str
-) -> int:
-    """Publish the next version writing ALL partitions in ONE Spark job.
-
-    :func:`commit_snapshot_partitioned` filters-and-writes each touched
-    partition separately — one job per partition, the right trade for
-    an incremental merge touching a handful of days, catastrophic for a
-    full-table publish with thousands of partitions (the corpus export
-    produces one shard dir per ~target tokens; at rehearsal scale that
-    was ~1800 sequential jobs). This sibling uses dynamic ``partitionBy``
-    so the shuffle-free single pass lays every partition dir down at
-    once, then builds the manifest from the directories the write
-    actually produced.
-
-    Contract differences from the incremental sibling:
-    - ``changed`` must be the COMPLETE table: no previous-manifest
-      entries are reused (an absent partition disappears — which is the
-      correct replace semantics for a full publish).
-    - ``part_col`` values must render cleanly in a directory name
-      (ints, dates, ``[A-Za-z0-9_.-]`` strings): the manifest token is
-      taken from Spark's own partition-dir naming, and a value Spark
-      URL-escapes would not round-trip through :func:`_part_token`'s
-      scheme — such a write raises rather than publishing a manifest
-      readers cannot address.
-
-    Crash-atomicity is the family contract: data lands under an
-    unpublished ``seg/v<N>/`` (static overwrite, so a crashed previous
-    attempt at the same version is wholly replaced), the manifest is
-    written next, and the marker creation publishes. The data files
-    KEEP ``part_col`` (a duplicate column drives the layout), so
-    readers see the same schema as the incremental path produces."""
-    spark = changed.sparkSession
-    ver = (current_version(spark, root) or 0) + 1
-    seg_rel = f"seg/v{ver}"
-    (
-        changed.withColumn("__part", F.col(part_col))
-        .write.mode("overwrite")
-        .partitionBy("__part")
-        .parquet(f"{root}/{seg_rel}")
-    )
-    fs, jvm = _fs(spark, root)
-    seg = jvm.org.apache.hadoop.fs.Path(f"{root}/{seg_rel}")
-    manifest: dict[str, str] = {}
-    for status in fs.listStatus(seg):
-        name = status.getPath().getName()
-        if not status.isDirectory() or not name.startswith("__part="):
-            continue
-        raw = name[len("__part=") :]
-        if _part_token(raw) != raw:
-            raise ValueError(
-                f"bulk partition value {raw!r} does not round-trip the "
-                f"manifest token scheme; use commit_snapshot_partitioned "
-                f"for values that need sanitizing"
-            )
-        manifest[raw] = f"{seg_rel}/{name}"
-    if not manifest:
-        # an empty input writes no partition dirs: publishing a version
-        # whose manifest is empty (marker created, nothing readable)
-        # would wedge readers with an unresolvable snapshot — refuse,
-        # mirroring export_corpus_shards' empty-corpus guard
-        raise ValueError(
-            f"bulk partitioned commit of an EMPTY DataFrame under {root}: "
-            "no partition directories were produced; refusing to publish "
-            "an empty-manifest version"
-        )
-    orphan = _manifest_path(jvm, root, ver)
-    if fs.exists(orphan):
-        # a crashed earlier attempt's manifest; its data dirs lived
-        # under seg/v<ver>, which the static overwrite just replaced
-        fs.delete(orphan, False)
-    _write_manifest(spark, root, ver, manifest)
-    fs.create(
-        jvm.org.apache.hadoop.fs.Path(f"{root}/_v_{ver}.committed"), False
-    ).close()
     return ver
 
 
@@ -637,9 +491,11 @@ def erase_keys(
     entry is reused byte-identical — O(subject's partitions), not
     O(table), which is the difference between a minutes-job and a
     full-table rewrite at 100 TB. A partition whose every row is erased
-    is dropped from the manifest rather than written empty. The old
-    version stays readable for time travel until :func:`vacuum` — run
-    vacuum to make erasure physical, as GDPR requires.
+    is dropped from the manifest rather than written empty; erasing
+    every row of a manifest store raises ``ValueError`` and publishes
+    nothing. The old version stays readable for time travel until
+    :func:`vacuum` — run vacuum to make erasure physical, as GDPR
+    requires.
 
     ``ids`` is a DataFrame with column ``key`` or a plain list of key
     values. Returns an audit dict: new ``version`` (``None`` when no
@@ -700,29 +556,27 @@ def erase_keys(
     parts = read_snapshot_parts(spark, root, touched)
     kept = parts.join(F.broadcast(ids), key, "left_anti").persist()
     try:
-        erased = parts.count() - kept.count()
-        survivors = {
-            r[0]
-            for r in kept.select(part_col).distinct().collect()
-        }
-        rewrite = [v for v in touched if v in survivors]
-        drop = [v for v in touched if v not in survivors]
+        kept_rows = kept.count()
+        erased = parts.count() - kept_rows
+        if kept_rows == 0 and set(manifest) <= {_part_token(v) for v in touched}:
+            # the subject owns every row: a version with no partitions
+            # could not be read back, so refuse and keep the store as is
+            raise ValueError(
+                f"erasing these keys would remove every row under {root}; "
+                "refusing to publish an empty version"
+            )
         # ``kept`` holds exactly the surviving rows of the touched
-        # partitions (read_snapshot_parts read nothing else), so it is
-        # the complete post-erasure contents of the rewrite set; no
-        # prefilter (isin would silently drop a null partition value).
-        ver = commit_snapshot_partitioned(
-            kept,
-            root,
-            part_col,
-            part_values=rewrite,
-            drop_part_values=drop,
-        )
+        # partitions (read_snapshot_parts read nothing else); a touched
+        # partition left with no rows produces no dir and leaves the
+        # manifest
+        ver = commit_snapshot_partitioned(kept, root, part_col, part_values=touched)
     finally:
         kept.unpersist()
+    after = read_manifest(spark, root, ver)
+    dropped = sum(_part_token(v) not in after for v in touched)
     return {
         "version": ver,
         "rows_erased": erased,
-        "partitions_rewritten": len(rewrite),
-        "partitions_dropped": len(drop),
+        "partitions_rewritten": len(touched) - dropped,
+        "partitions_dropped": dropped,
     }

@@ -12,9 +12,9 @@ crash at any point leaves the previous version fully readable
 
 Commit order per batch: snapshot data dir → version marker → batch
 marker. A crash
-- before the version marker: half-written ``v=N`` dir is invisible,
-  replay re-merges from v=N-1 — same contents, version numbering
-  unchanged;
+- before the version marker: the half-written ``v=N`` (or ``seg/vN``)
+  dir is invisible, replay re-merges from v=N-1 and overwrites it —
+  same contents, version numbering unchanged;
 - between version and batch marker: replay sees the batch unmarked and
   merges AGAIN on top of v=N — latest-wins merge of the same rows is a
   no-op by value, so v=N+1 equals v=N (one redundant but harmless
@@ -39,22 +39,11 @@ from strava_data_pipeline_spark.sources.versioned import (
     batch_committed,
     commit_snapshot,
     commit_snapshot_partitioned,
-    commit_snapshot_partitioned_onepass,
     current_version,
     mark_batch,
-    onepass_tokens_ok,
     read_snapshot,
     read_snapshot_parts,
 )
-
-# Above this many touched partitions a trigger commits through the
-# single-job dynamic-partitionBy path; at or below it, one small job
-# per partition is cheaper than a dynamic write + dir listing. The
-# crossover is flat and low — the loop's cost is one Spark job PER
-# PARTITION, so by ~4 partitions the one-pass write already wins on
-# job-scheduling latency alone (measured at sf0.1: a 30-day batch
-# spends ~4s/trigger in the 30 sequential jobs vs <1s one-pass).
-_ONEPASS_MIN_PARTITIONS = 4
 
 
 def start_versioned_sink(
@@ -80,7 +69,9 @@ def start_versioned_sink(
     batch then merges against ONLY the day partitions it touches and
     the new version's manifest reuses every untouched partition dir
     verbatim — O(touched days) per trigger, which is what survives a
-    100 TB table with 0.1% daily churn.
+    100 TB table with 0.1% daily churn. However many days a batch
+    touches, they are written by one Spark job
+    (sources/versioned.py::commit_snapshot_partitioned).
 
     A key whose partition value CHANGES between versions (a late
     correction moving an event across midnight) leaves a stale copy in
@@ -147,38 +138,12 @@ def start_versioned_sink(
             if base is None:
                 base = b.limit(0)
             merged = merge_latest_wins(base, b, keys=[key], order_by=[ts_col])
-            if (
-                len(touched) > _ONEPASS_MIN_PARTITIONS
-                and onepass_tokens_ok(touched)
-            ):
-                # wide-churn trigger: ONE dynamic-partitionBy job lays
-                # every touched dir down at once, the merge plan runs
-                # exactly once, and a touched-but-emptied partition
-                # (a moved key vacating its old day) drops out of the
-                # manifest because it produces no dir — no extra
-                # distinct+collect pass over the merge result needed
-                commit_snapshot_partitioned_onepass(
-                    merged, store_root, partition_col, part_values=touched
-                )
-            else:
-                # a partition a moved key VACATED can end up with zero
-                # rows after the merge: it must be DROPPED from the
-                # manifest, not written as an empty dir the next
-                # partition-pruned read chokes on (no part files →
-                # parquet schema inference fails). One O(#touched-days)
-                # collect, same cost class as `touched`.
-                present = {
-                    _part_token(r[0])
-                    for r in merged.select(partition_col).distinct().collect()
-                }
-                emptied = [v for v in touched if _part_token(v) not in present]
-                commit_snapshot_partitioned(
-                    merged,
-                    store_root,
-                    partition_col,
-                    part_values=[v for v in touched if _part_token(v) in present],
-                    drop_part_values=emptied,
-                )
+            # one job writes every touched day; a day a moved key
+            # vacated (no rows left after the merge) produces no dir
+            # and leaves the manifest
+            commit_snapshot_partitioned(
+                merged, store_root, partition_col, part_values=touched
+            )
         mark_batch(spark, store_root, batch_id, app_id=app_id)
 
     return (

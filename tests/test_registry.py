@@ -28,17 +28,6 @@ def test_inventory_complete(queries):
     assert expected <= set(queries)
 
 
-def test_priority_names_enumerate_first(queries):
-    # driver sampling is enumeration-order-sensitive; the never-checked
-    # set must lead both queries() and oracle coverage
-    names = list(queries)
-    head = registry._ENUMERATE_FIRST
-    assert set(head) <= set(names), "every priority name must be registered"
-    assert tuple(names[: len(head)]) == head
-    oracle_names = list(registry.all_oracles())
-    assert oracle_names[: len(head)] == list(head)
-
-
 def test_every_query_has_oracle(queries):
     # since r5 even the sketch queries carry oracles: their registry
     # artifacts emit exact anchor columns + an in-tolerance flag, so
@@ -126,219 +115,3 @@ def test_bench_emit_writes_loss_proof_file(tmp_path, monkeypatch, capsys):
     printed = json.loads(capsys.readouterr().out.strip())
     on_disk = json.loads(target.read_text())
     assert printed == on_disk == payload
-
-
-def test_regression_gate_compare_logic(tmp_path):
-    # the gate flags only real regressions: >1.5x the floor AND above
-    # the absolute-jitter cutoff; new queries and faster queries pass
-    import json
-
-    import bench
-
-    floor = {"queries": {"a": 10.0, "b": 2.0, "c": 0.1}}
-    fp = tmp_path / "floor.json"
-    fp.write_text(json.dumps(floor))
-    # a regressed (20s > 1.5*10), b improved, c doubled but sub-cutoff,
-    # d is new (no floor -> not a regression)
-    assert bench.gate({"a": 20.0, "b": 1.0, "c": 0.2, "d": 5.0}, str(fp)) == 1
-    assert bench.gate({"a": 10.1, "b": 1.0, "c": 0.2, "d": 5.0}, str(fp)) == 0
-    # missing floor file -> skip, not fail
-    assert bench.gate({"a": 99.0}, str(tmp_path / "absent.json")) == 0
-
-
-def test_regression_gate_honors_recorded_bands(tmp_path):
-    # the gate (bench.gate, not just the compare helper) must excuse a
-    # time inside the recorded variance band even when it is past
-    # 1.5x the historical floor — the r6 gate run flagged decontaminate
-    # at 1.46s (floor 0.95, band [1.33, 1.62]) because bench.py never
-    # forwarded the bands to compare()
-    import json
-
-    import bench
-
-    fp = tmp_path / "floor.json"
-    fp.write_text(
-        json.dumps(
-            {
-                "queries": {"a": 1.0},
-                "bands": {"a": [1.3, 1.7]},
-                "tier2_queries": {"x": 1.0},
-                "tier2_bands": {"x": [1.4, 1.8]},
-            }
-        )
-    )
-    assert bench.gate({"a": 1.6}, str(fp)) == 0  # inside band
-    # the band high carries a 1.25x jitter margin (finite-sample highs
-    # underestimate the spread): 1.7*1.25 = 2.125 is the real ceiling
-    assert bench.gate({"a": 2.0}, str(fp)) == 0
-    assert bench.gate({"a": 2.2}, str(fp)) == 1  # past ratio AND margined band
-    assert bench.gate({"a": 1.0}, str(fp), tier2={"x": 2.2}) == 0
-    assert bench.gate({"a": 1.0}, str(fp), tier2={"x": 2.3}) == 1
-
-
-def test_regression_gate_covers_tier2(tmp_path):
-    # tier2 (all-registry sf0.01) compares only when both the floor and
-    # the run carry it — the non-headline queries' only perf guard
-    import json
-
-    import bench
-
-    fp = tmp_path / "floor.json"
-    fp.write_text(
-        json.dumps(
-            {"queries": {"a": 10.0}, "tier2_queries": {"x": 2.0, "y": 0.1}}
-        )
-    )
-    assert bench.gate({"a": 10.0}, str(fp), tier2={"x": 4.0, "y": 0.1}) == 1
-    assert bench.gate({"a": 10.0}, str(fp), tier2={"x": 2.1, "y": 0.4}) == 0
-    assert bench.gate({"a": 10.0}, str(fp)) == 0
-    # floor without tier2 ignores the run's tier2
-    fp2 = tmp_path / "floor2.json"
-    fp2.write_text(json.dumps({"queries": {"a": 10.0}}))
-    assert bench.gate({"a": 10.0}, str(fp2), tier2={"x": 99.0}) == 0
-
-
-def test_bench_compare_tool_flags_regressions(tmp_path):
-    import sys
-
-    sys.path.insert(0, "tools")
-    from bench_compare import compare
-
-    base = {"x": 4.0, "y": 1.0}
-    assert compare(base, {"x": 7.0, "y": 1.2}) == ["x"]
-    assert compare(base, {"x": 5.0, "y": 1.2}) == []
-    # min_abs_sec suppresses sub-threshold jitter
-    assert compare({"z": 0.1}, {"z": 0.3}) == ["z"]
-    assert compare({"z": 0.1}, {"z": 0.3}, min_abs_sec=0.5) == []
-    # variance bands excuse times inside the recorded spread (plus the
-    # 1.25x finite-sample jitter margin), but a time past BOTH the
-    # ratio and the margined band high still regresses
-    bands = {"x": [4.0, 7.5]}
-    assert compare(base, {"x": 7.0}, bands=bands) == []
-    assert compare(base, {"x": 9.0}, bands=bands) == []  # <= 7.5 * 1.25
-    assert compare(base, {"x": 9.5}, bands=bands) == ["x"]
-    assert compare(base, {"x": 8.0}, bands=bands, band_margin=1.0) == ["x"]
-    # a query with no band falls back to the plain ratio rule
-    assert compare(base, {"y": 2.0}, bands=bands) == ["y"]
-
-
-def test_regression_gate_subsecond_aggregate():
-    # ~60 headline queries sit under the 1.0s per-query cutoff; their
-    # SUM is gated as one quantity so a broad small-query regression
-    # (session-config slip, new per-query fixed cost) cannot hide
-    import bench
-
-    floor = {c: 0.5 for c in "abcde"} | {"big": 5.0}
-    # every sub-second query doubled: each is individually sub-cutoff
-    # (0.5 -> 1.0s is still under the gate once jittered below it) but
-    # the sum 5.0s > 1.5 * 2.5s floor-sum and the delta exceeds 1s
-    doubled = {c: 1.0 for c in "abcde"} | {"big": 5.0}
-    got = bench._subsecond_aggregate_regressions(
-        floor, doubled, band=None, label="subsecond_sum"
-    )
-    assert len(got) == 1 and next(iter(got)).startswith("subsecond_sum")
-    # inside ratio: fine
-    ok = {c: 0.6 for c in "abcde"} | {"big": 5.0}
-    assert (
-        bench._subsecond_aggregate_regressions(floor, ok, None, "s") == set()
-    )
-    # past the ratio but with a sub-cutoff absolute delta: the same
-    # scheduler jitter the per-query cutoff ignores (a lone 0.1s query
-    # doubling must not trip the aggregate)
-    assert (
-        bench._subsecond_aggregate_regressions(
-            {"a": 0.1}, {"a": 0.25}, None, "s"
-        )
-        == set()
-    )
-    # a recorded sum band (plus margin) excuses a measured-legitimate
-    # spread even past the ratio
-    assert (
-        bench._subsecond_aggregate_regressions(
-            floor, doubled, band=[2.5, 4.5], label="s"
-        )
-        == set()
-    )
-    assert (
-        bench._subsecond_aggregate_regressions(
-            floor, doubled, band=[2.5, 3.0], label="s"
-        )
-        != set()
-    )
-    # the set is floor-defined: queries missing from the current run
-    # drop out of BOTH sums (a trimmed run stays comparable)
-    assert (
-        bench._subsecond_aggregate_regressions(
-            {"a": 0.2}, {"zz": 9.9}, None, "s"
-        )
-        == set()
-    )
-
-
-def test_bench_bands_merge_guards_inflated_highs():
-    # r6 ADVICE: bands widened monotonically and unconditionally, so a
-    # bands refresh taken while a regression was live baked the
-    # regressed time into the high-water mark forever. A candidate
-    # high that would itself excuse a gate-able regression (past
-    # ratio*floor AND the 1s cutoff) must NOT merge by default, and
-    # every merge must leave an auditable provenance record.
-    import sys
-
-    sys.path.insert(0, "tools")
-    from bench_bands import merge_bands
-
-    base = {
-        "queries": {"hot": 2.0, "cold": 0.2},
-        "bands": {"hot": [2.0, 2.4], "cold": [0.2, 0.3]},
-    }
-    # hot measured at 4.0 (2x floor, >1s): inflated -> capped
-    # cold measured at 0.5 (2.5x floor but sub-cutoff): legit widen
-    merged = merge_bands(
-        dict(base), [{"hot": 4.0, "cold": 0.5}], source="test"
-    )
-    assert merged["bands"]["hot"] == [2.0, 2.4]
-    assert merged["bands"]["cold"] == [0.2, 0.5]
-    prov = merged["band_provenance"][-1]
-    assert prov["source"] == "test"
-    assert "hot" in prov["capped_inflated_highs"]
-    # floors still move down on a better measurement
-    merged2 = merge_bands(dict(base), [{"hot": 1.5, "cold": 0.2}], "test")
-    assert merged2["queries"]["hot"] == 1.5
-    # --allow-inflated merges the high (the sanctioned reset path)
-    merged3 = merge_bands(
-        dict(base), [{"hot": 4.0, "cold": 0.5}], "test", allow_inflated=True
-    )
-    assert merged3["bands"]["hot"] == [2.0, 4.0]
-
-
-def test_bench_bands_maintains_sub_cutoff_sum_band():
-    import sys
-
-    sys.path.insert(0, "tools")
-    from bench_bands import merge_bands
-
-    base = {"queries": {"a": 0.2, "b": 0.3, "big": 5.0}}
-    runs = [
-        {"a": 0.25, "b": 0.35, "big": 5.2},
-        {"a": 0.3, "b": 0.4, "big": 5.1},
-    ]
-    merged = merge_bands(dict(base), runs, "test")
-    assert merged["sub_cutoff_band"] == [0.6, 0.7]
-    # the membership the band was measured over is frozen next to it
-    # (ADVICE r7: the gate must compare the same query set)
-    assert merged["sub_cutoff_members"] == ["a", "b"]
-    # a high past ratio x floor-sum but within the 1s absolute delta is
-    # the same scheduler jitter the gate excuses — merged, not capped
-    # (ADVICE r7: the old guard refused highs the gate would never flag)
-    merged2 = merge_bands(dict(merged), [{"a": 0.5, "b": 0.6, "big": 5.0}], "t2")
-    assert merged2["sub_cutoff_band"][1] == 1.1
-    assert "sub_cutoff_sum" not in merged2["band_provenance"][-1][
-        "capped_inflated_highs"
-    ]
-    # an inflated sum high past BOTH gate criteria (ratio AND >=1s
-    # absolute growth) is capped
-    merged3 = merge_bands(dict(merged), [{"a": 1.0, "b": 0.8, "big": 5.0}], "t3")
-    assert merged3["sub_cutoff_band"][1] == 0.7
-    assert "sub_cutoff_sum" in merged3["band_provenance"][-1][
-        "capped_inflated_highs"
-    ]

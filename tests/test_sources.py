@@ -561,7 +561,7 @@ class TestVersionedPartitionedGuards:
             V.commit_snapshot_partitioned(part, root, "p")
         # explicit migration with the COMPLETE table materializes it
         full = spark.range(5).withColumn("p", (F.col("id") % 2).cast("int"))
-        v = V.commit_snapshot_partitioned(full, root, "p", migrate_legacy=True)
+        v = V.commit_snapshot_partitioned(full, root, "p", replace=True)
         assert V.read_snapshot(spark, root, v).count() == 5
         # and partial commits on top now reuse untouched dirs
         p0 = spark.range(0, 10, 2).withColumn("p", F.lit(0).cast("int"))
@@ -658,6 +658,23 @@ class TestEraseKeys:
             "partitions_dropped": 0,
         }
         assert V.current_version(spark, root) == 1
+
+    def test_erasing_every_row_refused(self, spark, tmp_path):
+        # a version with an empty manifest cannot be read back: erasing
+        # the only subject must refuse and leave v1 current and readable
+        import pytest
+
+        from strava_data_pipeline_spark.sources import versioned as V
+
+        root = str(tmp_path / "erase_all")
+        df = spark.createDataFrame(
+            [(1, 7, "d1"), (2, 7, "d2")], "event_id bigint, user_id bigint, p string"
+        )
+        V.commit_snapshot_partitioned(df, root, "p")
+        with pytest.raises(ValueError, match="every row"):
+            V.erase_keys(spark, root, "user_id", [7], part_col="p")
+        assert V.current_version(spark, root) == 1
+        assert V.read_snapshot(spark, root).count() == 2
 
     def test_manifest_store_requires_part_col(self, spark, tmp_path):
         import pytest
@@ -758,6 +775,39 @@ class TestCrashRecoveryPaths:
         assert os.path.exists(f"{root}/{shared}"), "shared dir wrongly deleted"
         rows = {r["k"] for r in V.read_snapshot(spark, root, version=1).collect()}
         assert rows == {1}, "v1 must still read after orphan cleanup"
+
+    def test_partitioned_retry_replaces_half_written_seg(self, spark, tmp_path):
+        # crash of a partitioned commit at v2 after part of its data and
+        # its manifest were written, before the marker: the retry must
+        # publish v2 over it, leave v1 readable and no stray dir behind
+        import os
+
+        from strava_data_pipeline_spark.sources import versioned as V
+
+        root = str(tmp_path / "tbl")
+        df1 = spark.createDataFrame(
+            [(1, "a"), (2, "b")], "k long, p string"
+        )
+        V.commit_snapshot_partitioned(df1, root, "p")
+        spark.createDataFrame([(9, "z")], "k long, p string").write.parquet(
+            f"{root}/seg/v2/__part=z"
+        )
+        V._write_manifest(
+            spark,
+            root,
+            2,
+            {"z": "seg/v2/__part=z", "b": V.read_manifest(spark, root, 1)["b"]},
+        )
+        upd = spark.createDataFrame([(3, "a")], "k long, p string")
+        assert V.commit_snapshot_partitioned(upd, root, "p", part_values=["a"]) == 2
+        assert V.current_version(spark, root) == 2
+        dirs = [d for d in os.listdir(f"{root}/seg/v2") if d.startswith("__part=")]
+        assert dirs == ["__part=va"], "stray dir of the crashed attempt left"
+        assert set(V.read_manifest(spark, root, 2)) == {"a", "b"}
+        got = {(r["k"], r["p"]) for r in V.read_snapshot(spark, root).collect()}
+        assert got == {(3, "a"), (2, "b")}
+        v1 = {(r["k"], r["p"]) for r in V.read_snapshot(spark, root, 1).collect()}
+        assert v1 == {(1, "a"), (2, "b")}
 
     def test_read_snapshot_parts_rejects_uncommitted_version(self, spark, tmp_path):
         import pytest as _pytest
@@ -882,7 +932,7 @@ class TestCorpusExport:
             [(i, i % 7, f"x{i}") for i in range(50)],
             "doc_id long, shard_id long, text string",
         )
-        ver = V.commit_snapshot_bulk_partitioned(df, root, "shard_id")
+        ver = V.commit_snapshot_partitioned(df, root, "shard_id", replace=True)
         assert ver == 1
         back = V.read_snapshot(spark, root)
         # the data files KEEP the partition column (duplicate drives
@@ -893,17 +943,26 @@ class TestCorpusExport:
         # partition-pruned addressing through the manifest tokens works
         part = V.read_snapshot_parts(spark, root, [3])
         assert part.count() == 50 // 7 + (1 if 3 < 50 % 7 else 0)
-        # a value Spark would URL-escape must refuse to publish
+        # replace: the manifest holds only the new table's shards, so a
+        # shard absent from it leaves the manifest; v1 still reads
+        smaller = df.where("shard_id < 3")
+        v2 = V.commit_snapshot_partitioned(smaller, root, "shard_id", replace=True)
+        assert set(V.read_manifest(spark, root, v2)) == {"0", "1", "2"}
+        assert V.read_snapshot(spark, root).count() == smaller.count()
+        assert V.read_snapshot(spark, root, version=1).count() == 50
+        # a type whose dir names cannot be checked must refuse to publish
         bad = spark.createDataFrame(
-            [(1, "a/b", "t")], "doc_id long, shard_id string, text string"
+            [(1, 0.5, "t")], "doc_id long, shard_id double, text string"
         )
         import pytest as _pytest
 
-        with _pytest.raises(ValueError, match="round-trip"):
-            V.commit_snapshot_bulk_partitioned(bad, str(tmp_path / "b2"), "shard_id")
+        with _pytest.raises(ValueError, match="integral, date and string"):
+            V.commit_snapshot_partitioned(
+                bad, str(tmp_path / "b2"), "shard_id", replace=True
+            )
 
     def test_bulk_commit_empty_input_refused(self, spark, tmp_path):
-        # ADVICE r9: an empty DataFrame lays down zero partition dirs;
+        # an empty DataFrame lays down zero partition dirs;
         # publishing would create a marker over an empty manifest and
         # wedge every reader — the public API must refuse (mirroring
         # export_corpus_shards' empty-corpus guard), and a refused
@@ -915,12 +974,12 @@ class TestCorpusExport:
         root = str(tmp_path / "bulkempty")
         schema = "doc_id long, shard_id long, text string"
         empty = spark.createDataFrame([], schema)
-        with _pytest.raises(ValueError, match="EMPTY"):
-            V.commit_snapshot_bulk_partitioned(empty, root, "shard_id")
+        with _pytest.raises(ValueError, match="empty manifest"):
+            V.commit_snapshot_partitioned(empty, root, "shard_id", replace=True)
         with _pytest.raises(FileNotFoundError):
             V.read_snapshot(spark, root)
         df = spark.createDataFrame([(1, 0, "t")], schema)
-        assert V.commit_snapshot_bulk_partitioned(df, root, "shard_id") == 1
+        assert V.commit_snapshot_partitioned(df, root, "shard_id", replace=True) == 1
         assert V.read_snapshot(spark, root).count() == 1
 
     def test_empty_export_refused_loudly(self, spark, tmp_path):
@@ -943,32 +1002,31 @@ class TestCorpusExport:
 
 
 class TestOnepassPartitionedCommit:
-    """r11 optimization: the one-Spark-job sibling of
-    commit_snapshot_partitioned must splice manifests identically to
-    the loop path, auto-drop emptied partitions, and refuse values its
-    dir-name-derived tokens cannot represent."""
+    """commit_snapshot_partitioned writes every partition in one Spark
+    job: it splices untouched manifest entries, drops emptied
+    partitions, maps every dir name back to its token, and refuses
+    values it cannot place."""
 
-    def test_onepass_matches_loop_semantics(self, spark, tmp_path):
+    def test_onepass_splices_untouched_partitions(self, spark, tmp_path):
         from pyspark.sql import functions as F
 
         from strava_data_pipeline_spark.sources import versioned as V
 
         root = str(tmp_path / "onepass_store")
         full = spark.range(12).withColumn("p", (F.col("id") % 3).cast("int"))
-        v1 = V.commit_snapshot_partitioned(full, root, "p")  # loop path
+        v1 = V.commit_snapshot_partitioned(full, root, "p")
         assert v1 == 1
-        # one-pass rewrite of p in {0, 1}: p=2 must be reused verbatim
+        # rewrite of p in {0, 1}: p=2 must be reused verbatim
         upd = spark.range(100, 108).withColumn(
             "p", (F.col("id") % 2).cast("int")
         )
-        v2 = V.commit_snapshot_partitioned_onepass(
-            upd, root, "p", part_values=[0, 1]
-        )
+        v2 = V.commit_snapshot_partitioned(upd, root, "p", part_values=[0, 1])
         assert v2 == 2
         got = V.read_snapshot(spark, root, v2)
         ids = sorted(r["id"] for r in got.collect())
         # p=2 keeps its v1 rows (2, 5, 8, 11); p=0/1 fully replaced
         assert ids == [2, 5, 8, 11] + list(range(100, 108))
+        assert set(got.columns) == {"id", "p"}
         # manifest reuses the v1 dir for p=2 and points 0/1 at seg/v2
         man = V.read_manifest(spark, root, v2)
         assert man["2"].startswith("seg/v1/")
@@ -985,9 +1043,7 @@ class TestOnepassPartitionedCommit:
         # the post-merge contents of touched {0, 1} hold only p=0 rows:
         # p=1 emptied (every key moved) and must LEAVE the manifest
         merged = spark.range(50, 53).withColumn("p", F.lit(0).cast("int"))
-        v2 = V.commit_snapshot_partitioned_onepass(
-            merged, root, "p", part_values=[0, 1]
-        )
+        v2 = V.commit_snapshot_partitioned(merged, root, "p", part_values=[0, 1])
         man = V.read_manifest(spark, root, v2)
         assert "1" not in man and man["0"].startswith("seg/v2/")
         assert sorted(r["id"] for r in V.read_snapshot(spark, root, v2).collect()) == [
@@ -998,27 +1054,34 @@ class TestOnepassPartitionedCommit:
         # partition-pruned read of the dropped day resolves to None
         assert V.read_snapshot_parts(spark, root, [1], version=v2) is None
 
-    def test_onepass_refuses_unclean_tokens(self, spark, tmp_path):
-        import pytest
-        from pyspark.sql import functions as F
-
+    def test_onepass_round_trips_unclean_values(self, spark, tmp_path):
+        # NULL lands in Hive's default-partition dir, where Spark would
+        # also file '' and that dir's literal name, and "/", "=", "%" are
+        # percent-escaped in dir names: each value must map back to its
+        # own manifest token, and a splice over them must still work
         from strava_data_pipeline_spark.sources import versioned as V
 
-        assert not V.onepass_tokens_ok([None])
-        assert not V.onepass_tokens_ok(["a/b"])
-        assert not V.onepass_tokens_ok(["a=b"])
-        assert V.onepass_tokens_ok(["2024-01-01", 7, "tok_a"])
+        vals = [None, "a/b", "a_b", "x=y", "50%", "", "__HIVE_DEFAULT_PARTITION__"]
         root = str(tmp_path / "onepass_unclean")
-        df = spark.range(2).withColumn("p", F.lit("a/b"))
-        with pytest.raises(ValueError, match="token-clean"):
-            V.commit_snapshot_partitioned_onepass(df, root, "p", part_values=["a/b"])
-        assert V.committed_versions(spark, root) == []
+        df = spark.createDataFrame(
+            [(i, v) for i, v in enumerate(vals)], "id bigint, p string"
+        )
+        V.commit_snapshot_partitioned(df, root, "p", part_values=vals)
+        assert set(V.read_manifest(spark, root, 1)) == {
+            V._part_token(v) for v in vals
+        }
+        for i, v in enumerate(vals):
+            got = V.read_snapshot_parts(spark, root, [v])
+            assert [(r["id"], r["p"]) for r in got.collect()] == [(i, v)], v
+        upd = spark.createDataFrame([(9, "x=y")], "id bigint, p string")
+        V.commit_snapshot_partitioned(upd, root, "p", part_values=["x=y"])
+        got = sorted(r["id"] for r in V.read_snapshot(spark, root).collect())
+        assert got == [0, 1, 2, 4, 5, 6, 9]
 
     def test_onepass_refuses_undeclared_partition_values(self, spark, tmp_path):
-        # r11 ADVICE: a changed-row value OUTSIDE part_values (here a
-        # NULL, which lands under Hive's default-partition dir and
-        # round-trips the token check) must abort the commit instead
-        # of silently publishing under a wrong token
+        # a changed-row value OUTSIDE part_values (here a NULL, which
+        # lands under Hive's default-partition dir) must abort the
+        # commit instead of silently publishing under a wrong token
         import pytest
         from pyspark.sql import functions as F
 
@@ -1032,9 +1095,7 @@ class TestOnepassPartitionedCommit:
             ),
         )
         with pytest.raises(ValueError, match="outside the declared"):
-            V.commit_snapshot_partitioned_onepass(
-                df, root, "p", part_values=["a"]
-            )
+            V.commit_snapshot_partitioned(df, root, "p", part_values=["a"])
         assert V.committed_versions(spark, root) == []
 
 

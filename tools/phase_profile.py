@@ -41,10 +41,6 @@ def main() -> None:
     V.commit_snapshot_partitioned = timed(
         "commit_snapshot_partitioned", V.commit_snapshot_partitioned
     )
-    V.commit_snapshot_partitioned_onepass = timed(
-        "commit_snapshot_partitioned_onepass",
-        V.commit_snapshot_partitioned_onepass,
-    )
     V.commit_snapshot = timed("commit_snapshot", V.commit_snapshot)
     V.read_snapshot = timed("read_snapshot(lazy)", V.read_snapshot)
     V.read_snapshot_parts = timed("read_snapshot_parts(lazy)", V.read_snapshot_parts)
@@ -56,9 +52,6 @@ def main() -> None:
 
     VS.merge_latest_wins = U.merge_latest_wins
     VS.commit_snapshot_partitioned = V.commit_snapshot_partitioned
-    VS.commit_snapshot_partitioned_onepass = (
-        V.commit_snapshot_partitioned_onepass
-    )
     VS.commit_snapshot = V.commit_snapshot
     VS.read_snapshot = V.read_snapshot
     VS.read_snapshot_parts = V.read_snapshot_parts

@@ -7,8 +7,10 @@ sf0.1 synthetic corpus has only ~377 distinct grams, which tells us
 nothing — this bench builds a SKEWED-VOCABULARY corpus (Zipfian word
 draws over a 10k-word random vocab → thousands of distinct char-3-
 grams with a long rarity tail) and times both orders on it plus the
-stock corpus. The loser stays off by default; the measurement lives in
-the BASELINE_BENCH.json header.
+stock corpus. The loser stays off by default. Measured at 32 cores:
+rarity 17.3 s vs numeric 35.0 s on the Zipf corpus (5000x120, 10k
+vocab), 13.3-18.8 s vs 7.8-9.7 s on stock sf0.1 (377 distinct grams),
+identical pair sets on both.
 
 Usage: python tools/rarity_bench.py [--docs 5000] [--words 120]
 """
