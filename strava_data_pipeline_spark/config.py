@@ -10,12 +10,8 @@ credentials) and ``auth`` (JWT) carry over verbatim.
 
 Precedence, highest first — the same order viper resolves:
     1. environment variables  (SPARK_GRAFT_<SECTION>_<KEY>)
-    2. the YAML file          (config.yaml)
+    2. the YAML file          (config.yaml, parsed with PyYAML)
     3. built-in defaults
-
-PyYAML isn't guaranteed in the runtime, so a strict two-level fallback
-parser (sections + scalar keys, comments, quoted strings) handles the
-config shape when ``yaml`` is absent; files beyond that shape raise.
 """
 
 from __future__ import annotations
@@ -23,6 +19,8 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field, fields
 from typing import Any
+
+import yaml
 
 ENV_PREFIX = "SPARK_GRAFT"
 
@@ -72,107 +70,25 @@ class Config:
     auth: AuthConfig = field(default_factory=AuthConfig)
 
 
-def _parse_scalar(raw: str) -> Any:
-    s = raw.strip()
-    if len(s) >= 2 and s[0] == s[-1] and s[0] in "\"'":
-        return s[1:-1]
-    low = s.lower()
-    if low in ("true", "false"):
-        return low == "true"
-    try:
-        return int(s)
-    except ValueError:
-        pass
-    try:
-        return float(s)
-    except ValueError:
-        pass
-    return s
-
-
-def _strip_comment(line: str, ln: int) -> str:
-    """Drop a ``#`` comment, but only when it starts OUTSIDE a quoted
-    span — a secret like ``jwt_secret: "s3#cret"`` must survive intact
-    (naive ``split('#')`` truncated exactly the values this config
-    carries).
-
-    YAML-faithful details that matter for real values:
-    - a quote only OPENS a span at the start of a value (right after
-      ``:`` + spaces) or at line start — a mid-word apostrophe
-      (``name: o'brien``) is plain-scalar content, not an unterminated
-      quote;
-    - ``#`` only starts a comment at line start or after whitespace —
-      ``url: http://x#frag`` keeps its fragment, per YAML plain-scalar
-      rules.
-    A quote OPENED at value start but never closed still raises instead
-    of silently yielding a malformed token."""
-    quote: str | None = None
-    at_value_start = True  # line start (before key) or just after ':'
-    for i, ch in enumerate(line):
-        if quote:
-            if ch == quote:
-                quote = None
-            continue
-        if ch == "#" and (i == 0 or line[i - 1] in " \t"):
-            return line[:i]
-        if ch in "\"'" and at_value_start:
-            quote = ch
-        elif ch == ":":
-            at_value_start = True
-        elif ch not in " \t":
-            at_value_start = False
-    if quote:
-        raise ValueError(f"line {ln}: unterminated {quote} quote")
-    return line
-
-
-def _parse_simple_yaml(text: str) -> dict[str, dict[str, Any]]:
-    """Two-level YAML subset: ``section:`` headers with indented
-    ``key: value`` scalars. Comments and blank lines are skipped;
-    anything deeper/list-shaped raises ValueError (use PyYAML then)."""
-    out: dict[str, dict[str, Any]] = {}
-    section: str | None = None
-    for ln, line in enumerate(text.splitlines(), 1):
-        stripped = _strip_comment(line, ln).rstrip()
-        if not stripped.strip():
-            continue
-        indented = stripped[0] in " \t"
-        body = stripped.strip()
-        if ":" not in body:
-            raise ValueError(f"line {ln}: expected 'key: value', got {body!r}")
-        key, _, val = body.partition(":")
-        key = key.strip()
-        if not indented:
-            if val.strip():
-                raise ValueError(
-                    f"line {ln}: top-level scalars not supported; "
-                    "use 'section:' then indented keys"
-                )
-            section = key
-            out.setdefault(section, {})
-        else:
-            if section is None:
-                raise ValueError(f"line {ln}: indented key before any section")
-            if not val.strip():
-                raise ValueError(f"line {ln}: nesting deeper than 2 levels")
-            out[section][key] = _parse_scalar(val)
-    return out
-
-
 def _load_yaml_file(path: str) -> dict[str, dict[str, Any]]:
+    """``{section: {key: value}}`` of one config file. A section whose
+    keys are all commented out parses to ``None`` and reads as empty; a
+    section holding a scalar or a list raises."""
     with open(path, encoding="utf-8") as f:
-        text = f.read()
-    try:
-        import yaml  # type: ignore[import-not-found]
-
-        data = yaml.safe_load(text) or {}
-        if not isinstance(data, dict):
-            raise ValueError(f"{path}: top level must be a mapping")
-        return {
-            str(k): dict(v) if isinstance(v, dict) else v for k, v in data.items()
-        }
-    except ImportError:
-        return _parse_simple_yaml(text)
+        data = yaml.safe_load(f) or {}
+    if not isinstance(data, dict):
+        raise ValueError(f"{path}: top level must be a mapping")
+    out: dict[str, dict[str, Any]] = {}
+    for sec, vals in data.items():
+        if vals is None:
+            vals = {}
+        elif not isinstance(vals, dict):
+            raise ValueError(
+                f"{path}: section {sec!r} must be a mapping of keys, "
+                f"got {type(vals).__name__}"
+            )
+        out[str(sec)] = vals
+    return out
 
 
 def load_config(
@@ -204,7 +120,7 @@ def load_config(
             raise ValueError(f"unknown config section {sec_name!r}")
         section = sections[sec_name]
         valid = {f.name for f in fields(section)}
-        for key, val in dict(sec_vals).items():
+        for key, val in sec_vals.items():
             if key not in valid:
                 raise ValueError(f"unknown key {sec_name}.{key}")
             setattr(section, key, _coerce(type(getattr(section, key)), val))

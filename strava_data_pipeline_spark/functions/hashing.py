@@ -28,19 +28,9 @@ def md5_u32(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint")
 
 
-def md5_u32_sql(expr: str) -> str:
-    """Same hash as ``md5_u32`` for embedding in Spark SQL strings."""
-    return f"CAST(conv(substring(md5({expr}), 1, 8), 16, 10) AS BIGINT)"
-
-
 def md5_u32_duckdb(expr: str) -> str:
     """DuckDB-side twin of ``md5_u32`` — used when building oracle SQL."""
     return f"CAST(('0x' || substr(md5({expr}), 1, 8))::UBIGINT AS BIGINT)"
-
-
-def perm_hash(x: Column, a: int, b: int) -> Column:
-    """Universal-hash permutation ((a*x + b) mod p) for minhash."""
-    return (x * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)
 
 
 def perm_params(n: int) -> list[tuple[int, int]]:

@@ -737,10 +737,7 @@ def versioned_sink_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_once(ckpt + "_replay")
 
     ver = V.current_version(spark, store)
-    manifest = V.read_manifest(spark, store, ver)
-    snap = spark.read.parquet(
-        *sorted({f"{store}/{rel}" for rel in manifest.values()})
-    )
+    snap = V.read_snapshot(spark, store)
     return snap.select(
         F.col("event_id").cast("bigint").alias("event_id"),
         "ts",

@@ -31,16 +31,16 @@ training-corpus artifact.
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from strava_data_pipeline_spark.functions.hashing import md5_u32
 from strava_data_pipeline_spark.operators.bucketed_prefix import (
     bucketed_cumsum,
 )
 from strava_data_pipeline_spark.sources.versioned import (
-    _fs,
+    _read_json,
+    _write_json,
     commit_snapshot_partitioned,
     current_version,
 )
@@ -82,17 +82,7 @@ def _fingerprint(kept: DataFrame) -> list[int]:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("bigint").alias("t"),
         F.coalesce(
-            F.sum(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws(":", "doc_id", "n_tokens", "h")),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
-            ),
+            F.sum(md5_u32(F.concat_ws(":", "doc_id", "n_tokens", "h"))),
             F.lit(0),
         )
         .cast("bigint")
@@ -101,32 +91,8 @@ def _fingerprint(kept: DataFrame) -> list[int]:
     return [int(row["n"]), int(row["t"]), int(row["s"])]
 
 
-def _sidecar_path(jvm, root: str, version: int):
-    return jvm.org.apache.hadoop.fs.Path(f"{root}/_v_{version}.export")
-
-
-def _read_sidecar(spark: SparkSession, root: str, version: int) -> dict | None:
-    fs, jvm = _fs(spark, root)
-    p = _sidecar_path(jvm, root, version)
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(text)
-
-
-def _write_sidecar(
-    spark: SparkSession, root: str, version: int, payload: dict
-) -> None:
-    fs, jvm = _fs(spark, root)
-    out = fs.create(_sidecar_path(jvm, root, version), True)
-    try:
-        out.write(bytearray(json.dumps(payload, sort_keys=True).encode()))
-    finally:
-        out.close()
+def _sidecar_path(root: str, version: int) -> str:
+    return f"{root}/_v_{version}.export"
 
 
 def export_corpus_shards(
@@ -158,7 +124,7 @@ def export_corpus_shards(
         fp = _fingerprint(kept)
         cur = current_version(spark, root)
         if cur is not None:
-            side = _read_sidecar(spark, root, cur)
+            side = _read_json(spark, _sidecar_path(root, cur))
             if (
                 side is not None
                 and side.get("fingerprint") == fp
@@ -177,10 +143,9 @@ def export_corpus_shards(
         # manifest drops the previous export's shards
         sharded = assign_shards(kept, target_tokens)
         ver = commit_snapshot_partitioned(sharded, root, "shard_id", replace=True)
-        _write_sidecar(
+        _write_json(
             spark,
-            root,
-            ver,
+            _sidecar_path(root, ver),
             {"fingerprint": fp, "target_tokens": target_tokens},
         )
         return ver, True

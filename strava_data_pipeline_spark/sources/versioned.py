@@ -4,24 +4,29 @@ The streaming sink's stage-then-overwrite swap (streaming/sync.py) is
 partition-scoped but not crash-atomic: a failure between the delete and
 the rewrite of one partition loses that partition. This module is the
 manifest-based upgrade path (the mechanism Delta/Iceberg build on,
-reduced to its core): every commit writes a NEW immutable snapshot
-directory ``<root>/v=N/``, then publishes it by creating an empty
-marker file ``<root>/_v_N.committed`` — file *creation* is the atomic
-primitive (rename-overwrite is not atomic on every Hadoop filesystem,
-and plain overwrite deletes before it writes). Readers resolve the
-highest committed version, so a writer crash at ANY point leaves the
-previous snapshot fully readable and the half-written directory
-invisible.
+reduced to its core). Version N's data lands under ``<root>/seg/vN/``,
+which no reader resolves yet. Publishing writes the manifest
+``_v_N.manifest`` (``{token: data dir relative to root}``), then
+creates an empty marker file ``_v_N.committed`` — file *creation* is
+the atomic primitive (rename-overwrite is not atomic on every Hadoop
+filesystem, and plain overwrite deletes before it writes). Readers
+resolve the highest committed version and read the dirs its manifest
+lists, so a writer crash at ANY point leaves the previous snapshot
+fully readable and the half-written directory invisible.
 
-Two commits share that protocol. :func:`commit_snapshot` writes a full
-``v=N`` dir. :func:`commit_snapshot_partitioned` writes the partitions
-it is given under ``seg/v<N>/`` in one Spark job and publishes a
-manifest ``_v_N.manifest`` (``{partition token: dir}``) that reuses the
-previous version's untouched entries, or, with ``replace=True``, holds
-only what was written. Its tokens are read back from the dir names the
-write produced, so every value :func:`_part_token` accepts (NULL,
-``''``, ``a/b``, ``x=y``, ``50%``) round-trips; values whose dirs cannot be
-mapped back, and empty manifests, are refused before publishing.
+Every version is a manifest, in one of two shapes.
+:func:`commit_snapshot` writes the whole table unpartitioned into
+``seg/vN`` and publishes ``{WHOLE: "seg/vN"}``.
+:func:`commit_snapshot_partitioned` writes the partitions it is given
+under ``seg/vN/`` in one Spark job and publishes ``{partition token:
+dir}``, reusing the previous version's untouched entries or, with
+``replace=True``, holding only what was written. Its tokens are read
+back from the dir names the write produced, so every value
+:func:`_part_token` accepts (NULL, ``''``, ``a/b``, ``x=y``, ``50%``)
+round-trips; values whose dirs cannot be mapped back, and empty
+manifests, are refused before publishing. Both commits overwrite
+``seg/vN`` statically, so a crashed attempt at N is wholly replaced;
+the dirs such an attempt reused belong to committed versions.
 
 Retained snapshots are time travel for free; ``vacuum`` bounds them.
 All filesystem access goes through the Hadoop FileSystem API so the
@@ -32,6 +37,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import posixpath
 import re
 import urllib.parse
 
@@ -44,6 +50,10 @@ _MARKER = re.compile(r"_v_(\d+)\.committed$")
 _NULL_TOKEN = "__null__"
 
 _HIVE_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
+
+# manifest token of a whole-table version: _part_token maps every
+# character outside [A-Za-z0-9_.=-] away, so no partition value yields it
+WHOLE = "*"
 
 
 def _part_token(val) -> str:
@@ -79,18 +89,58 @@ def _fs(spark: SparkSession, root: str):
     return path.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
 
-def committed_versions(spark: SparkSession, root: str) -> list[int]:
-    """All published versions, ascending (uncommitted dirs excluded)."""
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, through the Hadoop FileSystem API (so
+    callers work on HDFS/S3A/local alike, unlike ``os.path``)."""
+    fs, jvm = _fs(spark, path)
+    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path)))
+
+
+def _touch(spark: SparkSession, path: str, overwrite: bool = False) -> None:
+    """Create an empty marker file. Without ``overwrite`` the creation
+    fails if the file exists — the store's atomic publish primitive."""
+    fs, jvm = _fs(spark, path)
+    fs.create(jvm.org.apache.hadoop.fs.Path(path), overwrite).close()
+
+
+def _names(spark: SparkSession, root: str) -> list[str]:
+    """Names of the entries directly under ``root`` (none if absent)."""
     fs, jvm = _fs(spark, root)
     rootp = jvm.org.apache.hadoop.fs.Path(root)
     if not fs.exists(rootp):
         return []
-    out = []
-    for status in fs.listStatus(rootp):
-        m = _MARKER.search(status.getPath().getName())
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    return [status.getPath().getName() for status in fs.listStatus(rootp)]
+
+
+def _read_json(spark: SparkSession, path: str) -> dict | None:
+    """One JSON side file (a manifest, an export fingerprint); ``None``
+    when it does not exist."""
+    fs, jvm = _fs(spark, path)
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return json.loads(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
+    finally:
+        stream.close()
+
+
+def _write_json(spark: SparkSession, path: str, payload: dict) -> None:
+    """Write one JSON side file, replacing any earlier one."""
+    fs, jvm = _fs(spark, path)
+    out = fs.create(jvm.org.apache.hadoop.fs.Path(path), True)
+    try:
+        out.write(bytearray(json.dumps(payload, sort_keys=True).encode()))
+    finally:
+        out.close()
+
+
+def committed_versions(spark: SparkSession, root: str) -> list[int]:
+    """All published versions, ascending (uncommitted dirs excluded)."""
+    return sorted(
+        int(m.group(1)) for m in map(_MARKER.search, _names(spark, root)) if m
+    )
 
 
 def current_version(spark: SparkSession, root: str) -> int | None:
@@ -98,8 +148,47 @@ def current_version(spark: SparkSession, root: str) -> int | None:
     return versions[-1] if versions else None
 
 
+def _manifest_path(root: str, version: int) -> str:
+    return f"{root}/_v_{version}.manifest"
+
+
+def read_manifest(
+    spark: SparkSession, root: str, version: int
+) -> dict[str, str] | None:
+    """Manifest of one version: ``{partition token: data dir relative
+    to root}``, or ``{WHOLE: "seg/vN"}`` for a whole-table version.
+    Every committed version has one; ``None`` means ``version`` was
+    never written."""
+    return _read_json(spark, _manifest_path(root, version))
+
+
+def _write_seg(writer, root: str, version: int) -> str:
+    """Write version ``version``'s data into ``seg/v<version>`` as a
+    static overwrite, wholly replacing what a crashed attempt at the
+    same version left there. Returns the dir relative to ``root``."""
+    seg = f"seg/v{version}"
+    (
+        writer.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .parquet(f"{root}/{seg}")
+    )
+    return seg
+
+
+def _publish(
+    spark: SparkSession, root: str, version: int, manifest: dict[str, str]
+) -> int:
+    """Write the manifest (replacing the orphan manifest a crashed
+    attempt at ``version`` may have left), then create the marker that
+    makes the version visible."""
+    _write_json(spark, _manifest_path(root, version), manifest)
+    _touch(spark, f"{root}/_v_{version}.committed")
+    return version
+
+
 def commit_snapshot(df: DataFrame, root: str) -> int:
-    """Write ``df`` as the next snapshot and atomically publish it.
+    """Write ``df`` as the next version, whole, and atomically publish
+    it as the one-entry manifest ``{WHOLE: "seg/v<N>"}``.
 
     The data write targets a version directory no reader resolves yet;
     only the marker creation (atomic) makes it visible. Concurrent
@@ -108,75 +197,16 @@ def commit_snapshot(df: DataFrame, root: str) -> int:
     single-writer / many-readers contract matches the reference's one
     sync job (internal/strava/strava.go:261).
 
-    ``mode("overwrite")``, NOT ``mode("error")``: a crash after the
-    data write but before the marker leaves ``v=N`` on disk while
+    A crash after the data write but before the marker leaves
+    ``seg/v<N>`` (and perhaps its manifest) on disk while
     ``current_version`` still says N-1 — the replay recomputes the SAME
-    version number and must be able to redo the half-written dir, or
-    the store is wedged forever (every retry fails path-exists). The
-    dir is invisible until the marker exists, so overwriting it is
-    race-free under the single-writer contract. A stale ORPHAN MANIFEST
-    at this version (a crashed partitioned commit that got as far as
-    its manifest write) is deleted for the same reason: read_snapshot
-    prefers the manifest, which would otherwise shadow this full
-    snapshot with the crashed commit's partial data."""
+    version number, so the write overwrites the dir and the publish
+    replaces the manifest, or the store would be wedged forever. The
+    overwrite also removes every dir a crashed partitioned attempt at N
+    wrote; the dirs that attempt reused belong to committed versions."""
     spark = df.sparkSession
     ver = (current_version(spark, root) or 0) + 1
-    data_dir = f"{root}/v={ver}"
-    df.write.mode("overwrite").parquet(data_dir)
-    fs, jvm = _fs(spark, root)
-    orphan = _manifest_path(jvm, root, ver)
-    if fs.exists(orphan):
-        # Delete the crashed commit's DATA DIRS before its manifest:
-        # once the manifest is gone those dirs are referenced by no
-        # version at all, and vacuum only deletes dirs listed in victim
-        # manifests — they would leak on disk forever. Dirs a committed
-        # manifest still shares (the crashed commit reused unchanged
-        # partitions) must survive.
-        stale = set((read_manifest(spark, root, ver) or {}).values())
-        referenced: set[str] = set()
-        for v in committed_versions(spark, root):
-            referenced |= set((read_manifest(spark, root, v) or {}).values())
-        for rel in sorted(stale - referenced):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/{rel}"), True)
-        fs.delete(orphan, False)
-        seg = jvm.org.apache.hadoop.fs.Path(f"{root}/seg/v{ver}")
-        if fs.exists(seg) and len(fs.listStatus(seg)) == 0:
-            fs.delete(seg, True)
-    marker = jvm.org.apache.hadoop.fs.Path(f"{root}/_v_{ver}.committed")
-    fs.create(marker, False).close()
-    return ver
-
-
-def _manifest_path(jvm, root: str, version: int):
-    return jvm.org.apache.hadoop.fs.Path(f"{root}/_v_{version}.manifest")
-
-
-def read_manifest(
-    spark: SparkSession, root: str, version: int
-) -> dict[str, str] | None:
-    """Partition manifest of one version: ``{partition token: data dir
-    relative to root}``. ``None`` for legacy full-directory versions."""
-    fs, jvm = _fs(spark, root)
-    p = _manifest_path(jvm, root, version)
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(text)
-
-
-def _write_manifest(
-    spark: SparkSession, root: str, version: int, manifest: dict[str, str]
-) -> None:
-    fs, jvm = _fs(spark, root)
-    out = fs.create(_manifest_path(jvm, root, version), True)
-    try:
-        out.write(bytearray(json.dumps(manifest, sort_keys=True).encode()))
-    finally:
-        out.close()
+    return _publish(spark, root, ver, {WHOLE: _write_seg(df.write, root, ver)})
 
 
 def _dir_token(name: str) -> str:
@@ -220,13 +250,13 @@ def commit_snapshot_partitioned(
     is published (a stray value, or a type whose Spark rendering differs
     from Python's ``str()``). Without ``part_values`` the touched set is
     what the write produced. Dirs that leave the manifest stay on disk
-    for time travel until :func:`vacuum`. Committing on top of a
-    legacy full-directory version raises: it has no partition dirs to
-    reuse, so every untouched row would be lost.
+    for time travel until :func:`vacuum`. Splicing on top of a
+    whole-table version raises: reusing its ``WHOLE`` entry beside the
+    written partitions would duplicate every row they hold.
 
     ``replace=True``: ``changed`` is the COMPLETE table and the manifest
     holds only what was produced (a full publish, or the one-time
-    migration of a legacy version).
+    move of a whole-table store to partitions).
 
     Refused before publishing: a ``part_col`` type other than integral,
     date or string when no ``part_values`` are declared (its dir names
@@ -236,16 +266,15 @@ def commit_snapshot_partitioned(
     prev = current_version(spark, root)
     manifest: dict[str, str] = {}
     if prev and not replace:
-        prev_manifest = read_manifest(spark, root, prev)
-        if prev_manifest is None:
+        manifest = read_manifest(spark, root, prev)
+        if WHOLE in manifest:
             raise ValueError(
-                f"snapshot v={prev} under {root} is a legacy full-directory "
-                "version with no partition manifest; a partitioned commit "
-                "on top of it would drop all untouched partitions. Commit "
-                "the COMPLETE table once with replace=True, or keep using "
-                "commit_snapshot."
+                f"version {prev} under {root} is a whole-table snapshot; a "
+                "partitioned splice on top of it would reuse the whole table "
+                "beside the written partitions and duplicate their rows. "
+                "Commit the COMPLETE table once with replace=True, or keep "
+                "using commit_snapshot."
             )
-        manifest = dict(prev_manifest)
     if part_values is None:
         dtype = changed.schema[part_col].dataType
         if not isinstance(dtype, (IntegralType, DateType, StringType)):
@@ -255,14 +284,9 @@ def commit_snapshot_partitioned(
                 "dir names map back to manifest tokens unchecked"
             )
     ver = (prev or 0) + 1
-    seg_rel = f"seg/v{ver}"
     part = F.concat(F.lit("v"), F.col(part_col).cast("string"))
-    (
-        changed.withColumn("__part", part)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("__part")
-        .parquet(f"{root}/{seg_rel}")
+    seg_rel = _write_seg(
+        changed.withColumn("__part", part).write.partitionBy("__part"), root, ver
     )
     fs, jvm = _fs(spark, root)
     produced: dict[str, str] = {}
@@ -286,39 +310,40 @@ def commit_snapshot_partitioned(
             f"partitioned commit under {root} would publish an empty "
             "manifest (no partitions written or reused); refusing"
         )
-    orphan = _manifest_path(jvm, root, ver)
-    if fs.exists(orphan):
-        # a crashed earlier attempt's manifest; its data dirs lived
-        # under seg/v<ver>, which the static overwrite just replaced
-        fs.delete(orphan, False)
-    _write_manifest(spark, root, ver, manifest)
-    fs.create(jvm.org.apache.hadoop.fs.Path(f"{root}/_v_{ver}.committed"), False).close()
-    return ver
+    return _publish(spark, root, ver, manifest)
+
+
+def _resolve(
+    spark: SparkSession, root: str, version: int | None
+) -> dict[str, str] | None:
+    """Manifest of ``version``, or of the latest committed version;
+    ``None`` when nothing is committed. An uncommitted version number
+    raises: a crashed commit can leave an orphan manifest whose data
+    was never published, and a half-written version must never be
+    readable."""
+    versions = committed_versions(spark, root)
+    if not versions:
+        return None
+    if version is None:
+        version = versions[-1]
+    elif version not in versions:
+        raise FileNotFoundError(
+            f"snapshot version {version} not committed under {root}"
+        )
+    return read_manifest(spark, root, version)
 
 
 def read_snapshot(
     spark: SparkSession, root: str, version: int | None = None
 ) -> DataFrame:
-    """Read the latest committed snapshot, or ``version`` (time travel).
-
-    Manifest-based (partition-scoped) versions resolve to the union of
-    their partition dirs; legacy versions read ``v=N`` directly. Asking
-    for an uncommitted/unknown version raises — a half-written
-    directory must never be readable."""
-    versions = committed_versions(spark, root)
-    if not versions:
+    """Read the latest committed snapshot, or ``version`` (time travel):
+    the union of the data dirs its manifest lists. Asking for an
+    uncommitted/unknown version raises."""
+    manifest = _resolve(spark, root, version)
+    if manifest is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
-    if version is None:
-        version = versions[-1]
-    if version not in versions:
-        raise FileNotFoundError(f"snapshot v={version} not committed under {root}")
-    manifest = read_manifest(spark, root, version)
-    if manifest is not None:
-        dirs = sorted({f"{root}/{rel}" for rel in manifest.values()})
-        if not dirs:
-            raise FileNotFoundError(f"snapshot v={version} under {root} is empty")
-        return spark.read.parquet(*dirs)
-    return spark.read.parquet(f"{root}/v={version}")
+    dirs = sorted({f"{root}/{rel}" for rel in manifest.values()})
+    return spark.read.parquet(*dirs)
 
 
 def read_snapshot_parts(
@@ -327,62 +352,49 @@ def read_snapshot_parts(
     part_values: list,
     version: int | None = None,
 ) -> DataFrame | None:
-    """Read ONLY the given partitions of a manifest-based snapshot —
-    the partition-pruned path the streaming sink uses to merge a batch
+    """Read ONLY the given partitions of a partitioned snapshot — the
+    partition-pruned path the streaming sink uses to merge a batch
     without scanning the table. Returns ``None`` when none of the
-    requested partitions exist yet (all-new days)."""
-    versions = committed_versions(spark, root)
-    if not versions:
-        return None
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        # same contract as read_snapshot: an uncommitted version number
-        # must never resolve — a crashed partitioned commit can leave an
-        # orphan manifest whose data dirs were never published
-        raise FileNotFoundError(
-            f"snapshot version {version} not committed under {root}"
-        )
-    manifest = read_manifest(spark, root, version)
+    requested partitions exist yet (all-new days). A whole-table
+    version has no partitions to prune and raises."""
+    manifest = _resolve(spark, root, version)
     if manifest is None:
+        return None
+    if WHOLE in manifest:
         raise ValueError(
-            f"snapshot v={version} under {root} is not partition-manifest based"
+            f"snapshot under {root} is a whole-table version, not partitioned"
         )
     tokens = {_part_token(v) for v in part_values}
     dirs = sorted(
         {f"{root}/{rel}" for tok, rel in manifest.items() if tok in tokens}
     )
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return spark.read.parquet(*dirs) if dirs else None
 
 
 def vacuum(spark: SparkSession, root: str, keep_last: int = 2) -> list[int]:
     """Drop all but the newest ``keep_last`` snapshots (markers first,
     so a reader racing the vacuum never resolves a half-deleted
-    version). Manifest-based versions share partition dirs across
+    version). Partitioned versions share partition dirs across
     versions, so a data dir is only deleted when NO kept manifest still
     references it. Returns the versions removed."""
     fs, jvm = _fs(spark, root)
     versions = committed_versions(spark, root)
     victims = versions[:-keep_last] if keep_last > 0 else versions
-    kept = [v for v in versions if v not in victims]
-    referenced: set[str] = set()
-    for ver in kept:
-        referenced |= set((read_manifest(spark, root, ver) or {}).values())
-    candidates: set[str] = set()
-    for ver in victims:
-        candidates |= set((read_manifest(spark, root, ver) or {}).values())
+
+    def dirs(vs) -> set[str]:
+        return set().union(*(read_manifest(spark, root, v).values() for v in vs))
+
+    candidates = dirs(victims) - dirs(v for v in versions if v not in victims)
     for ver in victims:
         fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/_v_{ver}.committed"), False)
-        fs.delete(_manifest_path(jvm, root, ver), False)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/v={ver}"), True)
-    for rel in sorted(candidates - referenced):
+        fs.delete(jvm.org.apache.hadoop.fs.Path(_manifest_path(root, ver)), False)
+    for rel in sorted(candidates):
         fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/{rel}"), True)
-    # tidy now-empty seg/v<N> parents of removed versions
-    for ver in victims:
-        seg = jvm.org.apache.hadoop.fs.Path(f"{root}/seg/v{ver}")
-        if fs.exists(seg) and len(fs.listStatus(seg)) == 0:
+    # a seg/v<N> left with no partition dir still holds its write's
+    # _SUCCESS files: delete it too, whichever version wrote it
+    for parent in {posixpath.dirname(rel) for rel in candidates} - {"seg"}:
+        seg = jvm.org.apache.hadoop.fs.Path(f"{root}/{parent}")
+        if fs.exists(seg) and not any(st.isDirectory() for st in fs.listStatus(seg)):
             fs.delete(seg, True)
     return victims
 
@@ -397,10 +409,7 @@ def batch_committed(
 ) -> bool:
     """Whether a streaming micro-batch id has already been applied to
     this store (see :func:`mark_batch`)."""
-    fs, jvm = _fs(spark, root)
-    return fs.exists(
-        jvm.org.apache.hadoop.fs.Path(_batch_marker(root, batch_id, app_id))
-    )
+    return _exists(spark, _batch_marker(root, batch_id, app_id))
 
 
 def mark_batch(
@@ -417,11 +426,8 @@ def mark_batch(
     WITHOUT an app id, re-pointing a rebuilt stream at an existing
     store would find the old run's ``_batch_0`` marker and silently
     skip its first batches. Sinks pass their checkpoint-stable identity
-    here; ``None`` keeps the legacy single-stream marker name."""
-    fs, jvm = _fs(spark, root)
-    fs.create(
-        jvm.org.apache.hadoop.fs.Path(_batch_marker(root, batch_id, app_id)), False
-    ).close()
+    here; ``None`` keeps the unscoped single-stream marker name."""
+    _touch(spark, _batch_marker(root, batch_id, app_id))
 
 
 def snapshot_diff(
@@ -485,15 +491,17 @@ def erase_keys(
     ``DeleteUser`` FK cascade (internal/db/user.go:125).
 
     Scale shape: the erasure list is subject-sized (people, not rows) →
-    broadcast. On a manifest-based store a column-pruned semi-join scan
+    broadcast. On a partitioned store a column-pruned semi-join scan
     of (key, part_col) first finds the TOUCHED partitions; only those
     are anti-joined and rewritten, every untouched partition's manifest
     entry is reused byte-identical — O(subject's partitions), not
     O(table), which is the difference between a minutes-job and a
     full-table rewrite at 100 TB. A partition whose every row is erased
     is dropped from the manifest rather than written empty; erasing
-    every row of a manifest store raises ``ValueError`` and publishes
-    nothing. The old version stays readable for time travel until
+    every row of a partitioned store raises ``ValueError`` and
+    publishes nothing. A whole-table store (:func:`commit_snapshot`)
+    gets one anti-join and a full rewrite; a partitioned one requires
+    ``part_col``. The old version stays readable for time travel until
     :func:`vacuum` — run vacuum to make erasure physical, as GDPR
     requires.
 
@@ -502,62 +510,50 @@ def erase_keys(
     row matched — nothing is published), ``rows_erased``,
     ``partitions_rewritten``, ``partitions_dropped``.
     """
+    version = current_version(spark, root)
+    snap = read_snapshot(spark, root, version)
+    manifest = read_manifest(spark, root, version)
     if not isinstance(ids, DataFrame):
-        field = read_snapshot(spark, root).schema[key]
         ids = spark.createDataFrame(
-            [(v,) for v in ids], schema=f"{key} {field.dataType.simpleString()}"
+            [(v,) for v in ids],
+            schema=f"{key} {snap.schema[key].dataType.simpleString()}",
         )
-    ids = ids.select(key).distinct()
-
-    manifest = read_manifest(spark, root, current_version(spark, root) or 0)
-    if manifest is not None and part_col is None:
-        raise ValueError(
-            f"store under {root} is partition-manifest based; pass part_col so "
-            "erasure rewrites only the touched partitions"
-        )
-
-    if manifest is None:
-        # legacy full-directory snapshot: one anti-join, full rewrite
-        snap = read_snapshot(spark, root)
-        erased = snap.join(F.broadcast(ids), key, "left_semi").count()
-        if erased == 0:
-            return {
-                "version": None,
-                "rows_erased": 0,
-                "partitions_rewritten": 0,
-                "partitions_dropped": 0,
-            }
-        kept = snap.join(F.broadcast(ids), key, "left_anti")
-        ver = commit_snapshot(kept, root)
-        return {
-            "version": ver,
-            "rows_erased": erased,
-            "partitions_rewritten": 0,
-            "partitions_dropped": 0,
-        }
-
-    # column-pruned probe: which partitions hold the subject's rows?
-    snap = read_snapshot(spark, root)
-    touched = [
-        r[0]
-        for r in snap.select(key, part_col)
-        .join(F.broadcast(ids), key, "left_semi")
-        .select(part_col)
-        .distinct()
-        .collect()
-    ]
-    if not touched:
-        return {
-            "version": None,
-            "rows_erased": 0,
-            "partitions_rewritten": 0,
-            "partitions_dropped": 0,
-        }
-    parts = read_snapshot_parts(spark, root, touched)
-    kept = parts.join(F.broadcast(ids), key, "left_anti").persist()
+    ids = F.broadcast(ids.select(key).distinct())
+    nothing = {
+        "version": None,
+        "rows_erased": 0,
+        "partitions_rewritten": 0,
+        "partitions_dropped": 0,
+    }
+    touched = None
+    parts = snap
+    if WHOLE not in manifest:
+        if part_col is None:
+            raise ValueError(
+                f"store under {root} is partitioned; pass part_col so "
+                "erasure rewrites only the touched partitions"
+            )
+        # column-pruned probe: which partitions hold the subject's rows?
+        touched = [
+            r[0]
+            for r in snap.select(key, part_col)
+            .join(ids, key, "left_semi")
+            .select(part_col)
+            .distinct()
+            .collect()
+        ]
+        if not touched:
+            return nothing
+        parts = read_snapshot_parts(spark, root, touched)
+    kept = parts.join(ids, key, "left_anti").persist()
     try:
         kept_rows = kept.count()
         erased = parts.count() - kept_rows
+        if erased == 0:
+            return nothing
+        if touched is None:  # whole-table store: one full rewrite
+            ver = commit_snapshot(kept, root)
+            return {**nothing, "version": ver, "rows_erased": erased}
         if kept_rows == 0 and set(manifest) <= {_part_token(v) for v in touched}:
             # the subject owns every row: a version with no partitions
             # could not be read back, so refuse and keep the store as is

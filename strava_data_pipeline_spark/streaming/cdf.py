@@ -108,17 +108,13 @@ _CONSUMED = re.compile(r"_consumed_s(\d+)_r(\d+)$")
 def _last_consumed(spark: SparkSession, rollup_root: str) -> tuple[int, int] | None:
     """Newest (store_version, rollup_version) pair this rollup has
     consumed, from the atomic marker files ``_consumed_s<N>_r<M>``."""
-    from strava_data_pipeline_spark.sources.versioned import _fs
+    from strava_data_pipeline_spark.sources.versioned import _names
 
-    fs, jvm = _fs(spark, rollup_root)
-    root = jvm.org.apache.hadoop.fs.Path(rollup_root)
-    if not fs.exists(root):
-        return None
-    pairs = []
-    for status in fs.listStatus(root):
-        m = _CONSUMED.search(status.getPath().getName())
-        if m:
-            pairs.append((int(m.group(1)), int(m.group(2))))
+    pairs = [
+        (int(m.group(1)), int(m.group(2)))
+        for m in map(_CONSUMED.search, _names(spark, rollup_root))
+        if m
+    ]
     return max(pairs) if pairs else None
 
 
@@ -173,11 +169,5 @@ def refresh_rollup_from_store(
         # bootstrap OR re-seed after vacuum outran the consumer
         new_rollup = events_rollup_of(V.read_snapshot(spark, store_root, cur))
     rollup_v_new = V.commit_snapshot(new_rollup, rollup_root)
-    fs, jvm = V._fs(spark, rollup_root)
-    fs.create(
-        jvm.org.apache.hadoop.fs.Path(
-            f"{rollup_root}/_consumed_s{cur}_r{rollup_v_new}"
-        ),
-        False,
-    ).close()
+    V._touch(spark, f"{rollup_root}/_consumed_s{cur}_r{rollup_v_new}")
     return cur

@@ -22,11 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from strava_data_pipeline_spark.streaming.sync import (
-    _hadoop_path_exists,
-    _hadoop_touch,
-    day_filter,
+from strava_data_pipeline_spark.sources.versioned import (
+    _exists,
+    _part_token,
+    _touch,
 )
+from strava_data_pipeline_spark.streaming.sync import day_filter
 
 
 def start_rollup_maintenance(
@@ -58,15 +59,13 @@ def start_rollup_maintenance(
     a fresh rollup_dir) whenever the checkpoint is rebuilt; the default
     unscoped name is only safe for a rollup_dir written by exactly one
     checkpoint lineage ever."""
-    from strava_data_pipeline_spark.sources.versioned import _part_token
-
     # same naming scheme as versioned.py::_batch_marker, .applied suffix
     prefix = f"_batch_{_part_token(app_id)}_" if app_id else "_batch_"
 
     def merge_rollup(batch: DataFrame, batch_id: int) -> None:
         sess = batch.sparkSession
         marker = f"{rollup_dir}/{prefix}{batch_id}.applied"
-        if _hadoop_path_exists(sess, marker):
+        if _exists(sess, marker):
             return
         # value accumulates in EXACT integer cents (per-row quantize,
         # BIGINT sum): a float fold is associative only by luck, so a
@@ -88,7 +87,7 @@ def start_rollup_maintenance(
         days = [r["p_day"] for r in delta.select("p_day").distinct().collect()]
         if not days:
             return
-        if _hadoop_path_exists(sess, rollup_dir):
+        if _exists(sess, rollup_dir):
             base = (
                 sess.read.parquet(rollup_dir)
                 .where(day_filter("p_day", days))
@@ -123,7 +122,7 @@ def start_rollup_maintenance(
             .partitionBy("p_day")
             .parquet(rollup_dir)
         )
-        _hadoop_touch(sess, marker)
+        _touch(sess, marker, overwrite=True)
 
     return (
         stream.writeStream.foreachBatch(merge_rollup)

@@ -18,13 +18,15 @@ proportional to the batch, which is what survives a 100 TB target.
 Dynamic overwrite also removes the round-1 stage-then-swap: the whole
 table is never deleted mid-write (per-partition commit via the file
 committer). For transactional multi-partition atomicity and
-cross-day key moves, the cluster path is a Delta/Iceberg MERGE sink (sources/versioned.py
-is the same commit protocol in miniature: marker-file publishes,
-crash-invisible half-writes, time travel) —
-this parquet-dir sink documents the constraint that a correction
-record keeps its event's calendar day (the day is derived from the
-event time that identifies it); a stale copy in an untouched day would
-otherwise need a compaction pass.
+cross-day key moves, the cluster path is a Delta/Iceberg MERGE sink;
+sources/versioned.py is the same commit protocol in miniature (every
+version a manifest over its ``seg/vN`` dirs, published by a marker
+file; crash-invisible half-writes; time travel) and
+streaming/versioned_sink.py upserts into it. This parquet-dir sink
+documents the constraint that a correction record keeps its event's
+calendar day (the day is derived from the event time that identifies
+it); a stale copy in an untouched day would otherwise need a
+compaction pass.
 """
 
 from __future__ import annotations
@@ -41,6 +43,7 @@ from pyspark.sql.types import (
 )
 
 from strava_data_pipeline_spark.operators.upsert import merge_latest_wins
+from strava_data_pipeline_spark.sources.versioned import _exists
 
 EVENT_SCHEMA = StructType(
     [
@@ -64,22 +67,6 @@ def read_event_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 16)
         .parquet(landing_dir)
     )
-
-
-def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem API, so the sink
-    works on any supported filesystem (HDFS/S3A/local), not just the
-    driver's local disk as ``os.path`` would."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
-def _hadoop_touch(spark, path: str) -> None:
-    """Create an empty marker file through the Hadoop FileSystem API."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.create(hpath, True).close()
 
 
 def day_filter(col: str, days: list) -> F.Column:
@@ -118,7 +105,7 @@ def start_incremental_sync(
         days = [r["p_day"] for r in b.select("p_day").distinct().collect()]
         if not days:
             return
-        if _hadoop_path_exists(sess, target_dir):
+        if _exists(sess, target_dir):
             # partition-pruned read: only the days this batch touches
             base = (
                 sess.read.parquet(target_dir)

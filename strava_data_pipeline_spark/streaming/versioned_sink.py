@@ -10,15 +10,15 @@ version, replays are detected by the batch marker and skipped, and a
 crash at any point leaves the previous version fully readable
 (sources/versioned.py's marker-file commit protocol).
 
-Commit order per batch: snapshot data dir → version marker → batch
-marker. A crash
-- before the version marker: the half-written ``v=N`` (or ``seg/vN``)
-  dir is invisible, replay re-merges from v=N-1 and overwrites it —
+Commit order per batch: snapshot data dir → manifest → version marker
+→ batch marker. A crash
+- before the version marker: the half-written ``seg/vN`` dir is
+  invisible, replay re-merges from version N-1 and overwrites it —
   same contents, version numbering unchanged;
 - between version and batch marker: replay sees the batch unmarked and
-  merges AGAIN on top of v=N — latest-wins merge of the same rows is a
-  no-op by value, so v=N+1 equals v=N (one redundant but harmless
-  version, still exactly-once by contents);
+  merges AGAIN on top of version N — latest-wins merge of the same rows
+  is a no-op by value, so version N+1 equals version N (one redundant
+  but harmless version, still exactly-once by contents);
 - after the batch marker: replay is skipped entirely.
 
 This is the miniature of what a Delta/Iceberg ``txnAppId``/``txnVersion``

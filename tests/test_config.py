@@ -6,10 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from strava_data_pipeline_spark.config import (
-    _parse_simple_yaml,
-    load_config,
-)
+from strava_data_pipeline_spark.config import load_config
 
 YAML = """\
 # engine deployment config
@@ -45,6 +42,37 @@ def test_yaml_file_overrides_defaults(tmp_path):
     assert cfg.spark.cpus == "*"
 
 
+# The two tests below keep the names they had when config.py carried its
+# own fallback YAML parser; they now check the same cases through
+# load_config, which always parses with PyYAML.
+
+
+def test_fallback_parser_quoted_hash_survives(tmp_path):
+    # '#' inside a quoted value is DATA (exactly the secrets this config
+    # carries), not a comment; only an unquoted '#' starts one
+    (tmp_path / "config.yaml").write_text(
+        'auth:\n  jwt_secret: "s3#cret"  # real comment\n'
+        "  token_duration: 120\n"
+        "strava:\n  client_secret: 'a#b#c'\n"
+    )
+    cfg = load_config(str(tmp_path), env={})
+    assert cfg.auth.jwt_secret == "s3#cret"
+    assert cfg.auth.token_duration == 120
+    assert cfg.strava.client_secret == "a#b#c"
+
+
+def test_fallback_parser_hash_needs_preceding_whitespace(tmp_path):
+    # YAML plain-scalar rule: '#' glued to the value is data, '#' after
+    # whitespace is a comment
+    (tmp_path / "config.yaml").write_text(
+        "strava:\n  callback_url: http://x/y#frag\n"
+        "  client_secret: abc # trailing\n"
+    )
+    cfg = load_config(str(tmp_path), env={})
+    assert cfg.strava.callback_url == "http://x/y#frag"
+    assert cfg.strava.client_secret == "abc"
+
+
 def test_env_beats_file(tmp_path):
     (tmp_path / "config.yaml").write_text(YAML)
     cfg = load_config(
@@ -68,48 +96,14 @@ def test_unknown_section_and_key_raise(tmp_path):
         load_config(str(tmp_path), env={})
 
 
-def test_fallback_parser_shape_guard():
-    parsed = _parse_simple_yaml("a:\n  k: 1\n  s: 'x y'  # c\n\nb:\n  t: true\n")
-    assert parsed == {"a": {"k": 1, "s": "x y"}, "b": {"t": True}}
-    with pytest.raises(ValueError, match="deeper than 2"):
-        _parse_simple_yaml("a:\n  b:\n    c: 1\n")
-    with pytest.raises(ValueError, match="before any section"):
-        _parse_simple_yaml("  k: 1\n")
-    with pytest.raises(ValueError, match="top-level scalars"):
-        _parse_simple_yaml("k: 1\n")
-
-
-def test_fallback_parser_quoted_hash_survives():
-    # '#' inside a quoted value is DATA (exactly the secrets this config
-    # carries), not a comment; only an unquoted '#' starts one
-    parsed = _parse_simple_yaml(
-        'auth:\n  jwt_secret: "s3#cret"  # real comment\n'
-        "  token_duration: 120\n"
-        "strava:\n  client_secret: 'a#b#c'\n"
+def test_empty_section_reads_as_defaults_and_scalar_section_raises(tmp_path):
+    # a section whose keys are all commented out parses to None
+    (tmp_path / "config.yaml").write_text(
+        "strava:\n  # client_id: 1\nauth:\n  token_duration: 5\n"
     )
-    assert parsed["auth"]["jwt_secret"] == "s3#cret"
-    assert parsed["auth"]["token_duration"] == 120
-    assert parsed["strava"]["client_secret"] == "a#b#c"
-
-
-def test_fallback_parser_unterminated_quote_raises():
-    with pytest.raises(ValueError, match="unterminated"):
-        _parse_simple_yaml('auth:\n  jwt_secret: "s3#cret\n')
-
-
-def test_fallback_parser_midvalue_apostrophe_is_plain_scalar():
-    # a quote only OPENS a span at value start: an unquoted value with
-    # one apostrophe (o'brien) is plain-scalar content, not an
-    # unterminated-quote error
-    parsed = _parse_simple_yaml("auth:\n  owner: o'brien's run\n")
-    assert parsed["auth"]["owner"] == "o'brien's run"
-
-
-def test_fallback_parser_hash_needs_preceding_whitespace():
-    # YAML plain-scalar rule: '#' glued to the value is data, '#' after
-    # whitespace is a comment
-    parsed = _parse_simple_yaml(
-        "strava:\n  redirect: http://x/y#frag\n  name: abc # trailing\n"
-    )
-    assert parsed["strava"]["redirect"] == "http://x/y#frag"
-    assert parsed["strava"]["name"] == "abc"
+    cfg = load_config(str(tmp_path), env={})
+    assert cfg.strava.client_id == 0
+    assert cfg.auth.token_duration == 5
+    (tmp_path / "config.yaml").write_text("strava: 5\n")
+    with pytest.raises(ValueError, match="must be a mapping"):
+        load_config(str(tmp_path), env={})

@@ -509,7 +509,7 @@ class TestVersionedSnapshots:
         V.commit_snapshot(spark.range(3), root)
         # simulate a writer that died after the data write, before the
         # marker: directory exists, no _v_2.committed
-        spark.range(99).write.parquet(f"{root}/v=2")
+        spark.range(99).write.parquet(f"{root}/seg/v2")
         assert V.current_version(spark, root) == 1
         assert V.read_snapshot(spark, root).count() == 3
         import pytest as _pytest
@@ -528,13 +528,22 @@ class TestVersionedSnapshots:
         removed = V.vacuum(spark, root, keep_last=2)
         assert removed == [1]
         assert V.committed_versions(spark, root) == [2, 3]
-        assert not glob.glob(f"{root}/v=1")
+        assert not glob.glob(f"{root}/seg/v1")
         assert V.read_snapshot(spark, root).count() == 6
+        # a partitioned version's seg dir goes once no kept version
+        # references its partitions; its _SUCCESS files do not pin it
+        proot = str(tmp_path / "ptbl")
+        df = spark.range(4).withColumn("p", (F.col("id") % 2).cast("int"))
+        V.commit_snapshot_partitioned(df, proot, "p")
+        V.commit_snapshot_partitioned(df, proot, "p", replace=True)
+        assert V.vacuum(spark, proot, keep_last=1) == [1]
+        assert not glob.glob(f"{proot}/seg/v1")
+        assert V.read_snapshot(spark, proot).count() == 4
 
 
 class TestVersionedPartitionedGuards:
-    """ADVICE r3 hardening: token collisions, null partitions, legacy
-    manifest-less base — each was a silent-data-loss path."""
+    """ADVICE r3 hardening: token collisions, null partitions, a
+    whole-table base under a splice — each was a silent-data-loss path."""
 
     def test_part_token_collisions_disambiguated(self):
         from strava_data_pipeline_spark.sources.versioned import _part_token
@@ -547,6 +556,11 @@ class TestVersionedPartitionedGuards:
         # clean values keep their readable, manifest-stable form
         assert _part_token("2024-01-01") == "2024-01-01"
         assert _part_token(7) == "7"
+        # no partition value can claim the whole-table manifest token
+        from strava_data_pipeline_spark.sources.versioned import WHOLE
+
+        for val in (None, "", "*", "__null__"):
+            assert _part_token(val) != WHOLE, val
 
     def test_partitioned_commit_on_legacy_snapshot_raises(self, spark, tmp_path):
         import pytest
@@ -555,9 +569,9 @@ class TestVersionedPartitionedGuards:
         from strava_data_pipeline_spark.sources import versioned as V
 
         root = str(tmp_path / "legacy_store")
-        V.commit_snapshot(spark.range(5), root)  # legacy full-dir version
+        V.commit_snapshot(spark.range(5), root)  # whole-table version
         part = spark.range(2).withColumn("p", F.lit(0))
-        with pytest.raises(ValueError, match="legacy full-directory"):
+        with pytest.raises(ValueError, match="whole-table snapshot"):
             V.commit_snapshot_partitioned(part, root, "p")
         # explicit migration with the COMPLETE table materializes it
         full = spark.range(5).withColumn("p", (F.col("id") % 2).cast("int"))
@@ -700,7 +714,7 @@ class TestCrashRecoveryPaths:
     """Review-found crash windows in the versioned store (r4)."""
 
     def test_commit_after_half_written_dir_recovers(self, spark, tmp_path):
-        # crash AFTER the v=N data write, BEFORE the marker: the replay
+        # crash AFTER the seg/vN data write, BEFORE the marker: the replay
         # recomputes the SAME version number and must be able to redo
         # the dir — mode('error') would wedge the store forever
         from strava_data_pipeline_spark.sources import versioned as V
@@ -709,9 +723,9 @@ class TestCrashRecoveryPaths:
         V.commit_snapshot(
             spark.createDataFrame([(1, "a")], "k long, s string"), root
         )
-        # simulate the half-written v=2: data lands, no marker
+        # simulate the half-written v2: data lands, no marker
         spark.createDataFrame([(9, "halfway")], "k long, s string").write.parquet(
-            f"{root}/v=2"
+            f"{root}/seg/v2"
         )
         assert V.current_version(spark, root) == 1
         ver = V.commit_snapshot(
@@ -734,7 +748,7 @@ class TestCrashRecoveryPaths:
         spark.createDataFrame([(9, "crashed")], "k long, s string").write.parquet(
             f"{root}/seg/v2/oldpart"
         )
-        V._write_manifest(spark, root, 2, {"oldpart": "seg/v2/oldpart"})
+        V._write_json(spark, V._manifest_path(root, 2), {"oldpart": "seg/v2/oldpart"})
         ver = V.commit_snapshot(
             spark.createDataFrame([(2, "b")], "k long, s string"), root
         )
@@ -744,10 +758,10 @@ class TestCrashRecoveryPaths:
 
     def test_orphan_commit_data_dirs_deleted_not_leaked(self, spark, tmp_path):
         # the crashed partitioned commit's data dirs are referenced by
-        # no version once its manifest is deleted, and vacuum only
-        # consults victim manifests — commit_snapshot must delete them
-        # (ADVICE r4), while dirs a committed manifest still shares
-        # survive
+        # no version once its manifest is replaced, and vacuum only
+        # consults victim manifests — commit_snapshot's overwrite of
+        # seg/v2 must remove them, while dirs a committed manifest
+        # still shares survive
         import os
 
         from strava_data_pipeline_spark.sources import versioned as V
@@ -757,7 +771,7 @@ class TestCrashRecoveryPaths:
             [(1, "2024-01-01")], "k long, d string"
         ).withColumn("d", F.to_date("d"))
         V.commit_snapshot_partitioned(df1, root, "d")  # v1 owns a seg dir
-        v1_dirs = set((V.read_manifest(spark, root, 1) or {}).values())
+        v1_dirs = set(V.read_manifest(spark, root, 1).values())
         assert v1_dirs
         # crashed v2: one NEW seg dir + reuse of v1's dir, manifest
         # written, no marker
@@ -765,13 +779,15 @@ class TestCrashRecoveryPaths:
             f"{root}/seg/v2/newpart"
         )
         shared = next(iter(v1_dirs))
-        V._write_manifest(
-            spark, root, 2, {"newpart": "seg/v2/newpart", "old": shared}
+        V._write_json(
+            spark,
+            V._manifest_path(root, 2),
+            {"newpart": "seg/v2/newpart", "old": shared},
         )
         V.commit_snapshot(
             spark.createDataFrame([(2, "b")], "k long, s string"), root
         )
-        assert not os.path.exists(f"{root}/seg/v2"), "orphan data dir leaked"
+        assert not os.path.exists(f"{root}/seg/v2/newpart"), "orphan data dir leaked"
         assert os.path.exists(f"{root}/{shared}"), "shared dir wrongly deleted"
         rows = {r["k"] for r in V.read_snapshot(spark, root, version=1).collect()}
         assert rows == {1}, "v1 must still read after orphan cleanup"
@@ -792,10 +808,9 @@ class TestCrashRecoveryPaths:
         spark.createDataFrame([(9, "z")], "k long, p string").write.parquet(
             f"{root}/seg/v2/__part=z"
         )
-        V._write_manifest(
+        V._write_json(
             spark,
-            root,
-            2,
+            V._manifest_path(root, 2),
             {"z": "seg/v2/__part=z", "b": V.read_manifest(spark, root, 1)["b"]},
         )
         upd = spark.createDataFrame([(3, "a")], "k long, p string")
@@ -819,7 +834,7 @@ class TestCrashRecoveryPaths:
             [(1, "2024-01-01")], "k long, d string"
         ).withColumn("d", F.to_date("d"))
         V.commit_snapshot_partitioned(df, root, "d")
-        V._write_manifest(spark, root, 2, {"x": "seg/v2/x"})  # orphan
+        V._write_json(spark, V._manifest_path(root, 2), {"x": "seg/v2/x"})  # orphan
         with _pytest.raises(FileNotFoundError):
             V.read_snapshot_parts(
                 spark, root, [None], version=2
@@ -829,12 +844,132 @@ class TestCrashRecoveryPaths:
         from strava_data_pipeline_spark.sources import versioned as V
 
         root = str(tmp_path / "tbl")
-        spark.createDataFrame([(1,)], "k long").write.parquet(f"{root}/v=0x")
+        V.commit_snapshot(spark.createDataFrame([(1,)], "k long"), root)
         V.mark_batch(spark, root, 0, app_id="old-run")
         assert V.batch_committed(spark, root, 0, app_id="old-run")
         # a NEW stream identity restarting at batch 0 is NOT blocked
         assert not V.batch_committed(spark, root, 0, app_id="new-run")
         assert not V.batch_committed(spark, root, 0)
+
+
+def _write_whole(spark, root):
+    from strava_data_pipeline_spark.sources import versioned as V
+
+    V.commit_snapshot(spark.range(3), root)
+    V.commit_snapshot(spark.range(4), root)
+
+
+def _write_splice(spark, root):
+    from strava_data_pipeline_spark.sources import versioned as V
+
+    df = spark.range(6).withColumn("p", (F.col("id") % 2).cast("int"))
+    V.commit_snapshot_partitioned(df, root, "p")
+    V.commit_snapshot_partitioned(df.where("p = 0"), root, "p", part_values=[0])
+
+
+def _write_replace(spark, root):
+    from strava_data_pipeline_spark.sources import versioned as V
+
+    df = spark.range(6).withColumn("p", (F.col("id") % 2).cast("int"))
+    V.commit_snapshot(df, root)
+    V.commit_snapshot_partitioned(df, root, "p", replace=True)
+
+
+def _write_sink(partition_col):
+    def write(spark, root):
+        from datetime import datetime
+
+        from strava_data_pipeline_spark.streaming.sync import (
+            EVENT_SCHEMA,
+            read_event_stream,
+        )
+        from strava_data_pipeline_spark.streaming.versioned_sink import (
+            start_versioned_sink,
+        )
+
+        landing = root + "_landing"
+        for k, day in enumerate((1, 2)):  # two triggers, two versions
+            spark.createDataFrame(
+                [(k, datetime(2024, 1, day, 10), 7, "run", 5.0)], EVENT_SCHEMA
+            ).coalesce(1).write.mode("append").parquet(landing)
+            start_versioned_sink(
+                read_event_stream(spark, landing),
+                root,
+                root + "_ckpt",
+                partition_col=partition_col,
+            ).awaitTermination(120)
+
+    return write
+
+
+def _write_erase(partitioned):
+    def write(spark, root):
+        from strava_data_pipeline_spark.sources import versioned as V
+
+        df = spark.createDataFrame(
+            [(1, 7, "d1"), (2, 8, "d1"), (3, 7, "d2")],
+            "event_id bigint, user_id bigint, p string",
+        )
+        if partitioned:
+            V.commit_snapshot_partitioned(df, root, "p")
+            V.erase_keys(spark, root, "user_id", [7], part_col="p")
+        else:
+            V.commit_snapshot(df, root)
+            V.erase_keys(spark, root, "user_id", [7])
+
+    return write
+
+
+def _write_export(spark, root):
+    from strava_data_pipeline_spark.sources.corpus_export import (
+        export_corpus_shards,
+    )
+
+    rows = [(i, i * 977 % 4096, 25, f"d{i}") for i in range(12)]
+    kept = spark.createDataFrame(
+        rows, "doc_id long, h long, n_tokens long, text string"
+    )
+    export_corpus_shards(kept, root, 100)
+    export_corpus_shards(kept.where("doc_id < 6"), root, 100)
+
+
+@pytest.mark.parametrize(
+    "writer",
+    [
+        _write_whole,
+        _write_splice,
+        _write_replace,
+        _write_sink(None),
+        _write_sink("p_day"),
+        _write_erase(False),
+        _write_erase(True),
+        _write_export,
+    ],
+    ids=[
+        "commit_snapshot",
+        "partitioned_splice",
+        "partitioned_replace",
+        "sink_whole",
+        "sink_partitioned",
+        "erase_whole",
+        "erase_partitioned",
+        "export_corpus_shards",
+    ],
+)
+def test_every_writer_publishes_manifest_versions_only(spark, tmp_path, writer):
+    # one snapshot layout: every committed version is a manifest over
+    # seg/v<N> dirs, and no writer lays down a full-directory v=N
+    from strava_data_pipeline_spark.sources import versioned as V
+
+    root = str(tmp_path / "store")
+    writer(spark, root)
+    versions = V.committed_versions(spark, root)
+    assert len(versions) >= 2
+    for ver in versions:
+        assert V.read_manifest(spark, root, ver), f"version {ver} has no manifest"
+    full_dirs = [d for d, _, _ in os.walk(root) if os.path.basename(d)[:2] == "v="]
+    assert full_dirs == []
+    assert V.read_snapshot(spark, root).count() > 0
 
 
 class TestCorpusExport:
@@ -904,7 +1039,8 @@ class TestCorpusExport:
         rows = [(i, i * 31 % 512, 10, f"d{i}") for i in range(20)]
         export_corpus_shards(self._kept(spark, rows), root, 60)
         fs, jvm = V._fs(spark, root)
-        fs.delete(_sidecar_path(jvm, root, 1), False)  # simulate the crash
+        # simulate the crash
+        fs.delete(jvm.org.apache.hadoop.fs.Path(_sidecar_path(root, 1)), False)
         v2, wrote2 = export_corpus_shards(self._kept(spark, rows), root, 60)
         assert (v2, wrote2) == (2, True)
         a = sorted(
