@@ -696,7 +696,7 @@ def rollup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact, not just in pytest.
 
     Scale shape: the maintenance itself is O(batch) per trigger plus a
-    partition-pruned read of the touched days (streaming/rollup.py);
+    read of only the touched day dirs (streaming/rollup.py);
     this audit adds one scan of the committed rollup. Store root is
     deterministic per sf_dir, rebuilt per call — idempotent re-runs,
     exactly like snapshot_diff/quarantine_audit. total_value is EXACT

@@ -189,8 +189,9 @@ def sync_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     table as four id-split micro-batches plus a CORRECTION batch
     (same event_id, strictly later same-day timestamp, value + 1000),
     run the REAL foreachBatch latest-wins merge
-    (streaming/sync.py::start_incremental_sync — partition-pruned
-    read, dynamic-partition overwrite, one merge code path shared with
+    (streaming/sync.py::start_incremental_sync — reads only the
+    batch's day dirs, merges them straight into a dynamic-partition
+    overwrite with no checkpoint, one merge code path shared with
     batch ingestion), and hash the committed day-partitioned table.
     A double-applied merge, a lost correction, a tie broken the wrong
     way, or a dynamic overwrite that clobbers an untouched day is a

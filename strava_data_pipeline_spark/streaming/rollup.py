@@ -13,8 +13,8 @@ touched days of the rollup — O(batch), not O(table). (Averages derive
 as sum/count at read time; non-mergeable stats — exact percentiles —
 need the sketch path, percentile_stats_approx.)
 
-Same dynamic-partition-overwrite discipline as streaming/sync.py: only
-the day partitions present in the batch are rewritten.
+Same discipline as streaming/sync.py: only the batch's day dirs are read
+(``read_days``) and rewritten, with no checkpoint in between.
 """
 
 from __future__ import annotations
@@ -27,7 +27,9 @@ from strava_data_pipeline_spark.sources.versioned import (
     _part_token,
     _touch,
 )
-from strava_data_pipeline_spark.streaming.sync import day_filter
+from strava_data_pipeline_spark.streaming.sync import read_days
+
+ROLLUP_SCHEMA = "event_type string, n_events bigint, total_value double, p_day date"
 
 
 def start_rollup_maintenance(
@@ -87,19 +89,14 @@ def start_rollup_maintenance(
         days = [r["p_day"] for r in delta.select("p_day").distinct().collect()]
         if not days:
             return
-        if _exists(sess, rollup_dir):
-            base = (
-                sess.read.parquet(rollup_dir)
-                .where(day_filter("p_day", days))
-                .select(
-                    "p_day",
-                    "event_type",
-                    "n_events",
-                    # recover the exact integer cents the double holds
-                    F.round(F.col("total_value") * 100)
-                    .cast("bigint")
-                    .alias("_cents"),
-                )
+        base = read_days(sess, rollup_dir, ROLLUP_SCHEMA, days)
+        if base is not None:
+            base = base.select(
+                "p_day",
+                "event_type",
+                "n_events",
+                # recover the exact integer cents the double holds
+                F.round(F.col("total_value") * 100).cast("bigint").alias("_cents"),
             )
             merged = (
                 base.unionByName(delta)
@@ -108,7 +105,6 @@ def start_rollup_maintenance(
                     F.sum("n_events").cast("bigint").alias("n_events"),
                     F.sum("_cents").cast("bigint").alias("_cents"),
                 )
-                .localCheckpoint(eager=True)  # cut lineage to rollup_dir
             )
         else:
             merged = delta

@@ -10,11 +10,14 @@ same "catch up then stop" semantics as the reference's manual
 `/admin/sync`.
 
 Scale shape: a micro-batch only ever touches the day partitions its
-events fall in, so the merge reads O(batch-days), not O(table), and the
-write replaces ONLY those partitions (``partitionOverwriteMode=dynamic``
-set per-write, never leaked into the session). Untouched day
-directories are not listed, read, or rewritten — per-batch I/O is
-proportional to the batch, which is what survives a 100 TB target.
+events fall in. The merge lists and reads only those day dirs
+(``read_days``: no root listing, no schema inference), and the write
+replaces ONLY those partitions (``partitionOverwriteMode=dynamic`` set
+per-write, never leaked into the session): per-batch I/O follows the
+batch, which is what survives a 100 TB target. The merge feeds the
+overwrite with no checkpoint: Spark lets a dynamic partition overwrite
+read the partitions it replaces, because it writes to a staging dir and
+swaps them in at job commit, after every read has finished.
 Dynamic overwrite also removes the round-1 stage-then-swap: the whole
 table is never deleted mid-write (per-partition commit via the file
 committer). For transactional multi-partition atomicity and
@@ -34,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    DateType,
     DoubleType,
     LongType,
     StringType,
@@ -43,7 +47,7 @@ from pyspark.sql.types import (
 )
 
 from strava_data_pipeline_spark.operators.upsert import merge_latest_wins
-from strava_data_pipeline_spark.sources.versioned import _exists
+from strava_data_pipeline_spark.sources.versioned import _HIVE_NULL_DIR, _exists
 
 EVENT_SCHEMA = StructType(
     [
@@ -54,6 +58,8 @@ EVENT_SCHEMA = StructType(
         StructField("value", DoubleType()),
     ]
 )
+
+TARGET_SCHEMA = StructType(EVENT_SCHEMA.fields + [StructField("p_day", DateType())])
 
 
 def read_event_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
@@ -69,18 +75,18 @@ def read_event_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
     )
 
 
-def day_filter(col: str, days: list) -> F.Column:
-    """Null-safe membership filter for a partition-day list: ``isin``
-    never matches NULL, so a batch containing a null-ts event (p_day
-    NULL, stored under Hive's default partition) would silently exclude
-    the stored NULL-day rows from the merge base — and the dynamic
-    overwrite would then replace that partition with the batch's rows
-    alone, losing history."""
-    non_null = [d for d in days if d is not None]
-    cond = F.col(col).isin(non_null) if non_null else F.lit(False)
-    if any(d is None for d in days):
-        cond = cond | F.col(col).isNull()
-    return cond
+def read_days(
+    sess: SparkSession, target_dir: str, schema: StructType | str, days: list
+) -> DataFrame | None:
+    """The stored rows of the ``days`` dirs of a ``p_day``-partitioned
+    parquet dir that exist (driver-side Hadoop FS checks), read under an
+    explicit ``schema``; ``None`` if none exists. A ``None`` day is the
+    dir Hive's default partition keeps NULL ``p_day`` rows in."""
+    dirs = [f"{target_dir}/p_day={_HIVE_NULL_DIR if d is None else d}" for d in days]
+    dirs = [d for d in dirs if _exists(sess, d)]
+    if not dirs:
+        return None
+    return sess.read.schema(schema).option("basePath", target_dir).parquet(*dirs)
 
 
 def start_incremental_sync(
@@ -105,23 +111,14 @@ def start_incremental_sync(
         days = [r["p_day"] for r in b.select("p_day").distinct().collect()]
         if not days:
             return
-        if _exists(sess, target_dir):
-            # partition-pruned read: only the days this batch touches
-            base = (
-                sess.read.parquet(target_dir)
-                .where(day_filter("p_day", days))
-                .select(*data_cols, "p_day")
-            )
-            # eager localCheckpoint materializes the (batch-bounded)
-            # merge result and cuts lineage to the target path — Spark
-            # refuses to overwrite a path its plan still reads from. On
-            # a multi-node cluster use a reliable checkpoint dir (or a
-            # Delta/Iceberg MERGE sink) instead of executor-local blocks.
-            merged = merge_latest_wins(
-                base, b, keys=["event_id"], order_by=["ts"]
-            ).localCheckpoint(eager=True)
-        else:
-            merged = b
+        # only the touched day dirs are listed and read, and the merge
+        # feeds the overwrite with no checkpoint (module docstring)
+        base = read_days(sess, target_dir, TARGET_SCHEMA, days)
+        merged = (
+            b
+            if base is None
+            else merge_latest_wins(base, b, keys=["event_id"], order_by=["ts"])
+        )
         (
             merged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -4,7 +4,7 @@ custom stateful sessionization — all via availableNow on temp dirs."""
 from __future__ import annotations
 
 import os
-from datetime import datetime
+from datetime import date, datetime, timedelta
 
 import pytest
 
@@ -121,6 +121,44 @@ def test_incremental_sync_upserts(spark, dirs):
     # the Jan 5 partition was not listed, read, or rewritten: its files
     # are byte-identical — the O(batch) not O(table) property
     assert _partition_state(target, "2024-01-05") == untouched_before
+
+
+def _sync_job_count(spark, landing, target, ckpt) -> int:
+    """Run one availableNow sync and count the Spark jobs it started: a
+    stream's jobs carry its run id as their job group."""
+    q = start_incremental_sync(read_event_stream(spark, landing), target, ckpt)
+    q.awaitTermination(120)
+    # job starts reach the status store through the async listener bus
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+
+def test_sync_trigger_cost_does_not_grow_with_untouched_days(spark, tmp_path):
+    # the same one-day batch into a target with 2 and with 40 untouched
+    # day dirs (past Spark's 32-path parallel-listing threshold): a
+    # trigger that lists or infers the schema of the whole root pays
+    # more jobs on the wider target
+    jobs, unchanged = {}, {}
+    for n in (2, 40):
+        landing, target, ckpt = (str(tmp_path / f"{k}{n}") for k in ("l", "t", "c"))
+        _write_batch(
+            spark,
+            landing,
+            [
+                (i, datetime(2024, 1, 1, 10) + timedelta(days=i), 7, "run", 1.0)
+                for i in range(n + 1)
+            ],
+        )
+        _sync_job_count(spark, landing, target, ckpt)
+        untouched = [str(date(2024, 1, 1) + timedelta(days=i)) for i in range(1, n + 1)]
+        before = {d: _partition_state(target, d) for d in untouched}
+        _write_batch(spark, landing, [(1000, datetime(2024, 1, 1, 12), 8, "swim", 2.0)])
+        jobs[n] = _sync_job_count(spark, landing, target, ckpt)
+        unchanged[n] = before == {d: _partition_state(target, d) for d in untouched}
+        rows = {r["event_id"] for r in spark.read.parquet(target).collect()}
+        assert rows == set(range(n + 1)) | {1000}
+    assert jobs[2] == jobs[40], jobs
+    assert unchanged == {2: True, 40: True}
 
 
 def test_windowed_counts(spark, dirs):
@@ -1079,6 +1117,78 @@ class TestReviewHardening:
         self._sync(spark, landing, target, ckpt)
         rows = {r["event_id"] for r in spark.read.parquet(target).collect()}
         assert rows == {1, 2, 3}, "stored NULL-day rows were lost"
+
+    def test_sync_batch_over_existing_new_and_null_days(self, spark, dirs):
+        # one batch touches a stored day, a day with no dir yet and the
+        # NULL day at once: each stored day merges with its own rows
+        landing, target, ckpt = dirs
+        _write_batch(
+            spark,
+            landing,
+            [
+                (1, None, 7, "run", 5.0),
+                (2, datetime(2024, 1, 1, 10), 7, "ride", 6.0),
+                (3, datetime(2024, 1, 2, 10), 7, "hike", 7.0),
+            ],
+        )
+        self._sync(spark, landing, target, ckpt)
+        untouched = _partition_state(target, "2024-01-02")
+        _write_batch(
+            spark,
+            landing,
+            [
+                (2, datetime(2024, 1, 1, 11), 7, "ride", 60.0),
+                (4, datetime(2024, 1, 1, 9), 8, "run", 8.0),
+                (5, datetime(2024, 1, 9, 9), 8, "swim", 9.0),
+                (6, None, 8, "swim", 10.0),
+            ],
+        )
+        self._sync(spark, landing, target, ckpt)
+        got = {
+            r["event_id"]: (r["value"], r["p_day"] and str(r["p_day"]))
+            for r in spark.read.parquet(target).collect()
+        }
+        assert got == {
+            1: (5.0, None),
+            2: (60.0, "2024-01-01"),
+            3: (7.0, "2024-01-02"),
+            4: (8.0, "2024-01-01"),
+            5: (9.0, "2024-01-09"),
+            6: (10.0, None),
+        }
+        assert _partition_state(target, "2024-01-02") == untouched
+
+    def test_rollup_null_ts_day_totals_accumulate(self, spark, dirs):
+        # rollup twin of the null-ts sync case: a second null-ts batch
+        # must add to the stored NULL-day totals, not replace them
+        from strava_data_pipeline_spark.streaming.rollup import (
+            start_rollup_maintenance,
+        )
+
+        landing, target, ckpt = dirs
+        _write_batch(
+            spark,
+            landing,
+            [
+                (1, None, 7, "run", 5.0),
+                (2, datetime(2024, 1, 1, 10), 7, "run", 6.0),
+            ],
+        )
+        start_rollup_maintenance(
+            read_event_stream(spark, landing), target, ckpt
+        ).awaitTermination(120)
+        _write_batch(spark, landing, [(3, None, 8, "run", 1.25)])
+        start_rollup_maintenance(
+            read_event_stream(spark, landing), target, ckpt
+        ).awaitTermination(120)
+        got = {
+            (r["p_day"] and str(r["p_day"]), r["event_type"]): (
+                r["n_events"],
+                r["total_value"],
+            )
+            for r in spark.read.parquet(target).collect()
+        }
+        assert got == {(None, "run"): (2, 6.25), ("2024-01-01", "run"): (1, 6.0)}
 
     def test_rollup_replay_marker_prevents_double_count(self, spark, dirs):
         from strava_data_pipeline_spark.streaming.rollup import (
