@@ -46,6 +46,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from strava_data_pipeline_spark.config import load_config
 from strava_data_pipeline_spark.operators.pagination import page_keyset, page_offset
 from strava_data_pipeline_spark.sources.catalog import load_table, max_micros, note_read
 
@@ -68,15 +69,24 @@ class PipelineService:
         self,
         spark: SparkSession,
         sf_dir: str,
-        jwt_secret: str = "spark-graft-hs256-secret",
-        token_duration: int = 60,
+        jwt_secret: str | None = None,
+        token_duration: int | None = None,
     ):
         self.spark = spark
         self.sf_dir = sf_dir
         # session-token settings (config.go Auth block: JWTSecret +
-        # TokenDuration minutes)
-        self.jwt_secret = jwt_secret
-        self.token_duration = token_duration
+        # TokenDuration minutes), from load_config().auth unless given.
+        # With no secret configured, tokens are signed with a random
+        # secret of this instance, never a constant known to anyone.
+        auth = load_config().auth
+        self.jwt_secret = (
+            jwt_secret
+            if jwt_secret is not None
+            else auth.jwt_secret or secrets.token_urlsafe(32)
+        )
+        self.token_duration = (
+            token_duration if token_duration is not None else auth.token_duration
+        )
         # Admin-created keys are a driver-scale dim; kept as local rows
         # and rebuilt as a literal DataFrame per query, so a long-lived
         # service never accumulates an unbounded unionByName lineage.
@@ -107,22 +117,17 @@ class PipelineService:
         ).drop("rn")
 
     def list_activities_after(
-        self, cursor_ts, cursor_id: int | None = None, limit: int = 20
+        self, cursor_ts, cursor_id: int, limit: int = 20
     ) -> DataFrame:
         """Keyset variant — the deep-pagination path the reference lacks.
 
-        The cursor must mirror the FULL (ts DESC, event_id DESC) order:
-        ``ts < T`` alone silently skips the remaining rows that share
-        the page boundary's timestamp. Callers pass the last row's
-        (ts, event_id) pair; a bare timestamp (cursor_id=None) keeps
-        the old semantics for callers that guarantee unique ts."""
+        The cursor is the last row's (ts, event_id) pair and mirrors the
+        FULL (ts DESC, event_id DESC) order: ``ts < T`` alone would skip
+        the remaining rows that share the page boundary's timestamp."""
         events = self._table("events")
-        cursor = F.col("ts") < F.lit(cursor_ts)
-        if cursor_id is not None:
-            cursor = cursor | (
-                (F.col("ts") == F.lit(cursor_ts))
-                & (F.col("event_id") < F.lit(cursor_id))
-            )
+        cursor = (F.col("ts") < F.lit(cursor_ts)) | (
+            (F.col("ts") == F.lit(cursor_ts)) & (F.col("event_id") < F.lit(cursor_id))
+        )
         return page_keyset(
             events,
             [("ts", True), ("event_id", True)],
@@ -157,25 +162,16 @@ class PipelineService:
         description: str,
         expiry_days: int = 30,
         user_id: int | None = None,
-        generate: bool = False,
         key: str | None = None,
     ) -> str:
         """Register a new API key; ``expiry_days <= 0`` means no expiry
-        (GenerateAPIKey, auth.go:39-59). ``generate=True`` mints the key
-        the way the reference does (auth.go:66-75
-        ``generateRandomString``): 32 random bytes, URL-safe base64 —
-        unguessable, unlike the default deterministic digest which
-        exists for reproducible fixtures. An explicit ``key`` registers
-        a caller-supplied value (imports, fixtures)."""
+        (GenerateAPIKey, auth.go:39-59). The key is minted the way the
+        reference does (auth.go:66-75 ``generateRandomString``): 32
+        random bytes, URL-safe base64. An explicit ``key`` registers a
+        caller-supplied value (imports, fixtures)."""
         now = datetime.utcnow()
-        if key is not None:
-            pass
-        elif generate:
+        if key is None:
             key = base64.urlsafe_b64encode(secrets.token_bytes(32)).decode()
-        else:
-            key = hashlib.sha256(
-                f"{description}:{now.isoformat()}".encode()
-            ).hexdigest()
         expires = now + timedelta(days=expiry_days) if expiry_days > 0 else None
         self._key_rows.append((key, description, now, expires, True, user_id))
         return key
@@ -188,12 +184,16 @@ class PipelineService:
         createDataFrame + plan + job-submit latency to answer a
         membership question over a driver-held list would add hundreds
         of ms per call. The DataFrame views (keys_for_user,
-        read_api_key) remain for the analytical paths."""
+        read_api_key) remain for the analytical paths.
+
+        Keys compare as UTF-8 bytes: ``hmac.compare_digest`` refuses
+        ``str`` values holding non-ASCII characters."""
         now = now or datetime.utcnow()
+        given = key.encode()
         for row in self._key_rows:
             k, _desc, _created, expires_at, is_active, _uid = row
             if (
-                hmac.compare_digest(k, key)
+                hmac.compare_digest(k.encode(), given)
                 and is_active
                 and (expires_at is None or expires_at > now)
             ):
@@ -229,8 +229,9 @@ class PipelineService:
         want = hashlib.sha256((payload + self.jwt_secret).encode()).hexdigest()
         # constant-time compare: ordinary != short-circuits at the first
         # differing hex char, leaking a timing channel an attacker can
-        # use to recover a valid digest byte-by-byte
-        if not hmac.compare_digest(sig, want):
+        # use to recover a valid digest byte-by-byte; bytes, because a
+        # forged signature may hold non-ASCII characters
+        if not hmac.compare_digest(sig.encode(), want.encode()):
             raise ValueError("invalid token: signature mismatch")
         if exp <= int(now.timestamp()):
             raise ValueError("invalid token: expired")

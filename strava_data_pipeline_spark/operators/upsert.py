@@ -57,27 +57,19 @@ def merge_cdc(
     DeleteActivity — /root/reference/internal/db/activities.go:247 —
     batched): ``changes`` carries ``op_col`` ∈ {'U','D'}.
 
-    Same single-shuffle window merge as ``merge_latest_wins``; after
-    ranking, a key whose newest change is a delete drops out entirely.
-    Delete tombstones must carry the key + order_by columns; other
-    columns may be NULL. A NULL ``op_col`` is treated as an upsert
-    ('U'): ``_op != 'D'`` alone evaluates NULL and would silently
+    ``merge_latest_wins`` over rows tagged with their op (base rows
+    'U'); a key whose newest change is a delete then drops out
+    entirely. Delete tombstones must carry the key + order_by columns;
+    other columns may be NULL. A NULL ``op_col`` is treated as an
+    upsert ('U'): ``_op != 'D'`` alone evaluates NULL and would silently
     DELETE the key (the filter drops both the change row and, via the
     rank, the base row) — a malformed feed row must never erase data.
     """
     cols = base.columns
-    tagged = base.select(*cols).withColumn("_op", F.lit("U")).withColumn(
-        "_src", F.lit(0)
-    ).unionByName(
-        changes.select(
-            *cols, F.coalesce(F.col(op_col), F.lit("U")).alias("_op")
-        ).withColumn("_src", F.lit(1))
+    merged = merge_latest_wins(
+        base.select(*cols, F.lit("U").alias("_op")),
+        changes.select(*cols, F.coalesce(F.col(op_col), F.lit("U")).alias("_op")),
+        keys,
+        order_by,
     )
-    w = Window.partitionBy(*keys).orderBy(
-        *[F.col(c).desc() for c in order_by], F.col("_src").desc()
-    )
-    return (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .where((F.col("_rn") == 1) & (F.col("_op") != "D"))
-        .drop("_rn", "_src", "_op")
-    )
+    return merged.where(F.col("_op") != "D").drop("_op")

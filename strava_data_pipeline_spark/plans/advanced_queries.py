@@ -44,7 +44,7 @@ FROM events e ASOF LEFT JOIN p
 """
 
 
-@register("events_asof_profile", oracle=_ASOF_ORACLE, tags=("temporal", "bench"))
+@register("events_asof_profile", oracle=_ASOF_ORACLE)
 def events_asof_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Enrich each event with the profile tier valid at event time.
 
@@ -93,7 +93,7 @@ GROUP BY 1
 """
 
 
-@register("events_in_windows", oracle=_RANGE_ORACLE, tags=("temporal",))
+@register("events_in_windows", oracle=_RANGE_ORACLE)
 def events_in_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-window event stats for 25 overlapping 36-hour windows
     (derived from nation). Dimension-sized window side → broadcast
@@ -135,7 +135,7 @@ LIMIT 20
 """
 
 
-@register("activities_keyset", oracle=_KEYSET_ORACLE, tags=("pipeline",))
+@register("activities_keyset", oracle=_KEYSET_ORACLE)
 def activities_keyset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page 'after cursor (ts, id)' — the deep-pagination companion to
     activities_page (offset windows re-scan everything they skip; a
@@ -172,7 +172,7 @@ FROM events GROUP BY 1
 """
 
 
-@register("percentile_stats", oracle=_PCTL_ORACLE, tags=("analytics",))
+@register("percentile_stats", oracle=_PCTL_ORACLE)
 def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact linear-interpolation percentiles of value per event type.
     Spark's ``percentile`` matches DuckDB's ``quantile_cont``; at
@@ -237,11 +237,7 @@ FROM ranked GROUP BY event_type
 """
 
 
-@register(
-    "percentile_stats_approx",
-    oracle=_PCTL_APPROX_ORACLE,
-    tags=("analytics", "approx"),
-)
+@register("percentile_stats_approx", oracle=_PCTL_APPROX_ORACLE)
 def percentile_stats_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch percentiles (``percentile_approx``, accuracy 10000) — the
     100 TB path: mergeable map-side partials, no per-group value
@@ -320,7 +316,7 @@ GROUP BY ROLLUP(event_type, CAST(ts AS DATE))
 """
 
 
-@register("events_rollup", oracle=_ROLLUP_ORACLE, tags=("analytics",))
+@register("events_rollup", oracle=_ROLLUP_ORACLE)
 def events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical rollup: per (type, day), per type, and grand
     total in one pass (Expand + single shuffle, not three scans)."""
@@ -357,7 +353,7 @@ FROM g GROUP BY 1, 2
 """
 
 
-@register("type_streaks", oracle=_STREAK_ORACLE, tags=("analytics", "bench"))
+@register("type_streaks", oracle=_STREAK_ORACLE)
 def type_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest consecutive-active-day streak per (user, type):
     classic gaps-and-islands — day minus dense row_number is constant
@@ -408,7 +404,7 @@ LEFT JOIN p USING (user_id)
 """
 
 
-@register("events_funnel", oracle=_FUNNEL_ORACLE, tags=("advanced",))
+@register("events_funnel", oracle=_FUNNEL_ORACLE)
 def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strictly-ordered view→click→purchase funnel per user in ONE scan
     and ONE user_id exchange: running-min windows carry "first view so
@@ -471,7 +467,7 @@ GROUP BY 1, 2
 """
 
 
-@register("retention_cohorts", oracle=_RETENTION_ORACLE, tags=("advanced",))
+@register("retention_cohorts", oracle=_RETENTION_ORACLE)
 def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classic retention triangle: users cohorted by first-seen day,
     counted on each later active day offset. The cohort dim aggregates
@@ -512,7 +508,7 @@ FROM events GROUP BY 1
 _EVENT_TYPES = ["view", "click", "signup", "purchase", "error"]
 
 
-@register("events_pivot", oracle=_PIVOT_ORACLE, tags=("advanced",))
+@register("events_pivot", oracle=_PIVOT_ORACLE)
 def events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Long→wide pivot: per-user event-type count matrix. The pivot
     values are DECLARED (not discovered) so the plan is a single-pass
@@ -544,7 +540,7 @@ GROUP BY CUBE (event_type, dow)
 """
 
 
-@register("events_cube", oracle=_CUBE_ORACLE, tags=("advanced",))
+@register("events_cube", oracle=_CUBE_ORACLE)
 def events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE(type, weekday): all four grouping-set combinations in a
     single Expand pass — one scan, one shuffle, 4× expansion only on
@@ -583,7 +579,7 @@ WHERE s.n >= 3 AND s.sigma > 0
 """
 
 
-@register("events_zscore", oracle=_ZSCORE_ORACLE, tags=("advanced",))
+@register("events_zscore", oracle=_ZSCORE_ORACLE)
 def events_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(user,type) z-scores for every event value — the anomaly
     primitive. Group moments ride an UNORDERED window over the same
@@ -639,7 +635,7 @@ FROM calendar c LEFT JOIN daily d USING (user_id, day)
 """
 
 
-@register("events_gapfill", oracle=_GAPFILL_ORACLE, tags=("advanced",))
+@register("events_gapfill", oracle=_GAPFILL_ORACLE)
 def events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series densification (the hypertable gap-fill): each user's
     daily series is completed over their OWN [first, last] day span —
@@ -697,7 +693,7 @@ WHERE rn <= 3
 """
 
 
-@register("events_latest_n", oracle=_LATEST_N_ORACLE, tags=("advanced",))
+@register("events_latest_n", oracle=_LATEST_N_ORACLE)
 def events_latest_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest 3 events PER USER — the per-key feed complement of the
     global recent_activities top-N. A partitioned row_number window
@@ -736,7 +732,7 @@ WINDOW w AS (PARTITION BY event_type ORDER BY week_start)
 """
 
 
-@register("weekly_type_trend", oracle=_TREND_ORACLE, tags=("advanced",))
+@register("weekly_type_trend", oracle=_TREND_ORACLE)
 def weekly_type_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Week-over-week movement per event type: analytic lag over an
     ALREADY-AGGREGATED series — the window runs on (type × week)
@@ -786,7 +782,7 @@ SELECT 'resurrected' AS cohort, user_id FROM (SELECT user_id FROM w4 EXCEPT SELE
 """
 
 
-@register("user_churn_setops", oracle=_SETOPS_ORACLE, tags=("advanced",))
+@register("user_churn_setops", oracle=_SETOPS_ORACLE)
 def user_churn_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retained / churned / resurrected cohorts via relational set
     algebra — INTERSECT and EXCEPT plan as hash semi/anti joins over
@@ -826,7 +822,7 @@ GROUP BY GROUPING SETS ((event_type), (user_id))
 """
 
 
-@register("events_grouping_sets", oracle=_GSETS_ORACLE, tags=("advanced",))
+@register("events_grouping_sets", oracle=_GSETS_ORACLE)
 def events_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly the two marginal totals (per type, per user) and NOTHING
     else — grouping sets expand only the requested combinations in one
@@ -859,7 +855,7 @@ WINDOW w AS (PARTITION BY event_type ORDER BY n_events DESC)
 """
 
 
-@register("events_rank_suite", oracle=_RANKS_ORACLE, tags=("advanced",))
+@register("events_rank_suite", oracle=_RANKS_ORACLE)
 def events_rank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank / dense_rank / percent_rank / cume_dist over each user's
     event count within their event type — the four ranking semantics
@@ -908,7 +904,7 @@ GROUP BY 1, 2
 """
 
 
-@register("events_sliding_window", oracle=_SLIDING_ORACLE, tags=("advanced",))
+@register("events_sliding_window", oracle=_SLIDING_ORACLE)
 def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Six-hour windows sliding every hour (hopping aggregate) — the
     batch twin of the streaming windowed counts. Spark's F.window with a
@@ -964,7 +960,7 @@ FROM segs
 """
 
 
-@register("scd2_intervals", oracle=_SCD2_ORACLE, tags=("advanced",))
+@register("scd2_intervals", oracle=_SCD2_ORACLE)
 def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-2 slowly-changing dimension BUILD: collapse each user's
     event stream into [valid_from, valid_to) intervals of constant
@@ -1010,7 +1006,7 @@ def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # 194. scd2_intervals_bucketed — the skew-robust twin (r8)
 # --------------------------------------------------------------------------
-@register("scd2_intervals_bucketed", oracle=_SCD2_ORACLE, tags=("advanced",))
+@register("scd2_intervals_bucketed", oracle=_SCD2_ORACLE)
 def scd2_intervals_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """scd2_intervals through the two-phase primitives — SAME oracle,
     identical hash. The plain build's lag + running-segment windows
@@ -1101,7 +1097,7 @@ LIMIT 100
 """
 
 
-@register("heavy_hitters", oracle=_HEAVY_ORACLE, tags=("advanced",))
+@register("heavy_hitters", oracle=_HEAVY_ORACLE)
 def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact heavy hitters over (user_id, event_type): one map-side
     partial-aggregated groupBy, then the global (total, n_groups) pair
@@ -1165,7 +1161,7 @@ LIMIT 100
 """
 
 
-@register("heavy_hitters_sampled", oracle=_HEAVY_SAMPLED_ORACLE, tags=("advanced",))
+@register("heavy_hitters_sampled", oracle=_HEAVY_SAMPLED_ORACLE)
 def heavy_hitters_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampled heavy-hitter estimate: hash-gate the fact table to 25%
     BEFORE the shuffle (the gate is a codegen-resident predicate on the
@@ -1239,7 +1235,7 @@ GROUP BY 1
 """
 
 
-@register("sessions_overlap_windows", oracle=_OVERLAP_ORACLE, tags=("temporal",))
+@register("sessions_overlap_windows", oracle=_OVERLAP_ORACLE)
 def sessions_overlap_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Which analysis windows does each user session overlap? Session
     intervals (30-min-gap rollup) overlap-joined to 25 overlapping
@@ -1287,7 +1283,7 @@ def sessions_overlap_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # 189. sessions_overlap_bucketed — the skew-robust twin (r8)
 # --------------------------------------------------------------------------
-@register("sessions_overlap_bucketed", oracle=_OVERLAP_ORACLE, tags=("temporal",))
+@register("sessions_overlap_bucketed", oracle=_OVERLAP_ORACLE)
 def sessions_overlap_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sessions_overlap_windows through the skew-robust session build —
     SAME oracle, identical hash. The plain query's scale hazard was
@@ -1395,7 +1391,7 @@ LIMIT 50
 _PAGERANK_PERSIST_ROWS = 4_000_000
 
 
-@register("pagerank_parts", oracle=_pagerank_oracle(), tags=("graph",))
+@register("pagerank_parts", oracle=_pagerank_oracle())
 def pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 parts by PageRank over the undirected co-purchase graph
     (parts sharing an order, the parts_bought_together edge set). Three
@@ -1540,7 +1536,7 @@ def _rolling_emit(cum: DataFrame) -> DataFrame:
     )
 
 
-@register("events_rolling_7d", oracle=_ROLLING_ORACLE, tags=("advanced", "temporal"))
+@register("events_rolling_7d", oracle=_ROLLING_ORACLE)
 def events_rolling_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user 7-day rolling count and value sum — the time-RANGE
     moving aggregate, computed as a DELTA-STREAM PREFIX SUM instead of
@@ -1591,11 +1587,7 @@ def events_rolling_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # 193. events_rolling_7d_bucketed — the skew-robust twin (r8)
 # --------------------------------------------------------------------------
-@register(
-    "events_rolling_7d_bucketed",
-    oracle=_ROLLING_ORACLE,
-    tags=("advanced", "temporal"),
-)
+@register("events_rolling_7d_bucketed", oracle=_ROLLING_ORACLE)
 def events_rolling_7d_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_rolling_7d through the two-phase bucketed cumsum — SAME
     oracle, identical hash. The delta-stream rewrite made the rolling

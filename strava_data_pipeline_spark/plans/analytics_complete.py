@@ -45,7 +45,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
 """
 
 
-@register("q6_forecast_revenue", oracle=_Q6_ORACLE, tags=("analytics",))
+@register("q6_forecast_revenue", oracle=_Q6_ORACLE)
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue increase from dropping small-quantity discounts: a
     single-table filter + global aggregate, no join, no window — the
@@ -86,7 +86,7 @@ GROUP BY 1
 """
 
 
-@register("q12_returnflag_priority", oracle=_Q12_ORACLE, tags=("analytics",))
+@register("q12_returnflag_priority", oracle=_Q12_ORACLE)
 def q12_returnflag_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Urgent-vs-other order counts per return flag (Q12's shipmode
     stand-in — the schema has no l_shipmode): a fact-fact equi-join
@@ -135,7 +135,7 @@ WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
 """
 
 
-@register("q15_top_supplier", oracle=_Q15_ORACLE, tags=("analytics",))
+@register("q15_top_supplier", oracle=_Q15_ORACLE)
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supplier(s) with the maximum quarterly revenue: the CREATE VIEW +
     scalar-max subquery of Q15 becomes an aggregate reused by both the
@@ -201,7 +201,7 @@ WHERE p.p_size <= 15 AND p.p_type = 'STANDARD'
 """
 
 
-@register("q2_min_cost_supplier", oracle=_Q2_ORACLE, tags=("analytics",))
+@register("q2_min_cost_supplier", oracle=_Q2_ORACLE)
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cheapest EUROPE supplier per STANDARD small part (Q2's
     correlated min-cost subquery; lineitem's observed min unit price
@@ -275,7 +275,7 @@ GROUP BY 1, 2
 """
 
 
-@register("q9_product_profit", oracle=_Q9_ORACLE, tags=("analytics",))
+@register("q9_product_profit", oracle=_Q9_ORACLE)
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Profit on red parts per supplier nation per order year (Q9;
     cost = 60% of p_retailprice since partsupp doesn't exist). The
@@ -325,7 +325,7 @@ WHERE v > (SELECT sum(v) * CAST(0.0001 AS DECIMAL(7,4)) FROM val)
 """
 
 
-@register("q11_important_parts", oracle=_Q11_ORACLE, tags=("analytics",))
+@register("q11_important_parts", oracle=_Q11_ORACLE)
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parts whose shipped value from one nation's suppliers exceeds
     0.01% of that nation's total (Q11's important-stock HAVING over a
@@ -369,7 +369,7 @@ GROUP BY 1, 2, 3
 """
 
 
-@register("q16_supplier_count", oracle=_Q16_ORACLE, tags=("analytics",))
+@register("q16_supplier_count", oracle=_Q16_ORACLE)
 def q16_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct suppliers able to supply each (brand, type, size) slice
     (Q16; the lineitem link stands in for partsupp, negative account
@@ -428,7 +428,7 @@ WHERE r.r_name = 'EUROPE' AND s.s_suppkey IN (SELECT sk FROM dominant)
 """
 
 
-@register("q20_dominant_suppliers", oracle=_Q20_ORACLE, tags=("analytics",))
+@register("q20_dominant_suppliers", oracle=_Q20_ORACLE)
 def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EUROPE suppliers who shipped >30% of some red part's 1996 volume
     (Q20's excess-stock pipeline with shipped-share standing in for
@@ -504,7 +504,7 @@ LIMIT 100
 """
 
 
-@register("q21_waiting_suppliers", oracle=_Q21_ORACLE, tags=("analytics",))
+@register("q21_waiting_suppliers", oracle=_Q21_ORACLE)
 def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Suppliers who alone held up a finished multi-supplier order
     (Q21; late = shipped >60 days after the order date, the available

@@ -46,7 +46,7 @@ GROUP BY 1, 2, 3
 """
 
 
-@register("q7_nation_trade", oracle=_Q7_ORACLE, tags=("analytics",))
+@register("q7_nation_trade", oracle=_Q7_ORACLE)
 def q7_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Volume shipped between a nation pair, both directions, per ship
     year. Both nation dims broadcast; the disjunctive pair predicate is
@@ -128,7 +128,7 @@ GROUP BY 1
 """
 
 
-@register("q8_market_share", oracle=_Q8_ORACLE, tags=("analytics",))
+@register("q8_market_share", oracle=_Q8_ORACLE)
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NATION_3's share of PROMO-part volume sold into EUROPE, per order
     year: conditional-aggregation ratio over a 7-way join. nation/region
@@ -186,7 +186,7 @@ GROUP BY 1
 """
 
 
-@register("q13_order_distribution", oracle=_Q13_ORACLE, tags=("analytics",))
+@register("q13_order_distribution", oracle=_Q13_ORACLE)
 def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution of customers by non-urgent order count, INCLUDING
     zero-order customers: left outer join (filter on the join condition,
@@ -226,7 +226,7 @@ WHERE l.l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
 """
 
 
-@register("q14_promo_revenue", oracle=_Q14_ORACLE, tags=("analytics",))
+@register("q14_promo_revenue", oracle=_Q14_ORACLE)
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Percent of one month's revenue from PROMO parts: single join +
     global conditional aggregate (one row out). The month filter pushes
@@ -267,7 +267,7 @@ WHERE p.p_brand = 'Brand#23'
 """
 
 
-@register("q17_small_qty_revenue", oracle=_Q17_ORACLE, tags=("analytics",))
+@register("q17_small_qty_revenue", oracle=_Q17_ORACLE)
 def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-quantity revenue for one brand, decorrelated: the
     per-part AVG subquery becomes a groupBy(partkey) aggregate joined
@@ -314,7 +314,7 @@ LIMIT 100
 """
 
 
-@register("q18_large_orders", oracle=_Q18_ORACLE, tags=("analytics",))
+@register("q18_large_orders", oracle=_Q18_ORACLE)
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with very large orders: the HAVING subquery becomes a
     groupBy + filter + left_semi join (ids only shuffle), then the
@@ -361,7 +361,7 @@ WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 5
 """
 
 
-@register("q19_disjunctive_revenue", oracle=_Q19_ORACLE, tags=("analytics",))
+@register("q19_disjunctive_revenue", oracle=_Q19_ORACLE)
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three-branch disjunctive brand/size/quantity predicate over the
     part join. Catalyst extracts the common l_quantity range (1..30) and
@@ -419,7 +419,7 @@ GROUP BY 1
 """
 
 
-@register("q22_dormant_customers", oracle=_Q22_ORACLE, tags=("analytics",))
+@register("q22_dormant_customers", oracle=_Q22_ORACLE)
 def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Well-funded customers with no RECENT orders (none since 2000 —
     every customer has lifetime orders, which would make the classic
@@ -489,7 +489,7 @@ FROM base b CROSS JOIN q
 """
 
 
-@register("customer_rfm", oracle=_RFM_ORACLE, tags=("analytics",))
+@register("customer_rfm", oracle=_RFM_ORACLE)
 def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quintile RFM segmentation WITHOUT the classic global ntile —
     ntile(5) funnels every customer through one window partition, the
@@ -567,7 +567,7 @@ LIMIT 50
 """
 
 
-@register("parts_bought_together", oracle=_BASKET_ORACLE, tags=("analytics",))
+@register("parts_bought_together", oracle=_BASKET_ORACLE)
 def parts_bought_together(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top co-purchased part pairs via basket arrays: ONE
     orderkey-keyed shuffle (map-side-combined collect_list) and a
@@ -622,7 +622,7 @@ LIMIT 20
 """
 
 
-@register("q10_returned_items", oracle=_Q10_ORACLE, tags=("analytics",))
+@register("q10_returned_items", oracle=_Q10_ORACLE)
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10: customers who returned the most revenue in a quarter.
     Plan shape: the returnflag + quarter predicates prune BOTH fact

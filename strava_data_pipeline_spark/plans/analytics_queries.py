@@ -33,7 +33,7 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
-@register("q1_pricing_summary", oracle=_Q1_ORACLE, tags=("analytics", "bench"))
+@register("q1_pricing_summary", oracle=_Q1_ORACLE)
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing summary report: one pushdown-filtered scan, map-side
     partial aggs, single shuffle on the 2-col grouping key."""
@@ -78,7 +78,7 @@ LIMIT 10
 """
 
 
-@register("q3_shipping_priority", oracle=_Q3_ORACLE, tags=("analytics", "bench"))
+@register("q3_shipping_priority", oracle=_Q3_ORACLE)
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unshipped-order revenue: orders⋈customer then lineitem on the
     fact key, top-10 via TakeOrderedAndProject. Join strategy is left
@@ -130,7 +130,7 @@ GROUP BY 1
 """
 
 
-@register("q5_local_supplier", oracle=_Q5_ORACLE, tags=("analytics", "bench"))
+@register("q5_local_supplier", oracle=_Q5_ORACLE)
 def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local-supplier volume: every dim (region→nation→supplier,
     customer) broadcasts; the only shuffle is lineitem⋈orders plus the
@@ -186,7 +186,7 @@ LIMIT 20
 """
 
 
-@register("top_customers_by_revenue", oracle=_Q10_ORACLE, tags=("analytics", "bench"))
+@register("top_customers_by_revenue", oracle=_Q10_ORACLE)
 def top_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Returned-item revenue per customer, top-20. Revenue sums exact
     BIGINT cents (per-row quantization — see the oracle note); top-20
@@ -237,7 +237,7 @@ GROUP BY 1
 """
 
 
-@register("order_priority_count", oracle=_Q4_ORACLE, tags=("analytics",))
+@register("order_priority_count", oracle=_Q4_ORACLE)
 def order_priority_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-lineitem order counts via left_semi join (EXISTS), then a
     tiny agg."""
@@ -268,7 +268,7 @@ FROM part GROUP BY 1
 """
 
 
-@register("parts_brand_stats", oracle=_BRAND_ORACLE, tags=("analytics",))
+@register("parts_brand_stats", oracle=_BRAND_ORACLE)
 def parts_brand_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brand-level stats over the part dim."""
     return (

@@ -91,7 +91,7 @@ FROM scored GROUP BY 1
 """
 
 
-@register("classifier_quality_score", oracle=_CLASSIFIER_ORACLE, tags=("llm", "text"))
+@register("classifier_quality_score", oracle=_CLASSIFIER_ORACLE)
 def classifier_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashed linear quality classifier (fastText-style, Joulin et al.
     2016): token → feature bucket (md5 % B) → milli-unit weight; doc
@@ -183,7 +183,7 @@ GROUP BY 1
 """
 
 
-@register("dsir_weights", oracle=_DSIR_ORACLE, tags=("llm", "sampling"))
+@register("dsir_weights", oracle=_DSIR_ORACLE)
 def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance log-weights (Xie et al. 2023) for raw docs
     against a curated target source, over hashed token buckets with
@@ -267,7 +267,7 @@ QUALIFY rank <= {_BPE_TOPK}
 """
 
 
-@register("bpe_pair_counts", oracle=_BPE_ORACLE, tags=("llm", "text"))
+@register("bpe_pair_counts", oracle=_BPE_ORACLE)
 def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE merge-candidate statistics: corpus-wide counts of adjacent
     character pairs within tokens (every occurrence), top-50 by count.
@@ -359,7 +359,7 @@ WHERE d.doc_id % 97 <> 0
 """
 
 
-@register("decontaminate_bloom", oracle=_BLOOM_ORACLE, tags=("llm", "text"))
+@register("decontaminate_bloom", oracle=_BLOOM_ORACLE)
 def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter decontamination: the benchmark's shingles set k=3
     bits in an m=4096 bitmap; a training shingle is flagged when ALL
@@ -495,7 +495,7 @@ GROUP BY 1
 """
 
 
-@register("ngram_novelty", oracle=_NOVELTY_ORACLE, tags=("llm", "text"))
+@register("ngram_novelty", oracle=_NOVELTY_ORACLE)
 def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document novelty: the share of a doc's distinct word-3-
     shingles whose FIRST corpus occurrence (min doc_id) is this doc —
@@ -574,7 +574,7 @@ FROM term GROUP BY 1
 """
 
 
-@register("domain_kl", oracle=_KL_ORACLE, tags=("llm", "corpus"))
+@register("domain_kl", oracle=_KL_ORACLE)
 def domain_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source KL divergence from the corpus token distribution over
     B=256 hash buckets — the drift monitor for corpus mixtures. One
@@ -651,7 +651,7 @@ QUALIFY rank <= {_TRI_TOPK}
 """
 
 
-@register("copurchase_triangles", oracle=_TRI_ORACLE, tags=("analytics", "graph"))
+@register("copurchase_triangles", oracle=_TRI_ORACLE)
 def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-part triangle participation in the co-purchase graph (parts
     sharing an order) — the local clustering signal behind "customers
@@ -764,9 +764,7 @@ GROUP BY 1
 """
 
 
-@register(
-    "embedding_power_iteration", oracle=_pi_oracle(), tags=("llm", "ml")
-)
+@register("embedding_power_iteration", oracle=_pi_oracle())
 def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-principal-component projection of every embedding via two
     exact-integer power iterations (see module comment above the
@@ -883,7 +881,7 @@ LEFT JOIN ix ON ix.doc_a = m.doc_a AND ix.doc_b = m.doc_b
 """
 
 
-@register("minhash_error_eval", oracle=_minhash_eval_oracle(), tags=("llm", "dedup"))
+@register("minhash_error_eval", oracle=_minhash_eval_oracle())
 def minhash_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-error audit: for every minhash-LSH candidate pair, the
     estimated jaccard (matching-signature fraction), the exact jaccard
@@ -985,9 +983,7 @@ FROM ranked
 """
 
 
-@register(
-    "quality_calibration", oracle=_CALIB_ORACLE, tags=("llm", "curation")
-)
+@register("quality_calibration", oracle=_CALIB_ORACLE)
 def quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source quantile calibration of an exact-integer quality
     score: token density minus punctuation density (micro-units, floor
@@ -1120,11 +1116,7 @@ GROUP BY hbucket
 """
 
 
-@register(
-    "corpus_shard_buckets",
-    oracle=_shard_buckets_oracle(),
-    tags=("llm", "curation", "ops"),
-)
+@register("corpus_shard_buckets", oracle=_shard_buckets_oracle())
 def corpus_shard_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bucket marginals of corpus_shard_plan's global hash order:
     one map-side-combinable groupBy over the same (h, n_tokens)
@@ -1144,9 +1136,7 @@ def corpus_shard_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "corpus_shard_plan", oracle=_shard_plan_oracle(), tags=("llm", "curation")
-)
+@register("corpus_shard_plan", oracle=_shard_plan_oracle())
 def corpus_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic token-budget shard assignment via a SKEW-ROBUST
     global prefix sum: hash-order the corpus (md5_u32 of the body,

@@ -133,7 +133,7 @@ SELECT s AS partkey, peel_round, deg_at_peel FROM (
 _KCORE_PRUNE_ROWS = 4_000_000
 
 
-@register("kcore_peel", oracle=_KCORE_ORACLE, tags=("analytics", "graph"))
+@register("kcore_peel", oracle=_KCORE_ORACLE)
 def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-core decomposition of the co-purchase graph, four unrolled
     peel rounds at k=100 (the co-purchase graph's median degree is
@@ -364,7 +364,7 @@ FROM deg GROUP BY 1
 """
 
 
-@register("degree_histogram", oracle=_DEGHIST_ORACLE, tags=("analytics", "graph"))
+@register("degree_histogram", oracle=_DEGHIST_ORACLE)
 def degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log2-bucketed degree distribution of the co-purchase graph —
     the skew audit that justifies (or indicts) every degree-dependent

@@ -59,7 +59,7 @@ FROM documents GROUP BY 1
 """
 
 
-@register("dedup_exact", oracle=_EXACT_ORACLE, tags=("llm", "dedup"))
+@register("dedup_exact", oracle=_EXACT_ORACLE)
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact content dedup by md5 hash-groupBy: full hash→canonical
     mapping (testdata plants no byte-identical dups, so the collision
@@ -118,7 +118,7 @@ JOIN sig sb ON sb.doc_id = p.doc_b
 """
 
 
-@register("dedup_minhash", oracle=_minhash_oracle(), tags=("llm", "dedup", "bench"))
+@register("dedup_minhash", oracle=_minhash_oracle())
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16 perms) + LSH(4 bands × 4 rows) candidate pairs with
     estimated jaccard."""
@@ -191,7 +191,7 @@ WHERE d.doc_id % 10 = 0
 """
 
 
-@register("dedup_incremental", oracle=_incremental_oracle(), tags=("llm", "dedup"))
+@register("dedup_incremental", oracle=_incremental_oracle())
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup: judge an incoming BATCH (doc_id % 10 == 0
     stands in for the day's crawl) against the existing corpus index +
@@ -266,7 +266,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
 """
 
 
-@register("dedup_simhash", oracle=_simhash_oracle(), tags=("llm", "dedup"))
+@register("dedup_simhash", oracle=_simhash_oracle())
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash(32-bit) near-dup pairs within hamming ≤ 3 via byte-band
     pigeonhole blocking."""
@@ -332,7 +332,7 @@ WHERE {ham} <= 7
 """
 
 
-@register("dedup_simhash64", oracle=_simhash64_oracle(), tags=("llm", "dedup"))
+@register("dedup_simhash64", oracle=_simhash64_oracle())
 def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash(64-bit, two portable 32-bit halves) near-dup pairs within
     hamming ≤ 7 via 8 byte-band pigeonhole blocking — the corpus-scale
@@ -389,7 +389,7 @@ WHERE len(list_intersect(a.grams, b.grams)) * 1.0 /
 """
 
 
-@register("dedup_ngram_jaccard", oracle=_JACCARD_ORACLE, tags=("llm", "dedup"))
+@register("dedup_ngram_jaccard", oracle=_JACCARD_ORACLE)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-n-gram Jaccard pairs ≥ 0.5, blocked by (lang, length
     bucket). Gram order is corpus-adaptive (operators/dedup.py:
@@ -458,7 +458,7 @@ SELECT vec_a, vec_b, score FROM scored WHERE score >= 0.35
 """
 
 
-@register("dedup_embedding", oracle=_emb_dedup_oracle(), tags=("llm", "dedup"))
+@register("dedup_embedding", oracle=_emb_dedup_oracle())
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs (cosine ≥ τ) via banded hyperplane LSH
     within label blocks — candidates only inside (label, band, bucket)
@@ -497,7 +497,7 @@ SELECT * FROM ranked WHERE rank <= 10
 """
 
 
-@register("ann_topk", oracle=_ANN_ORACLE, tags=("llm", "similarity", "bench"))
+@register("ann_topk", oracle=_ANN_ORACLE)
 def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 for query vectors vec_id < 8 (broadcast
     queries, single corpus scan)."""
@@ -577,7 +577,7 @@ SELECT * FROM ranked WHERE rank <= 10
 """
 
 
-@register("ann_ivf", oracle=_ANN_IVF_ORACLE, tags=("llm", "similarity"))
+@register("ann_ivf", oracle=_ANN_IVF_ORACLE)
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-10: 16 inverted lists, 2 probes per query.
     The scale path writes the corpus partitioned by centroid_id so a
@@ -587,7 +587,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.ann_topk_ivf(emb, emb.where(F.col("vec_id") < 8), k=10)
 
 
-@register("ann_lsh", oracle=_ann_lsh_oracle(), tags=("llm", "similarity"))
+@register("ann_lsh", oracle=_ann_lsh_oracle())
 def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 via 8-hyperplane LSH buckets — the 100 TB path:
     candidates come only from the query's bucket."""
@@ -625,7 +625,7 @@ FROM votes
 """
 
 
-@register("lang_id", oracle=_lang_id_oracle(), tags=("llm", "text"))
+@register("lang_id", oracle=_lang_id_oracle())
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-stopword language-ID vote per document."""
     docs = _docs(spark, sf_dir)
@@ -660,7 +660,7 @@ FROM base
 """
 
 
-@register("text_quality", oracle=_QUALITY_ORACLE, tags=("llm", "text"))
+@register("text_quality", oracle=_QUALITY_ORACLE)
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length/punctuation/stopword quality features + composite score."""
     docs = _docs(spark, sf_dir)
@@ -707,7 +707,7 @@ FROM documents
 """
 
 
-@register("token_count", oracle=_TOKEN_ORACLE, tags=("llm", "text"))
+@register("token_count", oracle=_TOKEN_ORACLE)
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace + BPE-style pre-tokenizer token counts."""
     docs = _docs(spark, sf_dir)
@@ -737,7 +737,7 @@ SELECT doc_id, fp_rank, fp FROM ranked WHERE fp_rank <= 5
 """
 
 
-@register("doc_fingerprint", oracle=_FP_ORACLE, tags=("llm", "text"))
+@register("doc_fingerprint", oracle=_FP_ORACLE)
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bottom-5 shingle-hash fingerprint sketch per document."""
     return D.doc_fingerprints(load_table(spark, sf_dir, "documents"))
@@ -762,7 +762,7 @@ FROM h
 """
 
 
-@register("multimodal_meta", oracle=_MM_ORACLE, tags=("llm", "multimodal"))
+@register("multimodal_meta", oracle=_MM_ORACLE)
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-payload metadata plumbing: the documents' text bytes stand
     in for an opaque media blob (see operators/multimodal.py for the
@@ -805,9 +805,7 @@ FROM chars
 """
 
 
-@register(
-    "multimodal_features", oracle=_MM_FEATURES_ORACLE, tags=("llm", "multimodal")
-)
+@register("multimodal_features", oracle=_MM_FEATURES_ORACLE)
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multimodal decode path end to end: attach_payload (built-in
     metadata) → extract_features (Arrow-batched mapInPandas over binary
@@ -864,9 +862,7 @@ FROM px
 """
 
 
-@register(
-    "multimodal_decode", oracle=_MM_DECODE_ORACLE, tags=("llm", "multimodal")
-)
+@register("multimodal_decode", oracle=_MM_DECODE_ORACLE)
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real image decode through the Arrow path: plant P6 payloads
     (operators/multimodal.plant_ppm → binary column), decode them with
@@ -929,9 +925,7 @@ FROM px
 """
 
 
-@register(
-    "multimodal_decode_bmp", oracle=_MM_BMP_ORACLE, tags=("llm", "multimodal")
-)
+@register("multimodal_decode_bmp", oracle=_MM_BMP_ORACLE)
 def multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real COMPRESSED image decode through the Arrow path: plant RLE8
     BMP payloads (operators/multimodal.plant_bmp — headers, 256-entry
@@ -1001,9 +995,7 @@ FROM px
 """
 
 
-@register(
-    "multimodal_decode_gif", oracle=_MM_GIF_ORACLE, tags=("llm", "multimodal")
-)
+@register("multimodal_decode_gif", oracle=_MM_GIF_ORACLE)
 def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real ENTROPY-CODED image decode through the Arrow path: plant
     GIF89a payloads (operators/multimodal.plant_gif — headers, color
@@ -1107,11 +1099,7 @@ FROM px
 """
 
 
-@register(
-    "multimodal_decode_gif_anim",
-    oracle=_MM_GIF_ANIM_ORACLE,
-    tags=("llm", "multimodal"),
-)
+@register("multimodal_decode_gif_anim", oracle=_MM_GIF_ANIM_ORACLE)
 def multimodal_decode_gif_anim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Animated-GIF delta-frame compositing through the Arrow path:
     plant 3-image GIF89a animations (operators/multimodal.
@@ -1179,9 +1167,7 @@ FROM px
 """
 
 
-@register(
-    "multimodal_decode_png", oracle=_MM_PNG_ORACLE, tags=("llm", "multimodal")
-)
+@register("multimodal_decode_png", oracle=_MM_PNG_ORACLE)
 def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real DEFLATE-era image decode through the Arrow path: plant PNG
     payloads (operators/multimodal.plant_png — real encoder, per-row
@@ -1276,11 +1262,7 @@ FROM px
 """
 
 
-@register(
-    "multimodal_decode_png_deep",
-    oracle=_MM_PNG_DEEP_ORACLE,
-    tags=("llm", "multimodal"),
-)
+@register("multimodal_decode_png_deep", oracle=_MM_PNG_DEEP_ORACLE)
 def multimodal_decode_png_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Indexed-color and 16-bit PNG decode end to end: plant PLTE
     payloads at depths 1/2/4/8 plus 16-bit truecolor (operators/
@@ -1342,11 +1324,7 @@ FROM px
 """
 
 
-@register(
-    "multimodal_decode_jpeg",
-    oracle=_MM_JPEG_ORACLE,
-    tags=("llm", "multimodal"),
-)
+@register("multimodal_decode_jpeg", oracle=_MM_JPEG_ORACLE)
 def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real TRANSFORM-CODED image decode through the Arrow path: plant
     baseline grayscale JPEGs (operators/multimodal.plant_jpeg — real
@@ -1406,9 +1384,7 @@ FROM s
 """
 
 
-@register(
-    "multimodal_decode_wav", oracle=_MM_WAV_ORACLE, tags=("llm", "multimodal")
-)
+@register("multimodal_decode_wav", oracle=_MM_WAV_ORACLE)
 def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real AUDIO decode through the Arrow path: plant RIFF/WAVE PCM
     payloads (operators/multimodal.plant_wav — real writer), decode
@@ -1479,11 +1455,7 @@ FROM st WHERE j = n_codes
 """
 
 
-@register(
-    "multimodal_decode_wav_ima",
-    oracle=_MM_WAV_IMA_ORACLE,
-    tags=("llm", "multimodal"),
-)
+@register("multimodal_decode_wav_ima", oracle=_MM_WAV_IMA_ORACLE)
 def multimodal_decode_wav_ima(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed-audio decode end to end: plant IMA-ADPCM WAV
     payloads (operators/multimodal.plant_wav_ima — real container
@@ -1551,11 +1523,7 @@ FROM dims
 """
 
 
-@register(
-    "multimodal_frame_sample",
-    oracle=_MM_FRAMES_ORACLE,
-    tags=("llm", "multimodal"),
-)
+@register("multimodal_frame_sample", oracle=_MM_FRAMES_ORACLE)
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real FRAME SAMPLING through the Arrow path: plant animated GIFs
     (operators/multimodal.plant_gif_animated), stride-2 sample through
@@ -1626,9 +1594,7 @@ FROM px
 """
 
 
-@register(
-    "multimodal_resize", oracle=_MM_RESIZE_ORACLE, tags=("llm", "multimodal")
-)
+@register("multimodal_resize", oracle=_MM_RESIZE_ORACLE)
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real image RESIZE through the Arrow path: plant LZW GIFs,
     decode → nearest-neighbor downscale (operators/multimodal.
@@ -1660,7 +1626,7 @@ FROM documents d WHERE d.doc_id NOT IN (SELECT doc_b FROM dropd)
 """
 
 
-@register("corpus_dedup_keep", oracle=_dedup_keep_oracle(), tags=("llm", "dedup"))
+@register("corpus_dedup_keep", oracle=_dedup_keep_oracle())
 def corpus_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pipeline step the pair-finders feed: drop the higher-id doc
     of every confident near-dup pair (est_jaccard >= 0.75) via a
@@ -1690,7 +1656,7 @@ FROM tc GROUP BY 1
 """
 
 
-@register("token_histogram", oracle=_TOKEN_HIST_ORACLE, tags=("llm", "text"))
+@register("token_histogram", oracle=_TOKEN_HIST_ORACLE)
 def token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Power-of-two histogram of per-doc token counts — the corpus
     profile a training-data budget is planned from. One narrow scan,
@@ -1732,7 +1698,7 @@ FROM labeled GROUP BY 1, 2
 """
 
 
-@register("corpus_split_counts", oracle=_SPLIT_ORACLE, tags=("llm", "sampling"))
+@register("corpus_split_counts", oracle=_SPLIT_ORACLE)
 def corpus_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stable 80/10/10 train/val/test assignment keyed on the content
     hash — a doc's split never changes as the corpus grows, the
@@ -1765,7 +1731,7 @@ FROM kept GROUP BY 1
 """
 
 
-@register("corpus_mixture", oracle=_MIX_ORACLE, tags=("llm", "sampling"))
+@register("corpus_mixture", oracle=_MIX_ORACLE)
 def corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rebalance the training mix: keep 100% of src0, 50% of src1,
     25% of src2 (others whole) via deterministic per-row hash gates —
@@ -1805,7 +1771,7 @@ FROM packed
 """
 
 
-@register("corpus_pack_bins", oracle=_PACK_ORACLE, tags=("llm", "sampling"))
+@register("corpus_pack_bins", oracle=_PACK_ORACLE)
 def corpus_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing for training batches: assign each doc to a
     (shard, bin) so a bin's docs concatenate to ~2048 tokens.
@@ -1880,7 +1846,7 @@ FROM scaled
 """
 
 
-@register("embedding_quantize", oracle=_QUANT_ORACLE, tags=("llm", "similarity"))
+@register("embedding_quantize", oracle=_QUANT_ORACLE)
 def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector int8 scalar quantization (symmetric, max-abs scale):
     4× smaller than float32 on disk and in shuffle — the standard
@@ -1960,7 +1926,7 @@ FROM documents d LEFT JOIN labels l USING (doc_id)
 """
 
 
-@register("dedup_clusters", oracle=_clusters_oracle(), tags=("llm", "dedup", "graph"))
+@register("dedup_clusters", oracle=_clusters_oracle())
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS, not just pairs: transitive closure of the
     confident minhash pairs (est_jaccard >= 0.75) via iterative
@@ -2015,7 +1981,7 @@ WHERE d.doc_id % 97 <> 0
 """
 
 
-@register("decontaminate", oracle=_DECONTAM_ORACLE, tags=("llm", "text"))
+@register("decontaminate", oracle=_DECONTAM_ORACLE)
 def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: count distinct word-3-shingles each
     training doc shares with the benchmark set and flag docs at >= 2
@@ -2078,7 +2044,7 @@ FROM base
 """
 
 
-@register("quality_filter", oracle=_QFILTER_ORACLE, tags=("llm", "text"))
+@register("quality_filter", oracle=_QFILTER_ORACLE)
 def quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style quality gate (Rae et al. 2021 §A1.1 re-expressed
     over this corpus): token-count bounds, distinct-token repetition
@@ -2136,7 +2102,7 @@ QUALIFY rank <= 5
 """
 
 
-@register("tfidf_top_terms", oracle=_TFIDF_ORACLE, tags=("llm", "text"))
+@register("tfidf_top_terms", oracle=_TFIDF_ORACLE)
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 characteristic terms per source by tf-idf. One explode of
     the token stream feeds BOTH aggregates: per-(source,term) tf and
@@ -2201,7 +2167,7 @@ GROUP BY 1, 2
 """
 
 
-@register("embedding_centroids", oracle=_CENTROID_ORACLE, tags=("llm", "similarity"))
+@register("embedding_centroids", oracle=_CENTROID_ORACLE)
 def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label mean vectors in long (label, dim) form — the Lloyd
     update step ann_ivf's docstring defers to an offline pass: at scale
@@ -2238,7 +2204,7 @@ WHERE rn <= 5
 """
 
 
-@register("stratified_sample", oracle=_STRAT_ORACLE, tags=("llm", "sampling"))
+@register("stratified_sample", oracle=_STRAT_ORACLE)
 def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACTLY k=5 docs per source — the eval-set carve-out that
     fraction-based sampling (corpus_split_counts/corpus_mixture) cannot
@@ -2271,7 +2237,7 @@ GROUP BY 1, 2
 """
 
 
-@register("lang_confusion", oracle=_LANG_CONFUSION_ORACLE, tags=("llm", "text"))
+@register("lang_confusion", oracle=_LANG_CONFUSION_ORACLE)
 def lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of the lang_id heuristic vs corpus labels —
     the monitoring rollup a pipeline runs before trusting a classifier
@@ -2295,11 +2261,7 @@ WHERE c.is_canonical
 """
 
 
-@register(
-    "corpus_dedup_keep_clusters",
-    oracle=_CLUSTER_KEEP_ORACLE,
-    tags=("llm", "dedup", "graph"),
-)
+@register("corpus_dedup_keep_clusters", oracle=_CLUSTER_KEEP_ORACLE)
 def corpus_dedup_keep_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-aware keep-list: retain exactly ONE doc (the min-id
     canonical) per transitive near-dup cluster. Stricter than the
@@ -2332,7 +2294,7 @@ GROUP BY 1
 """
 
 
-@register("unigram_logprob", oracle=_LOGPROB_ORACLE, tags=("llm", "text"))
+@register("unigram_logprob", oracle=_LOGPROB_ORACLE)
 def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean unigram log-probability per doc under the corpus's own
     token distribution — the distributed stand-in for KenLM-style
@@ -2381,7 +2343,7 @@ FROM tok, unnest(range(0, (len(t) - 1) // {_CHUNK_S} + 1)) AS u(seq)
 """
 
 
-@register("corpus_chunk", oracle=_CHUNK_ORACLE, tags=("llm", "text"))
+@register("corpus_chunk", oracle=_CHUNK_ORACLE)
 def corpus_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunks (32-token windows, stride 24) —
     the context-window prep step between cleaning and embedding. Pure
@@ -2441,7 +2403,7 @@ FROM tok CROSS JOIN bl
 """
 
 
-@register("boilerplate_prune", oracle=_BOILER_ORACLE, tags=("llm", "text"))
+@register("boilerplate_prune", oracle=_BOILER_ORACLE)
 def boilerplate_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style boilerplate removal at token grain: tokens whose document
     frequency exceeds 78% of the corpus are dropped from every document,
@@ -2506,7 +2468,7 @@ FROM tok CROSS JOIN vocab
 """
 
 
-@register("vocab_oov_rate", oracle=_OOV_ORACLE, tags=("llm", "text"))
+@register("vocab_oov_rate", oracle=_OOV_ORACLE)
 def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Out-of-vocabulary rate per document against the corpus top-K
     vocabulary — the tokenizer-coverage check run before committing to a
@@ -2622,7 +2584,7 @@ def _nearest_cid(qv, cents):
     )["cid"]
 
 
-@register("kmeans_lloyd", oracle=_KM_ORACLE, tags=("llm", "ml"))
+@register("kmeans_lloyd", oracle=_KM_ORACLE)
 def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two full Lloyd iterations of K=8 k-means over the embeddings —
     the offline clustering ann_ivf's inverted lists and partition
@@ -2726,7 +2688,7 @@ SELECT * FROM ranked WHERE rank <= 5
 """
 
 
-@register("ann_filtered", oracle=_ANN_FILTERED_ORACLE, tags=("llm", "similarity"))
+@register("ann_filtered", oracle=_ANN_FILTERED_ORACLE)
 def ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid search: exact cosine top-5, but only over corpus vectors
     whose DOCUMENT passes a metadata + content predicate (source
@@ -2768,7 +2730,7 @@ GROUP BY 1
 """
 
 
-@register("inverted_index", oracle=_INVIDX_ORACLE, tags=("llm", "text"))
+@register("inverted_index", oracle=_INVIDX_ORACLE)
 def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the inverted index: per token, document frequency, total
     term frequency, and the head of the sorted posting list — the
@@ -2852,7 +2814,7 @@ LEFT JOIN m3 ON b.doc_id = m3.doc_id
 """
 
 
-@register("repetition_metrics", oracle=_REPETITION_ORACLE, tags=("llm", "text"))
+@register("repetition_metrics", oracle=_REPETITION_ORACLE)
 def repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition filter signals (Rae et al. 2021 §A1.1)
     over word n-grams: the token share of the most frequent 2-gram and
@@ -2998,7 +2960,7 @@ FROM a LEFT JOIN drops ON a.vec_id = drops.vb
 """
 
 
-@register("semdedup", oracle=_SEMDEDUP_ORACLE, tags=("llm", "dedup"))
+@register("semdedup", oracle=_SEMDEDUP_ORACLE)
 def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup: assign every embedding to its nearest centroid
     (broadcast K seed rows, exact micro-unit BIGINT distances — the
@@ -3124,7 +3086,7 @@ FROM toks b LEFT JOIN per ON b.doc_id = per.doc_id
 """
 
 
-@register("dedup_substring", oracle=_SUBSTR_ORACLE, tags=("llm", "dedup"))
+@register("dedup_substring", oracle=_SUBSTR_ORACLE)
 def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicated-span share per document: the distributed form of
     exact-substring dedup (hash every overlapping 5-token span, count
@@ -3227,7 +3189,7 @@ FROM redacted
 """
 
 
-@register("pii_redact", oracle=_pii_oracle(), tags=("llm", "text"))
+@register("pii_redact", oracle=_pii_oracle())
 def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub for the whole corpus in one pass — the registry face
     of functions/text.py::redact_pii/pii_counts: regexp_count per PII
@@ -3304,7 +3266,7 @@ FROM ranked WHERE rk <= {_SRC_CAP}
 """
 
 
-@register("source_caps", oracle=_SOURCE_CAPS_ORACLE, tags=("llm", "corpus"))
+@register("source_caps", oracle=_SOURCE_CAPS_ORACLE)
 def source_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep at most K docs per source, ranked by length (quality proxy)
     with a deterministic doc_id tie-break — the domain-balancing step
@@ -3329,7 +3291,7 @@ def source_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SRC_SAMPLE_MOD = 20
 
 
-@register("source_caps_sampled", oracle=_SOURCE_CAPS_ORACLE, tags=("llm", "corpus"))
+@register("source_caps_sampled", oracle=_SOURCE_CAPS_ORACLE)
 def source_caps_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """source_caps through the sampled rank-K pre-drop its docstring
     promises — now implemented, SAME oracle (the pre-drop is an exact
@@ -3420,7 +3382,7 @@ FROM ranked
 """
 
 
-@register("perplexity_buckets", oracle=_PPL_BUCKETS_ORACLE, tags=("llm", "text"))
+@register("perplexity_buckets", oracle=_PPL_BUCKETS_ORACLE)
 def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language head/middle/tail fluency terciles (CCNet's bucket
     step, corpus-unigram LM standing in for KenLM). Bucket membership
@@ -3495,7 +3457,7 @@ WHERE ov.overlap * 100 >= 80 * n.n_sh
 """
 
 
-@register("dedup_containment", oracle=_CONTAIN_ORACLE, tags=("llm", "dedup"))
+@register("dedup_containment", oracle=_CONTAIN_ORACLE)
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment ≥ 0.8 pairs (directional: doc_a's shingle set is
     ≥80% inside doc_b's) via operators/dedup.py::containment_pairs —
@@ -3529,7 +3491,7 @@ FROM canon GROUP BY 1
 """
 
 
-@register("dedup_rate_by_source", oracle=_DEDUP_RATE_ORACLE, tags=("llm", "dedup"))
+@register("dedup_rate_by_source", oracle=_DEDUP_RATE_ORACLE)
 def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source exact-duplicate removal rates under the min-id-keeps
     policy (the same canonical rule as dedup_exact / corpus_dedup_keep)
@@ -3671,11 +3633,7 @@ FROM labeled GROUP BY 1, 2
 """
 
 
-@register(
-    "curation_pipeline_e2e",
-    oracle=_curation_e2e_oracle(),
-    tags=("llm", "dedup", "text", "sampling"),
-)
+@register("curation_pipeline_e2e", oracle=_curation_e2e_oracle())
 def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end curation capstone: quality_filter -> exact dedup
     -> minhash near-dedup -> benchmark decontamination -> train/val/
@@ -3835,11 +3793,7 @@ FROM cum GROUP BY shard_id
 """
 
 
-@register(
-    "export_pipeline_e2e",
-    oracle=_export_e2e_oracle(),
-    tags=("llm", "curation", "ops"),
-)
+@register("export_pipeline_e2e", oracle=_export_e2e_oracle())
 def export_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curate -> shard -> PUBLISH -> replay -> audit the committed
     artifact. Runs stages 1-4 once (one corpus body scan builds the

@@ -86,7 +86,7 @@ WHERE p.c_big >= 2
 """
 
 
-@register("bigram_kneser_ney", oracle=_KN_ORACLE, tags=("llm", "text"))
+@register("bigram_kneser_ney", oracle=_KN_ORACLE)
 def bigram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser-Ney bigram model over the corpus's own
     counts — the production-grade smoothing (Chen & Goodman 1999) whose
@@ -184,7 +184,7 @@ WHERE la.split <> lb.split
 """
 
 
-@register("split_leakage", oracle=_LEAKAGE_ORACLE, tags=("llm", "dedup"))
+@register("split_leakage", oracle=_LEAKAGE_ORACLE)
 def split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs whose members landed in DIFFERENT splits —
     the train/test leakage a benchmark-decontamination pass cannot see
@@ -312,7 +312,7 @@ def _spark_apply(sym: F.Column, pa: F.Column, pb: F.Column) -> F.Column:
     return F.when(F.size(sym) <= 1, sym).otherwise(merged)
 
 
-@register("bpe_merge_rounds", oracle=_BPE_ORACLE, tags=("llm", "text"))
+@register("bpe_merge_rounds", oracle=_BPE_ORACLE)
 def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First three merge rules of a BPE tokenizer trained on the
     corpus (Sennrich et al. 2016): per round, the corpus-wide most
@@ -440,7 +440,7 @@ WHERE rank <= {_COVERAGE_TOP}
 """
 
 
-@register("token_coverage_curve", oracle=_COVERAGE_ORACLE, tags=("llm", "text"))
+@register("token_coverage_curve", oracle=_COVERAGE_ORACLE)
 def token_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative token-stream coverage by word-type rank, top 100
     ranks, coverage in exact BIGINT millionths. The curve that sizes

@@ -106,7 +106,7 @@ LIMIT 50
 """
 
 
-@register("skipgram_pmi", oracle=_PMI_ORACLE, tags=("llm", "text"))
+@register("skipgram_pmi", oracle=_PMI_ORACLE)
 def skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 skip-gram pairs (window 2) with PMI — the co-occurrence
     table embedding training (word2vec/GloVe) consumes.
@@ -202,7 +202,7 @@ GROUP BY 1
 """
 
 
-@register("bigram_logprob", oracle=_BIGRAM_ORACLE, tags=("llm", "text"))
+@register("bigram_logprob", oracle=_BIGRAM_ORACLE)
 def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean add-1-smoothed bigram log-probability per doc — the
     context-aware fluency score between unigram_logprob and a real
@@ -300,7 +300,7 @@ FROM a GROUP BY 1
 """
 
 
-@register("ann_pq", oracle=_PQ_ORACLE, tags=("llm", "similarity"))
+@register("ann_pq", oracle=_PQ_ORACLE)
 def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization codes + reconstruction error per vector:
     M=4 subspaces × 16 dims, K=8 codebook entries.
@@ -400,7 +400,7 @@ FROM lists l CROSS JOIN tot t
 """
 
 
-@register("ivf_balance", oracle=_IVF_BALANCE_ORACLE, tags=("llm", "similarity"))
+@register("ivf_balance", oracle=_IVF_BALANCE_ORACLE)
 def ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF inverted-list balance: per-list vector count, corpus share,
     and a hot flag (share > 2× the ideal 1/16, exact integer
@@ -479,7 +479,7 @@ LEFT JOIN ix ON ix.doc_a = p.doc_a AND ix.doc_b = p.doc_b
 """
 
 
-@register("simhash_error_eval", oracle=_simhash_eval_oracle(), tags=("llm", "dedup"))
+@register("simhash_error_eval", oracle=_simhash_eval_oracle())
 def simhash_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simhash sketch-error audit: for every byte-band candidate pair
     within hamming ≤ 5, the hamming distance, the bit-agreement
@@ -582,7 +582,7 @@ FROM d JOIN s USING (label)
 """
 
 
-@register("embedding_outliers", oracle=_OUTLIER_ORACLE, tags=("llm", "ml"))
+@register("embedding_outliers", oracle=_OUTLIER_ORACLE)
 def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector exact-BIGINT squared distance to its OWN label's
     centroid, flagged outlier when above 2× the label's mean (integer
@@ -683,7 +683,7 @@ FROM tot t JOIN maj m USING (cid)
 """
 
 
-@register("cluster_purity", oracle=_PURITY_ORACLE, tags=("llm", "ml"))
+@register("cluster_purity", oracle=_PURITY_ORACLE)
 def cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster size, majority ground-truth label, and purity under
     the kmeans seed assignment (vec_id < 8 centroids, exact-BIGINT
@@ -779,7 +779,7 @@ LEFT JOIN ls ON ls.query_id = qs.query_id
 """
 
 
-@register("ann_recall_eval", oracle=_recall_oracle(), tags=("llm", "similarity"))
+@register("ann_recall_eval", oracle=_recall_oracle())
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 (IVF, 16 lists / 2 probes) and recall@5 (hyperplane
     LSH) against the exact brute-force ranking, per query vector. The
@@ -869,9 +869,7 @@ GROUP BY h.user_id, h.cnt
 """
 
 
-@register(
-    "cms_heavy_hitters", oracle=_cms_oracle(), tags=("llm", "sketch")
-)
+@register("cms_heavy_hitters", oracle=_cms_oracle())
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch heavy hitters with a per-key exact audit:
     exact per-user counts (the baseline shuffle), a D x W BIGINT
@@ -974,9 +972,7 @@ FROM ranked WHERE rank <= 10
 """
 
 
-@register(
-    "ann_binary", oracle=_ANN_BINARY_ORACLE, tags=("llm", "similarity")
-)
+@register("ann_binary", oracle=_ANN_BINARY_ORACLE)
 def ann_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-quantized ANN: pack sign bits once (one corpus scan, two
     32-bit words per vector), broadcast the 8 packed query rows, rank
@@ -1079,11 +1075,7 @@ FROM ranked WHERE rank <= 10
 """
 
 
-@register(
-    "ann_binary_rerank",
-    oracle=_ANN_RERANK_ORACLE,
-    tags=("llm", "similarity"),
-)
+@register("ann_binary_rerank", oracle=_ANN_RERANK_ORACLE)
 def ann_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage binary ANN: Hamming top-100 shortlist (the ann_binary
     scan + 8-row broadcast + WindowGroupLimit shape, deeper k), then

@@ -70,7 +70,7 @@ SELECT * FROM (
 """
 
 
-@register("range_partition_plan", oracle=_RANGE_ORACLE, tags=("ops", "layout"))
+@register("range_partition_plan", oracle=_RANGE_ORACLE)
 def range_partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact equi-depth boundaries for a {B}-way range partitioning of
     l_extendedprice: for each bucket k in 1..{B}-1, the boundary value
@@ -160,7 +160,7 @@ FROM delta d LEFT JOIN base b USING (o_custkey)
 """
 
 
-@register("view_delta_maintenance", oracle=_VIEW_ORACLE, tags=("ops", "pipeline"))
+@register("view_delta_maintenance", oracle=_VIEW_ORACLE)
 def view_delta_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance of a revenue-per-customer materialized
     view: orders on/after the cutoff are the CDC delta; the result is
@@ -268,7 +268,7 @@ WHERE levenshtein(corrupt, name) <= 1
 """
 
 
-@register("fuzzy_dict_match", oracle=_FUZZY_ORACLE, tags=("ops", "linkage"))
+@register("fuzzy_dict_match", oracle=_FUZZY_ORACLE)
 def fuzzy_dict_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typo-tolerant dictionary linkage: match corrupted part names
     (one deterministic character deletion per probe) back to the clean
@@ -357,7 +357,7 @@ WHERE {md5_u32_duckdb("CAST(doc_id AS VARCHAR)")} * {_WS_CAP}
 """
 
 
-@register("weighted_sample", oracle=_WS_ORACLE, tags=("ops", "llm"))
+@register("weighted_sample", oracle=_WS_ORACLE)
 def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted Bernoulli sample of the document corpus:
     each doc enters with probability w/CAP where w = min(n_chars, CAP)
@@ -445,7 +445,7 @@ FROM qs LEFT JOIN p ON p.query_id = qs.query_id
 _MRR_ORACLE = _mrr_oracle().replace("LEFT JOIN p ON", "LEFT JOIN per_q p ON")
 
 
-@register("ann_mrr_ndcg", oracle=_MRR_ORACLE, tags=("ops", "similarity"))
+@register("ann_mrr_ndcg", oracle=_MRR_ORACLE)
 def ann_mrr_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MRR and nDCG@10 of the IVF index against the exact brute-force
     top-10, per query vector — the position-sensitive quality numbers
@@ -546,7 +546,7 @@ FROM per_val GROUP BY 1
 )
 
 
-@register("table_stats", oracle=_STATS_ORACLE, tags=("ops", "layout"))
+@register("table_stats", oracle=_STATS_ORACLE)
 def table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE-style planner statistics for every lineitem column in
     one pass: row count, null count, exact NDV, canonical min/max —

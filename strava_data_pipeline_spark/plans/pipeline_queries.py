@@ -42,7 +42,7 @@ SELECT event_id, ts, user_id, event_type, value FROM ranked WHERE _rn = 1
 """
 
 
-@register("ingest_upsert", oracle=_UPSERT_ORACLE, tags=("pipeline",))
+@register("ingest_upsert", oracle=_UPSERT_ORACLE)
 def ingest_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Re-ingest a simulated refreshed batch (every 10th activity, newer
     ts, changed value) and merge latest-wins — the set-based equivalent of
@@ -62,7 +62,7 @@ def ingest_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BY_ID_ORACLE = "SELECT event_id, ts, user_id, event_type, value FROM events WHERE event_id = 42"
 
 
-@register("activity_by_id", oracle=_BY_ID_ORACLE, tags=("pipeline",))
+@register("activity_by_id", oracle=_BY_ID_ORACLE)
 def activity_by_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point lookup; the id predicate reaches the parquet scan
     (PushedFilters) so only matching row groups are read."""
@@ -82,7 +82,7 @@ FROM events ORDER BY ts DESC, event_id DESC LIMIT 20
 """
 
 
-@register("recent_activities", oracle=_RECENT_ORACLE, tags=("pipeline",))
+@register("recent_activities", oracle=_RECENT_ORACLE)
 def recent_activities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-20 by start time. orderBy+limit plans as
     TakeOrderedAndProject: per-partition heaps, no global sort."""
@@ -107,7 +107,7 @@ SELECT * FROM numbered WHERE rn > 40 AND rn <= 60
 """
 
 
-@register("activities_page", oracle=_PAGE_ORACLE, tags=("pipeline",))
+@register("activities_page", oracle=_PAGE_ORACLE)
 def activities_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page 3 (limit 20, offset 40) of the activity list — reference API
     parity. See operators/pagination.py for the keyset scale path."""
@@ -125,7 +125,7 @@ WHERE ts >= (SELECT max(ts) - INTERVAL 7 DAY FROM events)
 """
 
 
-@register("sync_window", oracle=_SYNC_WINDOW_ORACLE, tags=("pipeline",))
+@register("sync_window", oracle=_SYNC_WINDOW_ORACLE)
 def sync_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental sync window: activities in the trailing 7 days of the
     table's high-water mark. The same single filter as
@@ -154,7 +154,7 @@ FROM events GROUP BY 1, 2
 """
 
 
-@register("sync_daily_counts", oracle=_DAILY_ORACLE, tags=("pipeline",))
+@register("sync_daily_counts", oracle=_DAILY_ORACLE)
 def sync_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day/type ingestion stats — the monitoring query behind the
     reference's daily sync job. Partial aggregation map-side, one shuffle."""
@@ -199,7 +199,7 @@ WHERE is_active AND expires_at > TIMESTAMP '2024-06-01 00:00:00'
 """
 
 
-@register("api_key_validate", oracle=_VALIDATE_ORACLE, tags=("pipeline",))
+@register("api_key_validate", oracle=_VALIDATE_ORACLE)
 def api_key_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key validation as a vectorized filter over the key dim (the
     reference checks one key per request; at scale validation is a
@@ -250,7 +250,7 @@ FROM sessions
 """
 
 
-@register("jwt_validate", oracle=_JWT_ORACLE, tags=("pipeline",))
+@register("jwt_validate", oracle=_JWT_ORACLE)
 def jwt_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JWT claims validation for the whole session population in one
     vectorized pass (reference auth.go:110 GenerateJWT / :130
@@ -307,7 +307,7 @@ GROUP BY 1, 2
 """
 
 
-@register("keys_per_user", oracle=_KEYS_PER_USER_ORACLE, tags=("pipeline",))
+@register("keys_per_user", oracle=_KEYS_PER_USER_ORACLE)
 def keys_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user key inventory: key dim left-joined onto users, then a
     grouped count. No forced broadcast — the key dim scales with the
@@ -343,7 +343,7 @@ GROUP BY 1, 2
 """
 
 
-@register("user_activity_join", oracle=_USER_ACT_ORACLE, tags=("pipeline",))
+@register("user_activity_join", oracle=_USER_ACT_ORACLE)
 def user_activity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Users ⋈ activities with per-user rollup. The user dim broadcasts
     under the auto-threshold locally (so the fact never shuffles for
@@ -381,7 +381,7 @@ FROM events GROUP BY 1, 2
 # engines compute bit-identically.
 
 
-@register("athlete_weekly_summary", oracle=_WEEKLY_ORACLE, tags=("pipeline",))
+@register("athlete_weekly_summary", oracle=_WEEKLY_ORACLE)
 def athlete_weekly_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly training rollup per athlete (count/total/avg)."""
     return (
@@ -416,7 +416,7 @@ FROM events GROUP BY 1, 2
 """
 
 
-@register("athlete_type_stats", oracle=_TYPE_STATS_ORACLE, tags=("pipeline",))
+@register("athlete_type_stats", oracle=_TYPE_STATS_ORACLE)
 def athlete_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-athlete, per-activity-type stats."""
     return (
@@ -441,7 +441,7 @@ FROM events
 """
 
 
-@register("json_flatten", oracle=_JSON_ORACLE, tags=("pipeline",))
+@register("json_flatten", oracle=_JSON_ORACLE)
 def json_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-on-read flatten of the JSON props payload — the set-based
     version of the reference's per-row json.Unmarshal to a map."""
@@ -473,7 +473,7 @@ FROM sess GROUP BY 1, 2
 """
 
 
-@register("events_sessionize", oracle=_SESSION_ORACLE, tags=("analytics",))
+@register("events_sessionize", oracle=_SESSION_ORACLE)
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-minute-gap sessions per user, rolled up."""
     events = load_table(spark, sf_dir, "events")
@@ -485,7 +485,7 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("events_sessionize_bucketed", oracle=_SESSION_ORACLE, tags=("analytics",))
+@register("events_sessionize_bucketed", oracle=_SESSION_ORACLE)
 def events_sessionize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_sessionize through the skew-robust two-phase operator
     (operators/sessionize.py::sessionize_bucketed): identical session
@@ -520,7 +520,7 @@ FROM events
 """
 
 
-@register("events_running_total", oracle=_RUNNING_ORACLE, tags=("analytics",))
+@register("events_running_total", oracle=_RUNNING_ORACLE)
 def events_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative value per user over time (training-load curve)."""
     w = (
@@ -563,7 +563,7 @@ FROM ranked WHERE _rn = 1 AND op != 'D'
 """
 
 
-@register("cdc_merge", oracle=_CDC_ORACLE, tags=("pipeline",))
+@register("cdc_merge", oracle=_CDC_ORACLE)
 def cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched change-data-capture merge: the reference's
     UpdateActivity + DeleteActivity as one set-based pass. A synthetic
@@ -634,7 +634,7 @@ SELECT id, username, athlete_id, updated_at FROM ranked WHERE _rn = 1
 """
 
 
-@register("user_upsert", oracle=_USER_UPSERT_ORACLE, tags=("pipeline",))
+@register("user_upsert", oracle=_USER_UPSERT_ORACLE)
 def user_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Users-dim maintenance: the reference's CreateUser (user.go:34)
     and UpdateUser (user.go:110) as ONE set-based latest-wins merge —
@@ -670,7 +670,7 @@ WHERE username = 'customer#000000042' OR athlete_id = 100077
 """
 
 
-@register("user_lookup", oracle=_USER_LOOKUP_ORACLE, tags=("pipeline",))
+@register("user_lookup", oracle=_USER_LOOKUP_ORACLE)
 def user_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point lookups on the users dim by username and by athlete id
     (reference user.go:74, :92). The OR of two selective predicates
@@ -706,7 +706,7 @@ FROM users u JOIN tokens t ON t.user_id = u.id
 """
 
 
-@register("user_token_state", oracle=_TOKEN_STATE_ORACLE, tags=("pipeline",))
+@register("user_token_state", oracle=_TOKEN_STATE_ORACLE)
 def user_token_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User ⋈ OAuth-token state with a vectorized needs-refresh flag
     (reference strava.go:156 saveAthlete, :196 GetUserByID; the
@@ -781,7 +781,7 @@ FROM ranked WHERE _rn = 1
 """
 
 
-@register("token_refresh", oracle=_TOKEN_REFRESH_ORACLE, tags=("pipeline",))
+@register("token_refresh", oracle=_TOKEN_REFRESH_ORACLE)
 def token_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OAuth token refresh for the whole expired population in one merge
     (reference strava.go:103 RefreshToken, per-client imperative; here
@@ -863,7 +863,7 @@ FROM ranked WHERE _rn = 1 AND op != 'D'
 """
 
 
-@register("key_lifecycle", oracle=_KEY_LIFECYCLE_ORACLE, tags=("pipeline",))
+@register("key_lifecycle", oracle=_KEY_LIFECYCLE_ORACLE)
 def key_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """API-key dim mutation as one CDC merge: a create batch (new key
     per user id ending 3), a deactivation batch (id ending 4 — the key
@@ -930,7 +930,7 @@ WHERE api_key = md5('Customer#000000042')
 """
 
 
-@register("key_lookup", oracle=_KEY_LOOKUP_ORACLE, tags=("pipeline",))
+@register("key_lookup", oracle=_KEY_LOOKUP_ORACLE)
 def key_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-key point read on the key dim (reference
     user_api_keys.go:94 ReadAPIKeyByID). On a stored key table the
@@ -967,7 +967,7 @@ SELECT 'value', CAST(count(*) AS BIGINT),
 """
 
 
-@register("events_profile", oracle=_PROFILE_ORACLE, tags=("pipeline",))
+@register("events_profile", oracle=_PROFILE_ORACLE)
 def events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass per-column landing profile (rows / nulls / distinct) —
     the post-sync sanity check. Exact distincts here; the 100 TB path
@@ -994,11 +994,7 @@ FROM ({_PROFILE_ORACLE}) exact_profile
 """
 
 
-@register(
-    "events_profile_approx",
-    oracle=_PROFILE_APPROX_ORACLE,
-    tags=("pipeline", "approx"),
-)
+@register("events_profile_approx", oracle=_PROFILE_APPROX_ORACLE)
 def events_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column profile with HyperLogLog distincts
     (``approx_count_distinct``) — the 100 TB path: single pass, no
@@ -1032,7 +1028,7 @@ def events_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # 78. user_activity_join_salted — the skew-mitigation path, oracle-checked
 # --------------------------------------------------------------------------
-@register("user_activity_join_salted", oracle=_USER_ACT_ORACLE, tags=("pipeline",))
+@register("user_activity_join_salted", oracle=_USER_ACT_ORACLE)
 def user_activity_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """user_activity_join routed through operators/skew.salted_join —
     the manual fallback for a hot athlete id that AQE's skew split
@@ -1088,7 +1084,7 @@ FROM per_session GROUP BY 1
 """
 
 
-@register("session_stats", oracle=_SESSION_STATS_ORACLE, tags=("pipeline",))
+@register("session_stats", oracle=_SESSION_STATS_ORACLE)
 def session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user engagement profile over 30-min-gap sessions: the
     two-level rollup (events → sessions → user) reuses the sessionize
@@ -1132,7 +1128,7 @@ GROUP BY 1
 """
 
 
-@register("bucketed_join", oracle=_BUCKETED_ORACLE, tags=("layout",))
+@register("bucketed_join", oracle=_BUCKETED_ORACLE)
 def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation activity stats through a join of two BUCKETED managed
     tables (events by user_id, users by c_custkey, 8 buckets each).
@@ -1184,7 +1180,7 @@ FROM events
 """
 
 
-@register("zorder_curve", oracle=_zorder_oracle(), tags=("layout",))
+@register("zorder_curve", oracle=_zorder_oracle())
 def zorder_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Z-order (Morton) clustering key over (user_id, value):
     pure shift/and bit interleaving, zero shuffles, one codegen span —
@@ -1246,7 +1242,7 @@ FROM (SELECT * FROM ev UNION ALL SELECT * FROM cu UNION ALL SELECT * FROM o)
 """
 
 
-@register("user_erasure", oracle=_ERASURE_ORACLE, tags=("pipeline", "governance"))
+@register("user_erasure", oracle=_ERASURE_ORACLE)
 def user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Erasure-cascade audit: broadcast the erasure-subject id list to
     events, the users dim, and orders; count kept vs erased rows in a
@@ -1328,7 +1324,7 @@ WHERE o.event_id IS NULL OR n.event_id IS NULL
 """
 
 
-@register("snapshot_diff", oracle=_SNAPDIFF_ORACLE, tags=("pipeline", "versioned"))
+@register("snapshot_diff", oracle=_SNAPDIFF_ORACLE)
 def snapshot_diff_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level change feed between two committed snapshot versions —
     the batch CDF read Delta/Iceberg expose, over this repo's own

@@ -26,7 +26,10 @@ from strava_data_pipeline_spark.functions.hashing import md5_u32
 from strava_data_pipeline_spark.functions.local_frames import one_slice_frame
 from strava_data_pipeline_spark.plans.registry import register
 from strava_data_pipeline_spark.sources.catalog import load_table
-from strava_data_pipeline_spark.streaming.tuning import stream_tuned
+from strava_data_pipeline_spark.streaming.tuning import (
+    scoped_stream_shuffle,
+    stream_tuned,
+)
 
 from contextlib import nullcontext as _noop_ctx
 
@@ -83,9 +86,7 @@ FROM (
     return " UNION ALL ".join(parts)
 
 
-@register(
-    "join_cardinality_audit", oracle=_jca_oracle(), tags=("ops", "layout")
-)
+@register("join_cardinality_audit", oracle=_jca_oracle())
 def join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-cardinality estimation audit: for three join shapes, the
     textbook CBO estimate n_l·n_r / max(ndv_l, ndv_r) against the
@@ -180,7 +181,7 @@ LEFT JOIN actual a ON a.probe = p.probe
 """
 
 
-@register("selectivity_audit", oracle=_SEL_ORACLE, tags=("ops", "layout"))
+@register("selectivity_audit", oracle=_SEL_ORACLE)
 def selectivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equality-selectivity audit: the uniformity estimate N/ndv for
     `o_custkey = ?` against the true per-value count, over a
@@ -254,7 +255,7 @@ SELECT day, n_rows, day_bytes, bin FROM planned
 """
 
 
-@register("compaction_plan", oracle=_COMPACT_ORACLE, tags=("ops", "layout"))
+@register("compaction_plan", oracle=_COMPACT_ORACLE)
 def compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction plan for the day-partitioned event store:
     per day, its payload size and the merged output file (bin) it
@@ -343,7 +344,7 @@ UNION ALL SELECT 'lineitem_orderkey_fk', orphans FROM fk
 """
 
 
-@register("data_quality_checks", oracle=_DQ_ORACLE, tags=("ops", "pipeline"))
+@register("data_quality_checks", oracle=_DQ_ORACLE)
 def data_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass data-quality expectation audit (the dbt-test /
     Great-Expectations layer as a query): primary-key uniqueness,
@@ -497,7 +498,7 @@ UNION ALL SELECT batch_key, route, 'value_non_negative',
 """
 
 
-@register("quarantine_audit", oracle=_QAUDIT_ORACLE, tags=("streaming", "ops"))
+@register("quarantine_audit", oracle=_QAUDIT_ORACLE)
 @stream_tuned
 def quarantine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end audit of the streaming publish-or-quarantine gate:
@@ -681,7 +682,7 @@ FROM events GROUP BY 1, 2
 """
 
 
-@register("rollup_audit", oracle=_ROLLUP_AUDIT_ORACLE, tags=("streaming", "ops"))
+@register("rollup_audit", oracle=_ROLLUP_AUDIT_ORACLE)
 @stream_tuned
 def rollup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end audit of streaming incremental rollup maintenance:
@@ -782,7 +783,7 @@ FROM p LEFT JOIN v
 """
 
 
-@register("attribution_audit", oracle=_ATTR_AUDIT_ORACLE, tags=("streaming", "ops"))
+@register("attribution_audit", oracle=_ATTR_AUDIT_ORACLE)
 def attribution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end audit of the stream-stream attribution join: split
     the event table into a lead feed (views: event_id % 3 != 0) and a
@@ -925,21 +926,9 @@ def _attr_face_impl(
     # rehearsal's 10M-event feed a 4-wide store serializes the state
     # sort (the probe ran past 595s; 32-wide finished in 357s). Width
     # tracks state volume: narrow below 1M events, analytics width
-    # above. Both modes hold the same oracle hash.
-    from strava_data_pipeline_spark.streaming.tuning import (
-        _ENV_KEY,
-        scoped_stream_shuffle,
-    )
-
-    # None = analytics width. Mirror stream_tuned's precedence: the env
-    # override ALWAYS wins (tuning.py's documented contract), so a
-    # cluster-wide stream re-size reaches this face's small-feed branch
-    # too (r8 ADVICE). n_events comes from the fused bounds+count job.
-    width = (
-        4
-        if n_events <= 1_000_000 and _ENV_KEY not in os.environ
-        else None
-    )
+    # above. Both modes hold the same oracle hash. None = analytics
+    # width; n_events comes from the fused bounds+count job.
+    width = 4 if n_events <= 1_000_000 else None
     # SINGLE availableNow run, both flushes mtime-staged upfront: with
     # maxFilesPerTrigger=1 each file is its own micro-batch and the
     # watermark advances BETWEEN batches, so flush 2's batch already
@@ -1017,11 +1006,7 @@ FROM p JOIN v
 """
 
 
-@register(
-    "attribution_inner_audit",
-    oracle=_ATTR_INNER_ORACLE,
-    tags=("streaming", "ops"),
-)
+@register("attribution_inner_audit", oracle=_ATTR_INNER_ORACLE)
 def attribution_inner_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Committed-artifact audit of the BUCKETED inner attribution join
     (streaming/joins.py::attribute_to_prior_event_bucketed): identical
@@ -1058,11 +1043,7 @@ def attribution_inner_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # follow_id — no per-key state iteration, no quadratic grind — and the
 # union is row-for-row the plain batch LEFT JOIN, which is exactly the
 # oracle (shared with attribution_audit).
-@register(
-    "attribution_unmatched_audit",
-    oracle=_ATTR_AUDIT_ORACLE,
-    tags=("streaming", "ops"),
-)
+@register("attribution_unmatched_audit", oracle=_ATTR_AUDIT_ORACLE)
 def attribution_unmatched_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production LEFT-OUTER attribution for hot-key corpora: the
     bucketed inner stream join (attribute_to_prior_event_bucketed,
@@ -1234,7 +1215,7 @@ def _bsj_prefilter(spark: SparkSession, sf_dir: str):
     return li_pre, sel
 
 
-@register("bloom_semi_join", oracle=_BSJ_ORACLE, tags=("planner", "bench"))
+@register("bloom_semi_join", oracle=_BSJ_ORACLE)
 def bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly revenue of lineitems belonging to urgent high-value
     orders, executed as a Bloom-reduced shuffle join: the ~4%-selective

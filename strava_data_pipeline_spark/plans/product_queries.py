@@ -59,9 +59,7 @@ WHERE event_type = 'purchase'
 """
 
 
-@register(
-    "attribution_last_touch", oracle=_ATTR_ORACLE, tags=("temporal", "ops")
-)
+@register("attribution_last_touch", oracle=_ATTR_ORACLE)
 def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch attribution: for every purchase, the user's most
     recent preceding non-purchase event within a 7-day lookback (NULL
@@ -113,11 +111,7 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # 195. attribution_last_touch_bucketed — the skew-robust twin (r8)
 # --------------------------------------------------------------------------
-@register(
-    "attribution_last_touch_bucketed",
-    oracle=_ATTR_ORACLE,
-    tags=("temporal", "ops"),
-)
+@register("attribution_last_touch_bucketed", oracle=_ATTR_ORACLE)
 def attribution_last_touch_bucketed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -194,7 +188,7 @@ FROM assigned GROUP BY 1
 """
 
 
-@register("ab_test_eval", oracle=_AB_ORACLE, tags=("ops", "pipeline"))
+@register("ab_test_eval", oracle=_AB_ORACLE)
 def ab_test_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/B experiment readout over purchase values: per arm, exact
     counts, cents sums and sums-of-squares (the sufficient statistics
@@ -255,7 +249,7 @@ FROM dau d JOIN mau m ON d.day // 30 = m.bucket
 """
 
 
-@register("dau_mau_stickiness", oracle=_DAU_ORACLE, tags=("temporal", "ops"))
+@register("dau_mau_stickiness", oracle=_DAU_ORACLE)
 def dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU/MAU stickiness per day: daily active users over the 30-day-
     bucket active users — the engagement headline number. Day and

@@ -23,19 +23,18 @@ class QuerySpec:
     name: str
     fn: QueryFn
     oracle: str | None  # DuckDB SQL; None → driver runs rows-only check
-    tags: tuple[str, ...] = ()
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+def register(name: str, oracle: str | None = None):
     """Decorator: add a query builder to the registry."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        REGISTRY[name] = QuerySpec(name, fn, oracle, tags)
+        REGISTRY[name] = QuerySpec(name, fn, oracle)
         return fn
 
     return deco

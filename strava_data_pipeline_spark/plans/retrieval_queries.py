@@ -152,7 +152,7 @@ LIMIT 20
 """
 
 
-@register("bm25_topk", oracle=_BM25_ORACLE, tags=("llm", "retrieval"))
+@register("bm25_topk", oracle=_BM25_ORACLE)
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 documents by BM25 (k1=1.2, b=0.75, idf=ln(1+(N-df+0.5)/
     (df+0.5)) — the non-negative BM25+ idf) for the fixed three-term
@@ -222,7 +222,7 @@ LIMIT 20
 """
 
 
-@register("hybrid_rank_fusion", oracle=_RRF_ORACLE, tags=("llm", "retrieval"))
+@register("hybrid_rank_fusion", oracle=_RRF_ORACLE)
 def hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid search: reciprocal-rank fusion (k=60) of the BM25 arm
     (fixed three-term query, top-50) and the dense arm (exact cosine
@@ -335,7 +335,7 @@ GROUP BY 1, 2
 """
 
 
-@register("retrieval_rank_agreement", oracle=_AGREE_ORACLE, tags=("llm", "retrieval"))
+@register("retrieval_rank_agreement", oracle=_AGREE_ORACLE)
 def retrieval_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row agreement audit between the lexical and dense arms:
     |top-50 intersection|, |top-10 intersection|, and exact Kendall

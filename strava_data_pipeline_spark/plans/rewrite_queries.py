@@ -114,7 +114,7 @@ LEFT JOIN tot USING (doc_id)
 """
 
 
-@register("dedup_span_rewrite", oracle=_SPAN_REWRITE_ORACLE, tags=("llm", "dedup"))
+@register("dedup_span_rewrite", oracle=_SPAN_REWRITE_ORACLE)
 def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup, REMOVE semantics (Lee et al. 2022): every
     8-token block that occurs anywhere else in the corpus keeps exactly
@@ -233,9 +233,7 @@ WHERE d.doc_id % 97 <> 0
 """
 
 
-@register(
-    "decontaminate_span", oracle=_DECONTAM_SPAN_ORACLE, tags=("llm", "text")
-)
+@register("decontaminate_span", oracle=_DECONTAM_SPAN_ORACLE)
 def decontaminate_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-level decontamination: blocks sharing ANY word-3-shingle
     with the eval set are cut; the document keeps its clean blocks.
@@ -346,7 +344,7 @@ FROM per
 """
 
 
-@register("entropy_score", oracle=_ENTROPY_ORACLE, tags=("llm", "text"))
+@register("entropy_score", oracle=_ENTROPY_ORACLE)
 def entropy_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token Shannon entropy — the Gopher-class signal
     that catches templated/repetitive documents the length and
@@ -432,9 +430,7 @@ FROM n GROUP BY source
 """
 
 
-@register(
-    "text_normalize", oracle=_NORMALIZE_ORACLE, tags=("llm", "text", "rewrite")
-)
+@register("text_normalize", oracle=_NORMALIZE_ORACLE)
 def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace-collapse + trim + lowercase canonicalization with a
     per-source collapse report and a cross-engine byte pin (summed

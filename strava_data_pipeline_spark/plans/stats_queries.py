@@ -77,7 +77,7 @@ m AS (SELECT CAST(count(*) AS BIGINT) AS n, {sums}, {crosses} FROM v)
 """
 
 
-@register("corr_matrix", oracle=_corr_oracle(), tags=("analytics", "ops"))
+@register("corr_matrix", oracle=_corr_oracle())
 def corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson correlation matrix of the four lineitem measures
     (quantity, price, discount, tax) — the feature-redundancy screen a
@@ -169,7 +169,7 @@ FROM m
 """
 
 
-@register("trend_fit", oracle=_TREND_ORACLE, tags=("temporal", "ops"))
+@register("trend_fit", oracle=_TREND_ORACLE)
 def trend_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type OLS trend of value against time (cents/day slope
     + intercept) — "is this metric drifting, and how fast": the
@@ -245,7 +245,7 @@ FROM tot
 """
 
 
-@register("chi2_independence", oracle=_CHI2_ORACLE, tags=("temporal", "ops"))
+@register("chi2_independence", oracle=_CHI2_ORACLE)
 def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square independence audit of event_type × weekday: observed
     vs expected cell counts and per-cell chi-square terms — "does

@@ -182,7 +182,7 @@ FROM marked
 """
 
 
-@register("sync_audit", oracle=_SYNC_AUDIT_ORACLE, tags=("streaming", "ops"))
+@register("sync_audit", oracle=_SYNC_AUDIT_ORACLE)
 @stream_tuned
 def sync_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end audit of the incremental sync sink: land the event
@@ -258,9 +258,7 @@ GROUP BY 1, 2, 3
 """
 
 
-@register(
-    "windowed_counts_audit", oracle=_WINCOUNT_ORACLE, tags=("streaming", "ops")
-)
+@register("windowed_counts_audit", oracle=_WINCOUNT_ORACLE)
 @stream_tuned
 def windowed_counts_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end audit of the watermarked tumbling-window aggregation
@@ -341,9 +339,7 @@ SELECT event_id, ts, user_id, event_type, value FROM events
 """
 
 
-@register(
-    "dedup_stream_audit", oracle=_SDEDUP_ORACLE, tags=("streaming", "ops")
-)
+@register("dedup_stream_audit", oracle=_SDEDUP_ORACLE)
 @stream_tuned
 def dedup_stream_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end audit of streaming deduplication
@@ -460,9 +456,7 @@ FROM sess GROUP BY user_id, session_seq
 """
 
 
-@register(
-    "session_window_audit", oracle=_SESSWIN_ORACLE, tags=("streaming", "ops")
-)
+@register("session_window_audit", oracle=_SESSWIN_ORACLE)
 @stream_tuned
 def session_window_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end audit of NATIVE streaming session windows
@@ -540,7 +534,7 @@ FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
 """
 
 
-@register("enrich_audit", oracle=_ENRICH_ORACLE, tags=("streaming", "ops"))
+@register("enrich_audit", oracle=_ENRICH_ORACLE)
 # deliberately NOT @stream_tuned: a stateless stream has no state store
 # to over-shard, and the per-batch broadcast join wants analytics width
 def enrich_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -604,7 +598,7 @@ def _ewma_oracle() -> str:
     return _EWMA_ORACLE
 
 
-@register("ewma_audit", oracle=_ewma_oracle(), tags=("streaming", "ops"))
+@register("ewma_audit", oracle=_ewma_oracle())
 @stream_tuned(width=16)  # applyInPandasWithState compute wants parallelism
 def ewma_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end audit of the custom stateful EWMA operator
@@ -670,9 +664,7 @@ FROM marked
 """
 
 
-@register(
-    "versioned_sink_audit", oracle=_VSINK_ORACLE, tags=("streaming", "ops")
-)
+@register("versioned_sink_audit", oracle=_VSINK_ORACLE)
 @stream_tuned
 def versioned_sink_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end audit of the exactly-once versioned snapshot sink
@@ -845,11 +837,7 @@ SELECT doc_id FROM ({' UNION ALL '.join(f'SELECT doc_id FROM k{i}' for i in rang
 """
 
 
-@register(
-    "dedup_index_audit",
-    oracle=_dedup_index_oracle(),
-    tags=("streaming", "llm", "dedup"),
-)
+@register("dedup_index_audit", oracle=_dedup_index_oracle())
 # deliberately NOT @stream_tuned: the per-batch band joins against the
 # whole kept index are REAL batch work — analytics width wins (grid-
 # measured: 32 beats 8/16 here; the opposite of the stateful faces)
@@ -938,11 +926,7 @@ FROM sess GROUP BY user_id, session_seq
 """
 
 
-@register(
-    "stateful_session_audit",
-    oracle=_STATEFUL_SESS_ORACLE,
-    tags=("streaming", "ops"),
-)
+@register("stateful_session_audit", oracle=_STATEFUL_SESS_ORACLE)
 @stream_tuned
 def stateful_session_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end audit of the custom applyInPandasWithState gap
@@ -1019,9 +1003,7 @@ def _cms_audit_oracle() -> str:
     return _cms_oracle()
 
 
-@register(
-    "cms_merge_audit", oracle=_cms_audit_oracle(), tags=("streaming", "sketch")
-)
+@register("cms_merge_audit", oracle=_cms_audit_oracle())
 @stream_tuned
 def cms_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end audit of the streaming count-min sink

@@ -61,7 +61,7 @@ FROM lagged
 """
 
 
-@register("events_ewma", oracle=_EWMA_ORACLE, tags=("temporal", "ops"))
+@register("events_ewma", oracle=_EWMA_ORACLE)
 def events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user exponentially-weighted moving average (alpha=1/2,
     8-event horizon) of event values — the smoothing pass a monitoring
@@ -150,7 +150,7 @@ FROM med m JOIN mad x USING (event_type)
 """
 
 
-@register("mad_outliers", oracle=_MAD_ORACLE, tags=("temporal", "ops"))
+@register("mad_outliers", oracle=_MAD_ORACLE)
 def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-type outlier audit: lower median, lower-median MAD
     (median absolute deviation), and the count of events beyond the
@@ -250,7 +250,7 @@ FROM pairs
 """
 
 
-@register("event_transitions", oracle=_TRANS_ORACLE, tags=("temporal", "ops"))
+@register("event_transitions", oracle=_TRANS_ORACLE)
 def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix of per-user event-type
     sequences: for every (from, to) pair the transition count and
@@ -325,7 +325,7 @@ FROM (
 """
 
 
-@register("cusum_changepoint", oracle=_CUSUM_ORACLE, tags=("temporal", "ops"))
+@register("cusum_changepoint", oracle=_CUSUM_ORACLE)
 def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline CUSUM changepoint per user: the event where the running
     deviation from the user's own mean peaks — the standard
@@ -386,11 +386,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # 196. cusum_changepoint_bucketed — the skew-robust twin (r8)
 # --------------------------------------------------------------------------
-@register(
-    "cusum_changepoint_bucketed",
-    oracle=_CUSUM_ORACLE,
-    tags=("temporal", "ops"),
-)
+@register("cusum_changepoint_bucketed", oracle=_CUSUM_ORACLE)
 def cusum_changepoint_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cusum_changepoint through the two-phase primitives — SAME
     oracle, identical hash. The plain query's three per-user windows
@@ -487,7 +483,7 @@ FROM cum GROUP BY 1
 """
 
 
-@register("groupwise_quantiles", oracle=_GQ_ORACLE, tags=("temporal", "ops"))
+@register("groupwise_quantiles", oracle=_GQ_ORACLE)
 def groupwise_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-type quartiles (lower-quantile semantics — the first
     value whose cumulative count reaches k·n/4, pure BIGINT, no

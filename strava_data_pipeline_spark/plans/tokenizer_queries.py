@@ -235,7 +235,7 @@ SELECT t AS token, weight, TRUE AS is_char FROM chars
 """
 
 
-@register("wordpiece_vocab", oracle=_VOCAB_ORACLE, tags=("llm", "text"))
+@register("wordpiece_vocab", oracle=_VOCAB_ORACLE)
 def wordpiece_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-learned subword vocabulary: every distinct character
     (so encoding always terminates) plus the top-500 length-2..4
@@ -275,7 +275,7 @@ GROUP BY 1
 """
 
 
-@register("wordpiece_encode", oracle=_ENCODE_ORACLE, tags=("llm", "text"))
+@register("wordpiece_encode", oracle=_ENCODE_ORACLE)
 def wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply the learned vocabulary to the whole corpus: per subword
     token, its total corpus uses (occurrences inside a word x the
@@ -325,7 +325,7 @@ GROUP BY 1
 """
 
 
-@register("tokenizer_fertility", oracle=_FERTILITY_ORACLE, tags=("llm", "text"))
+@register("tokenizer_fertility", oracle=_FERTILITY_ORACLE)
 def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility (subword tokens emitted per word) by
     language — THE comparative tokenizer-quality number: a vocabulary

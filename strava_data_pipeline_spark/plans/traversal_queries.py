@@ -54,7 +54,7 @@ f{r} AS MATERIALIZED (
     )
 
 
-@register("bfs_distance", oracle=_bfs_oracle(), tags=("analytics", "graph"))
+@register("bfs_distance", oracle=_bfs_oracle())
 def bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS: hop distance (0..3) from the seed part set
     (p_partkey % 997 == 1) through the co-purchase graph — the
@@ -145,7 +145,7 @@ WHERE f.n - coalesce(d.n, 0) > 0
 """
 
 
-@register("join_delta_maintenance", oracle=_JD_ORACLE, tags=("ops", "pipeline"))
+@register("join_delta_maintenance", oracle=_JD_ORACLE)
 def join_delta_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance of a JOIN view: given a lineitem delta
     (late shipments) and an orders delta (new orders), compute the
@@ -225,7 +225,7 @@ JOIN sky s ON CAST(round(p.p_retailprice * 100) AS BIGINT) = s.price_cents
 """
 
 
-@register("skyline_pareto", oracle=_SKY_ORACLE, tags=("analytics", "ops"))
+@register("skyline_pareto", oracle=_SKY_ORACLE)
 def skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pareto frontier of parts: cheapest-for-their-size parts (no
     other part is both no-more-expensive and no-smaller, with one
@@ -309,7 +309,7 @@ FROM per_island GROUP BY 1
 """
 
 
-@register("interval_coverage", oracle=_COV_ORACLE, tags=("temporal", "ops"))
+@register("interval_coverage", oracle=_COV_ORACLE)
 def interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user total covered time under 30-minute activity windows —
     the interval-UNION measure ("how long was this user actually

@@ -83,8 +83,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Columns that are logically timestamps. Some testdata files store them as
 # parquet TIMESTAMP(NANOS), which Spark refuses outright; with
 # ``nanosAsLong`` they surface as BIGINT nanos and we convert to

@@ -22,9 +22,9 @@ output — 3.4s/partition-decade of pure state-commit overhead.
 ``scoped_stream_shuffle`` temporarily pins ``spark.sql.shuffle.partitions``
 for the duration of a streaming run and restores the analytics width
 afterwards; ``stream_tuned`` applies it around a registered audit-face
-query. The width is env-tunable (``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS``)
-so a cluster deployment can size it to real state volume; the default 8
-matches the audit feeds' state (tens of MB across all stores).
+query. The default width, ``STREAM_WIDTH`` = 8, matches the audit feeds'
+state (tens of MB across all stores); a face whose micro-batches do real
+batch work names its own width at its decoration site.
 
 Correctness note: partition count never changes WHAT a stateful operator
 emits, only how its state is sharded — hash-equality of every audit face
@@ -34,59 +34,46 @@ driver gate and tools/verify_oracle.py.
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 from functools import wraps
 
 from pyspark.sql import SparkSession
 
-_ENV_KEY = "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"
 _CONF_KEY = "spark.sql.shuffle.partitions"
-_DEFAULT = 8
-
-
-def stream_shuffle_partitions() -> int:
-    """Resolve the stream-scoped shuffle width (env-tunable, default 8)."""
-    try:
-        return max(1, int(os.environ.get(_ENV_KEY, _DEFAULT)))
-    except ValueError:
-        return _DEFAULT
+STREAM_WIDTH = 8
 
 
 @contextmanager
-def scoped_stream_shuffle(spark: SparkSession, n: int | None = None):
-    """Pin ``spark.sql.shuffle.partitions`` to the stream width for the
-    block, restoring the prior (analytics) width on exit — exceptions
+def scoped_stream_shuffle(spark: SparkSession, n: int = STREAM_WIDTH):
+    """Pin ``spark.sql.shuffle.partitions`` to ``n`` for the block,
+    restoring the prior (analytics) width on exit — exceptions
     included, so a failed stream never leaks a narrowed session conf."""
-    width = stream_shuffle_partitions() if n is None else max(1, int(n))
     prior = spark.conf.get(_CONF_KEY)
-    spark.conf.set(_CONF_KEY, str(width))
+    spark.conf.set(_CONF_KEY, str(n))
     try:
         yield
     finally:
         spark.conf.set(_CONF_KEY, prior)
 
 
-def stream_tuned(fn=None, *, width: int | None = None):
+def stream_tuned(fn=None, *, width: int = STREAM_WIDTH):
     """Decorator for registered streaming-face queries ((spark, sf_dir)
     -> DataFrame): run the builder under the stream-scoped shuffle
     width. The returned DataFrame is a read of COMMITTED parquet (plus
     row-level projection), so executing it after the width is restored
     changes nothing — all stateful work happens inside the call.
 
-    ``width`` overrides the env default per face — faces whose
+    ``width`` overrides ``STREAM_WIDTH`` per face — faces whose
     micro-batches do REAL batch work (wide foreachBatch merges over
     sf-scale data) want more parallelism than faces dominated by
     state-store commit overhead; the grid-measured per-face choices
-    live at each decoration site. The env var still wins when set, so
-    a cluster deployment can re-size every stream at once."""
+    live at each decoration site."""
     if fn is None:
         return lambda f: stream_tuned(f, width=width)
 
     @wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str):
-        n = width if (width is not None and _ENV_KEY not in os.environ) else None
-        with scoped_stream_shuffle(spark, n):
+        with scoped_stream_shuffle(spark, width):
             return fn(spark, sf_dir)
 
     return wrapped

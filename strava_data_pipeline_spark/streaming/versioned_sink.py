@@ -53,7 +53,6 @@ def start_versioned_sink(
     key: str = "event_id",
     ts_col: str = "ts",
     partition_col: str | None = None,
-    partition_immutable: bool = False,
     app_id: str | None = None,
 ) -> StreamingQuery:
     """Stream → versioned store: each micro-batch merges latest-wins
@@ -75,15 +74,13 @@ def start_versioned_sink(
 
     A key whose partition value CHANGES between versions (a late
     correction moving an event across midnight) leaves a stale copy in
-    its old day if the merge only sees the batch's own partitions. By
-    default the sink detects moves with a key+partition column-pruned
-    scan of the snapshot (a two-narrow-columns parquet read, NOT a full
-    table read) and folds the affected old partitions into the merge,
-    so latest-wins holds store-wide. Callers whose partition value is
-    an immutable function of the key (ingest-once event time) set
-    ``partition_immutable=True`` to skip the detection scan entirely;
-    at larger scale the upgrade path is a hash-bucketed key locator
-    index, which replaces the scan with O(batch-buckets) reads.
+    its old day if the merge only sees the batch's own partitions. The
+    sink detects moves with a key+partition column-pruned scan of the
+    snapshot (a two-narrow-columns parquet read, NOT a full table read)
+    and folds the affected old partitions into the merge, so
+    latest-wins holds store-wide. At larger scale the upgrade path is a
+    hash-bucketed key locator index, which replaces the scan with
+    O(batch-buckets) reads.
 
     ``app_id`` scopes the replay markers to this logical stream
     (sources/versioned.py::mark_batch): set it whenever more than one
@@ -112,7 +109,7 @@ def start_versioned_sink(
             )
             touched = [r[0] for r in b.select(partition_col).distinct().collect()]
             has_store = current_version(spark, store_root) is not None
-            if has_store and not partition_immutable:
+            if has_store:
                 # find partitions (outside the touched set) still holding
                 # a row for a batch key: those keys MOVED and their old
                 # day must join the rewrite or it keeps the stale copy

@@ -1363,14 +1363,14 @@ def test_scoped_stream_shuffle_restores_width(spark):
     afterwards — including when the block raises, so a failed stream
     never leaks a narrowed session conf into later batch plans."""
     from strava_data_pipeline_spark.streaming.tuning import (
+        STREAM_WIDTH,
         scoped_stream_shuffle,
-        stream_shuffle_partitions,
     )
 
     key = "spark.sql.shuffle.partitions"
     prior = spark.conf.get(key)
     with scoped_stream_shuffle(spark):
-        assert spark.conf.get(key) == str(stream_shuffle_partitions())
+        assert spark.conf.get(key) == str(STREAM_WIDTH)
     assert spark.conf.get(key) == prior
 
     with pytest.raises(RuntimeError, match="boom"):

@@ -302,20 +302,59 @@ class TestAuthMiddleware:
 
     def test_minted_key_round_trip(self, spark, sf_dir):
         svc = PipelineService(spark, sf_dir)
-        key = svc.create_api_key("minted", expiry_days=1, user_id=7, generate=True)
+        key = svc.create_api_key("minted", expiry_days=1, user_id=7)
         # 32 random bytes, URL-safe base64 (auth.go:66-75)
         import base64 as b64
 
         assert len(b64.urlsafe_b64decode(key.encode())) == 32
         assert svc.validate_api_key(key)
         # two mints never collide
-        assert key != svc.create_api_key("minted", expiry_days=1, generate=True)
+        assert key != svc.create_api_key("minted", expiry_days=1)
         # expires like any other key, and deletes
         assert not svc.validate_api_key(
             key, now=datetime.utcnow() + timedelta(days=2)
         )
         assert svc.delete_api_key(key)
         assert not svc.validate_api_key(key)
+
+    def test_jwt_secret_comes_from_config(self, spark, sf_dir, monkeypatch):
+        # the signing secret is auth.jwt_secret (SPARK_GRAFT_AUTH_JWT_SECRET),
+        # not a constant published in the source
+        monkeypatch.setenv("SPARK_GRAFT_AUTH_JWT_SECRET", "deploy-secret")
+        svc = PipelineService(spark, sf_dir)
+        issuer = PipelineService(spark, sf_dir, jwt_secret="deploy-secret")
+        token = issuer.generate_jwt(42)
+        assert svc.authorized_call(f"Bearer {token}", lambda uid: uid) == 42
+        old = PipelineService(spark, sf_dir, jwt_secret="spark-graft-hs256-secret")
+        with pytest.raises(PermissionError, match="Invalid token"):
+            svc.authorized_call(f"Bearer {old.generate_jwt(42)}", lambda uid: uid)
+
+    def test_unconfigured_jwt_secret_is_random_per_instance(
+        self, spark, sf_dir, monkeypatch
+    ):
+        monkeypatch.delenv("SPARK_GRAFT_AUTH_JWT_SECRET", raising=False)
+        svc = PipelineService(spark, sf_dir)
+        other = PipelineService(spark, sf_dir)
+        assert svc.jwt_secret != other.jwt_secret
+        token = svc.generate_jwt(42)
+        assert svc.authorized_call(f"Bearer {token}", lambda uid: uid) == 42
+        with pytest.raises(PermissionError, match="Invalid token"):
+            other.authorized_call(f"Bearer {token}", lambda uid: uid)
+
+    def test_non_ascii_credentials_rejected(self, spark, sf_dir):
+        # hmac.compare_digest refuses non-ASCII str: such a credential
+        # must still be a 401, never a TypeError
+        svc = PipelineService(spark, sf_dir)
+        svc.create_api_key("mw", expiry_days=30, user_id=7)
+        ran = []
+        with pytest.raises(PermissionError, match="Invalid API key"):
+            svc.authorized_call("clé", lambda uid: ran.append(uid))
+        payload = svc.generate_jwt(42).split(".", 1)[0]
+        with pytest.raises(PermissionError, match="Invalid token"):
+            svc.authorized_call(
+                f"Bearer {payload}.sïgnature", lambda uid: ran.append(uid)
+            )
+        assert ran == [], "fn must never run on a rejected credential"
 
     def test_api_key_path_valid_invokes_fn(self, spark, sf_dir):
         svc = PipelineService(spark, sf_dir)
