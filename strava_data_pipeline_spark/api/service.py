@@ -23,6 +23,18 @@ Every endpoint of the reference's API server
 Auth-token/OAuth flows are request-time concerns of a web tier, not of
 the data engine; key *validation semantics* (active + unexpired —
 user_api_keys.go:36) are implemented exactly.
+
+Serving: from its second served read on, a table version that fits the
+session's broadcast threshold has a driver-side Arrow copy
+(catalog.note_read). The service sorts the events copy once per
+version into the listing order, (ts DESC, event_id DESC) with NULLs
+last as Spark sorts them, and answers every activity and user endpoint
+with a ``pyarrow.compute`` filter or slice of it, returned as
+``spark.createDataFrame(slice, schema)``: a ``LocalTableScan`` that is
+collected with no Spark job. A first read (each sync read-back) and a
+version over the threshold are answered by a Spark plan over the
+table's handle, with the same schema and rows; the API keys and the
+user overlay are driver-held rows, turned into frames the same way.
 """
 
 from __future__ import annotations
@@ -35,6 +47,8 @@ from collections.abc import Callable
 from datetime import datetime, timedelta
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -47,6 +61,7 @@ from pyspark.sql.types import (
 )
 
 from strava_data_pipeline_spark.config import load_config
+from strava_data_pipeline_spark.functions.local_frames import arrow_rows
 from strava_data_pipeline_spark.operators.pagination import page_keyset, page_offset
 from strava_data_pipeline_spark.sources.catalog import load_table, max_micros, note_read
 
@@ -60,10 +75,24 @@ KEY_SCHEMA = StructType(
         StructField("user_id", LongType()),
     ]
 )
+USER_SCHEMA = StructType(
+    [
+        StructField("user_id", LongType()),
+        StructField("username", StringType()),
+        StructField("athlete_id", LongType()),
+    ]
+)
+# the listing order; Spark puts NULLs last in a DESC sort
+_ORDER = [("ts", True), ("event_id", True)]
 
 
 class PipelineService:
-    """Stateless facade over the engine; one instance per session."""
+    """Facade over the engine; one instance per session.
+
+    Its state is driver-side: the API keys and the user overlay
+    (driver-held rows), and per table version the derived tables the
+    endpoints read, the events copy in listing order and the users dim,
+    rebuilt when the version or the overlay changes."""
 
     def __init__(
         self,
@@ -88,7 +117,7 @@ class PipelineService:
             token_duration if token_duration is not None else auth.token_duration
         )
         # Admin-created keys are a driver-scale dim; kept as local rows
-        # and rebuilt as a literal DataFrame per query, so a long-lived
+        # and rebuilt as a local relation per query, so a long-lived
         # service never accumulates an unbounded unionByName lineage.
         # A production deployment stores keys in a table and mutates it
         # via merge_cdc (see the key_lifecycle registry query).
@@ -96,58 +125,94 @@ class PipelineService:
         self._user_rows: list[tuple] = []
         self._deleted_user_ids: set[int] = set()
         # bumped by every user mutation; the users dim is built once per
-        # (customer version, generation), see _users
+        # (customer version, its copy, generation), see _users
         self._user_gen = 0
-        self._users_built: tuple[DataFrame, int, DataFrame] | None = None
+        self._users_built: tuple | None = None
+        self._listing: tuple[pa.Table, pa.Table] | None = None
 
     @property
     def _keys(self) -> DataFrame:
-        return self.spark.createDataFrame(self._key_rows, KEY_SCHEMA)
+        rows = arrow_rows(self._key_rows, KEY_SCHEMA)
+        return self.spark.createDataFrame(rows, KEY_SCHEMA)
 
-    def _table(self, name: str) -> DataFrame:
-        """A served read of a table: its handle, cached from its second
-        read on (catalog.note_read)."""
-        return note_read(load_table(self.spark, self.sf_dir, name))
+    def _events(self) -> tuple[DataFrame, pa.Table | None]:
+        """A served read of events: the table's handle and, once its
+        version has a driver copy (catalog.note_read), that copy in
+        listing order, sorted once per version."""
+        events = load_table(self.spark, self.sf_dir, "events")
+        copy = note_read(events)
+        if copy is None:
+            return events, None
+        listing = self._listing
+        if listing is None or listing[0] is not copy:
+            keys = [(c, "descending" if desc else "ascending") for c, desc in _ORDER]
+            ordered = copy.sort_by(keys, null_placement="at_end")
+            listing = self._listing = (copy, ordered)
+        return events, listing[1]
+
+    def _local(self, table: pa.Table, like: DataFrame) -> DataFrame:
+        """An Arrow slice as a frame with ``like``'s schema."""
+        return self.spark.createDataFrame(table, like.schema)
 
     # -- activities (api.go:206, api.go:239) ------------------------------
     def list_activities(self, limit: int = 20, offset: int = 0) -> DataFrame:
-        events = self._table("events")
-        return page_offset(
-            events, [("ts", True), ("event_id", True)], limit=limit, offset=offset
-        ).drop("rn")
+        events, listing = self._events()
+        if listing is not None:
+            return self._local(listing.slice(offset, limit), events)
+        return page_offset(events, _ORDER, limit=limit, offset=offset).drop("rn")
 
     def list_activities_after(
-        self, cursor_ts, cursor_id: int, limit: int = 20
+        self, cursor_ts: datetime, cursor_id: int, limit: int = 20
     ) -> DataFrame:
         """Keyset variant — the deep-pagination path the reference lacks.
 
         The cursor is the last row's (ts, event_id) pair and mirrors the
         FULL (ts DESC, event_id DESC) order: ``ts < T`` alone would skip
-        the remaining rows that share the page boundary's timestamp."""
-        events = self._table("events")
+        the remaining rows that share the page boundary's timestamp.
+        The predicate is three-valued on both paths (Kleene OR/AND, as
+        Spark evaluates it), so a NULL event_id row older than ``T``
+        passes."""
+        events, listing = self._events()
+        if listing is not None:
+            ts, ids = listing["ts"], listing["event_id"]
+            bound = pa.scalar(TimestampType().toInternal(cursor_ts), ts.type)
+            after = pc.or_kleene(
+                pc.less(ts, bound),
+                pc.and_kleene(pc.equal(ts, bound), pc.less(ids, cursor_id)),
+            )
+            return self._local(listing.filter(after).slice(0, limit), events)
         cursor = (F.col("ts") < F.lit(cursor_ts)) | (
             (F.col("ts") == F.lit(cursor_ts)) & (F.col("event_id") < F.lit(cursor_id))
         )
-        return page_keyset(
-            events,
-            [("ts", True), ("event_id", True)],
-            cursor=cursor,
-            limit=limit,
-        )
+        return page_keyset(events, _ORDER, cursor=cursor, limit=limit)
 
     def get_activity(self, activity_id: int) -> DataFrame:
-        return self._table("events").where(F.col("event_id") == activity_id)
+        events, listing = self._events()
+        if listing is not None:
+            hit = pc.equal(listing["event_id"], activity_id)
+            return self._local(listing.filter(hit), events)
+        return events.where(F.col("event_id") == activity_id)
 
     # -- sync (api.go:315) -------------------------------------------------
     def sync_window(self, days: int = 1) -> DataFrame:
         """Activities within ``days`` days of the newest one.
 
-        One filter, ``ts >= max(ts) - INTERVAL days``, with the table's
-        max(ts) read from its handle (computed once per table version,
-        see catalog.max_micros) and inlined as a literal, so the bound
-        folds to a constant the scan can push down. An empty table
-        returns no rows."""
-        events = self._table("events")
+        One filter, ``ts >= max(ts) - INTERVAL days``. Over a driver
+        copy, max(ts) is the listing's first row (NULLs sort last) and
+        the interval is whole days of microseconds, as Spark subtracts
+        it in the session's UTC zone. Otherwise max(ts) is read from the
+        handle (computed once per table version, see
+        catalog.max_micros) and inlined as a literal, so the bound folds
+        to a constant the scan can push down. An empty table returns no
+        rows."""
+        events, listing = self._events()
+        if listing is not None:
+            ts = listing["ts"]
+            hwm = ts[0].value if len(ts) else None
+            if hwm is None:
+                return self._local(listing.slice(0, 0), events)
+            bound = pa.scalar(hwm - days * 86_400_000_000, ts.type)
+            return self._local(listing.filter(pc.greater_equal(ts, bound)), events)
         hwm = max_micros(events, "ts")
         if hwm is None:
             return events.where(F.lit(False))
@@ -318,31 +383,66 @@ class PipelineService:
     # facade holds driver-scale admin mutations only.
     _USER_OVERLAY_BASE_ID = 10**9
 
-    def _users(self) -> DataFrame:
-        """The users dim, built once per (customer version, overlay
-        generation): a lookup after no change reuses the last build."""
-        customer = self._table("customer")
+    def _users(self) -> tuple[DataFrame, pa.Table | None]:
+        """The users dim as a plan and, once customer's version has a
+        driver copy, as an Arrow table, built once per (customer
+        version, copy, overlay generation): a lookup after no change
+        reuses the last build."""
+        customer = load_table(self.spark, self.sf_dir, "customer")
+        copy = note_read(customer)
         built = self._users_built
-        if built is not None and built[0] is customer and built[1] == self._user_gen:
-            return built[2]
-        base = customer.select(
+        if not (
+            built is not None
+            and built[0] is customer
+            and built[1] is copy
+            and built[2] == self._user_gen
+        ):
+            built = self._users_built = (
+                customer, copy, self._user_gen, *self._build_users(customer, copy)
+            )
+        return built[3], built[4]
+
+    def _build_users(
+        self, customer: DataFrame, copy: pa.Table | None
+    ) -> tuple[DataFrame, pa.Table | None]:
+        overlay = arrow_rows(self._user_rows, USER_SCHEMA)
+        gone = pa.array(sorted(self._deleted_user_ids), pa.int64())
+        users = customer.select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_name").alias("username"),
             (F.col("c_custkey") + F.lit(10**7)).alias("athlete_id"),
         )
         if self._user_rows:
-            overlay = self.spark.createDataFrame(
-                self._user_rows, "user_id long, username string, athlete_id long"
-            )
-            base = base.join(
-                overlay.select("user_id"), "user_id", "left_anti"
-            ).unionByName(overlay)
+            rows = self.spark.createDataFrame(overlay, USER_SCHEMA)
+            users = users.join(
+                rows.select("user_id"), "user_id", "left_anti"
+            ).unionByName(rows)
         if self._deleted_user_ids:
-            gone = [(i,) for i in sorted(self._deleted_user_ids)]
-            tomb = self.spark.createDataFrame(gone, "user_id long")
-            base = base.join(tomb, "user_id", "left_anti")
-        self._users_built = (customer, self._user_gen, base)
-        return base
+            tomb = self.spark.createDataFrame(
+                pa.table({"user_id": gone}), StructType([USER_SCHEMA["user_id"]])
+            )
+            users = users.join(tomb, "user_id", "left_anti")
+        if copy is None:
+            return users, None
+        # the same steps over the copy; a NULL key is in no value set, so
+        # it survives both anti-joins, as in Spark
+        base = pa.table(
+            [
+                copy["c_custkey"],
+                copy["c_name"],
+                pc.add_checked(copy["c_custkey"], 10**7),
+            ],
+            names=USER_SCHEMA.names,
+        ).cast(overlay.schema)
+        base = base.filter(pc.invert(pc.is_in(base["user_id"], overlay["user_id"])))
+        local = pa.concat_tables([base, overlay])
+        return users, local.filter(pc.invert(pc.is_in(local["user_id"], gone)))
+
+    def _user_where(self, col: str, value) -> DataFrame:
+        users, local = self._users()
+        if local is not None:
+            return self._local(local.filter(pc.equal(local[col], value)), users)
+        return users.where(F.col(col) == value)
 
     def create_user(self, username: str, athlete_id: int) -> int:
         """CreateUser parity; returns the new user id."""
@@ -352,13 +452,13 @@ class PipelineService:
         return uid
 
     def get_user_by_id(self, user_id: int) -> DataFrame:
-        return self._users().where(F.col("user_id") == user_id)
+        return self._user_where("user_id", user_id)
 
     def get_user_by_username(self, username: str) -> DataFrame:
-        return self._users().where(F.col("username") == username)
+        return self._user_where("username", username)
 
     def get_user_by_athlete_id(self, athlete_id: int) -> DataFrame:
-        return self._users().where(F.col("athlete_id") == athlete_id)
+        return self._user_where("athlete_id", athlete_id)
 
     def update_user(
         self, user_id: int, *, username: str | None = None, athlete_id: int | None = None

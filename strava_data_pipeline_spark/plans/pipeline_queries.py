@@ -128,10 +128,10 @@ WHERE ts >= (SELECT max(ts) - INTERVAL 7 DAY FROM events)
 @register("sync_window", oracle=_SYNC_WINDOW_ORACLE)
 def sync_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental sync window: activities in the trailing 7 days of the
-    table's high-water mark. The same single filter as
-    PipelineService.sync_window: max(ts) comes from the handle
-    (catalog.max_micros, one eager job per table version) and folds to a
-    literal bound the scan pushes down."""
+    table's high-water mark. The single filter PipelineService.sync_window
+    plans for a version it has no driver copy of: max(ts) comes from the
+    handle (catalog.max_micros, one eager job per table version) and
+    folds to a literal bound the scan pushes down."""
     handle = load_table(spark, sf_dir, "events")
     events = handle.select(*EVENT_COLS)
     hwm = max_micros(handle, "ts")

@@ -40,22 +40,24 @@ Handles are kept per session; a stopped session's handles are dropped
 and a new session never receives them. ``max_micros`` computes a
 handle's column maximum once per version.
 
-SERVING CACHE: ``note_read`` counts the reads a server makes of a
-handle, and a version's SECOND read persists it at
-``StorageLevel.DISK_ONLY``: Spark's columnar cache, compressed 10k-row
-batches with per-batch min/max statistics, so later reads decode no
-parquet, skip the timestamp repair and skip the batches a filter on a
-sorted column rules out. A version read once (a sync read-back reads
-each new version once) is never cached. ``DISK_ONLY`` keeps the blocks
-out of the JVM heap; they are read back through the OS page cache.
-When ``load_table`` replaces a handle with a newer version it
-unpersists the old one — it must: Spark matches cached plans by
-result, and a re-read of the same path matches the old version's
-entry. The count, the persist and the unpersist run under one lock.
-Spark's cache is shared by the whole SparkContext, so once a version
-is cached EVERY reader of it in the session reads the cache, registry
-builders included, until ``spark.catalog.clearCache()``; a version
-whose cache was cleared is not cached again.
+SERVING COPY: ``note_read`` counts the reads a server makes of a
+handle, and a version's SECOND read copies it to the driver once, as
+an Arrow table (``DataFrame.toArrow``), which the handle then owns. A
+version read once (a sync read-back reads each new version once) is
+never copied. Threshold: only a version whose planned size
+(``optimizedPlan.stats.sizeInBytes``) is within the session's
+``spark.sql.autoBroadcastJoinThreshold`` is copied, the size Spark
+already agrees to collect on the driver to broadcast it. The size is
+tested once, at the second read: a version over the threshold then
+(any version, while it is -1) stays a Spark plan on every read.
+Lifetime: the copy lives as long as its handle; when ``load_table``
+replaces the handle with a newer version, the old copy is no longer
+reachable from the catalog and no Spark state is left to release.
+Thread safety: the count runs under the catalog's lock, and the one
+reader that makes the second read builds the copy OUTSIDE it, so other
+tables resolve meanwhile; readers of the version that arrive during
+the build are told to plan against the handle, and every reader after
+it gets the same copy.
 """
 
 from __future__ import annotations
@@ -66,7 +68,7 @@ import threading
 import weakref
 from dataclasses import dataclass, field
 
-from pyspark import StorageLevel
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -100,6 +102,7 @@ class _Handle:
     df: DataFrame
     maxima: dict[str, int | None] = field(default_factory=dict)
     reads: int = 0
+    copy: pa.Table | None = None
 
 
 # session -> {table path -> handle}. Weakly keyed, so an entry never
@@ -188,8 +191,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     with _LOCK:
         hit = handles.get(path)
         if hit is None or hit.token != token:
-            if hit is not None:
-                hit.df.unpersist()
             hit = handles[path] = _Handle(token, _resolve(spark, path, name))
         return hit.df
 
@@ -208,19 +209,34 @@ def max_micros(df: DataFrame, col: str) -> int | None:
     return value
 
 
-def note_read(df: DataFrame) -> DataFrame:
-    """Count one serving read of ``df`` and return it. The second read
-    of a ``load_table`` handle persists it at ``DISK_ONLY`` (see SERVING
-    CACHE in the module docstring); ``persist`` returns the same object,
-    so ``max_micros`` still finds the handle. Any other DataFrame is
-    returned untouched."""
+def _fits_driver(df: DataFrame) -> bool:
+    """Whether the planner's size estimate of ``df`` is within the
+    session's broadcast threshold, the same test Spark applies before
+    collecting a join side on the driver (-1 admits nothing)."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return 0 <= size <= conf.autoBroadcastJoinThreshold()
+
+
+def note_read(df: DataFrame) -> pa.Table | None:
+    """Count one serving read of ``df`` and return the driver-side Arrow
+    copy of its version, or None when the caller must plan against
+    ``df``: its first read, a read while the copy is being built, a
+    version over the threshold, or a DataFrame that is not a current
+    ``load_table`` handle. The second read builds the copy (see SERVING
+    COPY in the module docstring)."""
     with _LOCK:
         handle = _handle_locked(df)
-        if handle is not None:
-            handle.reads += 1
-            if handle.reads == 2:
-                df.persist(StorageLevel.DISK_ONLY)
-    return df
+        if handle is None:
+            return None
+        handle.reads += 1
+        if handle.reads != 2:
+            return handle.copy
+    if not _fits_driver(df):
+        return None
+    copy = df.toArrow()
+    handle.copy = copy
+    return copy
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import time
+import uuid
 
 import pytest
 
@@ -31,3 +33,31 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` calls ``fn()`` and returns how many Spark jobs
+    it started. They are counted in a job group of their own once a
+    marker job, run after ``fn`` in another group, shows in the status
+    store: the store is fed asynchronously, but in order."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        probe, marker = f"probe-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
+        try:
+            sc.setJobGroup(probe, probe)
+            fn()
+            sc.setJobGroup(marker, marker)
+            spark.range(1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        tracker = sc.statusTracker()
+        deadline = time.monotonic() + 60
+        while not tracker.getJobIdsForGroup(marker):
+            assert time.monotonic() < deadline, "the marker job never showed"
+            time.sleep(0.05)
+        return len(tracker.getJobIdsForGroup(probe))
+
+    return count

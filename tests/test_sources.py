@@ -8,7 +8,6 @@ import os
 
 import pytest
 
-from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from strava_data_pipeline_spark.sources.strava_api import (
@@ -110,8 +109,9 @@ class TestCatalogHandles:
     """load_table keeps one handle per table version (sources/catalog.py
     module docstring): the same object while the path is unchanged, a
     fresh one that sees the new rows once the table is replaced. A
-    version's second served read (note_read) caches it; a replace
-    uncaches the old version."""
+    version's second served read (note_read) copies it to the driver
+    once, if it fits the broadcast threshold; a replace drops the old
+    version's copy."""
 
     @staticmethod
     def _events(spark, ids, day):
@@ -160,12 +160,24 @@ class TestCatalogHandles:
 
         shutil.copy(os.path.join(sf_dir, "events.parquet"), tmp_path)
         handle = load_table(spark, str(tmp_path), "events")
-        assert note_read(handle) is handle
-        assert handle.storageLevel == StorageLevel.NONE
-        assert note_read(load_table(spark, str(tmp_path), "events")) is handle
-        assert handle.storageLevel == StorageLevel.DISK_ONLY
+        assert note_read(handle) is None
+        copy = note_read(load_table(spark, str(tmp_path), "events"))
+        assert copy is not None and copy.equals(handle.toArrow())
+        assert note_read(handle) is copy
+
+    @staticmethod
+    def _copied(spark, root):
+        """The driver copy of ``root``'s events, made by two served reads."""
+        from strava_data_pipeline_spark.sources.catalog import load_table, note_read
+
+        handle = load_table(spark, root, "events")
+        assert note_read(handle) is None
+        return handle, note_read(handle)
 
     def test_replaced_single_file_gives_fresh_handle(self, spark, tmp_path):
+        import gc
+        import weakref
+
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -182,16 +194,22 @@ class TestCatalogHandles:
             os.replace(staged, path)
 
         write([1, 2])
-        first = note_read(note_read(load_table(spark, str(tmp_path), "events")))
-        assert first.storageLevel == StorageLevel.DISK_ONLY
-        assert sorted(r["event_id"] for r in first.collect()) == [1, 2]
+        first, copy = self._copied(spark, str(tmp_path))
+        assert sorted(copy["event_id"].to_pylist()) == [1, 2]
+        dropped = weakref.ref(copy)
+        del copy
         write([1, 2, 3])
         second = load_table(spark, str(tmp_path), "events")
         assert second is not first
-        assert first.storageLevel == StorageLevel.NONE
+        gc.collect()
+        assert dropped() is None, "the replaced version's copy is still held"
+        assert note_read(first) is None
         assert sorted(r["event_id"] for r in second.collect()) == [1, 2, 3]
 
     def test_dynamic_overwrite_of_one_day_gives_fresh_handle(self, spark, tmp_path):
+        import gc
+        import weakref
+
         from strava_data_pipeline_spark.sources.catalog import load_table, note_read
 
         target = str(tmp_path / "events.parquet")
@@ -202,17 +220,20 @@ class TestCatalogHandles:
             ).partitionBy("p_day").parquet(target)
 
         write(self._events(spark, [1, 2], 1).unionByName(self._events(spark, [3], 2)), "error")
-        first = note_read(load_table(spark, str(tmp_path), "events"))
-        assert sorted(r["event_id"] for r in first.collect()) == [1, 2, 3]
-        assert note_read(load_table(spark, str(tmp_path), "events")) is first
-        assert first.storageLevel == StorageLevel.DISK_ONLY
-        assert sorted(r["event_id"] for r in first.collect()) == [1, 2, 3]
+        first, copy = self._copied(spark, str(tmp_path))
+        assert load_table(spark, str(tmp_path), "events") is first
+        assert sorted(copy["event_id"].to_pylist()) == [1, 2, 3]
+        dropped = weakref.ref(copy)
+        del copy
         # the sync sink's commit: only the Jan 2 day dir is replaced
         write(self._events(spark, [3, 4], 2), "overwrite")
         second = load_table(spark, str(tmp_path), "events")
         assert second is not first
-        assert first.storageLevel == StorageLevel.NONE
+        gc.collect()
+        assert dropped() is None, "the replaced version's copy is still held"
         assert sorted(r["event_id"] for r in second.collect()) == [1, 2, 3, 4]
+        _, copy = self._copied(spark, str(tmp_path))
+        assert sorted(copy["event_id"].to_pylist()) == [1, 2, 3, 4]
 
     def test_concurrent_first_loads_resolve_once(self, spark, sf_dir, tmp_path, monkeypatch):
         import shutil
@@ -233,26 +254,124 @@ class TestCatalogHandles:
         assert len(got) == n and all(df is got[0] for df in got)
         assert len(resolves) == 1
 
-    def test_concurrent_second_reads_persist_once(self, spark, sf_dir, tmp_path, monkeypatch):
+    @staticmethod
+    def _count_builds(handle, monkeypatch, before=lambda: None) -> list:
+        """Record every ``toArrow`` call, running ``before`` first."""
+        builds = []
+        real = type(handle).toArrow
+
+        def to_arrow(df):
+            builds.append(df)
+            before()
+            return real(df)
+
+        monkeypatch.setattr(type(handle), "toArrow", to_arrow)
+        return builds
+
+    def test_concurrent_second_reads_copy_once(self, spark, sf_dir, tmp_path, monkeypatch):
         import shutil
 
         from strava_data_pipeline_spark.sources import catalog
 
         shutil.copy(os.path.join(sf_dir, "events.parquet"), tmp_path)
-        handle = catalog.note_read(catalog.load_table(spark, str(tmp_path), "events"))
-        persists = []
-        real_persist = type(handle).persist
-        monkeypatch.setattr(
-            type(handle),
-            "persist",
-            lambda df, *a: persists.append(df) or real_persist(df, *a),
-        )
+        handle = catalog.load_table(spark, str(tmp_path), "events")
+        assert catalog.note_read(handle) is None
+        builds = self._count_builds(handle, monkeypatch)
+        got = []
         self._at_once(
             8,
-            lambda: catalog.note_read(catalog.load_table(spark, str(tmp_path), "events")),
+            lambda: got.append(
+                catalog.note_read(catalog.load_table(spark, str(tmp_path), "events"))
+            ),
         )
-        assert len(persists) == 1 and persists[0] is handle
-        assert handle.storageLevel == StorageLevel.DISK_ONLY
+        assert len(builds) == 1 and builds[0] is handle
+        copy = catalog.note_read(handle)
+        assert copy is not None and copy.num_rows == handle.count()
+        # a reader got either no copy (it came during the build) or THE copy
+        assert len(got) == 8 and all(c is None or c is copy for c in got)
+
+    def test_copy_is_built_outside_the_lock(self, spark, sf_dir, tmp_path, monkeypatch):
+        import shutil
+        import threading
+
+        from strava_data_pipeline_spark.sources import catalog
+
+        for name in ("events", "customer"):
+            shutil.copy(os.path.join(sf_dir, f"{name}.parquet"), tmp_path)
+        handle = catalog.load_table(spark, str(tmp_path), "events")
+        assert catalog.note_read(handle) is None
+        building, release = threading.Event(), threading.Event()
+        self._count_builds(
+            handle, monkeypatch, before=lambda: building.set() or release.wait(60)
+        )
+        got = []
+        copier = threading.Thread(target=lambda: got.append(catalog.note_read(handle)))
+        copier.start()
+        try:
+            assert building.wait(60)
+            # the catalog's lock is free: another table resolves, and a
+            # reader of this version is told to plan against the handle
+            assert catalog._LOCK.acquire(timeout=5)
+            catalog._LOCK.release()
+            catalog.load_table(spark, str(tmp_path), "customer")
+            assert catalog.note_read(handle) is None
+        finally:
+            release.set()
+            copier.join(timeout=120)
+        assert not copier.is_alive()
+        assert got[0] is not None and catalog.note_read(handle) is got[0]
+
+    def test_version_over_broadcast_threshold_never_copied(
+        self, spark, sf_dir, tmp_path, monkeypatch
+    ):
+        import shutil
+
+        from strava_data_pipeline_spark.sources import catalog
+
+        shutil.copy(os.path.join(sf_dir, "events.parquet"), tmp_path)
+        handle = catalog.load_table(spark, str(tmp_path), "events")
+        builds = self._count_builds(handle, monkeypatch)
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        threshold = spark.conf.get(key)
+        spark.conf.set(key, "1k")  # the sf0.001 events file is about 27 KB
+        try:
+            assert [catalog.note_read(handle) for _ in range(3)] == [None] * 3
+        finally:
+            spark.conf.set(key, threshold)
+        assert catalog._fits_driver(handle), "fits once the threshold is restored"
+        assert builds == []
+
+    def test_request_over_copied_version_runs_no_spark_job(
+        self, spark, sf_dir, tmp_path, spark_jobs
+    ):
+        import shutil
+
+        from strava_data_pipeline_spark.api.service import PipelineService
+
+        for name in ("events", "customer"):
+            shutil.copy(os.path.join(sf_dir, f"{name}.parquet"), tmp_path)
+        svc = PipelineService(spark, str(tmp_path))
+        # first reads are Spark plans; the second reads copy
+        assert spark_jobs(lambda: svc.get_activity(1).collect()) > 0
+        assert spark_jobs(lambda: svc.get_user_by_id(1).collect()) > 0
+        svc.get_activity(1).collect()
+        svc.get_user_by_id(1).collect()
+        row = svc.list_activities(1, 5).collect()[0]
+        requests = {
+            "get_activity": lambda: svc.get_activity(1),
+            "list_activities": lambda: svc.list_activities(20, 10),
+            "list_activities_after": lambda: svc.list_activities_after(
+                row["ts"], row["event_id"], 20
+            ),
+            "sync_window": lambda: svc.sync_window(1),
+            "get_user_by_id": lambda: svc.get_user_by_id(1),
+            "get_user_by_username": lambda: svc.get_user_by_username("Customer#000000001"),
+            "get_user_by_athlete_id": lambda: svc.get_user_by_athlete_id(10**7 + 1),
+        }
+        for name, request in requests.items():
+            got = []
+            assert spark_jobs(lambda: got.extend(request().collect())) == 0, name
+            assert got, name
 
     def test_new_session_never_gets_a_stopped_sessions_handle(self, sf_dir):
         # stopping a session stops its SparkContext, so this runs in a

@@ -5,6 +5,9 @@ the reference can bring either API)."""
 
 from __future__ import annotations
 
+import os
+from contextlib import contextmanager
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -140,10 +143,7 @@ def _window_sql(src: str, days: int) -> str:
 def svc(spark):
     from strava_data_pipeline_spark.api.service import PipelineService
 
-    yield PipelineService(spark, SF_DIR)
-    # serving a table version twice caches it for the whole session
-    # (catalog.note_read); later modules plan against the files
-    spark.catalog.clearCache()
+    return PipelineService(spark, SF_DIR)
 
 
 def test_get_activity_matches_duckdb(svc):
@@ -241,3 +241,164 @@ def test_sync_window_on_empty_table(spark, tmp_path):
 
     spark.createDataFrame([], EVENT_SCHEMA).write.parquet(str(tmp_path / "events.parquet"))
     assert PipelineService(spark, str(tmp_path)).sync_window(1).collect() == []
+
+
+# -- the Spark-plan path against the indexed path --------------------------
+
+_T0 = 1_704_888_000_000_000  # 2024-01-10 12:00 UTC, the newest ts
+_HOUR, _DAY = 3_600_000_000, 86_400_000_000
+
+# (event_id, ts micros): ts ties at the top, NULL ts, a duplicate
+# event_id, NULL event_ids on and past the tie, a row on the 1-day bound
+_PARITY_EVENTS = [
+    (1, _T0),
+    (2, _T0),
+    (3, _T0),
+    (None, _T0),
+    (4, _T0 - _HOUR),
+    (None, _T0 - 3 * _HOUR),
+    (7, _T0 - _DAY),
+    (4, _T0 - 2 * _DAY),
+    (8, _T0 - 5 * _DAY),
+    (5, None),
+    (6, None),
+    (None, None),
+]
+# (c_custkey, c_name): a shared name, a NULL key, a NULL name
+_PARITY_CUSTOMERS = [(1, "alice"), (2, "bob"), (3, "bob"), (None, "ghost"), (4, None)]
+
+
+def _write_parity_tables(root, events, customers):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(root)
+    n = len(events)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([e for e, _ in events], pa.int64()),
+                "ts": pa.array([t for _, t in events], pa.timestamp("us", tz="UTC")),
+                "user_id": pa.array(range(n), pa.int64()),
+                "event_type": pa.array([f"type{i % 3}" for i in range(n)], pa.string()),
+                "value": pa.array([i / 4 for i in range(n)], pa.float64()),
+            }
+        ),
+        os.path.join(root, "events.parquet"),
+    )
+    pq.write_table(
+        pa.table(
+            {
+                "c_custkey": pa.array([c for c, _ in customers], pa.int64()),
+                "c_name": pa.array([n for _, n in customers], pa.string()),
+            }
+        ),
+        os.path.join(root, "customer.parquet"),
+    )
+
+
+def _overlay(svc):
+    """A user overlay and a tombstone: a new user sharing bob's athlete
+    id, a renamed base user, a deleted base user."""
+    uid = svc.create_user("carol", athlete_id=2 + 10**7)
+    assert svc.update_user(1, username="alice2")
+    assert svc.delete_user(3)
+    return uid
+
+
+def _parity_requests(events, uid):
+    """(name, ordered, request) for every endpoint over the fixture."""
+    from datetime import datetime, timezone
+
+    def naive(micros):
+        # a collected ts: the process's local time, as Spark returns it
+        return datetime.fromtimestamp(micros / 1e6, timezone.utc).astimezone().replace(
+            tzinfo=None
+        )
+
+    n = len(events)
+    out = [(f"get_activity({i})", False, lambda s, i=i: s.get_activity(i)) for i in range(10)]
+    out += [
+        (f"list_activities({n + 2}, 0)", True, lambda s: s.list_activities(n + 2, 0))
+    ]
+    out += [
+        (f"list_activities(4, {o})", True, lambda s, o=o: s.list_activities(4, o))
+        for o in range(0, n + 3, 3)
+    ]
+    cursors = sorted({(t, e) for e, t in events if e is not None and t is not None})
+    out += [
+        (
+            f"list_activities_after({t}, {e}, {k})",
+            True,
+            lambda s, t=t, e=e, k=k: s.list_activities_after(naive(t), e, k),
+        )
+        for t, e in cursors
+        for k in (3, n)
+    ]
+    out += [(f"sync_window({d})", False, lambda s, d=d: s.sync_window(d)) for d in (0, 1, 3)]
+    users = [
+        ("get_user_by_id", [1, 2, 3, 4, 99, uid]),
+        ("get_user_by_username", ["alice", "alice2", "bob", "carol", "ghost", "nobody"]),
+        ("get_user_by_athlete_id", [1 + 10**7, 2 + 10**7, 4 + 10**7, 3 + 10**7]),
+    ]
+    out += [
+        (f"{m}({v!r})", False, lambda s, m=m, v=v: getattr(s, m)(v))
+        for m, vs in users
+        for v in vs
+    ]
+    return out
+
+
+@contextmanager
+def _threshold(spark, value):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _answer(df, ordered):
+    rows = [tuple(r) for r in df.collect()]
+    return df.schema, rows if ordered else sorted(rows, key=repr)
+
+
+@pytest.mark.parametrize("table", ["rows", "empty"])
+def test_indexed_path_answers_as_spark_plan(spark, tmp_path, spark_jobs, table):
+    """Every endpoint answers an indexed version (a driver copy, no
+    Spark job) with the schema and rows a Spark plan gives, in the same
+    order where the endpoint is ordered. The Spark side is a service
+    whose versions are never copied (threshold -1), so every read of it
+    takes the first-read path."""
+    from strava_data_pipeline_spark.api.service import PipelineService
+
+    events = _PARITY_EVENTS if table == "rows" else []
+    planned_root, indexed_root = str(tmp_path / "planned"), str(tmp_path / "indexed")
+    for root in (planned_root, indexed_root):
+        _write_parity_tables(root, events, _PARITY_CUSTOMERS)
+
+    with _threshold(spark, "-1"):
+        planned = PipelineService(spark, planned_root)
+        uid = _overlay(planned)
+        requests = _parity_requests(events, uid)
+        want = [_answer(request(planned), ordered) for _, ordered, request in requests]
+
+    indexed = PipelineService(spark, indexed_root)
+    for _ in range(2):  # the second read of each table copies it
+        indexed.sync_window(1).collect()
+        indexed.get_user_by_id(1).collect()
+    assert _overlay(indexed) == uid
+    for (name, ordered, request), expected in zip(requests, want):
+        got = []
+        assert spark_jobs(lambda: got.append(_answer(request(indexed), ordered))) == 0, name
+        assert got[0][0] == expected[0], f"{name}: schema differs"
+        assert got[0][1] == expected[1], f"{name}: rows differ"
+    answers = {name: rows for (name, _, _), (_, rows) in zip(requests, want)}
+    if events:
+        # the tie cursor keeps the NULL event_id row older than it
+        tie_page = answers[f"list_activities_after({_T0}, 2, {len(events)})"]
+        assert [r[0] for r in tie_page[:3]] == [1, 4, None]
+    else:
+        assert answers["sync_window(1)"] == []

@@ -229,13 +229,6 @@ class TestUserCrud:
     built once per mutation, so each test looks up before and after a
     mutation."""
 
-    @pytest.fixture(autouse=True)
-    def _release_cache(self, spark):
-        # serving customer twice caches it for the whole session
-        # (catalog.note_read); later modules plan against the files
-        yield
-        spark.catalog.clearCache()
-
     def test_create_and_lookups(self, spark, sf_dir):
         svc = PipelineService(spark, sf_dir)
         assert svc.get_user_by_username("new_athlete").count() == 0
@@ -275,6 +268,32 @@ class TestUserCrud:
 
 class TestKeyLifecycle:
     """Key mutation parity: user_api_keys.go:94,111,135,161."""
+
+    def test_driver_held_rows_run_no_spark_job(self, spark, sf_dir, spark_jobs):
+        """The keys and the user overlay are local relations: a lookup
+        over them runs no Spark job (a copied customer version for the
+        users) and returns the rows a frame built from the row list
+        returns, timestamps included."""
+        from strava_data_pipeline_spark.api.service import KEY_SCHEMA
+
+        svc = PipelineService(spark, sf_dir)
+        key = svc.create_api_key("svc", expiry_days=30, user_id=7)
+        svc.create_api_key("forever", expiry_days=0, user_id=7)  # NULL expires_at
+        rows = spark.createDataFrame(svc._key_rows, KEY_SCHEMA)
+        for got, want in (
+            (lambda: svc.keys_for_user(7), rows.where(F.col("user_id") == 7)),
+            (lambda: svc.read_api_key(key), rows.where(F.col("key") == key)),
+        ):
+            collected = []
+            assert spark_jobs(lambda: collected.extend(got().collect())) == 0
+            assert got().schema == KEY_SCHEMA
+            assert sorted(collected) == sorted(want.collect())
+        for _ in range(2):  # the second read copies customer's version
+            svc.get_user_by_id(1).collect()
+        uid = svc.create_user("fresh", athlete_id=4242)
+        collected = []
+        assert spark_jobs(lambda: collected.extend(svc.get_user_by_id(uid).collect())) == 0
+        assert [tuple(r) for r in collected] == [(uid, "fresh", 4242)]
 
     def test_read_update_deactivate(self, spark, sf_dir):
         svc = PipelineService(spark, sf_dir)
