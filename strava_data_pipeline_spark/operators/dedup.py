@@ -459,14 +459,7 @@ def simhash64_pairs(
     )
 
 
-#: docs in the order_by_rarity="auto" decision sample (the statistic is
-#: sample-size-invariant: sample dfs shrink with the sample, the D/Ds
-#: extrapolation grows by the same factor)
-_RARITY_SAMPLE_DOCS = 1024
-#: corpus-extrapolated candidate-savings-per-gram-row above which the
-#: rarity order's df-count shuffle pays for itself (see docstring)
-_RARITY_SAVINGS_THRESHOLD = 6000.0
-#: above this many docs the gram-array and gram-df frames are
+#: above this many docs the gram-array and prefix-index frames are
 #: corpus-sized, never broadcast-sized: pin their joins to non-broadcast
 #: strategies so AQE's post-shuffle size estimate (compressed bytes —
 #: integer gram payloads compress 10-30x) can't pick a broadcast whose
@@ -502,228 +495,86 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    order_by_rarity: bool | str = "auto",
     gram_order: int | str = "auto",
 ) -> DataFrame:
     """Character-n-gram Jaccard near-dup pairs, blocked by
     (lang, length-bucket), found via an exact prefix-filtered
     similarity join (PPJoin-style).
 
-    Gram ORDER is corpus-adaptive (``gram_order="auto"``, r6): the
-    smallest n >= 3 with 26**n >= 3 * n_docs (capped at 7). Rationale:
-    the char-n gram space is FINITE (26**3 ~= 17.6k), and once the
-    corpus outgrows it every gram is hot — mean document frequency
-    grows linearly with corpus size, prefix-filter selectivity
-    collapses, and candidate volume turns quadratic BY SPACE
-    EXHAUSTION, not by algorithm (the r6 mult=100 rehearsal measured
-    exponent ~1.05 with n pinned at 3: 500k docs over a 17.6k space is
-    ~30 occurrences per gram per doc-sized block). Growing the shingle
-    with the corpus is the standard web-scale design (Broder's
-    shingling uses word-level shingles precisely so the space dwarfs
-    the corpus); the rule keeps expected per-gram df bounded, so
-    candidate volume — and the exponent — track the TRUE near-dup
-    structure instead of space saturation. The rule is a deterministic
-    function of exact ``n_docs``, so plans are reproducible; at every
-    provided testdata SF (500..5000 docs) it yields n=3, which is what
-    the static 3-gram DuckDB oracle checks at sf0.01 — the bump to
-    n=5 happens at the 500k-doc rehearsal scale the oracle never sees.
-    Pass an int to pin the order explicitly (tests do).
+    Gram size n is corpus-adaptive (``gram_order="auto"``): the
+    smallest n >= 3 with 26**n >= 3 * n_docs (capped at 7), see
+    :func:`auto_gram_order`. The char-n gram space is finite
+    (26**3 ~= 17.6k); once the corpus outgrows it every gram is hot,
+    prefix-filter selectivity collapses and candidate volume turns
+    quadratic by space exhaustion, not by near-dup structure. Growing
+    n with the corpus keeps the expected per-gram document frequency
+    bounded. The rule is a deterministic function of the exact row
+    count, so plans are reproducible; every provided testdata SF
+    (500..5000 docs) gets n=3, which the static 3-gram DuckDB oracle
+    checks. Pass an int to pin n (tests do).
 
-    Grams travel as portable 32-bit hashes (md5_u32 — the same
-    cross-engine hash every sketch operator uses): BIGINT sort,
-    equi-join, and array_intersect run 5-8× cheaper than 3-char UTF8
-    comparisons and the persisted index shrinks ~8×. Jaccard is
-    computed over the hashed gram SETS — exact with respect to that
-    space, identical in the oracle (which applies the same hash); a
-    within-doc collision (~|G|²/2³³ ≈ 4e-5 per doc) merges two grams
-    on both engines alike. The minhash/simhash operators estimate
-    jaccard far more coarsely, so the trade is strictly better than
-    the sketch tier while staying cheaper than raw-string verify.
+    Grams travel as 4-byte ints: md5_u32 (the cross-engine hash every
+    sketch operator uses) minus 2³¹, a monotone bijection of the u32
+    space, so sort order and set sizes are those of the hashes. Jaccard
+    is exact over the hashed gram SETS, which the oracle hashes the
+    same way; a within-doc collision (~|G|²/2³³ ≈ 4e-5 per doc) merges
+    two grams on both engines alike.
 
-    Result is IDENTICAL to the naive all-blocked-pairs join over the
-    same hashed sets: order each document's grams under a global total
-    order, index only the prefix of length |G| - ceil(t*|G|) + 1 — any
-    pair with jaccard >= t must share a prefix gram (prefix-filter
-    lemma), so nothing is missed. A block of B docs costs O(candidates)
-    instead of O(B^2). The jaccard length filter (|Ga| >= t*|Gb|)
-    prunes further before verification.
+    The result is IDENTICAL to the naive all-blocked-pairs join over
+    the same hashed sets. Each document's grams are sorted by value,
+    one fixed global total order, and only a prefix of each array is
+    indexed: any pair with jaccard >= t must share a prefix gram
+    (prefix-filter lemma, which holds for any total order), so nothing
+    is missed and a block of B docs costs O(candidates), not O(B²).
+    The filters between index and verification are all exact:
 
-    The lemma holds for ANY total order, so the pair set is identical
-    either way — the choice is pure cost, and it is corpus-dependent
-    (measured r4, tools/rarity_bench.py + bench-protocol A/B):
+    - size-oriented prefixes: the pair's SMALLER document is the
+      indexed side and indexes only ``n - ceil(2t/(1+t)·n) + 1`` grams
+      (its partner is at least as large), while the larger probing
+      side keeps ``n - ceil(t·n) + 1``; at t=0.5 the index shrinks
+      from n/2 to n/3 grams per doc;
+    - the length filter ``|Ga| >= t·|Gb|``;
+    - the positional filter on each shared prefix gram (derivation at
+      the join);
+    - the suffix filter: a groupBy counts each pair's shared prefix
+      grams and, because a gram's value bounds its position in every
+      sorted array, bounds the pair's total overlap; pairs that cannot
+      reach the threshold die before the gram-array join (derivation
+      at the filter site).
 
-    - numeric: zero-shuffle narrow index build. Wins on low-vocabulary
-      corpora where gram frequencies are flat — on the stock sf0.1
-      corpus (377 distinct grams) it beats rarity 7.8-9.7s vs
-      13.3-18.8s single-shot, because the df-count shuffle + sort
-      buys no candidate reduction.
-    - ``order_by_rarity=True``: orders each prefix rarest-first by
-      corpus document frequency (one df-count shuffle + join back).
-      Wins when the gram distribution is skewed — 2× on a Zipf
-      10k-word corpus (rare grams head the prefixes, hot grams stop
-      generating candidates), 18% on the 10× mutated-replication
-      corpus.
-    - ``"auto"`` (default, r5): decide per-corpus from a cheap sampled
-      cost model. A gram row (doc, g) in the prefix index matches
-      df(g) other docs, so the expected join fan-out per shuffled row
-      under numeric order is ``Σ_g df(g)² / N`` (occurrence-weighted
-      mean document frequency); rarity order indexes only each doc's
-      rarest grams, collapsing that to the bottom-of-the-distribution
-      value (<3% of the numeric figure on every corpus measured). The
-      auto statistic is Σdf²/N computed over the grams of the FIRST
-      1024 docs (bounded limit+collect, python Counter — driver-side
-      because a Spark job for a 1024-doc sample is ~all fixed
-      overhead) and extrapolated by ``D/D_sample`` (sample dfs scale
-      linearly with corpus size). Calibrated on three
-      measured A/Bs (asymmetric-prefix build, warm, local[32]): stock
-      sf0.1 stat 3.1e3 → numeric wins 6.7 vs 12.4s; Zipf-vocab stat
-      1.3e3 → numeric 30.2 vs 36.9s; 10× mutated-replication stat
-      1.3e4 → rarity wins 46.4 vs 57.0s. Threshold 6e3 (geometric
-      middle); above it the df-count shuffle pays for itself, and the
-      statistic grows with corpus size, so any 100 TB natural corpus
-      lands deep in rarity territory — matching the Zipf-at-scale
-      intuition, while small/flat corpora skip the extra shuffle.
-
-    Candidate-generation cost (r5): the self-join is size-oriented —
-    the pair's SMALLER document is the indexed side and indexes only
-    its first ``n - ceil(2t/(1+t)·n) + 1`` grams (any partner is at
-    least as large, so required overlap >= 2t/(1+t)·n), while the
-    larger probing side keeps the standard ``n - ceil(t·n) + 1``
-    prefix. At t=0.5 the indexed side shrinks from n/2 to n/3 — fewer
-    index rows, fewer candidate rows, identical pair set (the
-    first-shared-gram argument holds for both windows).
-
-    Verification cost (r6 — it was the scaling bottleneck, mult=100
-    exponent 1.03): three exact changes, pair set provably unchanged:
-
-    - grams travel as 4-byte ints (md5_u32 − 2³¹, a monotone bijection
-      of the u32 space): the verify join — which ships a gram ARRAY
-      per candidate pair, the operator's largest byte mover — halves;
-    - the pair ``distinct`` became a groupBy that counts each pair's
-      shared prefix grams, feeding an aggregated suffix-bound filter
-      (derivation at the filter site): candidates whose overlap
-      provably can't reach the threshold die BEFORE the array join
-      (rehearsal mult=10: 24.4M → 9.7M verified candidates, verify
-      stage 2×);
-    - the ``auto`` rarity stat samples UNIFORMLY instead of limit(k) —
-      a head sample reads one contiguous slice of the corpus and
-      extrapolates its dense gram space to all of it, flipping the
-      order choice to rarity on corpora where numeric is measured
-      1.3-1.7× faster (the mult=100 rehearsal; any source-contiguous
-      crawl layout).
+    Broadcast contract: below ``_HINT_DOCS_BOUND`` docs AQE picks join
+    strategies from measured sizes. Above it the prefix-index join and
+    the verify joins are pinned to sort-merge, because those frames
+    are corpus-sized and AQE's compressed-size estimate can otherwise
+    choose a broadcast whose in-memory build is GBs. The hint changes
+    the physical strategy only, never the pair set.
     """
-    # one exact count feeds both adaptive decisions (gram order +
-    # rarity-order extrapolation); parquet row-count is metadata-cheap
-    n_docs = (
-        df.count() if "auto" in (gram_order, order_by_rarity) else 0
-    )
+    # the exact row count (parquet metadata) feeds the gram size and
+    # the broadcast gate, so it is taken even when n is pinned
+    n_docs = df.count()
     if gram_order == "auto":
         gram_order = auto_gram_order(n_docs)
     # past the bound, corpus-sized frames must not be broadcast —
-    # see _HINT_DOCS_BOUND. The hint changes the physical strategy
-    # only; the pair set and the oracle hash are join-order-invariant.
+    # see _HINT_DOCS_BOUND
     big_corpus = n_docs > _HINT_DOCS_BOUND
-    base = _spread(df).select(
+    ordered = _spread(df).select(
         F.col(id_col).alias("doc"),
         F.col("lang"),
         F.floor(F.col("n_chars") / F.lit(64)).cast("int").alias("len_bucket"),
         # grams as 4-byte ints: md5_u32 shifted by 2^31 — a MONOTONE
         # bijection of the u32 space into int range, so sort order,
         # set sizes and therefore jaccard are untouched while the
-        # persisted index and the verify-join payload halve (r6: the
-        # verify join ships ~n-gram arrays per candidate pair — at
-        # mult=100 that shuffle is the operator's largest byte mover)
-        F.array_distinct(
-            F.transform(
-                char_ngrams(F.col(text_col), gram_order),
-                lambda g: (md5_u32(g) - F.lit(2147483648)).cast("int"),
+        # persisted index and the verify-join payload halve. Sorting by
+        # value is the one global gram order the prefixes use.
+        F.array_sort(
+            F.array_distinct(
+                F.transform(
+                    char_ngrams(F.col(text_col), gram_order),
+                    lambda g: (md5_u32(g) - F.lit(2147483648)).cast("int"),
+                )
             )
         ).alias("grams"),
-    )
-    if order_by_rarity == "auto":
-        # The stat is DRIVER-SIDE over a bounded ~1024-doc sample: one
-        # sampled scan + limit + collect (~300 KB) plus a python
-        # Counter pass. The previous Spark-job form (limit →
-        # repartition → explode → two chained aggs) cost ~2.5-3s per
-        # invocation — almost all fixed codegen/scheduling overhead
-        # for a 145k-row job — and sat directly on the headline floor.
-        # The sample is UNIFORM (seeded Bernoulli over the whole scan),
-        # not limit(k): limit takes the first file chunk, and on a
-        # corpus whose vocabulary varies across its span (the r5
-        # mult=100 rehearsal — 130 dialects in file order — or any
-        # multi-source crawl laid out source-contiguous) a head sample
-        # measures ONE slice's dense gram space and extrapolates it to
-        # all of them, overestimating Σdf²/N by ~the number of slices
-        # (measured: head sample said 5.5e4 → rarity at mult=100, the
-        # true uniform stat is ~4e3 → numeric, and numeric is 1.3×
-        # faster there). Cost: one text-column scan at sample rate —
-        # bounded collect, and the operator's own gram build scans the
-        # same column right after, so the marginal IO is a prefix of
-        # work already paid. The choice it feeds is pure COST, never
-        # correctness: the prefix-filter lemma holds for any total
-        # order, so both orders emit the identical pair set (and the
-        # oracle hash can't see the difference). Gram semantics mirror
-        # functions/text.char_ngrams at the chosen gram_order
-        # (lower-cased, distinct n-char substrings, shorter texts →
-        # none); the collect is bounded by _RARITY_SAMPLE_DOCS by
-        # construction.
-        frac = min(1.0, 4.0 * _RARITY_SAMPLE_DOCS / max(n_docs, 1))
-        sample = [
-            r[0] or ""
-            for r in df.select(text_col)
-            .sample(fraction=frac, seed=7)
-            .limit(_RARITY_SAMPLE_DOCS)
-            .collect()
-        ]
-        from collections import Counter
-
-        dfreq: Counter = Counter()
-        for txt in sample:
-            low = txt.lower()
-            if len(low) >= gram_order:
-                dfreq.update(
-                    {
-                        low[i : i + gram_order]
-                        for i in range(len(low) - gram_order + 1)
-                    }
-                )
-        n_rows = sum(dfreq.values())
-        if not n_rows:
-            order_by_rarity = False
-        else:
-            v_all = sum(c * c for c in dfreq.values())
-            scale = n_docs / max(len(sample), 1)
-            fanout_per_row = v_all / n_rows * scale
-            order_by_rarity = fanout_per_row >= _RARITY_SAVINGS_THRESHOLD
-    if order_by_rarity:
-        exploded = base.select(
-            "doc", "lang", "len_bucket", F.explode("grams").alias("gram")
-        )
-        # grams are distinct per doc → count(*) per gram == document freq
-        dfreq = exploded.groupBy("gram").agg(F.count("*").alias("gram_df"))
-        if big_corpus:
-            # gram-df cardinality approaches the gram SPACE (26^order,
-            # sized to 3x the corpus by auto_gram_order) — corpus-sized,
-            # not dim-sized; shuffle-hash keeps the build per-partition
-            dfreq = dfreq.hint("shuffle_hash")
-        ordered = (
-            exploded.join(dfreq, "gram")
-            .groupBy("doc", "lang", "len_bucket")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("gram_df", "gram"))),
-                    lambda s: s["gram"],
-                ).alias("grams"),
-                F.count("*").alias("n_grams"),
-            )
-        )
-    else:
-        ordered = base.select(
-            "doc",
-            "lang",
-            "len_bucket",
-            F.array_sort("grams").alias("grams"),
-        ).withColumn("n_grams", F.size("grams").cast("long"))
+    ).withColumn("n_grams", F.size("grams").cast("long"))
     # `ordered` feeds three consumers (prefix index + both verify
     # sides); persist so the gram pipeline runs once, not three times.
     # MEMORY_AND_DISK default: a 100 TB run spills instead of OOMing.
@@ -737,19 +588,13 @@ def ngram_jaccard_pairs(
     # holds). The 1e-9 keeps a float-rounded ceil from overshooting at
     # exact integer boundaries — rounding DOWN the required overlap
     # only lengthens a prefix, which is always safe.
-    idx_len = (
-        F.col("n_grams")
-        - F.ceil(
-            F.lit(2.0 * threshold / (1.0 + threshold)) * F.col("n_grams")
-            - F.lit(1e-9)
-        )
-        + 1
-    ).cast("int")
-    probe_len = (
-        F.col("n_grams")
-        - F.ceil(F.lit(threshold) * F.col("n_grams") - F.lit(1e-9))
-        + 1
-    ).cast("int")
+    idx_frac = 2.0 * threshold / (1.0 + threshold)
+
+    def _prefix_len(n: F.Column, frac: float) -> F.Column:
+        return n - F.ceil(F.lit(frac) * n - F.lit(1e-9)) + 1
+
+    idx_len = _prefix_len(F.col("n_grams"), idx_frac).cast("int")
+    probe_len = _prefix_len(F.col("n_grams"), threshold).cast("int")
 
     def _inv(plen: F.Column) -> DataFrame:
         return ordered.select(
@@ -759,7 +604,7 @@ def ngram_jaccard_pairs(
             "n_grams",
             # last prefix gram VALUE (NULL-safe on empty gram arrays,
             # which emit no posexplode rows anyway) — feeds the
-            # aggregated suffix-bound filter on the numeric path
+            # aggregated suffix-bound filter
             F.get("grams", plen - 1).alias("last_pref"),
             F.posexplode(F.slice("grams", 1, plen)).alias("pos", "gram"),
         )
@@ -806,67 +651,47 @@ def ngram_jaccard_pairs(
         & (F.col("a.n_grams") >= threshold * F.col("b.n_grams"))
         & (overlap_bound >= overlap_needed),
     )
-    if order_by_rarity:
-        # rarity arrays sort by (corpus df, gram), so gram VALUES carry
-        # no positional meaning and the value-based suffix bound below
-        # does not apply — dedup candidates the plain way
-        cand = match.select(
-            F.least(F.col("a.doc"), F.col("b.doc")).alias("doc_a"),
-            F.greatest(F.col("a.doc"), F.col("b.doc")).alias("doc_b"),
-        ).distinct()
-    else:
-        # Aggregated suffix-bound filter (r6, the PPJoin suffix filter
-        # at pair granularity). Arrays are value-sorted and distinct;
-        # for a pair let m = min(last_pref_a, last_pref_b) and
-        # cnt = |prefA ∩ prefB| (= the pair's match-row count):
-        #   * every shared gram <= m is <= both last prefix values, so
-        #     it lies in BOTH prefixes and is counted by cnt — exactly;
-        #   * every shared gram > m lies in the SUFFIX of the side
-        #     whose last prefix value is m (<= n_min - pref_len_min of
-        #     them), and is an element > m of the other side, which has
-        #     at least cnt elements <= m (<= n_other - cnt of them).
-        # So overlap <= cnt + min(n_min - pref_min, n_other - cnt); a
-        # pair whose bound falls below ceil(t/(1+t)(na+nb)) can NEVER
-        # verify — pruning it is exact. Measured at rehearsal mult=10:
-        # 24.4M candidates -> 9.7M before the array join, identical
-        # 2.03M verified pairs, verify stage 2x faster. The groupBy
-        # replaces the old pair distinct — same shuffle, more signal.
-        agg = match.groupBy(
-            F.col("a.doc").alias("da"),
-            F.col("b.doc").alias("db"),
-            F.col("a.n_grams").alias("na"),
-            F.col("b.n_grams").alias("nb"),
-            F.col("a.last_pref").alias("lpa"),
-            F.col("b.last_pref").alias("lpb"),
-        ).agg(F.count("*").alias("pref_overlap"))
-        ia = (
-            F.col("na")
-            - F.ceil(
-                F.lit(2.0 * threshold / (1.0 + threshold)) * F.col("na")
-                - F.lit(1e-9)
-            )
-            + 1
-        )
-        jb = (
-            F.col("nb")
-            - F.ceil(F.lit(threshold) * F.col("nb") - F.lit(1e-9))
-            + 1
-        )
-        a_is_min = F.col("lpa") <= F.col("lpb")
-        suf_min = F.when(a_is_min, F.col("na") - ia).otherwise(F.col("nb") - jb)
-        n_other = F.when(a_is_min, F.col("nb")).otherwise(F.col("na"))
-        pair_bound = F.col("pref_overlap") + F.least(
-            suf_min, n_other - F.col("pref_overlap")
-        )
-        pair_needed = F.ceil(
-            F.lit(threshold / (1.0 + threshold))
-            * (F.col("na") + F.col("nb"))
-            - F.lit(1e-9)
-        )
-        cand = agg.where(pair_bound >= pair_needed).select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-        )
+    # Aggregated suffix-bound filter (the PPJoin suffix filter at
+    # pair granularity). Arrays are value-sorted and distinct;
+    # for a pair let m = min(last_pref_a, last_pref_b) and
+    # cnt = |prefA ∩ prefB| (= the pair's match-row count):
+    #   * every shared gram <= m is <= both last prefix values, so
+    #     it lies in BOTH prefixes and is counted by cnt — exactly;
+    #   * every shared gram > m lies in the SUFFIX of the side
+    #     whose last prefix value is m (<= n_min - pref_len_min of
+    #     them), and is an element > m of the other side, which has
+    #     at least cnt elements <= m (<= n_other - cnt of them).
+    # So overlap <= cnt + min(n_min - pref_min, n_other - cnt); a
+    # pair whose bound falls below ceil(t/(1+t)(na+nb)) can NEVER
+    # verify — pruning it is exact. Measured at rehearsal mult=10:
+    # 24.4M candidates -> 9.7M before the array join, identical
+    # 2.03M verified pairs, verify stage 2x faster. The groupBy also
+    # dedups the candidate pairs.
+    agg = match.groupBy(
+        F.col("a.doc").alias("da"),
+        F.col("b.doc").alias("db"),
+        F.col("a.n_grams").alias("na"),
+        F.col("b.n_grams").alias("nb"),
+        F.col("a.last_pref").alias("lpa"),
+        F.col("b.last_pref").alias("lpb"),
+    ).agg(F.count("*").alias("pref_overlap"))
+    ia = _prefix_len(F.col("na"), idx_frac)
+    jb = _prefix_len(F.col("nb"), threshold)
+    a_is_min = F.col("lpa") <= F.col("lpb")
+    suf_min = F.when(a_is_min, F.col("na") - ia).otherwise(F.col("nb") - jb)
+    n_other = F.when(a_is_min, F.col("nb")).otherwise(F.col("na"))
+    pair_bound = F.col("pref_overlap") + F.least(
+        suf_min, n_other - F.col("pref_overlap")
+    )
+    pair_needed = F.ceil(
+        F.lit(threshold / (1.0 + threshold))
+        * (F.col("na") + F.col("nb"))
+        - F.lit(1e-9)
+    )
+    cand = agg.where(pair_bound >= pair_needed).select(
+        F.least("da", "db").alias("doc_a"),
+        F.greatest("da", "db").alias("doc_b"),
+    )
     ga = ordered.select(
         F.col("doc").alias("doc_a"),
         F.col("grams").alias("grams_a"),

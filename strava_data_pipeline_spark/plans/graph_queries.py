@@ -125,14 +125,6 @@ SELECT s AS partkey, peel_round, deg_at_peel FROM (
 )
 
 
-# Mode gate (r8): the incremental shape wins while the edge list is
-# cheap to rescan; the per-round-prune shape wins once it is not. The
-# lineitem row count comes from parquet statistics (zero-column count,
-# metadata-fast) — the same gate mechanism as pagerank_parts'
-# _PAGERANK_PERSIST_ROWS.
-_KCORE_PRUNE_ROWS = 4_000_000
-
-
 @register("kcore_peel", oracle=_KCORE_ORACLE)
 def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-core decomposition of the co-purchase graph, four unrolled
@@ -145,72 +137,38 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a one-shot degree filter, and it is the standard dense-
     subgraph screen before community detection.
 
-    SIZE-ADAPTIVE execution (r8): two measured regimes, gated on the
-    parquet-stats lineitem row bound exactly like pagerank_parts'
-    persist gate, each keeping the regime where it measured faster
-    (SCALING_M100_R7_kcore.json vs _R6_graph.json):
-
-    - below _KCORE_PRUNE_ROWS — INCREMENTAL degree maintenance
-      (_kcore_incremental, the r7 shape): at sf0.1 it HALVES the query
-      (14.8s -> 6.6s) because the per-round persist+materialize fixed
-      costs go away.
-    - above — PER-ROUND EDGE PRUNE with full recounts
-      (_kcore_pruned, the r6 shape): at mult=100 (240M edges) it wins
-      by ~15% (59.5s vs 68.4s) because scans of a shrinking pruned
-      list beat four cached full-list scans once the list is that
-      big. The prune-once hybrid A/B'd a wash at mult=100 in r7
-      (52.6s vs 55.8s, inside box variance) and stays unlanded —
-      thread CLOSED in r9: the box's measured run-to-run variance
-      (0.7x-1.5x of floors within an hour) exceeds the hybrid's
-      largest plausible effect, so no local A/B can certify the
-      >=10% win that would justify a third iteration class; both
-      landed modes carry recorded floors and plan pins.
-
-    Broadcast contract (both modes): the per-round peel/node join
-    auto-broadcasts while the node set fits
-    spark.sql.autoBroadcastJoinThreshold (AQE decides from the
-    MEASURED size), preserving the edge partitioning and keeping the
-    count-by-s exchange-free. Above the threshold Spark falls back to
-    a shuffle join — correctness unchanged, two extra edge-subset
-    exchanges. Broadcast/shuffle and incremental/pruned modes are all
-    pinned by tests/test_graph_pack.py::TestKcorePlan. Cache
-    lifecycle is caller-owned, as with minhash_lsh_pairs (bench
-    clears per query; loops must clearCache after materializing)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    if li.count() > _KCORE_PRUNE_ROWS:
-        return _kcore_pruned(spark, sf_dir)
-    return _kcore_incremental(spark, sf_dir)
-
-
-def _kcore_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The small/mid-scale mode — INCREMENTAL degree maintenance (r7):
-    the peeled nodes' edges are known, so round r+1's degrees are
-    round r's minus the edges lost to just-peeled neighbors,
+    Degrees are maintained INCREMENTALLY: the peeled nodes' edges are
+    known, so round r+1's degrees are round r's minus the edges lost
+    to just-peeled neighbors,
 
         deg_{r+1}(s) = deg_r(s) - |{d in peel_r : (s,d) in u0}|,
 
     and the subtraction is exact against the ORIGINAL edge list: s
     survived rounds 1..r and d survived rounds 1..r-1 (it peeled in
     round r), so every (s,d) edge of u0 between them is still present
-    in u_{r-1} — no earlier round can have removed it. That identity
-    eliminates the per-round edge-list prune entirely: the edge list
-    is partitioned by the degree key and persisted ONCE
-    (MEMORY_AND_DISK — this mode only runs below the
-    _KCORE_PRUNE_ROWS gate, so the single list is bounded and spills
-    instead of OOMing; the r12 interleaved A/B measured the
-    memory-resident copy ~17% faster than DISK_ONLY every round),
-    then each round is one cached-scan join against the node-sized
-    peel set (filtering to edges that touch a peeled d) plus a
-    map-side-combinable count by s and a node-sized LEFT join for the
+    in u_{r-1} — no earlier round can have removed it. The edge list
+    is therefore partitioned by the degree key and persisted ONCE
+    (MEMORY_AND_DISK: it spills under memory pressure instead of
+    failing) and never pruned. Each round is one cached-scan join
+    against the node-sized peel set (edges that touch a peeled d), a
+    map-side-combinable count by s, and a node-sized LEFT join for the
     subtraction (coalesce(lost, 0) — most survivors lose nothing; a
     node whose every neighbor peeled reaches 0 and peels next round,
     so zero-degree stragglers still peel instead of vanishing).
-    Versus the pruned shape this drops, per round, one full-edge
-    degree recount, two semi-join scans, and one edge-generation
-    persist. Lineage stays linear because each round's node-sized
-    degree frame is persisted (memory) and the edge list resolves to
-    the one cached relation — the 3^rounds analyzer blow-up of an
-    uncut prune chain never forms."""
+    Lineage stays linear because each round's node-sized degree frame
+    is persisted (memory) and the edge list resolves to the one
+    cached relation; the oracle mirrors the rounds with AS
+    MATERIALIZED CTEs.
+
+    Broadcast contract: the per-round peel join auto-broadcasts while
+    the peel set fits spark.sql.autoBroadcastJoinThreshold (AQE
+    decides from the MEASURED size), preserving the edge partitioning
+    and keeping the count-by-s exchange-free. Above the threshold
+    Spark falls back to a shuffle join — correctness unchanged. The
+    persist policy and both join strategies are pinned by
+    tests/test_graph_pack.py::TestKcorePlan. Cache lifecycle is
+    caller-owned, as with minhash_lsh_pairs (bench clears per query;
+    loops must clearCache after materializing)."""
     from pyspark.storagelevel import StorageLevel
 
     edges = _copurchase_edges(spark, sf_dir)
@@ -220,14 +178,9 @@ def _kcore_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE upfront hash-partition on the degree key, persisted once and
     # never pruned: the initial count and every per-round lost-count
     # run exchange-free on this layout (peel sets broadcast).
-    # MEMORY_AND_DISK, not DISK_ONLY (r12 A/B, interleaved min-of-3:
-    # 6.4-6.5s vs 7.7-7.8s at sf0.1 — every per-round lost-join scans
-    # this list, and the memory-resident copy wins every round): this
-    # mode only runs BELOW the _KCORE_PRUNE_ROWS gate, so the list is
-    # bounded and eviction-to-disk (not OOM) is the pressure behavior;
-    # the r6 mult=100 OOM that mandated DISK_ONLY came from five
-    # per-round edge GENERATIONS in the pruned shape, which keeps its
-    # own policy above the gate.
+    # MEMORY_AND_DISK, not DISK_ONLY (interleaved min-of-3 at sf0.1:
+    # 6.4-6.5s vs 7.7-7.8s — every per-round lost-join scans this
+    # list); under memory pressure it evicts to disk rather than fails.
     und = und.repartition("s").persist(StorageLevel.MEMORY_AND_DISK)
     # Round-1 degrees: the only full count. Every node of u0 has >= 1
     # edge, so the groupBy covers nodes0 exactly.
@@ -273,70 +226,6 @@ def _kcore_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s",
         F.lit(0).cast("int").alias("peel_round"),
         F.col("c").alias("deg_at_peel"),
-    )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out.unionAll(surv).withColumnRenamed("s", "partkey")
-
-
-def _kcore_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The large-scale mode — per-round edge prune + full recount (the
-    r6 shape): each round is (a) a map-side-combinable degree count
-    over the CURRENT edge generation, (b) a node-sized LEFT join from
-    the surviving node list (so zero-degree stragglers peel instead of
-    vanishing — the edge groupBy alone would lose them), and (c) two
-    key-partitioned semi-joins pruning the edge list. The list only
-    SHRINKS round over round, which is exactly why this wins past
-    _KCORE_PRUNE_ROWS: at 240M+ edges the incremental mode's four
-    full-list rescans cost more than the prune that makes later scans
-    small. Only (BIGINT, BIGINT) edge tuples and node-sized
-    (id, count) frames ever shuffle; nothing broadcasts by hint (AQE
-    decides). Each round's edge generation persists DISK_ONLY and each
-    degree frame in memory — here the lineage cut is CORRECTNESS of
-    the plan, not just hygiene: round r's edge list references round
-    r-1's THREE times (degree count + two semi-joins), so an uncut
-    lineage grows 3^rounds and the analyzer chokes on the exponential
-    tree long before any data moves. The final round's edge list feeds
-    exactly one consumer (the survivor degree count) and is not
-    persisted — a write with no second read."""
-    from pyspark.storagelevel import StorageLevel
-
-    edges = _copurchase_edges(spark, sf_dir)
-    und = edges.select(
-        F.col("a").alias("s"), F.col("b").alias("d")
-    ).unionAll(edges.select(F.col("b").alias("s"), F.col("a").alias("d")))
-    # ONE upfront hash-partition on the degree key: the node-list
-    # semi-joins broadcast (node ids are tiny next to edges) and so
-    # PRESERVE this partitioning through every round — all four
-    # degree-count groupBys run exchange-free on the cached layout.
-    und = und.repartition("s").persist(StorageLevel.DISK_ONLY)
-    nodes = und.select("s").distinct()
-    outs: list[DataFrame] = []
-    for r in range(1, _KCORE_ROUNDS + 1):
-        cnt = und.groupBy("s").agg(F.count("*").cast("bigint").alias("c"))
-        deg = nodes.join(cnt, "s", "left").select(
-            "s", F.coalesce("c", F.lit(0)).cast("bigint").alias("c")
-        )
-        deg = deg.persist()
-        outs.append(
-            deg.where(F.col("c") < _KCORE_K).select(
-                "s",
-                F.lit(r).cast("int").alias("peel_round"),
-                F.col("c").alias("deg_at_peel"),
-            )
-        )
-        nodes = deg.where(F.col("c") >= _KCORE_K).select("s")
-        und = und.join(nodes, "s", "left_semi").join(
-            nodes.withColumnRenamed("s", "d"), "d", "left_semi"
-        )
-        if r < _KCORE_ROUNDS:
-            und = und.persist(StorageLevel.DISK_ONLY)
-    cnt = und.groupBy("s").agg(F.count("*").cast("bigint").alias("c"))
-    surv = nodes.join(cnt, "s", "left").select(
-        "s",
-        F.lit(0).cast("int").alias("peel_round"),
-        F.coalesce("c", F.lit(0)).cast("bigint").alias("deg_at_peel"),
     )
     out = outs[0]
     for o in outs[1:]:

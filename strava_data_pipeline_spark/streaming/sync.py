@@ -112,13 +112,13 @@ def start_incremental_sync(
         if not days:
             return
         # only the touched day dirs are listed and read, and the merge
-        # feeds the overwrite with no checkpoint (module docstring)
+        # feeds the overwrite with no checkpoint (module docstring). A
+        # batch of only new days still merges: it may hold several
+        # versions of one activity.
         base = read_days(sess, target_dir, TARGET_SCHEMA, days)
-        merged = (
-            b
-            if base is None
-            else merge_latest_wins(base, b, keys=["event_id"], order_by=["ts"])
-        )
+        if base is None:
+            base = b.limit(0)
+        merged = merge_latest_wins(base, b, keys=["event_id"], order_by=["ts"])
         (
             merged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -203,13 +203,11 @@ def test_auto_gram_order_thresholds():
     assert D.auto_gram_order(10**12) == 7  # capped
 
 
-def test_ngram_jaccard_pinned_order_matches_naive(spark, docs):
-    # pinned gram_order=4 must equal the naive all-pairs jaccard over
-    # 4-gram sets — the PPJoin prefix/positional/suffix filters are
-    # exact for ANY gram order, not just the default 3
+def _naive_jaccard_pairs(docs, n, threshold=0.5):
+    """All-pairs jaccard over n-gram sets within (lang, len // 64)."""
     rows = {r["doc_id"]: (r["text"].lower(), r["lang"]) for r in docs.collect()}
     grams = {
-        d: {t[i : i + 4] for i in range(len(t) - 3)}
+        d: {t[i : i + n] for i in range(len(t) - n + 1)}
         for d, (t, _) in rows.items()
     }
     block = {d: (lang, len(t) // 64) for d, (t, lang) in rows.items()}
@@ -221,33 +219,74 @@ def test_ngram_jaccard_pinned_order_matches_naive(spark, docs):
                 continue
             inter = len(grams[a] & grams[b])
             j = inter / len(grams[a] | grams[b])
-            if j >= 0.5:
+            if j >= threshold:
                 expect[(a, b)] = round(j, 4)
-    got = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(docs, gram_order=4).collect()
-    }
-    assert got == expect
+    return expect
+
+
+@pytest.fixture(scope="module")
+def zipf_docs(spark):
+    # words drawn Zipf-style (weight 1/rank) from a 3,000-word
+    # vocabulary: a few grams are in nearly every doc, most in one or
+    # two. Every third doc gets a near-copy with two words replaced.
+    import random
+
+    rng = random.Random(11)
+    vocab = [
+        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(rng.randint(3, 8)))
+        for _ in range(3000)
+    ]
+    weights = [1.0 / (rank + 1) for rank in range(len(vocab))]
+    rows = []
+    for d in range(60):
+        words = rng.choices(vocab, weights, k=rng.randint(20, 40))
+        rows.append((d, " ".join(words), "en"))
+        if d % 3 == 0:
+            for k in rng.sample(range(len(words)), 2):
+                words[k] = rng.choice(vocab)
+            rows.append((1000 + d, " ".join(words), "en"))
+    df = spark.createDataFrame(rows, "doc_id bigint, text string, lang string")
+    return df.withColumn("n_chars", F.length("text").cast("bigint"))
+
+
+def test_ngram_jaccard_pinned_order_matches_naive(spark, docs, zipf_docs):
+    # pinned gram_order=4 must equal the naive all-pairs jaccard over
+    # 4-gram sets — the PPJoin prefix/positional/suffix filters are
+    # exact for ANY gram order, not just the default 3, on a flat
+    # vocabulary and on a skewed one alike
+    for corpus, min_pairs in ((docs, 2), (zipf_docs, 10)):
+        expect = _naive_jaccard_pairs(corpus, 4)
+        got = {
+            (r["doc_a"], r["doc_b"]): r["jaccard"]
+            for r in D.ngram_jaccard_pairs(corpus, gram_order=4).collect()
+        }
+        assert len(expect) >= min_pairs
+        assert got == expect
 
 
 def test_ngram_jaccard_big_corpus_forbids_broadcast(spark, docs, monkeypatch):
-    # past _HINT_DOCS_BOUND the gram-array / gram-df frames are
+    # past _HINT_DOCS_BOUND the gram-array and prefix-index frames are
     # corpus-sized: the plan must pin non-broadcast joins (the mult=100
     # rehearsal OOMed an 8g driver on a 2 GB AQE broadcast build before
     # the gate). Patch the bound below the fixture corpus and check the
     # pre-AQE physical plan: the verify joins become SortMergeJoin and
-    # no broadcast exchange appears anywhere.
-    baseline = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.ngram_jaccard_pairs(docs).collect()
-    }
-    monkeypatch.setattr(D, "_HINT_DOCS_BOUND", 2)
-    out = D.ngram_jaccard_pairs(docs)
-    plan = out._jdf.queryExecution().sparkPlan().toString()
-    assert "SortMergeJoin" in plan
-    assert "BroadcastHashJoin" not in plan and "BroadcastExchange" not in plan
-    # the physical strategy must not change the answer
-    assert {(r["doc_a"], r["doc_b"]) for r in out.collect()} == baseline
+    # no broadcast exchange appears anywhere — with the gram order
+    # chosen from the corpus and with it pinned.
+    bound = D._HINT_DOCS_BOUND
+    for kw in ({}, {"gram_order": 4}):
+        monkeypatch.setattr(D, "_HINT_DOCS_BOUND", bound)
+        baseline = {
+            (r["doc_a"], r["doc_b"])
+            for r in D.ngram_jaccard_pairs(docs, **kw).collect()
+        }
+        monkeypatch.setattr(D, "_HINT_DOCS_BOUND", 2)
+        out = D.ngram_jaccard_pairs(docs, **kw)
+        plan = out._jdf.queryExecution().sparkPlan().toString()
+        assert "SortMergeJoin" in plan, kw
+        assert "BroadcastHashJoin" not in plan, kw
+        assert "BroadcastExchange" not in plan, kw
+        # the physical strategy must not change the answer
+        assert {(r["doc_a"], r["doc_b"]) for r in out.collect()} == baseline
 
 
 def test_fingerprints_match_for_dups(spark, docs):

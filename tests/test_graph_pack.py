@@ -204,11 +204,10 @@ class TestKcoreFixpointOperator:
 
 
 class TestKcorePlan:
-    """Pins the r7 incremental-degree physical shape of kcore_peel:
-    exactly ONE persisted edge relation (MEMORY_AND_DISK serialized
-    since the r12 A/B; the prune-per-round shape persisted one edge
-    generation per round) plus one node-sized degree frame per round
-    boundary; and BOTH peel-join modes (AQE auto-broadcast under the
+    """Pins the incremental-degree physical shape of kcore_peel:
+    exactly ONE persisted edge relation (MEMORY_AND_DISK serialized; a
+    per-round edge prune would persist one edge generation per round)
+    plus one node-sized degree frame per round boundary; and BOTH peel-join modes (AQE auto-broadcast under the
     threshold, shuffle fallback above it) produce identical rows."""
 
     def test_one_edge_persist_total(self, spark):
@@ -295,63 +294,4 @@ class TestKcorePlan:
             }
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-            spark.catalog.clearCache()
-
-    def test_size_gate_picks_pruned_mode_and_modes_agree(
-        self, spark, tmp_path, monkeypatch
-    ):
-        # r8 size-adaptive gate: past _KCORE_PRUNE_ROWS lineitem rows
-        # the registry entry must route to the per-round-prune shape
-        # (its signature: MULTIPLE DISK_ONLY edge generations — the
-        # incremental shape keeps its ONE edge list in MEMORY_AND_DISK
-        # since r12, i.e. zero pure-disk relations), and both modes
-        # must produce identical rows on the same planted cascade.
-        monkeypatch.setattr(G, "_KCORE_K", 2)
-        edges = [(1, 2), (2, 3), (3, 101)]
-        cliques = [(101, 102, 103)]
-        sf = _mklineitem(spark, tmp_path, edges, cliques)
-        want = {
-            (n, r, d)
-            for n, (r, d) in _ref_kcore(
-                _adj(edges, cliques), k=2, rounds=4
-            ).items()
-        }
-
-        def run():
-            spark.catalog.clearCache()
-            before = {
-                i.id()
-                for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-            }
-            df = G.kcore_peel(spark, sf)
-            rows = {
-                (r["partkey"], r["peel_round"], r["deg_at_peel"])
-                for r in df.collect()
-            }
-            levels = Counter(
-                i.storageLevel().description()
-                for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-                if i.id() not in before
-            )
-            disk_only = sum(
-                n
-                for lvl, n in levels.items()
-                if "Disk" in lvl and "Memory" not in lvl
-            )
-            return rows, disk_only
-
-        try:
-            # default gate: the planted graph is far below the bound →
-            # incremental (edge list in MEMORY_AND_DISK, no pure-disk
-            # relations)
-            rows_inc, disk_inc = run()
-            assert rows_inc == want
-            assert disk_inc == 0
-            # gate forced low → pruned mode: one persisted generation
-            # per non-final round plus the initial list
-            monkeypatch.setattr(G, "_KCORE_PRUNE_ROWS", 0)
-            rows_pr, disk_pr = run()
-            assert rows_pr == want
-            assert disk_pr == G._KCORE_ROUNDS  # initial + rounds 1..3
-        finally:
             spark.catalog.clearCache()

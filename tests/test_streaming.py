@@ -123,6 +123,18 @@ def test_incremental_sync_upserts(spark, dirs):
     assert _partition_state(target, "2024-01-05") == untouched_before
 
 
+def test_sync_keeps_latest_version_on_new_days(spark, dirs):
+    # two landed files hold activity 7 on a day the target lacks: one
+    # trigger reads no stored day, and must still merge latest-wins
+    landing, target, ckpt = dirs
+    _write_batch(spark, landing, [(7, datetime(2024, 3, 1, 8, 0), 1, "run", 5.0)])
+    _write_batch(spark, landing, [(7, datetime(2024, 3, 1, 8, 1), 1, "run", 5.5)])
+    q = start_incremental_sync(read_event_stream(spark, landing), target, ckpt)
+    q.awaitTermination(120)
+    rows = [(r["ts"], r["value"]) for r in spark.read.parquet(target).collect()]
+    assert rows == [(datetime(2024, 3, 1, 8, 1), 5.5)]
+
+
 def _sync_job_count(spark, landing, target, ckpt) -> int:
     """Run one availableNow sync and count the Spark jobs it started: a
     stream's jobs carry its run id as their job group."""
