@@ -7,6 +7,13 @@ work happens inside buckets, which is the property that survives a
 100 TB corpus. Everything is built-in-function DataFrame code — no
 Python UDFs anywhere in the hot path.
 
+Every operator reads the ``documents`` shape (``doc_id``, ``text``).
+The banded operators share one plan: a band table of (doc, band,
+bucket key) rows, one capped candidate self-join
+(skew.capped_bucket_pairs, or the batch-vs-index join of
+minhash_incremental_pairs), then a join back to the signatures to
+score each distinct pair.
+
 Determinism contract: integer hashing uses functions/hashing.py's
 portable md5-prefix hash so the DuckDB oracles reproduce identical
 signatures.
@@ -24,7 +31,9 @@ from strava_data_pipeline_spark.functions.hashing import (
 )
 from strava_data_pipeline_spark.functions.text import char_ngrams, tokens, word_shingles
 from strava_data_pipeline_spark.operators.skew import (
+    MAX_BUCKET,
     cap_hot_buckets,
+    capped_bucket_pairs,
     spread_small_scan,
 )
 
@@ -32,24 +41,8 @@ N_PERMS = 16
 N_BANDS = 4
 ROWS_PER_BAND = N_PERMS // N_BANDS
 
-# Per-bucket membership cap for LSH pair generation (see
-# skew.cap_hot_buckets): bounds the quadratic work a degenerate band
-# key can concentrate on one reducer. Mirrored verbatim in the DuckDB
-# oracles (QUALIFY count(*) OVER bucket <= cap).
-MAX_BUCKET = 500
 
-
-# the split-count guard every explode-heavy operator applies to its
-# input scan (moved to skew.py so the similarity tier shares it)
-_spread = spread_small_scan
-
-
-def dedup_exact(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    only_dups: bool = True,
-) -> DataFrame:
+def dedup_exact(df: DataFrame, only_dups: bool = True) -> DataFrame:
     """Exact dedup: md5-hash groupBy; keep the minimum id as canonical.
 
     One shuffle on the 128-bit content hash; at 100 TB the hash (16
@@ -58,44 +51,78 @@ def dedup_exact(
     anti-join prunes against), not just the collision groups.
     """
     out = (
-        df.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col))
+        df.select(F.md5(F.col("text")).alias("text_hash"), "doc_id")
         .groupBy("text_hash")
         .agg(
-            F.min(id_col).cast("bigint").alias("canonical_doc_id"),
+            F.min("doc_id").cast("bigint").alias("canonical_doc_id"),
             F.count("*").cast("bigint").alias("n_copies"),
         )
     )
     return out.where(F.col("n_copies") > 1) if only_dups else out
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n_perms: int = N_PERMS
-) -> DataFrame:
-    """Per-document minhash signature (n_perms columns ``mh_j``).
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """Per-document minhash signature (``N_PERMS`` columns ``mh_j``).
 
     shingle → portable 32-bit hash → universal-hash permutations →
     min per permutation. Documents with fewer than 3 tokens produce no
     shingles and drop out (same as the oracle's unnest).
     """
-    params = perm_params(n_perms)
-    sh = _spread(df).select(
-        F.col(id_col),
-        F.explode(word_shingles(tokens(F.col(text_col)))).alias("shingle"),
-    ).select(id_col, md5_u32(F.col("shingle")).alias("x"))
+    sh = spread_small_scan(df).select(
+        "doc_id", F.explode(word_shingles(tokens(F.col("text")))).alias("shingle")
+    ).select("doc_id", md5_u32(F.col("shingle")).alias("x"))
     aggs = [
         F.min((F.col("x") * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"mh_{j}")
-        for j, (a, b) in enumerate(params)
+        for j, (a, b) in enumerate(perm_params(N_PERMS))
     ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_lsh_pairs(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    n_bands: int = N_BANDS,
-    rows_per_band: int = ROWS_PER_BAND,
-    max_bucket: int = MAX_BUCKET,
+def _minhash_bands(sig: DataFrame, *carry: str) -> DataFrame:
+    """One (doc_id, *carry, band, bkey) row per document and band:
+    ``bkey`` is the md5 of the band's ``ROWS_PER_BAND`` signature
+    values."""
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.md5(
+                    F.concat_ws(
+                        ",",
+                        *[
+                            F.col(f"mh_{b * ROWS_PER_BAND + r}")
+                            for r in range(ROWS_PER_BAND)
+                        ],
+                    )
+                ).alias("bkey"),
+            )
+            for b in range(N_BANDS)
+        ]
+    )
+    return sig.select("doc_id", *carry, F.explode(band_structs).alias("bk")).select(
+        "doc_id", *carry, "bk.band", "bk.bkey"
+    )
+
+
+def _est_jaccard(
+    pairs: DataFrame, left: DataFrame, right: DataFrame, a: str, b: str
 ) -> DataFrame:
+    """``(a, b, est_jaccard)``: each pair joined to its two signatures
+    (``a`` from ``left``, ``b`` from ``right``), scored by the fraction
+    of matching signature components."""
+    sa, sb = left.alias("sa"), right.alias("sb")
+    eq_sum = sum(
+        F.when(F.col(f"sa.mh_{j}") == F.col(f"sb.mh_{j}"), 1).otherwise(0)
+        for j in range(N_PERMS)
+    )
+    return (
+        pairs.join(sa, F.col(a) == F.col("sa.doc_id"))
+        .join(sb, F.col(b) == F.col("sb.doc_id"))
+        .select(a, b, F.round(eq_sum / F.lit(float(N_PERMS)), 4).alias("est_jaccard"))
+    )
+
+
+def minhash_lsh_pairs(sig: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
     """LSH banding: docs sharing any band key become candidate pairs;
     est_jaccard = fraction of matching signature components.
 
@@ -110,64 +137,19 @@ def minhash_lsh_pairs(
     # Lifecycle is caller-owned (see minhash_incremental_pairs): loops
     # must clearCache() after materializing each result.
     sig = sig.persist()
-    n_perms = n_bands * rows_per_band
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh_{b * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bkey"),
-            )
-            for b in range(n_bands)
-        ]
+    pairs = capped_bucket_pairs(
+        _minhash_bands(sig),
+        ["band", "bkey"],
+        "doc_id",
+        ("doc_a", "doc_b"),
+        max_bucket,
+        "minhash_lsh_skew",
     )
-    bands = sig.select(F.col(id_col), F.explode(band_structs).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
-    )
-    bands = cap_hot_buckets(bands, ["band", "bkey"], max_bucket, "minhash_lsh_skew")
-    a, b_ = bands.alias("a"), bands.alias("b")
-    pairs = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .distinct()
-    )
-    sa = sig.alias("sa")
-    sb = sig.alias("sb")
-    eq_sum = sum(
-        F.when(F.col(f"sa.mh_{j}") == F.col(f"sb.mh_{j}"), 1).otherwise(0)
-        for j in range(n_perms)
-    )
-    return (
-        pairs.join(sa, F.col("doc_a") == F.col(f"sa.{id_col}"))
-        .join(sb, F.col("doc_b") == F.col(f"sb.{id_col}"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(eq_sum / F.lit(float(n_perms)), 4).alias("est_jaccard"),
-        )
-    )
+    return _est_jaccard(pairs, sig, sig, "doc_a", "doc_b")
 
 
 def minhash_incremental_pairs(
     sig: DataFrame,
-    new_col: str = "is_new",
-    id_col: str = "doc_id",
-    n_bands: int = N_BANDS,
-    rows_per_band: int = ROWS_PER_BAND,
     max_bucket: int = MAX_BUCKET,
     persist_sig: bool = True,
     probe_prune: bool = True,
@@ -179,7 +161,7 @@ def minhash_incremental_pairs(
     per-batch work is O(batch × bucket), never O(corpus).
 
     ``sig`` is a minhash signature frame (minhash_signatures) carrying
-    a boolean ``new_col`` marking batch membership. Returns
+    a boolean ``is_new`` marking batch membership. Returns
     ``(new_doc, partner, est_jaccard)`` where ``partner`` is an index
     doc (any id) or an earlier batch doc (lower id) — index always
     wins, within the batch the lower id wins, so every batch doc gets
@@ -200,28 +182,7 @@ def minhash_incremental_pairs(
     """
     if persist_sig:
         sig = sig.persist()
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh_{b * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bkey"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    bands = sig.select(
-        F.col(id_col), F.col(new_col), F.explode(band_structs).alias("bk")
-    ).select(
-        id_col, new_col, F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
-    )
+    bands = _minhash_bands(sig, "is_new")
     # Prune the corpus band table to the buckets the BATCH probes,
     # BEFORE the hot-bucket window: a bucket with no batch row can
     # produce no pair (side ``a`` is batch-only), and every batch row
@@ -238,12 +199,12 @@ def minhash_incremental_pairs(
         # no .distinct() on the build side: a semi-join only tests
         # containment, so duplicate probe keys are harmless and the
         # dedup exchange inside the broadcast build is pure overhead
-        probe_keys = bands.where(F.col(new_col)).select("band", "bkey")
+        probe_keys = bands.where(F.col("is_new")).select("band", "bkey")
         bands = bands.join(
             F.broadcast(probe_keys), ["band", "bkey"], "left_semi"
         )
     bands = cap_hot_buckets(bands, ["band", "bkey"], max_bucket, "minhash_inc_skew")
-    a, b_ = bands.where(F.col(new_col)).alias("a"), bands.alias("b")
+    a, b_ = bands.where(F.col("is_new")).alias("a"), bands.alias("b")
     pairs = (
         a.join(
             b_,
@@ -254,118 +215,127 @@ def minhash_incremental_pairs(
             # its own survivors already in the index under the same ids,
             # and without this guard every one of them would self-match
             # at est 1.0 and be dropped on replay (data loss)
-            & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-            & (
-                ~F.col(f"b.{new_col}")
-                | (F.col(f"b.{id_col}") < F.col(f"a.{id_col}"))
-            ),
+            & (F.col("a.doc_id") != F.col("b.doc_id"))
+            & (~F.col("b.is_new") | (F.col("b.doc_id") < F.col("a.doc_id"))),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("new_doc"),
-            F.col(f"b.{id_col}").alias("partner"),
-        )
+        .select(F.col("a.doc_id").alias("new_doc"), F.col("b.doc_id").alias("partner"))
         .distinct()
     )
-    n_perms = n_bands * rows_per_band
     # ``new_doc`` is batch-only by construction (side ``a`` of the pair
-    # join filters on ``new_col``), so the signature lookup for the
+    # join filters on ``is_new``), so the signature lookup for the
     # judged side never needs the corpus branch — filtering here prunes
     # the union to the batch subtree (one less full-corpus scan per
     # call; value-identical, the equi-join would drop corpus rows
     # anyway)
-    sa = sig.where(F.col(new_col)).alias("sa")
-    sb = sig.alias("sb")
-    eq_sum = sum(
-        F.when(F.col(f"sa.mh_{j}") == F.col(f"sb.mh_{j}"), 1).otherwise(0)
-        for j in range(n_perms)
+    return _est_jaccard(pairs, sig.where(F.col("is_new")), sig, "new_doc", "partner")
+
+
+# SimHash fingerprints are lists of portable 32-bit halves: half h
+# votes over md5_u32 of each token salted with _SIMHASH_SALTS[h]. The
+# 32-bit fingerprint is the unsalted half alone (``simhash``); the
+# 64-bit one is the unsalted and ``h2:``-salted halves (``simhash_lo``,
+# ``simhash_hi``).
+_SIMHASH_SALTS = ("", "h2:")
+_SIMHASH32 = ("simhash",)
+_SIMHASH64 = ("simhash_lo", "simhash_hi")
+
+
+def _simhash(df: DataFrame, halves: tuple[str, ...]) -> DataFrame:
+    """One explode + one groupBy: per half, 32 bit-vote sums weighted by
+    token occurrence (plain conditional aggregates that stay in
+    codegen), then the positive-vote bits as one BIGINT per half."""
+    tok = spread_small_scan(df).select(
+        "doc_id", F.explode(tokens(F.col("text"))).alias("token")
+    ).select(
+        "doc_id",
+        *[
+            md5_u32(F.concat(F.lit(salt), "token") if salt else F.col("token")).alias(
+                f"x_{h}"
+            )
+            for h, salt in enumerate(_SIMHASH_SALTS[: len(halves)])
+        ],
     )
-    return (
-        pairs.join(sa, F.col("new_doc") == F.col(f"sa.{id_col}"))
-        .join(sb, F.col("partner") == F.col(f"sb.{id_col}"))
-        .select(
-            "new_doc",
-            "partner",
-            F.round(eq_sum / F.lit(float(n_perms)), 4).alias("est_jaccard"),
-        )
-    )
-
-
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """32-bit SimHash: per-token hash bit votes, weighted by occurrence.
-
-    One explode + one groupBy; the 32 bit-vote sums are plain
-    conditional aggregates that stay in codegen.
-    """
-    tok = _spread(df).select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token")
-    ).select(id_col, md5_u32(F.col("token")).alias("x"))
     votes = [
         F.sum(
-            F.when(F.shiftright(F.col("x"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(
-                -1
-            )
-        ).alias(f"v_{i}")
+            F.when(
+                F.shiftright(F.col(f"x_{h}"), i).bitwiseAND(F.lit(1)) == 1, 1
+            ).otherwise(-1)
+        ).alias(f"v_{h}_{i}")
+        for h in range(len(halves))
         for i in range(32)
     ]
-    voted = tok.groupBy(id_col).agg(*votes)
-    sim = sum(
-        F.when(F.col(f"v_{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0)) for i in range(32)
+    voted = tok.groupBy("doc_id").agg(*votes)
+    bits = [
+        sum(
+            F.when(F.col(f"v_{h}_{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
+            for i in range(32)
+        ).cast("bigint").alias(name)
+        for h, name in enumerate(halves)
+    ]
+    return voted.select("doc_id", *bits)
+
+
+def _simhash_pairs(
+    sh: DataFrame,
+    halves: tuple[str, ...],
+    max_hamming: int,
+    max_bucket: int,
+    metric: str,
+) -> DataFrame:
+    """Byte-band each half (4 bands per half, numbered ``4*h + b``),
+    join the capped bands, then join both fingerprints back and keep
+    pairs whose hamming distance (the sum of each half's bit_count)
+    is within ``max_hamming``."""
+    # The join back infers ``doc_id IS NOT NULL`` and pushes it to the
+    # documents scan; stating it here puts the same filter under the
+    # band side, so both sides plan one vote pipeline and Spark reuses
+    # its exchange instead of voting twice. No pair has a NULL id.
+    sh = sh.where(F.col("doc_id").isNotNull())
+    band_structs = [
+        F.struct(
+            F.lit(4 * h + b).alias("band"),
+            F.shiftright(F.col(half), 8 * b).bitwiseAND(F.lit(255)).alias("bkey"),
+        )
+        for h, half in enumerate(halves)
+        for b in range(4)
+    ]
+    bands = sh.select("doc_id", F.explode(F.array(*band_structs)).alias("bk")).select(
+        "doc_id", "bk.band", "bk.bkey"
     )
-    return voted.select(F.col(id_col), sim.cast("bigint").alias("simhash"))
+    pairs = capped_bucket_pairs(
+        bands, ["band", "bkey"], "doc_id", ("doc_a", "doc_b"), max_bucket, metric
+    )
+    fa, fb = sh.alias("fa"), sh.alias("fb")
+    hamming = sum(
+        F.bit_count(F.col(f"fa.{half}").bitwiseXOR(F.col(f"fb.{half}")))
+        for half in halves
+    )
+    return (
+        pairs.join(fa, F.col("doc_a") == F.col("fa.doc_id"))
+        .join(fb, F.col("doc_b") == F.col("fb.doc_id"))
+        .select("doc_a", "doc_b", hamming.cast("int").alias("hamming"))
+        .where(F.col("hamming") <= max_hamming)
+    )
+
+
+def simhash(df: DataFrame) -> DataFrame:
+    """32-bit SimHash (``simhash``): per-token hash bit votes, weighted
+    by occurrence. The same value as simhash64's ``simhash_lo``."""
+    return _simhash(df, _SIMHASH32)
 
 
 def simhash_pairs(
-    sh: DataFrame,
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    max_bucket: int = MAX_BUCKET,
+    sh: DataFrame, max_hamming: int = 3, max_bucket: int = MAX_BUCKET
 ) -> DataFrame:
     """Near-dup pairs by SimHash: band the 32 bits into 4 bytes — any
     pair within hamming ≤ 3 shares at least one byte band (pigeonhole),
     so the band join finds all of them without a cross product. Byte
     bands with more than ``max_bucket`` members are dropped before the
     join (observed metric ``simhash_skew``) — the hot-bucket guard."""
-    bands = sh.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("simhash"), 8 * b)
-                        .bitwiseAND(F.lit(255))
-                        .alias("bkey"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, "simhash", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
-    bands = cap_hot_buckets(bands, ["band", "bkey"], max_bucket, "simhash_skew")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return _simhash_pairs(sh, _SIMHASH32, max_hamming, max_bucket, "simhash_skew")
 
 
-def simhash64(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash64(df: DataFrame) -> DataFrame:
     """64-bit SimHash as TWO portable 32-bit halves (``simhash_lo``,
     ``simhash_hi``), each from an independent md5-derived token hash
     (the hi half salts the token with a fixed ``h2:`` prefix).
@@ -378,85 +348,17 @@ def simhash64(
     at 64 bits). Same single explode + groupBy plan as 32-bit, just
     64 conditional aggregates.
     """
-    tok = _spread(df).select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token")
-    ).select(
-        id_col,
-        md5_u32(F.col("token")).alias("x_lo"),
-        md5_u32(F.concat(F.lit("h2:"), F.col("token"))).alias("x_hi"),
-    )
-    votes = [
-        F.sum(
-            F.when(
-                F.shiftright(F.col(f"x_{half}"), i).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-        ).alias(f"v_{half}_{i}")
-        for half in ("lo", "hi")
-        for i in range(32)
-    ]
-    voted = tok.groupBy(id_col).agg(*votes)
-    halves = [
-        sum(
-            F.when(F.col(f"v_{half}_{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
-            for i in range(32)
-        ).cast("bigint").alias(f"simhash_{half}")
-        for half in ("lo", "hi")
-    ]
-    return voted.select(F.col(id_col), *halves)
+    return _simhash(df, _SIMHASH64)
 
 
 def simhash64_pairs(
-    sh: DataFrame,
-    id_col: str = "doc_id",
-    max_hamming: int = 7,
-    max_bucket: int = MAX_BUCKET,
+    sh: DataFrame, max_hamming: int = 7, max_bucket: int = MAX_BUCKET
 ) -> DataFrame:
     """Near-dup pairs by 64-bit SimHash: 8 byte-bands (4 per half) —
     a pair within hamming ≤ 7 leaves at least one of its 8 bands
     untouched (pigeonhole), so the band join finds every such pair
     without a cross product. Hot bands capped (``simhash64_skew``)."""
-    band_structs = [
-        F.struct(
-            F.lit(4 * h + b).alias("band"),
-            F.shiftright(F.col(f"simhash_{half}"), 8 * b)
-            .bitwiseAND(F.lit(255))
-            .alias("bkey"),
-        )
-        for h, half in enumerate(("lo", "hi"))
-        for b in range(4)
-    ]
-    bands = sh.select(
-        F.col(id_col),
-        "simhash_lo",
-        "simhash_hi",
-        F.explode(F.array(*band_structs)).alias("bk"),
-    ).select(
-        id_col,
-        "simhash_lo",
-        "simhash_hi",
-        F.col("bk.band").alias("band"),
-        F.col("bk.bkey").alias("bkey"),
-    )
-    bands = cap_hot_buckets(bands, ["band", "bkey"], max_bucket, "simhash64_skew")
-    a, b = bands.alias("a"), bands.alias("b")
-    hamming = F.bit_count(
-        F.col("a.simhash_lo").bitwiseXOR(F.col("b.simhash_lo"))
-    ) + F.bit_count(F.col("a.simhash_hi").bitwiseXOR(F.col("b.simhash_hi")))
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return _simhash_pairs(sh, _SIMHASH64, max_hamming, max_bucket, "simhash64_skew")
 
 
 #: above this many docs the gram-array and prefix-index frames are
@@ -492,8 +394,6 @@ def auto_gram_order(n_docs: int) -> int:
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.5,
     gram_order: int | str = "auto",
 ) -> DataFrame:
@@ -557,8 +457,8 @@ def ngram_jaccard_pairs(
     # past the bound, corpus-sized frames must not be broadcast —
     # see _HINT_DOCS_BOUND
     big_corpus = n_docs > _HINT_DOCS_BOUND
-    ordered = _spread(df).select(
-        F.col(id_col).alias("doc"),
+    ordered = spread_small_scan(df).select(
+        F.col("doc_id").alias("doc"),
         F.col("lang"),
         F.floor(F.col("n_chars") / F.lit(64)).cast("int").alias("len_bucket"),
         # grams as 4-byte ints: md5_u32 shifted by 2^31 — a MONOTONE
@@ -569,7 +469,7 @@ def ngram_jaccard_pairs(
         F.array_sort(
             F.array_distinct(
                 F.transform(
-                    char_ngrams(F.col(text_col), gram_order),
+                    char_ngrams(F.col("text"), gram_order),
                     lambda g: (md5_u32(g) - F.lit(2147483648)).cast("int"),
                 )
             )
@@ -725,8 +625,6 @@ def ngram_jaccard_pairs(
 
 def containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold_pct: int = 80,
     max_bucket: int = MAX_BUCKET,
 ) -> DataFrame:
@@ -746,9 +644,9 @@ def containment_pairs(
     oracle. The gate is integer cross-multiplication
     (overlap·100 ≥ pct·|S_A|) — no float boundary.
     """
-    sh = _spread(df).select(
-        F.col(id_col).alias("doc"),
-        F.explode(word_shingles(tokens(F.col(text_col)))).alias("shingle"),
+    sh = spread_small_scan(df).select(
+        F.col("doc_id").alias("doc"),
+        F.explode(word_shingles(tokens(F.col("text")))).alias("shingle"),
     )
     n_sh = sh.groupBy("doc").agg(F.count("*").cast("bigint").alias("n_sh"))
     capped = cap_hot_buckets(sh, ["shingle"], max_bucket)
@@ -770,19 +668,21 @@ def containment_pairs(
     )
 
 
-def doc_fingerprints(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 5
-) -> DataFrame:
-    """Bottom-k fingerprint sketch: the k smallest shingle hashes per
-    document — a compact content signature for fast containment checks."""
-    sh = _spread(df).select(
-        F.col(id_col),
-        F.explode(word_shingles(tokens(F.col(text_col)))).alias("shingle"),
-    ).select(id_col, md5_u32(F.col("shingle")).alias("fp"))
-    w = Window.partitionBy(id_col).orderBy(F.col("fp").asc())
+# bottom-k fingerprint width (doc_fingerprints)
+FINGERPRINT_K = 5
+
+
+def doc_fingerprints(df: DataFrame) -> DataFrame:
+    """Bottom-k fingerprint sketch: the ``FINGERPRINT_K`` smallest
+    shingle hashes per document — a compact content signature for fast
+    containment checks."""
+    sh = spread_small_scan(df).select(
+        "doc_id", F.explode(word_shingles(tokens(F.col("text")))).alias("shingle")
+    ).select("doc_id", md5_u32(F.col("shingle")).alias("fp"))
+    w = Window.partitionBy("doc_id").orderBy(F.col("fp").asc())
     return (
         sh.distinct()
         .withColumn("fp_rank", F.row_number().over(w))
-        .where(F.col("fp_rank") <= k)
-        .select(id_col, F.col("fp_rank").cast("int"), F.col("fp"))
+        .where(F.col("fp_rank") <= FINGERPRINT_K)
+        .select("doc_id", F.col("fp_rank").cast("int"), F.col("fp"))
     )

@@ -12,20 +12,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from strava_data_pipeline_spark.functions.hashing import MINHASH_PRIME
 from strava_data_pipeline_spark.functions import vectors as V
 from strava_data_pipeline_spark.operators.skew import (
-    cap_hot_buckets,
+    MAX_BUCKET,
     cap_hot_buckets_broadcast,
+    capped_bucket_pairs,
     spread_small_scan,
 )
 
 DIM = 64
 N_PLANES = 8
 
-# Hot-bucket guard for the LSH candidate join (see skew.cap_hot_buckets);
-# mirrored in the DuckDB oracle via QUALIFY.
-MAX_BUCKET = 500
+# embedding_neardup_pairs' LSH shape: EMB_BANDS bucket tables of
+# EMB_BITS hyperplane sign bits each
+EMB_BANDS = 4
+EMB_BITS = 2
 
 
 def _plane_component(j: int, d: int) -> float:
@@ -293,11 +294,7 @@ def ann_topk_ivf(
 
 
 def embedding_neardup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.98,
-    n_bands: int = 4,
-    bits_per_band: int = 2,
-    max_bucket: int = MAX_BUCKET,
+    embeddings: DataFrame, threshold: float = 0.98, max_bucket: int = MAX_BUCKET
 ) -> DataFrame:
     """Near-duplicate vector pairs (cosine ≥ threshold) via banded
     random-hyperplane LSH inside ``label`` blocks.
@@ -305,13 +302,14 @@ def embedding_neardup_pairs(
     Candidates are generated ONLY within (label, band, bucket) groups —
     an equi-join shuffle on narrow keys, never all-pairs per label — so
     a hot label cannot melt one reducer. A pair colliding in any of the
-    ``n_bands`` bucket tables becomes a candidate once (ids only,
-    de-duplicated), then a single verify join re-attaches the two
-    vectors and applies the cosine threshold, mirroring the minhash
-    verify structure (dedup.py). Recall for a pair at angle θ is
-    1 - (1 - (1-θ/π)^bits)^bands ≈ 0.85 at this corpus's τ=0.35; with
-    production near-dup thresholds (τ ≥ 0.9) raise ``bits_per_band`` to
-    8-16 so per-band buckets stay small at corpus scale.
+    ``EMB_BANDS`` bucket tables becomes a candidate once (ids only,
+    de-duplicated: skew.capped_bucket_pairs, the minhash and simhash
+    candidate join too), then a single verify join re-attaches the two
+    vectors and applies the cosine threshold. Recall for a pair at
+    angle θ is 1 - (1 - (1-θ/π)^bits)^bands ≈ 0.85 at this corpus's
+    τ=0.35 with ``EMB_BANDS`` = 4 bands of ``EMB_BITS`` = 2 bits; a
+    production near-dup threshold (τ ≥ 0.9) wants 8-16 bits per band so
+    per-band buckets stay small at corpus scale.
     """
     e = spread_small_scan(embeddings).select(
         "vec_id", "label", V.as_double(F.col("embedding")).alias("v")
@@ -321,26 +319,17 @@ def embedding_neardup_pairs(
         "label",
         F.posexplode(
             F.array(
-                *[_band_bucket_expr("v", b, bits_per_band) for b in range(n_bands)]
+                *[_band_bucket_expr("v", b, EMB_BITS) for b in range(EMB_BANDS)]
             )
         ).alias("band", "bucket"),
     )
-    bucketed = cap_hot_buckets(
-        bucketed, ["label", "band", "bucket"], max_bucket, "emb_dedup_skew"
-    )
-    a, b = bucketed.alias("a"), bucketed.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
-        )
-        .distinct()
+    cand = capped_bucket_pairs(
+        bucketed,
+        ["label", "band", "bucket"],
+        "vec_id",
+        ("vec_a", "vec_b"),
+        max_bucket,
+        "emb_dedup_skew",
     )
     # verify join with per-vector norms hoisted out of the pair rows:
     # one dot fold per candidate instead of three 64-element reductions

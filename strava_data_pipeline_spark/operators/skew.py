@@ -16,11 +16,18 @@ big-table sides). Result is row-identical to the unsalted join.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _SALT = "__salt"
+
+# Per-bucket membership cap for LSH pair generation (cap_hot_buckets):
+# bounds the quadratic work a degenerate band key can concentrate on
+# one reducer. Mirrored verbatim in the DuckDB oracles (QUALIFY
+# count(*) OVER bucket <= cap).
+MAX_BUCKET = 500
 
 # Join types whose output is row-identical to the unsalted join: every
 # left row carries exactly ONE salt value, so left-preserving semantics
@@ -126,6 +133,40 @@ def cap_hot_buckets(
             ),
         )
     return sized.where(F.col("_bucket_size") <= cap).drop("_bucket_size")
+
+
+def capped_bucket_pairs(
+    bands: DataFrame,
+    key_cols: Sequence[str],
+    id_col: str,
+    pair_cols: tuple[str, str],
+    cap: int,
+    metric: str,
+) -> DataFrame:
+    """Distinct candidate pairs of a band table: ids sharing any bucket
+    ``key_cols`` after :func:`cap_hot_buckets`, lower id first, named
+    ``pair_cols``.
+
+    ``bands`` holds one row per (id, bucket) and nothing else the pair
+    needs: the self-join shuffles on the bucket key the cap's window
+    already partitioned by, and callers score the distinct pairs by
+    joining their payload back.
+    """
+    capped = cap_hot_buckets(bands, key_cols, cap, metric)
+    a, b = capped.alias("a"), capped.alias("b")
+    same_bucket = reduce(
+        lambda acc, c: acc & (F.col(f"a.{c}") == F.col(f"b.{c}")),
+        key_cols,
+        F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
+    )
+    return (
+        a.join(b, same_bucket)
+        .select(
+            F.col(f"a.{id_col}").alias(pair_cols[0]),
+            F.col(f"b.{id_col}").alias(pair_cols[1]),
+        )
+        .distinct()
+    )
 
 
 def cap_hot_buckets_broadcast(

@@ -1388,9 +1388,6 @@ LIMIT 50
 """
 
 
-_PAGERANK_PERSIST_ROWS = 4_000_000
-
-
 @register("pagerank_parts", oracle=_pagerank_oracle())
 def pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 parts by PageRank over the undirected co-purchase graph
@@ -1402,27 +1399,14 @@ def pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered-pair explode emitting both directions inline) — it replaces
     the orderkey self-join, which shuffled the item list twice and
     deduped twice the pair volume; fan-out stays bounded by basket
-    size.
-
-    Edge persistence is SIZE-ADAPTIVE (r7, measured both ways at
-    mult=100): past _PAGERANK_PERSIST_ROWS lineitem rows the edge set
-    is hash-partitioned on src and persisted DISK_ONLY — AQE exchange
-    reuse does NOT reliably cover the explode+distinct build across
-    three iterations at that scale (measured 131s unpersisted vs 92.6s
-    persisted on the 120M-edge graph, with 128MB GC-locker churn in
-    the unpersisted shape), while at sf0.1 the same persist is a pure
-    +15% loss (the one-query AQE reuse DOES hold there — the
-    operators/graph.py NOTE's measurement). The row count comes from
-    parquet statistics (zero-column count, metadata-fast); both modes
-    are pinned by tests/test_graph.py::test_pagerank_persist_gate.
-    Cache lifecycle is caller-owned, as with kcore_peel."""
-    from pyspark.storagelevel import StorageLevel
-
+    size. The edge set is not persisted: AQE exchange reuse covers its
+    build across the three iterations of one query (the
+    operators/graph.py NOTE's measurement; persisting it costs +15% at
+    sf0.1)."""
     from strava_data_pipeline_spark.operators.graph import pagerank
 
-    li = load_table(spark, sf_dir, "lineitem")
     baskets = (
-        li
+        load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
     )
@@ -1440,8 +1424,6 @@ def pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
         .distinct()
     )
-    if li.count() > _PAGERANK_PERSIST_ROWS:
-        edges = edges.repartition("src").persist(StorageLevel.DISK_ONLY)
     ranks = pagerank(edges, iterations=3)
     return (
         ranks.select(F.col("node").alias("p_partkey"), F.col("rank").alias("rank_micro"))

@@ -26,23 +26,13 @@ from pyspark.sql import functions as F
 
 from strava_data_pipeline_spark.functions import text as T
 from strava_data_pipeline_spark.functions.hashing import md5_u32, md5_u32_duckdb
-from strava_data_pipeline_spark.plans.registry import register
-from strava_data_pipeline_spark.operators.skew import spread_small_scan
-from strava_data_pipeline_spark.sources.catalog import load_table
-
-_DUCK_TOKENS = r"string_split_regex(lower(trim(text)), '\s+')"
-_DUCK_SHINGLES = (
-    r"list_distinct([array_to_string(t[i:i+2], ' ') "
-    r"FOR i IN range(1, greatest(len(t) - 2, 0) + 1)])"
+from strava_data_pipeline_spark.plans.prelude import (
+    DUCK_SHINGLES,
+    DUCK_TOKENS,
+    load_docs,
 )
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents + the shared single-split scan guard (see skew.py):
-    the tokenize/explode stages below are CPU-bound per row and a small
-    parquet file arrives as one input split; a no-op on real
-    multi-split cluster scans."""
-    return spread_small_scan(load_table(spark, sf_dir, "documents"))
+from strava_data_pipeline_spark.plans.registry import register
+from strava_data_pipeline_spark.sources.catalog import load_table
 
 
 # --------------------------------------------------------------------------
@@ -75,7 +65,7 @@ def _cls_weight_duck(bucket_expr: str) -> str:
 # keeps floor semantics for negative scores on both engines.
 _CLASSIFIER_ORACLE = f"""
 WITH tok AS (
-    SELECT doc_id, unnest({_DUCK_TOKENS}) AS term FROM documents
+    SELECT doc_id, unnest({DUCK_TOKENS}) AS term FROM documents
 ), scored AS (
     SELECT doc_id,
            {_cls_weight_duck(md5_u32_duckdb('term') + f" % {_CLS_B}")} AS w
@@ -105,7 +95,7 @@ def classifier_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy — at 100 TB the only shuffle is the per-doc partial sums;
     a trained model swaps the inline weight for a broadcast B-row dim
     without changing the plan shape."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     tok = docs.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("term"))
     bucket = md5_u32(F.col("term")) % _CLS_B
     w = (
@@ -157,7 +147,7 @@ _DSIR_TGT = "'src0'"
 _DSIR_ORACLE = f"""
 WITH tok AS (
     SELECT doc_id, source, {md5_u32_duckdb('term')} % {_DSIR_B} AS bucket
-    FROM (SELECT doc_id, source, unnest({_DUCK_TOKENS}) AS term FROM documents)
+    FROM (SELECT doc_id, source, unnest({DUCK_TOKENS}) AS term FROM documents)
 ), bc AS (
     SELECT bucket,
            CAST(sum(CASE WHEN source = {_DSIR_TGT} THEN 1 ELSE 0 END) AS BIGINT) AS tc,
@@ -194,7 +184,7 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc sum and never shuffles anything wider than (doc_id,
     partial-sum). The ratio terms are floor-quantized to 1e-4 units so
     per-doc sums are exact BIGINTs."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     tok = docs.select(
         "doc_id", "source", F.explode(T.tokens(F.col("text"))).alias("term")
     ).select("doc_id", "source", (md5_u32(F.col("term")) % _DSIR_B).alias("bucket"))
@@ -252,7 +242,7 @@ _BPE_TOPK = 50
 
 _BPE_ORACLE = f"""
 WITH tok AS (
-    SELECT unnest({_DUCK_TOKENS}) AS term FROM documents
+    SELECT unnest({DUCK_TOKENS}) AS term FROM documents
 ), pr AS (
     SELECT unnest([substr(term, i, 2)
                    FOR i IN range(1, greatest(length(term) - 1, 0) + 1)]) AS pair
@@ -277,7 +267,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-50 is TakeOrderedAndProject — never a global sort. The rank
     window runs over the already-limited 50-row frame. At 100 TB this
     is the exact per-round counting job of distributed BPE training."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     term = F.col("term")
     pairs = F.when(
         F.length(term) >= 2,
@@ -321,10 +311,10 @@ _BLOOM_POS = ", ".join(
 
 _BLOOM_ORACLE = f"""
 WITH toks AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), sh AS (
     SELECT DISTINCT doc_id, {md5_u32_duckdb('shingle')} AS sh
-    FROM (SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle FROM toks)
+    FROM (SELECT doc_id, unnest({DUCK_SHINGLES}) AS shingle FROM toks)
 ), bloom AS (
     SELECT DISTINCT pos
     FROM (SELECT unnest([{_BLOOM_POS}]) AS pos FROM sh WHERE doc_id % 97 = 0)
@@ -373,7 +363,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     center at exponent 1.049). Emits bloom hits AND exact hits per doc
     so the false-positive rate is audited in the result itself; the
     oracle checks the filter arithmetic bit-for-bit."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     sh = (
         docs.select(
             "doc_id",
@@ -477,10 +467,10 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _NOVELTY_ORACLE = f"""
 WITH toks AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), sh AS (
     SELECT DISTINCT doc_id, {md5_u32_duckdb('shingle')} AS sh
-    FROM (SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle FROM toks)
+    FROM (SELECT doc_id, unnest({DUCK_SHINGLES}) AS shingle FROM toks)
 ), firstocc AS (
     SELECT sh, CAST(min(doc_id) AS BIGINT) AS first_doc FROM sh GROUP BY 1
 )
@@ -506,7 +496,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs ever shuffle — never text. In the incremental production form
     the first-occurrence dim is the persisted state and each crawl
     batch probes it (the dedup_incremental pattern)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     sh = (
         docs.select(
             "doc_id",
@@ -545,7 +535,7 @@ _KL_B = 256
 _KL_ORACLE = f"""
 WITH tok AS (
     SELECT source, {md5_u32_duckdb('term')} % {_KL_B} AS bucket
-    FROM (SELECT source, unnest({_DUCK_TOKENS}) AS term FROM documents)
+    FROM (SELECT source, unnest({DUCK_TOKENS}) AS term FROM documents)
 ), sb AS (
     SELECT source, bucket, CAST(count(*) AS BIGINT) AS c_sb FROM tok GROUP BY 1, 2
 ), b AS (
@@ -584,7 +574,7 @@ def domain_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is the map-combined count groupBy. Terms quantize to 1e-9
     units before summing (exact BIGINT accumulation; a double sum's
     partition order would diverge cross-engine)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     tok = docs.select(
         "source", F.explode(T.tokens(F.col("text"))).alias("term")
     ).select("source", (md5_u32(F.col("term")) % _KL_B).alias("bucket"))
@@ -855,10 +845,10 @@ def _minhash_eval_oracle() -> str:
     return f"""
 WITH mh AS ({_minhash_oracle()}
 ), toks2 AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), sh2 AS (
     SELECT DISTINCT doc_id, {md5_u32_duckdb('shingle')} AS x
-    FROM (SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle FROM toks2)
+    FROM (SELECT doc_id, unnest({DUCK_SHINGLES}) AS shingle FROM toks2)
 ), gs AS (
     SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh2 GROUP BY 1
 ), ix AS (
@@ -898,7 +888,7 @@ def minhash_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = D.minhash_signatures(docs)
     cand = D.minhash_lsh_pairs(sig)
     sh = (
-        _docs(spark, sf_dir)
+        load_docs(spark, sf_dir)
         .select(
             "doc_id",
             F.explode(T.word_shingles(T.tokens(F.col("text")))).alias("_s"),
@@ -955,7 +945,7 @@ def minhash_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CALIB_ORACLE = f"""
 WITH feats AS (
     SELECT doc_id, source,
-           CAST(len({_DUCK_TOKENS}) AS BIGINT) AS n_tokens,
+           CAST(len({DUCK_TOKENS}) AS BIGINT) AS n_tokens,
            CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS BIGINT) AS n_punct,
            CAST(length(text) AS BIGINT) AS n_chars
     FROM documents
@@ -992,7 +982,7 @@ def quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep cut at the calibrated median. Every source contributes ~half
     its docs regardless of its raw score distribution — the property
     raw-threshold filters (quality_filter) lack."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     toks = T.tokens(F.col("text"))
     feats = docs.select(
         "doc_id",
@@ -1074,7 +1064,7 @@ def _shard_plan_oracle() -> str:
     return f"""
 WITH t AS (
     SELECT doc_id, {h} AS h,
-           CAST(len({_DUCK_TOKENS}) AS BIGINT) AS n_tokens
+           CAST(len({DUCK_TOKENS}) AS BIGINT) AS n_tokens
     FROM documents
 ), c AS (
     SELECT n_tokens,
@@ -1110,7 +1100,7 @@ SELECT h // 67108864 AS hbucket,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
 FROM (SELECT {h} AS h,
-             CAST(len({_DUCK_TOKENS}) AS BIGINT) AS n_tokens
+             CAST(len({DUCK_TOKENS}) AS BIGINT) AS n_tokens
       FROM documents)
 GROUP BY hbucket
 """
@@ -1122,7 +1112,7 @@ def corpus_shard_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side-combinable groupBy over the same (h, n_tokens)
     projection the plan feeds bucketed_cumsum — zero windows, one
     shuffle of 64 summary rows. Scale-free by construction."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     return (
         docs.select(
             md5_u32(F.col("text")).alias("h"),
@@ -1149,7 +1139,7 @@ def corpus_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed_cumsum,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     base = docs.select(
         "doc_id",
         md5_u32(F.col("text")).alias("h"),

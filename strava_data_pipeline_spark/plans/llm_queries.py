@@ -25,29 +25,15 @@ from strava_data_pipeline_spark.operators import dedup as D
 from strava_data_pipeline_spark.operators import similarity as S
 from strava_data_pipeline_spark.operators.skew import cap_hot_buckets
 from strava_data_pipeline_spark.operators.skew import spread_small_scan
+from strava_data_pipeline_spark.plans.prelude import (
+    DUCK_SHINGLES,
+    DUCK_TOKENS,
+    load_docs,
+)
 from strava_data_pipeline_spark.plans.registry import register
 from strava_data_pipeline_spark.sources.catalog import load_table
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents load with the single-split scan guard: the tokenize /
-    shingle / regex stages these queries run are CPU-bound per row, and
-    a small corpus file arrives as ONE input split, serializing them on
-    a single task (see skew.spread_small_scan — a no-op on a real
-    cluster's multi-split scans). Used by the queries that do their own
-    inline text processing; the dedup/similarity operators apply the
-    same guard internally, so their registry entries load plainly."""
-    return spread_small_scan(load_table(spark, sf_dir, "documents"))
-
-
-# ---------------------------------------------------------------------------
-# Shared DuckDB fragments (the oracle-side twins of functions/text.py)
-# ---------------------------------------------------------------------------
-_DUCK_TOKENS = r"string_split_regex(lower(trim(text)), '\s+')"
-_DUCK_SHINGLES = (
-    r"list_distinct([array_to_string(t[i:i+2], ' ') "
-    r"FOR i IN range(1, greatest(len(t) - 2, 0) + 1)])"
-)
 # --------------------------------------------------------------------------
 # 21. dedup_exact
 # --------------------------------------------------------------------------
@@ -91,9 +77,9 @@ def _minhash_oracle() -> str:
     )
     return f"""
 WITH toks AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), sh AS (
-    SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle FROM toks
+    SELECT doc_id, unnest({DUCK_SHINGLES}) AS shingle FROM toks
 ), hx AS (
     SELECT doc_id, {md5_u32_duckdb('shingle')} AS x FROM sh
 ), sig AS (
@@ -151,9 +137,9 @@ def _incremental_oracle(threshold: float = 0.75) -> str:
     )
     return f"""
 WITH toks AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), sh AS (
-    SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle FROM toks
+    SELECT doc_id, unnest({DUCK_SHINGLES}) AS shingle FROM toks
 ), hx AS (
     SELECT doc_id, {md5_u32_duckdb('shingle')} AS x FROM sh
 ), sig AS (
@@ -239,7 +225,7 @@ def _simhash_oracle(max_hamming: int = 3) -> str:
     )
     return f"""
 WITH toks AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), tok AS (
     SELECT doc_id, unnest(t) AS token FROM toks
 ), hx AS (
@@ -299,7 +285,7 @@ def _simhash64_oracle() -> str:
     )
     return f"""
 WITH toks AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), tok AS (
     SELECT doc_id, unnest(t) AS token FROM toks
 ), hx AS (
@@ -427,10 +413,10 @@ def _duck_band_bucket(band: int, bits: int) -> str:
     return "CAST(" + " + ".join(terms) + " AS INT)"
 
 
-def _emb_dedup_oracle(n_bands: int = 4, bits: int = 2) -> str:
+def _emb_dedup_oracle() -> str:
     band_selects = "\n    UNION ALL\n    ".join(
-        f"SELECT vec_id, label, v, {b} AS band, {_duck_band_bucket(b, bits)} AS bucket FROM e"
-        for b in range(n_bands)
+        f"SELECT vec_id, label, v, {b} AS band, {_duck_band_bucket(b, S.EMB_BITS)} AS bucket FROM e"
+        for b in range(S.EMB_BANDS)
     )
     return f"""
 WITH e AS (
@@ -464,8 +450,9 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     within label blocks — candidates only inside (label, band, bucket)
     groups, never all-pairs per label. τ=0.35 sits at the top ~0.1% of
     the synthetic same-label cosine distribution (max ≈ 0.47) — a
-    production corpus with planted dups would use 0.95+; threshold,
-    band count, and bits per band are parameters."""
+    production corpus with planted dups would use 0.95+. The threshold
+    is a parameter; the band count and bits per band are the operator's
+    constants (similarity.EMB_BANDS, EMB_BITS)."""
     return S.embedding_neardup_pairs(
         load_table(spark, sf_dir, "embeddings"), threshold=0.35
     )
@@ -611,7 +598,7 @@ def _lang_id_oracle() -> str:
     )
     return f"""
 WITH toks AS (
-    SELECT doc_id, lang, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, lang, {DUCK_TOKENS} AS t FROM documents
 ), votes AS (
     SELECT doc_id, lang,
         {vote_cols}
@@ -628,7 +615,7 @@ FROM votes
 @register("lang_id", oracle=_lang_id_oracle())
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-stopword language-ID vote per document."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     toks = T.tokens(F.col("text"))
     return docs.select(
         "doc_id",
@@ -645,9 +632,9 @@ _QUALITY_ORACLE = f"""
 WITH base AS (
     SELECT doc_id,
            CAST(length(text) AS BIGINT) AS n_chars_calc,
-           CAST(len({_DUCK_TOKENS}) AS BIGINT) AS n_tokens,
+           CAST(len({DUCK_TOKENS}) AS BIGINT) AS n_tokens,
            CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS BIGINT) AS n_punct,
-           CAST(len(list_filter({_DUCK_TOKENS}, x -> x IN ({", ".join(f"'{m}'" for m in _ALL_MARKERS)}))) AS BIGINT) AS n_stop
+           CAST(len(list_filter({DUCK_TOKENS}, x -> x IN ({", ".join(f"'{m}'" for m in _ALL_MARKERS)}))) AS BIGINT) AS n_stop
     FROM documents
 )
 SELECT doc_id, n_chars_calc, n_tokens,
@@ -663,7 +650,7 @@ FROM base
 @register("text_quality", oracle=_QUALITY_ORACLE)
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length/punctuation/stopword quality features + composite score."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     toks = T.tokens(F.col("text"))
     markers = F.array(*[F.lit(m) for m in _ALL_MARKERS])
     base = docs.select(
@@ -701,7 +688,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _TOKEN_ORACLE = rf"""
 SELECT doc_id,
-       CAST(len({_DUCK_TOKENS}) AS BIGINT) AS ws_tokens,
+       CAST(len({DUCK_TOKENS}) AS BIGINT) AS ws_tokens,
        CAST(len(regexp_extract_all(text, '{T.BPE_TOKEN_RE}')) AS BIGINT) AS bpe_tokens
 FROM documents
 """
@@ -710,7 +697,7 @@ FROM documents
 @register("token_count", oracle=_TOKEN_ORACLE)
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace + BPE-style pre-tokenizer token counts."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     return docs.select(
         "doc_id",
         T.ws_token_count(F.col("text")).alias("ws_tokens"),
@@ -723,9 +710,9 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _FP_ORACLE = f"""
 WITH toks AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), sh AS (
-    SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle FROM toks
+    SELECT doc_id, unnest({DUCK_SHINGLES}) AS shingle FROM toks
 ), hx AS (
     SELECT DISTINCT doc_id, {md5_u32_duckdb('shingle')} AS fp FROM sh
 ), ranked AS (
@@ -767,7 +754,7 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-payload metadata plumbing: the documents' text bytes stand
     in for an opaque media blob (see operators/multimodal.py for the
     decode pipeline; real codecs are stubbed per environment)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     x = md5_u32(F.col("text"))
     payload = F.col("text").cast("binary")
     return docs.select(
@@ -816,7 +803,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest."""
     from strava_data_pipeline_spark.operators import multimodal as M
 
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     return M.extract_features(M.attach_payload(docs))
 
 
@@ -875,7 +862,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     note) and each Arrow batch holds one task's worth of images."""
     from strava_data_pipeline_spark.operators import multimodal as M
 
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     seeded = docs.select("doc_id", md5_u32(F.col("text")).alias("x"))
     return M.extract_image_stats(M.attach_ppm_payload(seeded))
 
@@ -939,7 +926,7 @@ def multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal_decode."""
     from strava_data_pipeline_spark.operators import multimodal as M
 
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     seeded = docs.select("doc_id", md5_u32(F.col("text")).alias("x"))
     return M.extract_image_stats(
         M.attach_ppm_payload(seeded, planter=M.plant_bmp)
@@ -1009,7 +996,7 @@ def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout notes as multimodal_decode."""
     from strava_data_pipeline_spark.operators import multimodal as M
 
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     seeded = docs.select("doc_id", md5_u32(F.col("text")).alias("x"))
     return M.extract_image_stats(
         M.attach_ppm_payload(seeded, planter=M.plant_gif)
@@ -1113,7 +1100,7 @@ def multimodal_decode_gif_anim(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream through Arrow batches, rows map 1:1, nothing shuffles."""
     from strava_data_pipeline_spark.operators import multimodal as M
 
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     seeded = docs.select("doc_id", md5_u32(F.col("text")).alias("x"))
     return M.extract_gif_anim_stats(
         M.attach_ppm_payload(seeded, planter=M.plant_gif_anim)
@@ -1180,7 +1167,7 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape and 100 TB layout notes as multimodal_decode."""
     from strava_data_pipeline_spark.operators import multimodal as M
 
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     seeded = docs.select("doc_id", md5_u32(F.col("text")).alias("x"))
     return M.extract_image_stats(
         M.attach_ppm_payload(seeded, planter=M.plant_png)
@@ -1274,7 +1261,7 @@ def multimodal_decode_png_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     grayscale/alpha color types and Adam7."""
     from strava_data_pipeline_spark.operators import multimodal as M
 
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     seeded = docs.select("doc_id", md5_u32(F.col("text")).alias("x"))
     return M.extract_image_stats(
         M.attach_ppm_payload(seeded, planter=M.plant_png_deep)
@@ -1338,7 +1325,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal_decode."""
     from strava_data_pipeline_spark.operators import multimodal as M
 
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     seeded = docs.select("doc_id", md5_u32(F.col("text")).alias("x"))
     return M.extract_image_stats(
         M.attach_ppm_payload(seeded, planter=M.plant_jpeg)
@@ -1396,7 +1383,7 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows map 1:1, Arrow batches bound memory."""
     from strava_data_pipeline_spark.operators import multimodal as M
 
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     seeded = docs.select("doc_id", md5_u32(F.col("text")).alias("x"))
     return M.extract_audio_stats(
         M.attach_ppm_payload(seeded, planter=M.plant_wav)
@@ -1469,7 +1456,7 @@ def multimodal_decode_wav_ima(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal_decode_wav."""
     from strava_data_pipeline_spark.operators import multimodal as M
 
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     seeded = docs.select("doc_id", md5_u32(F.col("text")).alias("x"))
     return M.extract_audio_stats(
         M.attach_ppm_payload(seeded, planter=M.plant_wav_ima)
@@ -1534,7 +1521,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas shape and 100 TB layout notes as the decode rows."""
     from strava_data_pipeline_spark.operators import multimodal as M
 
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     seeded = docs.select("doc_id", md5_u32(F.col("text")).alias("x"))
     return M.extract_frame_stats(
         M.attach_ppm_payload(seeded, planter=M.plant_gif_animated), every_n=2
@@ -1606,7 +1593,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; resize composes decode, so the whole LZW path rides along."""
     from strava_data_pipeline_spark.operators import multimodal as M
 
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     seeded = docs.select("doc_id", md5_u32(F.col("text")).alias("x"))
     return M.extract_resized_image_stats(
         M.attach_ppm_payload(seeded, planter=M.plant_gif)
@@ -1647,7 +1634,7 @@ def corpus_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _TOKEN_HIST_ORACLE = rf"""
 WITH tc AS (
-    SELECT CAST(len({_DUCK_TOKENS}) AS BIGINT) AS n FROM documents
+    SELECT CAST(len({DUCK_TOKENS}) AS BIGINT) AS n FROM documents
 )
 SELECT CAST(CASE WHEN n > 0 THEN floor(log2(n)) ELSE -1 END AS INT) AS bucket,
        CAST(count(*) AS BIGINT) AS n_docs,
@@ -1661,7 +1648,7 @@ def token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Power-of-two histogram of per-doc token counts — the corpus
     profile a training-data budget is planned from. One narrow scan,
     one tiny agg."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     tc = docs.select(T.ws_token_count(F.col("text")).alias("n"))
     bucket = (
         F.when(F.col("n") > 0, F.floor(F.log2("n"))).otherwise(F.lit(-1)).cast("int")
@@ -1755,7 +1742,7 @@ _PACK_SHARDS = 16
 _PACK_ORACLE = f"""
 WITH tc AS (
     SELECT doc_id,
-           CAST(len({_DUCK_TOKENS}) AS BIGINT) AS n_tokens,
+           CAST(len({DUCK_TOKENS}) AS BIGINT) AS n_tokens,
            CAST({md5_u32_duckdb("concat(CAST(doc_id AS VARCHAR), 'pack')")} % {_PACK_SHARDS} AS INT) AS shard,
            {md5_u32_duckdb("concat('order:', CAST(doc_id AS VARCHAR))")} AS sort_key
     FROM documents
@@ -1784,7 +1771,7 @@ def corpus_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs, retries, and engines. At 100 TB, shard count scales with the
     cluster and each shard's window stays an independent task chain.
     """
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     tc = docs.select(
         "doc_id",
         T.ws_token_count(F.col("text")).alias("n_tokens"),
@@ -1959,12 +1946,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unit = the same distinct word-3-shingles the minhash dedup uses.
 _DECONTAM_ORACLE = f"""
 WITH toks AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), sh AS (
     -- shingles travel as portable u32 hashes on BOTH engines (the
     -- jaccard discipline): BIGINT distinct/join/broadcast, same result
     SELECT doc_id, {md5_u32_duckdb('shingle')} AS shingle
-    FROM (SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle FROM toks)
+    FROM (SELECT doc_id, unnest({DUCK_SHINGLES}) AS shingle FROM toks)
 ), bench AS (
     SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0
 ), overlap AS (
@@ -1990,7 +1977,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffles, it streams through an explode + broadcast-hash
     probe + per-doc count. Every training doc is emitted (zeros kept)
     so the scrub is auditable."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     shingled = docs.select(
         "doc_id",
         F.explode(T.word_shingles(T.tokens(F.col("text")))).alias("_sh"),
@@ -2026,8 +2013,8 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _QFILTER_ORACLE = f"""
 WITH base AS (
     SELECT doc_id,
-           CAST(len({_DUCK_TOKENS}) AS BIGINT) AS n_tokens,
-           CAST(len(list_distinct({_DUCK_TOKENS})) AS BIGINT) AS n_distinct,
+           CAST(len({DUCK_TOKENS}) AS BIGINT) AS n_tokens,
+           CAST(len(list_distinct({DUCK_TOKENS})) AS BIGINT) AS n_distinct,
            CAST(length(text) AS BIGINT) AS n_chars_calc
     FROM documents
 )
@@ -2052,7 +2039,7 @@ def quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     = AND of all. Ratios are exact rationals of bigints so the rule
     booleans are deterministic across engines; one scan, zero shuffles,
     zero UDFs."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     toks = T.tokens(F.col("text"))
     base = docs.select(
         "doc_id",
@@ -2082,7 +2069,7 @@ def quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _TFIDF_ORACLE = f"""
 WITH tok AS (
-    SELECT doc_id, source, unnest({_DUCK_TOKENS}) AS term FROM documents
+    SELECT doc_id, source, unnest({DUCK_TOKENS}) AS term FROM documents
 ), tf AS (
     SELECT source, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2
 ), df AS (
@@ -2111,7 +2098,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hashed term. Ranking keys on the ROUNDED score in both engines
     (term as tiebreak) so an ulp of ln() can't reorder ranks. Top-5 per
     source is a bounded window — partitioned, not global."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     tok = docs.select(
         "doc_id", "source", F.explode(T.tokens(F.col("text"))).alias("term")
     )
@@ -2280,7 +2267,7 @@ def corpus_dedup_keep_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _LOGPROB_ORACLE = f"""
 WITH tok AS (
-    SELECT doc_id, unnest({_DUCK_TOKENS}) AS term FROM documents
+    SELECT doc_id, unnest({DUCK_TOKENS}) AS term FROM documents
 ), freq AS (
     SELECT term, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY 1
 ), n AS (
@@ -2304,7 +2291,7 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins back on the term (zipf-bounded, broadcastable), the token
     total is a 1-row broadcast. Every occurrence counts — fluency, not
     set overlap — so no distinct anywhere."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     tok = docs.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("term"))
     freq = tok.groupBy("term").agg(F.count("*").cast("bigint").alias("cnt"))
     n = tok.agg(F.count("*").cast("bigint").alias("n_total"))
@@ -2330,7 +2317,7 @@ _CHUNK_W, _CHUNK_S = 32, 24  # window / stride (8-token overlap)
 
 _CHUNK_ORACLE = f"""
 WITH tok AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 )
 SELECT doc_id,
        CAST(seq AS BIGINT) AS chunk_seq,
@@ -2351,7 +2338,7 @@ def corpus_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum(ceil(n_i/stride)) rows, perfectly data-parallel, zero shuffles,
     zero UDFs; the final partial window is kept (training pads, RAG
     retrieves it either way)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     toks = T.tokens(F.col("text"))
     t = docs.select("doc_id", toks.alias("t"))
     seqd = t.select(
@@ -2381,7 +2368,7 @@ _BOILER_PCT = 78  # tokens present in >78% of docs are boilerplate
 
 _BOILER_ORACLE = f"""
 WITH tok AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), total AS (
     SELECT count(*) AS n_docs FROM documents
 ), df AS (
@@ -2416,7 +2403,7 @@ def boilerplate_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-sized, exactly like a stopword table; the reference
     pattern is the repeated-line filter of C4 applied at the granularity
     this corpus has (single-line templated docs)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     toks = docs.select("doc_id", T.tokens(F.col("text")).alias("t")).persist()
     total = docs.agg(F.count("*").alias("n_docs"))
     df = (
@@ -2450,7 +2437,7 @@ _VOCAB_K = 20
 
 _OOV_ORACLE = f"""
 WITH tok AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), freq AS (
     SELECT tok, count(*) AS cnt FROM tok, unnest(t) AS u(tok) GROUP BY 1
 ), vocab AS (
@@ -2479,7 +2466,7 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical cross-engine, no rounding needed. At scale the vocab
     build is the only shuffle (token, count) and K stays
     human-constant."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     toks = docs.select("doc_id", T.tokens(F.col("text")).alias("t"))
     freq = (
         toks.select(F.explode("t").alias("tok"))
@@ -2715,7 +2702,7 @@ def ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _INVIDX_ORACLE = f"""
 WITH tok AS (
-    SELECT doc_id, unnest({_DUCK_TOKENS}) AS token FROM documents
+    SELECT doc_id, unnest({DUCK_TOKENS}) AS token FROM documents
 )
 SELECT token,
        CAST(count(DISTINCT doc_id) AS BIGINT) AS df,
@@ -2741,7 +2728,7 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full posting lists would write out bucketed by token instead of
     truncating — the build plan (explode → one token-keyed shuffle) is
     identical."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     tok = docs.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("token"))
     # posting_head serialized to a comma-joined string (BIGINT ids render
     # identically in both engines) so the driver's pandas canonicalizer
@@ -2777,7 +2764,7 @@ _DUCK_ALL_G3 = (
 )
 _REPETITION_ORACLE = f"""
 WITH toks AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), base AS (
     SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens FROM toks
 ), g2 AS (
@@ -2825,7 +2812,7 @@ def repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     are bounded by document length, then a doc_id-keyed merge — no
     UDFs, all codegen. At 100 TB each doc contributes O(len) gram rows
     and nothing is quadratic."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     toks = T.tokens(F.col("text"))
 
     def all_grams(n: int):
@@ -3061,7 +3048,7 @@ _DUCK_ALL_G5_MD5 = (
 )
 _SUBSTR_ORACLE = f"""
 WITH toks AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), g AS (
     SELECT doc_id, unnest({_DUCK_ALL_G5_MD5}) AS gh FROM toks
 ), c AS (
@@ -3096,7 +3083,7 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     length, a (doc_id, hash) map-combined count, a hash-keyed doc-
     frequency agg reusing the same shuffle key, and a doc_id merge —
     nothing quadratic, nothing carries span text past the map side."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     t = docs.select("doc_id", T.tokens(F.col("text")).alias("t"))
     spans = F.when(
         F.size("t") >= _SUBSTR_N,
@@ -3198,7 +3185,7 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any scale. Real pipelines extend the battery (SSNs, IBANs,
     street addresses) the same way: one more PII_PATTERNS row, same
     plan shape."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     uid = F.col("doc_id")
     planted = docs.select(
         "doc_id",
@@ -3357,7 +3344,7 @@ def source_caps_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # boundary drift between engines.
 _PPL_BUCKETS_ORACLE = f"""
 WITH tok AS (
-    SELECT doc_id, lang, unnest({_DUCK_TOKENS}) AS term FROM documents
+    SELECT doc_id, lang, unnest({DUCK_TOKENS}) AS term FROM documents
 ), freq AS (
     SELECT term, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY 1
 ), n AS (
@@ -3391,7 +3378,7 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-lang window sort is the cost; the production path
     thresholds on sampled logprob quantiles instead of ranking every
     row, with identical bucket semantics to sampling error."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     tok = docs.select(
         "doc_id", "lang", F.explode(T.tokens(F.col("text"))).alias("term")
     )
@@ -3435,9 +3422,9 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _CONTAIN_ORACLE = f"""
 WITH toks AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), sh AS (
-    SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle FROM toks
+    SELECT doc_id, unnest({DUCK_SHINGLES}) AS shingle FROM toks
 ), n AS (
     SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1
 ), capped AS (
@@ -3564,7 +3551,7 @@ def _curation_ctes() -> str:
     return f"""
 WITH base AS MATERIALIZED (
     SELECT doc_id, lang, md5(text) AS text_hash,
-           {_DUCK_TOKENS} AS t,
+           {DUCK_TOKENS} AS t,
            CAST(length(text) AS BIGINT) AS n_chars
     FROM documents
 ), quality AS MATERIALIZED (
@@ -3578,7 +3565,7 @@ WITH base AS MATERIALIZED (
     JOIN (SELECT min(doc_id) AS doc_id FROM quality GROUP BY text_hash) c
       ON q.doc_id = c.doc_id
 ), sh AS (
-    SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle FROM exact_surv
+    SELECT doc_id, unnest({DUCK_SHINGLES}) AS shingle FROM exact_surv
 ), hx AS (
     SELECT doc_id, {md5_u32_duckdb('shingle')} AS x FROM sh
 ), sig AS MATERIALIZED (
@@ -3604,11 +3591,11 @@ WITH base AS MATERIALIZED (
     WHERE doc_id NOT IN (SELECT doc_b FROM dropd)
 ), bench AS (
     SELECT DISTINCT {md5_u32_duckdb('shingle')} AS bsh
-    FROM (SELECT unnest({_DUCK_SHINGLES}) AS shingle
+    FROM (SELECT unnest({DUCK_SHINGLES}) AS shingle
           FROM (SELECT t FROM base WHERE doc_id % 97 = 0))
 ), tr_sh AS (
     SELECT doc_id, {md5_u32_duckdb('shingle')} AS shingle
-    FROM (SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle FROM near_surv)
+    FROM (SELECT doc_id, unnest({DUCK_SHINGLES}) AS shingle FROM near_surv)
 ), contaminated AS (
     SELECT s.doc_id FROM tr_sh s JOIN bench b ON b.bsh = s.shingle
     GROUP BY 1 HAVING count(DISTINCT s.shingle) >= 2
@@ -3679,7 +3666,7 @@ def _curation_clean(spark: SparkSession, sf_dir: str):
     Returns (base, clean): the persisted narrow frame (one corpus body
     scan — md5 hash, token array, length stats; bodies dropped) and the
     curated survivor frame (doc_id, lang, toks)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     toks = T.tokens(F.col("text"))
     base = docs.select(
         "doc_id",

@@ -24,23 +24,17 @@ from pyspark.sql import functions as F
 from strava_data_pipeline_spark.functions import text as T
 from strava_data_pipeline_spark.operators import dedup as D
 from strava_data_pipeline_spark.operators.sampling import assign_split
-from strava_data_pipeline_spark.operators.skew import spread_small_scan
 from strava_data_pipeline_spark.plans.llm_queries import _JACCARD_ORACLE
 from strava_data_pipeline_spark.plans.llm_queries import _bucket_duck
+from strava_data_pipeline_spark.plans.prelude import DUCK_TOKENS, load_docs
 from strava_data_pipeline_spark.plans.registry import register
-from strava_data_pipeline_spark.sources.catalog import load_table
 
-_DUCK_TOKENS = r"string_split_regex(lower(trim(text)), '\s+')"
 _SEP = "\x01"
 
 # Kneser-Ney absolute-discount constant. 0.75 is the textbook value
 # (Chen & Goodman 1999) and is exactly representable in binary, so the
 # discounted term stays bit-identical across engines.
 _KN_D = 0.75
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spread_small_scan(load_table(spark, sf_dir, "documents"))
 
 
 # --------------------------------------------------------------------------
@@ -56,7 +50,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # result; all statistics are computed over the full corpus first.
 _KN_ORACLE = f"""
 WITH d AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), bg AS (
     SELECT unnest([t[i] || chr(1) || t[i+1] FOR i IN range(1, len(t))]) AS pair
     FROM d
@@ -105,7 +99,7 @@ def bigram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     type total is a 1-row broadcast. The probability uses only
     + - * / over BIGINTs and the exactly-representable d=0.75, so the
     fixed expression tree is bit-identical across engines."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     toks = docs.select(T.tokens(F.col("text")).alias("t"))
     n = F.size("t")
     pc = (
@@ -199,7 +193,7 @@ def split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup-sized, orders of magnitude below the corpus, so the label
     joins are cheap key joins; at 100 TB nothing here adds a
     corpus-sized shuffle beyond the dedup operator itself."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     labels = assign_split(docs).select("doc_id", "split")
     pairs = D.ngram_jaccard_pairs(docs)
     la = labels.select(
@@ -279,7 +273,7 @@ p{r} AS (
 _BPE_ORACLE = (
     f"""
 WITH tok AS (
-    SELECT w FROM (SELECT unnest({_DUCK_TOKENS}) AS w FROM documents)
+    SELECT w FROM (SELECT unnest({DUCK_TOKENS}) AS w FROM documents)
     WHERE w <> ''
 ), w0 AS (
     SELECT {_duck_chars('w')} AS s FROM tok
@@ -341,7 +335,7 @@ def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a driver loop over this exact per-round plan — same physics,
     shorter lineage. Cache lifecycle is caller-owned (bench clears per
     query; loops must clearCache after materializing)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     # the empty-token filter is load-bearing, not hygiene: tokens('')
     # is [''] by the tokenizer contract, and sequence(1, length(''))
     # is Spark's DESCENDING [1, 0] — an unfiltered empty word would
@@ -418,7 +412,7 @@ _COVERAGE_TOP = 100
 
 _COVERAGE_ORACLE = f"""
 WITH tok AS (
-    SELECT w FROM (SELECT unnest({_DUCK_TOKENS}) AS w FROM documents)
+    SELECT w FROM (SELECT unnest({DUCK_TOKENS}) AS w FROM documents)
     WHERE w <> ''
 ), types AS (
     SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY 1
@@ -456,7 +450,7 @@ def token_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     way source_caps_sampled pre-drops, if the vocabulary itself is
     huge."""
     words = (
-        _docs(spark, sf_dir)
+        load_docs(spark, sf_dir)
         .select(F.explode(T.tokens(F.col("text"))).alias("w"))
         .where(F.col("w") != "")
     )

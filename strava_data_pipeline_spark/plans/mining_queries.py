@@ -25,19 +25,13 @@ from strava_data_pipeline_spark.functions.hashing import md5_u32, md5_u32_duckdb
 from strava_data_pipeline_spark.operators import dedup as D
 from strava_data_pipeline_spark.operators import similarity as S
 from strava_data_pipeline_spark.operators.skew import spread_small_scan
+from strava_data_pipeline_spark.plans.prelude import DUCK_TOKENS, load_docs
 from strava_data_pipeline_spark.plans.registry import register
 from strava_data_pipeline_spark.sources.catalog import load_table
-
-_DUCK_TOKENS = r"string_split_regex(lower(trim(text)), '\s+')"
 
 # Pair separator for (w1, w2) skip-gram keys. chr(1) cannot appear in a
 # whitespace token, so the join/split round-trip is unambiguous.
 _SEP = "\x01"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents + the shared single-split scan guard (see skew.py)."""
-    return spread_small_scan(load_table(spark, sf_dir, "documents"))
 
 
 def _pair_arrays(t) -> F.Column:
@@ -79,7 +73,7 @@ _DUCK_PAIRS = (
 # then rounds at 4dp, the unigram_logprob cross-engine discipline.
 _PMI_ORACLE = f"""
 WITH d AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), pr AS (
     SELECT unnest({_DUCK_PAIRS}) AS pair FROM d
 ), pc AS (
@@ -120,7 +114,7 @@ def skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row aggregate. Top-50 is TakeOrderedAndProject — no global sort.
     PMI evaluates one fixed ln-expression tree over exact BIGINT
     counts, rounded 4dp (cross-engine contract)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     toks = docs.select(T.tokens(F.col("text")).alias("t"))
     pairs = toks.select(F.explode(_pair_arrays(F.col("t"))).alias("pair"))
     pc = pairs.groupBy("pair").agg(F.count("*").cast("bigint").alias("n_pair"))
@@ -176,7 +170,7 @@ def skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same broadcast dim). Per-doc mean log-prob rounds at 4dp.
 _BIGRAM_ORACLE = f"""
 WITH d AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), bg AS (
     SELECT doc_id,
            unnest([t[i] || chr(1) || t[i+1] FOR i IN range(1, len(t))]) AS pair
@@ -214,7 +208,7 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto the pair stream; vocabulary size is a 1-row broadcast. The
     per-doc rollup is the only corpus-sized shuffle. Every occurrence
     counts (fluency, not set overlap) — no distinct anywhere."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     toks = docs.select("doc_id", T.tokens(F.col("text")).alias("t"))
     n = F.size("t")
     bg = toks.select(
@@ -450,7 +444,7 @@ WITH sp0 AS ({_simhash_oracle(max_hamming=5)}
     -- engines draw the identical slice; mirrors the Spark md5 gate)
     SELECT * FROM sp0 WHERE {gate} % 4 = 0
 ), toks2 AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), sh2 AS (
     SELECT DISTINCT doc_id, {md5_u32_duckdb('shingle')} AS x
     FROM (
@@ -503,7 +497,7 @@ def simhash_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         md5_u32(F.concat_ws("#", F.col("doc_a"), F.col("doc_b"))) % 4 == 0
     )
     shingles = (
-        _docs(spark, sf_dir)
+        load_docs(spark, sf_dir)
         .select(
             "doc_id",
             F.explode(T.word_shingles(T.tokens(F.col("text")))).alias("_s"),

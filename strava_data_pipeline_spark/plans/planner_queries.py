@@ -31,8 +31,6 @@ from strava_data_pipeline_spark.streaming.tuning import (
     stream_tuned,
 )
 
-from contextlib import nullcontext as _noop_ctx
-
 # --------------------------------------------------------------------------
 # 175. join_cardinality_audit — |A ⋈ B| estimates vs exact truth
 # --------------------------------------------------------------------------
@@ -520,24 +518,22 @@ def quarantine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result is stable under any file-listing order. Store root is
     deterministic per sf_dir and rebuilt per call (idempotent
     re-runs), exactly like snapshot_diff."""
-    import hashlib
-    import os
-    import shutil
-
+    from strava_data_pipeline_spark.plans.streaming_faces import (
+        _land_many,
+        _mkroot,
+        _stream,
+    )
     from strava_data_pipeline_spark.streaming.quality_gate import (
         _checks,
         start_quality_gated_sink,
     )
     from strava_data_pipeline_spark.streaming.sync import EVENT_SCHEMA
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    root = f"spark-warehouse/_qaudit_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _mkroot(sf_dir, "qaudit")
     landing = os.path.join(root, "landing")
     target = os.path.join(root, "target")
     quarantine = os.path.join(root, "quarantine")
     ckpt = os.path.join(root, "ckpt")
-    os.makedirs(landing)
 
     ev = load_table(spark, sf_dir, "events")
     bk = F.col("event_id") % 4
@@ -554,8 +550,6 @@ def quarantine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("value")),
     )
     cols = [f.name for f in EVENT_SCHEMA.fields]
-    from strava_data_pipeline_spark.plans.streaming_faces import _land_many
-
     # one part-file per batch_key (maxFilesPerTrigger=1 makes each file
     # one micro-batch); the gate's fold is order-insensitive, so the
     # pinned mtimes only make the batch split deterministic
@@ -567,12 +561,9 @@ def quarantine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    start_quality_gated_sink(stream, target, quarantine, ckpt).awaitTermination()
+    start_quality_gated_sink(
+        _stream(spark, landing), target, quarantine, ckpt
+    ).awaitTermination()
 
     check_names = [name for name, _ in _checks()]
 
@@ -706,27 +697,23 @@ def rollup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     one pass bit-for-bit — the oracle divides the same integer sum by
     100.0 and both engines emit the identical double. A float fold
     would be order-dependent and could flip a half-cent boundary."""
-    import hashlib
-    import os
-    import shutil
-
+    from strava_data_pipeline_spark.plans.streaming_faces import (
+        _land_many,
+        _mkroot,
+        _stream,
+    )
     from strava_data_pipeline_spark.streaming.rollup import (
         start_rollup_maintenance,
     )
     from strava_data_pipeline_spark.streaming.sync import EVENT_SCHEMA
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    root = f"spark-warehouse/_rollupaudit_{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _mkroot(sf_dir, "rollupaudit")
     landing = os.path.join(root, "landing")
     rollup = os.path.join(root, "rollup")
     ckpt = os.path.join(root, "ckpt")
-    os.makedirs(landing)
 
     ev = load_table(spark, sf_dir, "events")
     cols = [f.name for f in EVENT_SCHEMA.fields]
-    from strava_data_pipeline_spark.plans.streaming_faces import _land_many
-
     _land_many(
         landing,
         [
@@ -735,12 +722,7 @@ def rollup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    start_rollup_maintenance(stream, rollup, ckpt).awaitTermination()
+    start_rollup_maintenance(_stream(spark, landing), rollup, ckpt).awaitTermination()
 
     return spark.read.parquet(rollup).select(
         "p_day",
@@ -844,42 +826,33 @@ def attribution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return _attr_face_impl(
-        spark, sf_dir, attribute_with_unmatched, "_attraudit_"
+        spark, sf_dir, attribute_with_unmatched, "attraudit"
     )
 
 
 def _attr_face_impl(
-    spark: SparkSession, sf_dir: str, joiner, root_prefix: str
+    spark: SparkSession, sf_dir: str, joiner, root_name: str
 ) -> DataFrame:
-    """Shared choreography of the two attribution faces (time-sliced
-    mtime-staged landing, sentinel flushes, one availableNow run,
-    size-adaptive store width, committed-parquet read-back) — one
-    spelling so the audits differ ONLY in the join operator under
-    test."""
-    import hashlib
-    import os
-    import shutil
-
+    """Shared choreography of the attribution faces (time-sliced
+    mtime-staged landing, sentinel flushes, one availableNow run at
+    store width 4, committed-parquet read-back) — one spelling so the
+    audits differ ONLY in the join operator under test."""
+    from strava_data_pipeline_spark.plans.streaming_faces import (
+        _land_many,
+        _mkroot,
+        _stream,
+    )
     from strava_data_pipeline_spark.streaming.sync import EVENT_SCHEMA
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    root = f"spark-warehouse/{root_prefix}{tag}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _mkroot(sf_dir, root_name)
     landing = os.path.join(root, "landing")
     target = os.path.join(root, "target")
     ckpt = os.path.join(root, "ckpt")
-    os.makedirs(landing)
-
-    from strava_data_pipeline_spark.plans.streaming_faces import _land_many
 
     ev = load_table(spark, sf_dir, "events")
     cols = [f.name for f in EVENT_SCHEMA.fields]
-    # one job resolves the slice bounds AND the feed size the store-
-    # width branch needs below (was two separate scans)
-    lo, hi, n_events = ev.agg(
-        F.min(F.col("ts").cast("long")),
-        F.max(F.col("ts").cast("long")),
-        F.count(F.lit(1)),
+    lo, hi = ev.agg(
+        F.min(F.col("ts").cast("long")), F.max(F.col("ts").cast("long"))
     ).first()
     step = (hi - lo) // 4 + 1
 
@@ -898,37 +871,6 @@ def _attr_face_impl(
             EVENT_SCHEMA,
         )
 
-    def run_once() -> None:
-        stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        views = stream.where(F.col("event_id") % 3 != 0)
-        purchases = stream.where(F.col("event_id") % 3 == 0)
-        joined = joiner(
-            views, purchases, max_delay="30 minutes", watermark="1 hour"
-        )
-        (
-            joined.writeStream.format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    # State-store width is SIZE-ADAPTIVE (the pagerank persist-gate
-    # pattern): this face runs TWO state stores per batch, so at
-    # audit-feed volume per-partition commit overhead dominates (grid:
-    # 52.8s @32 vs 14.7s @4 at sf0.1) — but the stored state is the
-    # whole within-watermark event window, so at the mult=100
-    # rehearsal's 10M-event feed a 4-wide store serializes the state
-    # sort (the probe ran past 595s; 32-wide finished in 357s). Width
-    # tracks state volume: narrow below 1M events, analytics width
-    # above. Both modes hold the same oracle hash. None = analytics
-    # width; n_events comes from the fused bounds+count job.
-    width = 4 if n_events <= 1_000_000 else None
     # SINGLE availableNow run, both flushes mtime-staged upfront: with
     # maxFilesPerTrigger=1 each file is its own micro-batch and the
     # watermark advances BETWEEN batches, so flush 2's batch already
@@ -957,8 +899,29 @@ def _attr_face_impl(
             (flush_batch(2).select(*cols), 1_000_020),
         ],
     )
-    with scoped_stream_shuffle(spark, width) if width else _noop_ctx():
-        run_once()
+    # State-store width 4: this face runs TWO state stores per batch,
+    # so at audit-feed volume per-partition commit overhead dominates
+    # (grid: 52.8s @32 vs 14.7s @4 at sf0.1). The stored state is the
+    # whole within-watermark event window, so a feed of millions of
+    # events would want a wider store (the mult=100 rehearsal's 10M
+    # events: 4-wide ran past 595s, 32-wide finished in 357s); no
+    # tested feed comes near that (sf0.1 lands 100,000 events).
+    with scoped_stream_shuffle(spark, 4):
+        stream = _stream(spark, landing)
+        joined = joiner(
+            stream.where(F.col("event_id") % 3 != 0),
+            stream.where(F.col("event_id") % 3 == 0),
+            max_delay="30 minutes",
+            watermark="1 hour",
+        )
+        (
+            joined.writeStream.format("parquet")
+            .option("path", target)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
 
     out = spark.read.parquet(target).where(F.col("follow_id") >= 0)
     return out.select(
@@ -1023,7 +986,7 @@ def attribution_inner_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return _attr_face_impl(
-        spark, sf_dir, attribute_to_prior_event_bucketed, "_attrinner_"
+        spark, sf_dir, attribute_to_prior_event_bucketed, "attrinner"
     )
 
 
@@ -1065,7 +1028,7 @@ def attribution_unmatched_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     inner = _attr_face_impl(
-        spark, sf_dir, attribute_to_prior_event_bucketed, "_attrunm_"
+        spark, sf_dir, attribute_to_prior_event_bucketed, "attrunm"
     )
     # the landing dir _attr_face_impl used (deterministic per sf_dir)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:6]

@@ -33,17 +33,10 @@ from pyspark.sql import functions as F
 
 from strava_data_pipeline_spark.functions import text as T
 from strava_data_pipeline_spark.functions.hashing import md5_u32, md5_u32_duckdb
-from strava_data_pipeline_spark.operators.skew import spread_small_scan
+from strava_data_pipeline_spark.plans.prelude import DUCK_TOKENS, load_docs
 from strava_data_pipeline_spark.plans.registry import register
-from strava_data_pipeline_spark.sources.catalog import load_table
-
-_DUCK_TOKENS = r"string_split_regex(lower(trim(text)), '\s+')"
 
 _BLOCK_W = 8  # tokens per rewrite block (the paper's 50 scaled to this corpus)
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spread_small_scan(load_table(spark, sf_dir, "documents"))
 
 
 def _blocks(docs: DataFrame) -> DataFrame:
@@ -79,7 +72,7 @@ _DUCK_BLOCKS = f"""
            CAST(u.seq AS INT) AS blk,
            array_to_string(t[u.seq * {_BLOCK_W} + 1 : (u.seq + 1) * {_BLOCK_W}], ' ')
                AS block_text
-    FROM (SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents) toks,
+    FROM (SELECT doc_id, {DUCK_TOKENS} AS t FROM documents) toks,
          unnest(range(0, (len(t) + {_BLOCK_W} - 1) // {_BLOCK_W})) AS u(seq)
 """
 
@@ -134,7 +127,7 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes rank only — no per-group materialization). Window
     ordering, not min-aggregation + join-back, so the corpus shuffles
     once, not twice."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     # two consumers (kept + tot): persist so the block build runs once
     b = _blocks(docs).persist()
     keep_rank = Window.partitionBy(F.md5("block_text")).orderBy("doc_id", "blk")
@@ -250,7 +243,7 @@ def decontaminate_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized) and the doc_id reassembly groupBy. Shingles travel
     as portable u32 hashes, the same identity `decontaminate` and the
     minhash tier use."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     # three consumers (shingle explode, corpus rewrite, totals)
     b = _blocks(docs).persist()
     bt = F.split(F.col("block_text"), " ")
@@ -325,7 +318,7 @@ def decontaminate_span(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tree both engines evaluate identically.
 _ENTROPY_ORACLE = f"""
 WITH tok AS (
-    SELECT doc_id, unnest({_DUCK_TOKENS}) AS term FROM documents
+    SELECT doc_id, unnest({DUCK_TOKENS}) AS term FROM documents
 ), tc AS (
     SELECT doc_id, term, CAST(count(*) AS BIGINT) AS c
     FROM tok GROUP BY 1, 2
@@ -360,7 +353,7 @@ def entropy_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates BIGINTs (order-free), and the final entropy is one
     fixed expression tree over (n_tokens, clnc_q9) rounded at 4
     decimals on both engines."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     tc = (
         docs.select(
             "doc_id", F.explode(T.tokens(F.col("text"))).alias("term")
@@ -437,7 +430,7 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     32-bit md5 of every normalized document). The canonical form is
     what corpus_dedup_keep-style exact dedup should key on when crawls
     differ only in formatting."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     norm = F.lower(F.trim(F.regexp_replace(F.col("text"), "\\s+", " ")))
     # narrow pre-aggregate FIRST: bodies normalize once into a
     # (source, raw_h, norm_h, norm_u32, c) frame — map-side

@@ -761,10 +761,7 @@ def _dedup_index_oracle(n_batches: int = 4, threshold: float = 0.75) -> str:
         perm_params,
     )
     from strava_data_pipeline_spark.operators import dedup as D
-    from strava_data_pipeline_spark.plans.llm_queries import (
-        _DUCK_SHINGLES,
-        _DUCK_TOKENS,
-    )
+    from strava_data_pipeline_spark.plans.prelude import DUCK_SHINGLES, DUCK_TOKENS
 
     params = perm_params(D.N_PERMS)
     mh_cols = ",\n        ".join(
@@ -823,9 +820,9 @@ def _dedup_index_oracle(n_batches: int = 4, threshold: float = 0.75) -> str:
 )""")
     return f"""
 WITH toks AS (
-    SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents
+    SELECT doc_id, {DUCK_TOKENS} AS t FROM documents
 ), sh AS (
-    SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle FROM toks
+    SELECT doc_id, unnest({DUCK_SHINGLES}) AS shingle FROM toks
 ), hx AS (
     SELECT doc_id, {md5_u32_duckdb('shingle')} AS x FROM sh
 ), sig AS MATERIALIZED (

@@ -31,19 +31,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from strava_data_pipeline_spark.functions import text as T
-from strava_data_pipeline_spark.operators.skew import spread_small_scan
+from strava_data_pipeline_spark.plans.prelude import DUCK_TOKENS, load_docs
 from strava_data_pipeline_spark.plans.registry import register
-from strava_data_pipeline_spark.sources.catalog import load_table
-
-_DUCK_TOKENS = r"string_split_regex(lower(trim(text)), '\s+')"
 
 # vocabulary knobs — fixed constants of the operator contract
 _VOCAB_K = 500  # multi-char entries kept (top-K by weighted count)
 _MAX_SUB = 4  # longest subword considered
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spread_small_scan(load_table(spark, sf_dir, "documents"))
 
 
 # --------------------------------------------------------------------------
@@ -178,7 +171,7 @@ def _encoded_words(wf: DataFrame, multi: DataFrame) -> DataFrame:
 _DUCK_COMMON = f"""
 wf AS (
     SELECT w, CAST(count(*) AS BIGINT) AS cnt
-    FROM (SELECT unnest({_DUCK_TOKENS}) AS w FROM documents)
+    FROM (SELECT unnest({DUCK_TOKENS}) AS w FROM documents)
     WHERE w <> '' GROUP BY 1
 ), subs AS (
     SELECT t, CAST(sum(cnt) AS BIGINT) AS weight FROM (
@@ -248,7 +241,7 @@ def wordpiece_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream expands the word TYPE table (~3L rows per distinct word,
     not per token); the top-K is TakeOrderedAndProject (no global
     window, no collect). Output is bounded at K + |alphabet| rows."""
-    wf = _word_freq(_docs(spark, sf_dir))
+    wf = _word_freq(load_docs(spark, sf_dir))
     multi = _multi_vocab(wf).select(
         F.col("t").alias("token"), "weight", F.lit(False).alias("is_char")
     )
@@ -290,7 +283,7 @@ def wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the vocabulary size. The DuckDB twin replays the greedy fold as
     a recursive CTE, so the hash match proves the loop semantics, not
     just the aggregate shapes."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     wf = _word_freq(docs)
     enc = _encoded_words(wf, _multi_vocab(wf))
     return (
@@ -313,7 +306,7 @@ def wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FERTILITY_ORACLE = f"""
 WITH RECURSIVE {_DUCK_COMMON}, {_DUCK_ENCODE}, lw AS (
     SELECT lang, w, CAST(count(*) AS BIGINT) AS cnt
-    FROM (SELECT lang, unnest({_DUCK_TOKENS}) AS w FROM documents)
+    FROM (SELECT lang, unnest({DUCK_TOKENS}) AS w FROM documents)
     WHERE w <> '' GROUP BY 1, 2
 )
 SELECT lw.lang,
@@ -339,7 +332,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the expensive fold never touches the token stream. Output is
     one row per language; fertility is a single BIGINT/BIGINT division
     rounded on both engines."""
-    docs = _docs(spark, sf_dir)
+    docs = load_docs(spark, sf_dir)
     wf = _word_freq(docs)
     enc = _encoded_words(wf, _multi_vocab(wf)).select(
         "w", F.size("toks").alias("n_toks")

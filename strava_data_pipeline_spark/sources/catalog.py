@@ -13,8 +13,8 @@ scans regressed nearly everything (q1 0.56s→1.06s, q21 0.89s→2.11s)
 — vectorized parquet decode + map-side partial aggregation is cheaper
 single-threaded than paying a full-row round-robin exchange, unlike
 the per-row regex/tokenize stages where the guard wins 2-4×. Operators
-that ARE scan-CPU-bound opt in at their own layer (plans/llm_queries
-``_docs``, dedup/similarity ``_spread``).
+that ARE scan-CPU-bound opt in at their own layer (plans/prelude
+``load_docs``, dedup/similarity operators).
 
 REPO-WIDE CONTRACT: every logically-timestamp column leaves
 ``load_table`` as plain ``TimestampType`` regardless of physical

@@ -173,6 +173,13 @@ def test_simhash64_near_dup(spark, docs):
     assert (1, 4) not in pairs  # unrelated doc stays outside hamming<=7
 
 
+def test_simhash_is_simhash64_low_half(spark, zipf_docs):
+    # the 32-bit fingerprint is the unsalted half of the 64-bit one
+    lo = {r["doc_id"]: r["simhash_lo"] for r in D.simhash64(zipf_docs).collect()}
+    assert len(lo) == zipf_docs.count()
+    assert {r["doc_id"]: r["simhash"] for r in D.simhash(zipf_docs).collect()} == lo
+
+
 def test_simhash64_hot_bucket_capped(spark):
     rows = [(i, DOC, "en") for i in range(40)]
     hot = spark.createDataFrame(rows, "doc_id bigint, text string, lang string")

@@ -122,14 +122,11 @@ class TestPagerank:
         assert 850 * 7 * scale < 2**63  # BIGINT does not overflow
 
 
-def test_pagerank_persist_gate(spark, tmp_path, monkeypatch):
-    """pagerank_parts' size-adaptive edge persist: below the lineitem
-    row threshold nothing is persisted (AQE exchange reuse covers the
-    one-query shape — persisting there is a measured +15% loss); above
-    it the edge set persists DISK_ONLY exactly once (exchange reuse
-    does NOT hold across three iterations at the mult=100 scale —
-    measured 131s -> 92.6s). Results must be identical either way."""
-    from collections import Counter
+def test_pagerank_persist_gate(spark, tmp_path):
+    """pagerank_parts persists nothing (AQE exchange reuse covers the
+    one-query shape — persisting the edge set is a measured +15% loss)
+    and its ranks are the DuckDB oracle's over the same lineitem."""
+    import duckdb
 
     from strava_data_pipeline_spark.plans import advanced_queries as AQ
 
@@ -145,32 +142,18 @@ def test_pagerank_persist_gate(spark, tmp_path, monkeypatch):
     )
     sf = str(tmp_path)
 
-    def run_and_count_disk_persists():
-        spark.catalog.clearCache()
-        before = {
-            i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        }
-        rows_out = sorted(
-            (r["p_partkey"], r["rank_micro"])
-            for r in AQ.pagerank_parts(spark, sf).collect()
-        )
-        levels = Counter(
-            i.storageLevel().description()
-            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-            if i.id() not in before
-        )
-        disk_only = sum(
-            n
-            for lvl, n in levels.items()
-            if "Disk" in lvl and "Memory" not in lvl
-        )
-        spark.catalog.clearCache()
-        return rows_out, disk_only
+    spark.catalog.clearCache()
+    storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
+    before = {i.id() for i in storage()}
+    got = sorted(
+        (r["p_partkey"], r["rank_micro"])
+        for r in AQ.pagerank_parts(spark, sf).collect()
+    )
+    assert not [i for i in storage() if i.id() not in before]
 
-    small_rows, small_persists = run_and_count_disk_persists()
-    assert small_persists == 0
-
-    monkeypatch.setattr(AQ, "_PAGERANK_PERSIST_ROWS", 0)
-    big_rows, big_persists = run_and_count_disk_persists()
-    assert big_persists == 1
-    assert big_rows == small_rows
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/lineitem.parquet/*.parquet')"
+    )
+    assert got == sorted(con.execute(AQ._pagerank_oracle()).fetchall())

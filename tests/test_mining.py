@@ -45,7 +45,7 @@ class TestPairGeneration:
 
     def test_pair_mass_conservation(self, spark):
         # total pair count over the corpus = Σ_docs (max(n-1,0) + max(n-2,0))
-        docs = M._docs(spark, SF)
+        docs = M.load_docs(spark, SF)
         toks = docs.select(F.size(F.split(F.lower(F.trim("text")), r"\s+")).alias("n"))
         expect = toks.select(
             F.sum(
@@ -76,7 +76,7 @@ class TestSkipgramPmi:
 
     def test_pmi_arithmetic(self, spark, pmi_rows):
         # recompute one row's PMI from raw counts
-        docs = M._docs(spark, SF)
+        docs = M.load_docs(spark, SF)
         toks = docs.select(F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("t"))
         uni = {r["t"]: r["c"] for r in toks.groupBy("t").agg(F.count("*").alias("c")).collect()}
         n_tok = sum(uni.values())
@@ -105,7 +105,7 @@ class TestBigramLogprob:
         rows = M.bigram_logprob(spark, SF).collect()
         docs = {
             r["doc_id"]: r["n"]
-            for r in M._docs(spark, SF)
+            for r in M.load_docs(spark, SF)
             .select(
                 "doc_id",
                 F.size(F.split(F.lower(F.trim("text")), r"\s+")).alias("n"),
